@@ -5,8 +5,13 @@ Re-expresses the reference's mutable MySQL audit tables
 UPDATE, DW_Process_Stage_Detail INSERT + UPDATE) as an **event-sourced
 parquet ledger**: every L1-L6 operation appends an immutable event row;
 current state is a latest-wins view (``row_number() over (partition by id
-order by seq desc) = 1``). This keeps the ledger pure-Spark (no transactional
-store) and scales to any volume of runs — appends never rewrite files.
+order by seq desc) = 1``). Appends never rewrite files, so the ledger needs
+no transactional store and scales to any volume of runs.
+
+The ledger is control-plane metadata: events are written and id seeds read
+with pyarrow on the driver, and the run rollup works from the ledger's
+in-memory stage state, so bookkeeping costs no Spark job. Spark reads the
+ledger only for the ``process_master()``/``stage_detail()`` views.
 
 Id allocation: the reference uses MySQL AUTO_INCREMENT + LAST_INSERT_ID
 (``process_logger.py:99,130``). Here ids are driver-allocated under the
@@ -18,8 +23,13 @@ from __future__ import annotations
 
 import os
 import threading
+import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -66,6 +76,59 @@ def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)  # session TZ is UTC
 
 
+_ARROW = {
+    T.LongType(): pa.int64(),
+    T.StringType(): pa.string(),
+    T.DateType(): pa.date32(),
+    T.TimestampType(): pa.timestamp("us"),
+}
+
+
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    return pa.schema([pa.field(f.name, _ARROW[f.dataType]) for f in schema.fields])
+
+
+def append_event(path: str, schema: T.StructType, row: dict) -> None:
+    """Append one event row as its own parquet file, via pyarrow on the
+    driver (~ms): a metadata write must not cost a Spark job. Readers use
+    an explicit schema, so files from mixed writers stay compatible."""
+    table = pa.Table.from_pydict(
+        {f.name: [row.get(f.name)] for f in schema.fields},
+        schema=_arrow_schema(schema),
+    )
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(
+        table,
+        os.path.join(path, f"event-{uuid.uuid4().hex}.parquet"),
+        compression="snappy",
+    )
+
+
+def read_events(
+    path: str, schema: T.StructType, columns: list[str] | None = None
+) -> pa.Table | None:
+    """Every event in a ledger directory, or None when the directory is
+    missing or holds no parquet file. Spark's ``_SUCCESS`` and ``.crc``
+    side files are skipped; any other read error raises."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return None
+    if not any(n.endswith(".parquet") and not n.startswith(("_", ".")) for n in names):
+        return None
+    return ds.dataset(path, schema=_arrow_schema(schema), format="parquet").to_table(
+        columns=columns
+    )
+
+
+def max_event_value(path: str, schema: T.StructType, col: str) -> int:
+    """Largest ``col`` in a ledger directory; 0 for a missing or empty one."""
+    events = read_events(path, schema, [col])
+    if events is None:
+        return 0
+    return int(pc.max(events[col]).as_py() or 0)
+
+
 def latest_wins(df: DataFrame, id_col: str) -> DataFrame:
     """Current-state view of an event table: one row per id, highest Seq."""
     w = W.partitionBy(id_col).orderBy(F.col("Seq").desc())
@@ -82,8 +145,12 @@ class AuditLedger:
         self._lock = threading.Lock()
         self._process_dir = os.path.join(base_dir, "process_master")
         self._stage_dir = os.path.join(base_dir, "stage_detail")
-        self._next_process_id = self._seed_id(self._process_dir, "ProcessID")
-        self._next_stage_id = self._seed_id(self._stage_dir, "StageDetailID")
+        self._next_process_id = (
+            max_event_value(self._process_dir, PROCESS_EVENT_SCHEMA, "ProcessID") + 1
+        )
+        self._next_stage_id = (
+            max_event_value(self._stage_dir, STAGE_EVENT_SCHEMA, "StageDetailID") + 1
+        )
         self._seq = 0
         # driver-side cache of open rows so updates can re-emit full state
         self._process_state: dict[int, dict] = {}
@@ -91,43 +158,9 @@ class AuditLedger:
 
     # -- plumbing ----------------------------------------------------------
 
-    def _seed_id(self, path: str, col: str) -> int:
-        try:
-            mx = self.spark.read.parquet(path).agg(F.max(col)).collect()[0][0]
-            return int(mx or 0) + 1
-        except Exception:
-            return 1
-
     def _next_seq(self) -> int:
         self._seq += 1
         return self._seq
-
-    def _append(self, path: str, schema: T.StructType, row: dict) -> None:
-        """Single-event append via pyarrow (driver-side, ~ms) — an audit
-        write must not cost a Spark job. Views read the directory with an
-        explicit schema, so mixed writers stay compatible."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        _ARROW = {
-            T.LongType(): pa.int64(),
-            T.StringType(): pa.string(),
-            T.DateType(): pa.date32(),
-            T.TimestampType(): pa.timestamp("us"),
-        }
-        full = {f.name: row.get(f.name) for f in schema.fields}
-        table = pa.Table.from_pydict(
-            {f.name: [full[f.name]] for f in schema.fields},
-            schema=pa.schema([pa.field(f.name, _ARROW[f.dataType]) for f in schema.fields]),
-        )
-        os.makedirs(path, exist_ok=True)
-        pq.write_table(
-            table,
-            os.path.join(path, f"event-{uuid.uuid4().hex}.parquet"),
-            compression="snappy",
-        )
 
     # -- L1: create_process_master (process_logger.py:84-100) ---------------
 
@@ -154,7 +187,7 @@ class AuditLedger:
                 EventAt=now,
             )
             self._process_state[pid] = state
-            self._append(self._process_dir, PROCESS_EVENT_SCHEMA, state)
+            append_event(self._process_dir, PROCESS_EVENT_SCHEMA, state)
             return pid
 
     # -- L4: update_process_master (process_logger.py:162-196) --------------
@@ -182,7 +215,7 @@ class AuditLedger:
             state["Seq"] = self._next_seq()
             state["EventAt"] = _now()
             self._process_state[process_id] = state
-            self._append(self._process_dir, PROCESS_EVENT_SCHEMA, state)
+            append_event(self._process_dir, PROCESS_EVENT_SCHEMA, state)
 
     # -- L2: log_process_stage_detail (process_logger.py:107-132) -----------
 
@@ -218,7 +251,7 @@ class AuditLedger:
                 EventAt=now,
             )
             self._stage_state[sid] = state
-            self._append(self._stage_dir, STAGE_EVENT_SCHEMA, state)
+            append_event(self._stage_dir, STAGE_EVENT_SCHEMA, state)
             return sid
 
     # -- L3: update_process_stage_detail (process_logger.py:135-156) --------
@@ -246,7 +279,7 @@ class AuditLedger:
             state["Seq"] = self._next_seq()
             state["EventAt"] = state["EndTime"]
             self._stage_state[stage_detail_id] = state
-            self._append(self._stage_dir, STAGE_EVENT_SCHEMA, state)
+            append_event(self._stage_dir, STAGE_EVENT_SCHEMA, state)
 
     # -- views ---------------------------------------------------------------
 
@@ -275,29 +308,25 @@ class AuditLedger:
         succeed — the highest StageDetailID per (StageName, table) decides.
         Rows without table identity (NULL TableName) are their own units,
         never collapsed. Informational stages (per-micro-batch progress
-        rows) are excluded from the unit count entirely."""
-        w = W.partitionBy(
-            "StageName", F.coalesce(F.col("TableName"), F.col("StageDetailID").cast("string"))
-        ).orderBy(F.col("StageDetailID").desc())
-        final_attempts = (
-            self.stage_detail()
-            .where(F.col("ProcessID") == process_id)
-            # NULL StageName is still a unit: bare ~isin() would evaluate
-            # to NULL under three-valued logic and silently drop the row
-            .where(
-                F.col("StageName").isNull()
-                | ~F.col("StageName").isin(*self.INFORMATIONAL_STAGES)
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .where("_rn = 1")
-        )
-        counts = {
-            r["Status"]: r["cnt"]
-            for r in final_attempts.groupBy("Status")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        ok, bad = counts.get("SUCCESS", 0), counts.get("FAILED", 0)
+        rows) are excluded from the unit count entirely.
+
+        The rollup reads this ledger's in-memory stage state, so only a
+        process opened by this ledger can be finalized."""
+        with self._lock:
+            # only create_process_master sets ProcessStartAt
+            if "ProcessStartAt" not in self._process_state.get(process_id, {}):
+                raise ValueError(f"process {process_id} was not opened by this ledger")
+            rows = [
+                (r["StageDetailID"], r["StageName"], r["TableName"], r["Status"])
+                for r in self._stage_state.values()
+                if r.get("ProcessID") == process_id
+            ]
+        final: dict[tuple, str] = {}
+        for sid, stage, table, status in sorted(rows):
+            if stage not in self.INFORMATIONAL_STAGES:
+                final[(stage, sid if table is None else table)] = status
+        statuses = list(final.values())
+        ok, bad = statuses.count("SUCCESS"), statuses.count("FAILED")
         status = "SUCCESS" if bad == 0 else ("FAILED" if ok == 0 else "PARTIAL")
         self.update_process_master(
             process_id,

@@ -1,24 +1,30 @@
 """Config catalog: the metadata tables that drive the engine.
 
 Re-expresses the reference's six-table metadata catalog
-(``source_code/sql/1. Metadata Creation.sql``) as Spark schemas + a
+(``source_code/sql/1. Metadata Creation.sql``) as schemas + a
 ``ConfigCatalog`` facade. Schema authority lives in metadata, not files:
 which columns exist downstream is decided by ``DW_Column_Config.IncludeFlag``,
 names by ``AliasName``, target ordering by
 ``DW_Output_Column_Config.TargetPosition`` (reference lines 88-100, 124-146).
 
-Spark has no FK/ENUM/UNIQUE enforcement, so :func:`validate` re-implements
-the reference's constraints as anti-join / groupBy checks (SURVEY §2.3 J4).
+The config tables are a few kilobytes, so the catalog holds them as plain
+dict rows on the driver: every metadata join (compiler, output mapping,
+realtime dispatch) is a dict lookup, and none costs a Spark job. The
+schemas below document the reference DDL and name the columns each row is
+filled with.
+
+Without a database there is no FK/ENUM/UNIQUE enforcement, so
+:meth:`ConfigCatalog.validate` re-implements the reference's constraints as
+driver-side checks over the rows (SURVEY §2.3 J4).
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from smfg_datawarehouse_spark.session import local_rows_df
 
 # --- schemas (1:1 with the reference DDL, MySQL types mapped per SURVEY §1.2)
 
@@ -77,16 +83,21 @@ REFRESH_FREQUENCIES = {"EOD", "HOURLY", "REALTIME"}
 
 @dataclass
 class ConfigCatalog:
-    """The four config tables as DataFrames (audit tables live in audit.py)."""
+    """The four config tables as filled dict rows, one dict per row keyed
+    by the schema's column names (audit tables live in audit.py).
 
-    table_config: DataFrame
-    column_config: DataFrame
-    output_table_config: DataFrame | None = None
-    output_column_config: DataFrame | None = None
+    ``spark`` is kept only so the string-form compile can return a
+    DataFrame; nothing else here touches Spark."""
 
-    def active_tables(self) -> DataFrame:
+    spark: SparkSession
+    table_config: list[dict]
+    column_config: list[dict]
+    output_table_config: list[dict] | None = None
+    output_column_config: list[dict] | None = None
+
+    def active_tables(self) -> list[dict]:
         """ActiveFlag=1 — the reference's tableDetail CTE filter."""
-        return self.table_config.where(F.col("ActiveFlag"))
+        return [r for r in self.table_config if r["ActiveFlag"]]
 
     def validate(self) -> list[str]:
         """Constraint checks the reference delegates to MySQL (ENUM domains,
@@ -94,17 +105,12 @@ class ConfigCatalog:
         (empty = valid).
 
         Config tables are control-plane-small by contract (the reference's
-        whole catalog is 6 InnoDB tables), so each is collected once and
-        checked driver-side in Python: per-run validation must cost ~4
-        collects of tiny tables, not a fan-out of 8+ distributed jobs.
-        The equivalent anti-join formulation stays the right shape for
-        *data*-scale integrity checks (see q09_anti_join_integrity).
+        whole catalog is 6 InnoDB tables), so the checks run over the rows
+        in Python. The equivalent anti-join formulation stays the right
+        shape for *data*-scale integrity checks (see q09_anti_join_integrity).
         """
-        from collections import Counter
-
         errors: list[str] = []
-        trows = [r.asDict() for r in self.table_config.collect()]
-        crows = [r.asDict() for r in self.column_config.collect()]
+        trows, crows = self.table_config, self.column_config
 
         # ENUM domains
         bad_lt = sum(1 for r in trows if r["LoadType"] not in LOAD_TYPES)
@@ -134,7 +140,7 @@ class ConfigCatalog:
             errors.append(f"{orphans} column_config rows with orphan TableID")
 
         if self.output_column_config is not None:
-            orows = [r.asDict() for r in self.output_column_config.collect()]
+            orows = self.output_column_config
             for col, label in [
                 ("TargetColumnName", "name"),
                 ("TargetPosition", "position"),
@@ -151,9 +157,7 @@ class ConfigCatalog:
                         f"{dups} duplicate (OutputTableID, Target{label}) pairs"
                     )
             if self.output_table_config is not None:
-                otids = {
-                    r["OutputTableID"] for r in self.output_table_config.collect()
-                }
+                otids = {r["OutputTableID"] for r in self.output_table_config}
                 o_orph = sum(1 for r in orows if r["OutputTableID"] not in otids)
                 if o_orph:
                     errors.append(
@@ -175,35 +179,25 @@ def catalog_from_rows(
 ) -> ConfigCatalog:
     """Build a catalog from plain dict rows (tests, fixtures, JSON configs).
 
-    Missing optional fields default like the reference DDL (ActiveFlag=1,
-    IncludeFlag=1, BatchSize=0, IsKey=0).
+    Each row is copied and filled to its schema's columns. Missing optional
+    fields default like the reference DDL (ActiveFlag=1, IncludeFlag=1,
+    BatchSize=0, IsKey=0).
     """
 
-    def fill(rows: list[dict], schema: T.StructType, defaults: dict) -> DataFrame:
-        filled = [
-            {**{f.name: None for f in schema.fields}, **defaults, **r} for r in rows
-        ]
-        return local_rows_df(
-            spark, [tuple(r[f.name] for f in schema.fields) for r in filled],
-            schema,
-        )
+    def fill(rows, schema: T.StructType, defaults: dict) -> list[dict] | None:
+        if rows is None:
+            return None
+        return [{**{f.name: None for f in schema.fields}, **defaults, **r} for r in rows]
 
     return ConfigCatalog(
+        spark,
         table_config=fill(
-            table_rows,
-            TABLE_CONFIG_SCHEMA,
-            {"ActiveFlag": True, "BatchSize": 0},
+            table_rows, TABLE_CONFIG_SCHEMA, {"ActiveFlag": True, "BatchSize": 0}
         ),
         column_config=fill(column_rows, COLUMN_CONFIG_SCHEMA, {"IncludeFlag": True}),
-        output_table_config=(
-            fill(output_table_rows, OUTPUT_TABLE_CONFIG_SCHEMA, {})
-            if output_table_rows is not None
-            else None
-        ),
-        output_column_config=(
-            fill(output_column_rows, OUTPUT_COLUMN_CONFIG_SCHEMA, {"IsKey": False})
-            if output_column_rows is not None
-            else None
+        output_table_config=fill(output_table_rows, OUTPUT_TABLE_CONFIG_SCHEMA, {}),
+        output_column_config=fill(
+            output_column_rows, OUTPUT_COLUMN_CONFIG_SCHEMA, {"IsKey": False}
         ),
     )
 

@@ -1,16 +1,18 @@
 """Metadata → plan compiler.
 
 Re-expresses the reference's 5-CTE compiler query
-(``source_code/sql/Staging_Extraction_Metadata_Query.sql:1-57``) in two
-forms:
+(``source_code/sql/Staging_Extraction_Metadata_Query.sql:1-57``). The
+config is a few kilobytes of driver-side rows, so the CTEs' joins are dict
+lookups in one helper, :func:`_table_entries`, which groups the active
+tables with their included columns in ColumnID order and applies the
+reference's fallbacks exactly once: NULL/whitespace-only
+``TransformationLogic`` → bare column, NULL ``AliasName`` → column name,
+WHERE only for ``LoadType='INCREMENTAL' AND IncrementalFilter IS NOT NULL``.
+Two forms are rendered from it:
 
 1. :func:`compile_extraction_queries` — the *string* form: a DataFrame of
    ``(TableID, FullTableName, DataExtractQuery)``, byte-compatible with the
-   reference's output (same fallback semantics: NULL/whitespace-only
-   ``TransformationLogic`` → bare column, NULL ``AliasName`` → column name,
-   WHERE appended only for ``LoadType='INCREMENTAL' AND IncrementalFilter
-   IS NOT NULL``). Built with DataFrame ops + the deterministic ordered
-   concat (SURVEY §2.4 A1) — no ``group_concat_max_len`` cap to work around.
+   reference's output, with no ``group_concat_max_len`` cap to work around.
 
 2. :func:`compile_extraction_plans` — the *structural* form: per-table
    :class:`ExtractionPlan` holding ``(expr, alias)`` pairs + optional filter,
@@ -21,6 +23,7 @@ forms:
 
 from __future__ import annotations
 
+from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -28,58 +31,52 @@ from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark import dialect
 from smfg_datawarehouse_spark.catalog import ConfigCatalog
-from smfg_datawarehouse_spark.functions import ordered_concat_ws
+from smfg_datawarehouse_spark.session import local_rows_df
 
 
-def _modified_column_expr() -> Column:
-    """The columnDetail CTE's ``modifiedColumns`` synthesis
-    (``Staging_Extraction_Metadata_Query.sql:20-27``)."""
-    logic = F.col("TransformationLogic")
-    use_logic = logic.isNotNull() & (F.trim(logic) != "")
-    source = F.when(use_logic, logic).otherwise(F.col("ColumnName"))
-    alias = F.coalesce(F.col("AliasName"), F.col("ColumnName"))
-    return F.concat(source, F.lit(" AS "), alias)
+def staging_column(column_row: dict) -> str:
+    """A column's name in the staging zone: its AliasName, else its
+    ColumnName (the reference's ``COALESCE(AliasName, ColumnName)``)."""
+    alias = column_row["AliasName"]
+    return alias if alias is not None else column_row["ColumnName"]
+
+
+def _table_entries(
+    catalog: ConfigCatalog,
+) -> list[tuple[dict, list[tuple[str, str]], str | None]]:
+    """The tableDetail/columnDetail CTEs: ``(table_row, [(source_expr,
+    alias)], filter)`` per active table with at least one included column,
+    in TableID order, its columns in ColumnID order. ``source_expr`` and
+    ``filter`` are the metadata's own (untranslated) SQL."""
+    columns: dict[int, list[tuple[str, str]]] = defaultdict(list)
+    for c in sorted(catalog.column_config, key=lambda c: c["ColumnID"]):
+        if c["IncludeFlag"]:
+            logic = c["TransformationLogic"]
+            use_logic = logic is not None and logic.strip() != ""
+            columns[c["TableID"]].append(
+                (logic if use_logic else c["ColumnName"], staging_column(c))
+            )
+    entries = []
+    for t in sorted(catalog.active_tables(), key=lambda t: t["TableID"]):
+        if t["TableID"] in columns:
+            incremental = t["LoadType"] == "INCREMENTAL"
+            filter_sql = t["IncrementalFilter"] if incremental else None
+            entries.append((t, columns[t["TableID"]], filter_sql))
+    return entries
 
 
 def compile_extraction_queries(catalog: ConfigCatalog) -> DataFrame:
     """(TableID, FullTableName, DataExtractQuery) — string-form compile."""
-    table_detail = catalog.active_tables().select(
-        "TableID", "SchemaName", "TableName", "LoadType", "IncrementalFilter"
-    )
-    column_detail = (
-        table_detail.join(catalog.column_config, "TableID")
-        .where(F.col("IncludeFlag"))
-        .select(
-            "TableID",
-            "SchemaName",
-            "TableName",
-            "ColumnID",
-            _modified_column_expr().alias("modifiedColumns"),
-        )
-    )
-    final_column_list = column_detail.groupBy(
-        "TableID",
-        F.concat_ws(".", F.col("SchemaName"), F.col("TableName")).alias("FullTableName"),
-    ).agg(
-        ordered_concat_ws(", ", "ColumnID", "modifiedColumns").alias("FinalColumns")
-    )
-    where_clause = F.when(
-        (F.col("LoadType") == "INCREMENTAL") & F.col("IncrementalFilter").isNotNull(),
-        F.concat(F.lit(" WHERE "), F.col("IncrementalFilter")),
-    ).otherwise(F.lit(""))
-    return (
-        final_column_list.join(F.broadcast(table_detail), "TableID")
-        .select(
-            "TableID",
-            "FullTableName",
-            F.concat(
-                F.lit("SELECT "),
-                F.col("FinalColumns"),
-                F.lit(" FROM "),
-                F.col("FullTableName"),
-                where_clause,
-            ).alias("DataExtractQuery"),
-        )
+    rows = []
+    for t, columns, filter_sql in _table_entries(catalog):
+        full_name = f"{t['SchemaName']}.{t['TableName']}"
+        cols = ", ".join(f"{expr} AS {alias}" for expr, alias in columns)
+        where = f" WHERE {filter_sql}" if filter_sql is not None else ""
+        rows.append((t["TableID"], full_name, f"SELECT {cols} FROM {full_name}{where}"))
+    return local_rows_df(
+        catalog.spark,
+        rows,
+        "TableID INT, FullTableName STRING, DataExtractQuery STRING",
     )
 
 
@@ -122,69 +119,28 @@ def compile_extraction_plans(catalog: ConfigCatalog) -> list[ExtractionPlan]:
 
     Dialect translation + parse validation happen here (compile time), so a
     bad metadata expression fails fast with the table/column named — the
-    reference only failed at runtime inside MySQL.
-
-    The config join itself runs as DataFrame ops (broadcast — config scale),
-    then collapses to driver-side plan objects, mirroring the reference's
-    ``list[{TableID, FullTableName, DataExtractQuery}]`` IR
+    reference only failed at runtime inside MySQL. The plans mirror the
+    reference's ``list[{TableID, FullTableName, DataExtractQuery}]`` IR
     (``staging_data_extraction.py:276-327``).
     """
-    table_detail = catalog.active_tables().select(
-        "TableID", "SchemaName", "TableName", "LoadType", "IncrementalFilter"
-    )
-    cols = (
-        table_detail.join(catalog.column_config, "TableID")
-        .where(F.col("IncludeFlag"))
-        .select(
-            "TableID",
-            "SchemaName",
-            "TableName",
-            "LoadType",
-            "IncrementalFilter",
-            "ColumnID",
-            "ColumnName",
-            "AliasName",
-            "TransformationLogic",
-        )
-        .collect()
-    )
-    by_table: dict[int, dict] = {}
-    for r in sorted(cols, key=lambda r: (r["TableID"], r["ColumnID"])):
-        entry = by_table.setdefault(
-            r["TableID"],
-            {
-                "schema_name": r["SchemaName"],
-                "table_name": r["TableName"],
-                "load_type": r["LoadType"],
-                "incremental_filter": r["IncrementalFilter"],
-                "projections": [],
-            },
-        )
-        logic = r["TransformationLogic"]
-        use_logic = logic is not None and logic.strip() != ""
-        raw_expr = logic if use_logic else r["ColumnName"]
-        alias = r["AliasName"] if r["AliasName"] is not None else r["ColumnName"]
-        try:
-            spark_expr = dialect.validate(raw_expr)
-        except dialect.DialectError as exc:
-            raise dialect.DialectError(
-                f"table {r['SchemaName']}.{r['TableName']} column {alias}: {exc}"
-            ) from exc
-        entry["projections"].append((spark_expr, alias))
-
     plans: list[ExtractionPlan] = []
-    for table_id, entry in sorted(by_table.items()):
-        filter_sql = None
-        if entry["load_type"] == "INCREMENTAL" and entry["incremental_filter"] is not None:
-            filter_sql = dialect.validate(entry["incremental_filter"])
+    for t, columns, filter_sql in _table_entries(catalog):
+        projections = []
+        for expr, alias in columns:
+            try:
+                projections.append((dialect.validate(expr), alias))
+            except dialect.DialectError as exc:
+                raise dialect.DialectError(
+                    f"table {t['SchemaName']}.{t['TableName']} column {alias}: {exc}"
+                ) from exc
         plans.append(
             ExtractionPlan(
-                table_id=table_id,
-                schema_name=entry["schema_name"],
-                table_name=entry["table_name"],
-                load_type=entry["load_type"],
-                projections=entry["projections"],
-                filter_sql=filter_sql,
+                table_id=t["TableID"],
+                schema_name=t["SchemaName"],
+                table_name=t["TableName"],
+                load_type=t["LoadType"],
+                projections=projections,
+                filter_sql=dialect.validate(filter_sql) if filter_sql is not None else None,
             )
         )
     return plans

@@ -10,10 +10,11 @@ incremental table tracks the max value of a monotonically-advancing column
 and advances the stored watermark.
 
 State lives in an append-only parquet ledger (latest-wins on sequence
-number), the same event-sourced pattern as the audit ledger — no
-read-modify-write on the lake, safe to re-run (an aborted run never
-advances the watermark because the new value is written only after the
-extraction succeeds).
+number), the same event-sourced pattern as the audit ledger and written
+by the same pyarrow event writer: a few bytes of control-plane state cost
+no Spark job. There is no read-modify-write on the lake, and it is safe to
+re-run (an aborted run never advances the watermark because the new value
+is written only after the extraction succeeds).
 
 At scale the watermark predicate is pushed into the source scan (JDBC
 remote WHERE / parquet row-group skipping / Delta data skipping), so an
@@ -29,7 +30,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from smfg_datawarehouse_spark.session import local_rows_df
+
+from smfg_datawarehouse_spark.audit import append_event, max_event_value, read_events
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -41,38 +43,37 @@ _STATE_SCHEMA = T.StructType(
 
 
 class WatermarkStore:
-    """Append-only watermark ledger; latest Seq per table wins."""
+    """Append-only watermark ledger; latest Seq per table wins.
+
+    ``Seq`` continues from the stored maximum, so a store reopened after
+    an engine restart outranks every earlier run's watermarks."""
 
     def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
         self.path = os.path.join(state_dir, "watermarks.parquet")
-        self._seq = 0
-
-    def _read(self) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
-        return self.spark.read.parquet(self.path)
+        self._seq = max_event_value(self.path, _STATE_SCHEMA, "Seq")
 
     def get(self, table: str) -> str | None:
-        df = self._read()
-        if df is None:
+        events = read_events(self.path, _STATE_SCHEMA)
+        if events is None:
             return None
-        rows = (
-            df.where(F.col("TableName") == table)
-            .orderBy(F.col("Seq").desc())
-            .limit(1)
-            .collect()
-        )
-        return rows[0]["WatermarkValue"] if rows else None
+        d = events.to_pydict()
+        rows = [
+            (seq, value)
+            for name, value, seq in zip(d["TableName"], d["WatermarkValue"], d["Seq"])
+            if name == table
+        ]
+        return max(rows, key=lambda r: r[0])[1] if rows else None
 
     def advance(self, table: str, value: Any) -> None:
         """Record a new watermark (stringified; lexicographic-safe for ISO
         timestamps/dates and zero-padded sequences)."""
         self._seq += 1
-        row = [(table, str(value), self._seq)]
-        local_rows_df(self.spark, row, _STATE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.path)
+        append_event(
+            self.path,
+            _STATE_SCHEMA,
+            {"TableName": table, "WatermarkValue": str(value), "Seq": self._seq},
+        )
 
 
 def incremental_slice(

@@ -268,12 +268,9 @@ def l06_realtime_dispatch_lifecycle(spark: SparkSession, sf_dir: str) -> DataFra
         os.path.join(zones.raw, "tpch", "orders")
     )
     cat = seed_fixture_catalog(spark)
-    cat.table_config = cat.table_config.withColumn(
-        "RefreshFrequency",
-        F.when(F.col("TableName") == "orders", F.lit("REALTIME")).otherwise(
-            F.col("RefreshFrequency")
-        ),
-    )
+    for row in cat.table_config:
+        if row["TableName"] == "orders":
+            row["RefreshFrequency"] = "REALTIME"
     pid, _results = run_realtime_staging(spark, cat, zones, audit)
     audit_rows = (
         audit.stage_detail()

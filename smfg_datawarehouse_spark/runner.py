@@ -143,14 +143,10 @@ def realtime_plans(catalog: ConfigCatalog) -> list[ExtractionPlan]:
     declares ``RefreshFrequency='REALTIME'`` (reference:
     ``1. Metadata Creation.sql:66`` ENUM('EOD','HOURLY','REALTIME'); the
     DAG stubs the realtime branch at ``SMFG_DW_ETL_DAG.py:322-359``)."""
-    from pyspark.sql import functions as F
-
     rt_ids = {
         r["TableID"]
         for r in catalog.active_tables()
-        .where(F.col("RefreshFrequency") == "REALTIME")
-        .select("TableID")
-        .collect()
+        if r["RefreshFrequency"] == "REALTIME"
     }
     return [p for p in compile_extraction_plans(catalog) if p.table_id in rt_ids]
 

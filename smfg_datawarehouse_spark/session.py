@@ -159,29 +159,3 @@ def ensure_min_parallelism(df, n_parts: int | None = None):
     if df.rdd.getNumPartitions() < n_parts:
         return df.repartition(n_parts)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Register the standard testdata tables as temp views; return dict of DFs.
-
-    Tables: region nation customer supplier part orders lineitem events
-    documents embeddings (see /root/repo/TESTDATA.md).
-    """
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

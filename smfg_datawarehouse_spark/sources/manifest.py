@@ -49,20 +49,27 @@ def nullable_copy(schema):
     behavior — and aliasing the caller's live StructType invites the
     mutation bugs ``StructType.add`` makes easy. Normalizing on store
     keeps declared reads bit-identical to inference. Applied recursively:
-    the reader relaxes nested struct/array/map nullability too."""
+    the reader relaxes nested struct/array/map nullability too. Only type
+    nodes are rewritten; each field's ``metadata`` passes through as is."""
     from pyspark.sql.types import StructType
 
     def relax(node):
-        if isinstance(node, dict):
-            return {
-                k: True
-                if k in ("nullable", "containsNull", "valueContainsNull")
-                else relax(v)
-                for k, v in node.items()
-            }
-        if isinstance(node, list):
-            return [relax(v) for v in node]
-        return node
+        if not isinstance(node, dict):
+            return node  # a primitive type name
+        out = dict(node)
+        if out.get("type") == "struct":
+            out["fields"] = [
+                {**f, "nullable": True, "type": relax(f["type"])} for f in out["fields"]
+            ]
+        elif out.get("type") == "array":
+            out.update(containsNull=True, elementType=relax(out["elementType"]))
+        elif out.get("type") == "map":
+            out.update(
+                valueContainsNull=True,
+                keyType=relax(out["keyType"]),
+                valueType=relax(out["valueType"]),
+            )
+        return out
 
     return StructType.fromJson(relax(schema.jsonValue()))
 

@@ -6,19 +6,24 @@ metadata it already defined:
 - output mapping from ``DW_Output_Column_Config`` (``1. Metadata
   Creation.sql:124-146``): optional ``AdditionalTransform`` (P7) →
   ``CAST(TargetDataType)`` → order by ``TargetPosition`` (O3)
-- key-based MERGE (J3) on ``IsKey`` columns — upsert into a parquet target
-  via union + latest-wins (no transactional table format in this container;
-  the Delta ``MERGE INTO`` form is a drop-in swap on a real deployment).
+- key-based MERGE (J3) on ``IsKey`` columns — union + latest-wins over
+  DataFrames; the durable curated write is ``sources/versioned.py``'s
+  ``VersionedTable.merge`` (the Delta ``MERGE INTO`` form is a drop-in swap
+  on a real deployment).
+
+The output mapping is compiled from the catalog's driver-side rows, so it
+costs no Spark job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark import dialect
 from smfg_datawarehouse_spark.catalog import ConfigCatalog
+from smfg_datawarehouse_spark.compiler import staging_column
 
 
 def output_mapping_plan(
@@ -32,29 +37,27 @@ def output_mapping_plan(
     """
     if catalog.output_column_config is None or catalog.output_table_config is None:
         raise ValueError("catalog has no output mapping config")
-    tgt = (
-        catalog.output_table_config.where(F.col("OutputTableID") == output_table_id)
-        .collect()
+    tgt = next(
+        (r for r in catalog.output_table_config if r["OutputTableID"] == output_table_id),
+        None,
     )
-    if not tgt:
+    if tgt is None:
         raise ValueError(f"unknown OutputTableID {output_table_id}")
-    target_name = f"{tgt[0]['TargetSchema']}.{tgt[0]['TargetTable']}"
+    target_name = f"{tgt['TargetSchema']}.{tgt['TargetTable']}"
 
-    # staging-side column name = extraction alias (AliasName or ColumnName)
-    src_cols = catalog.column_config.select(
-        F.col("ColumnID").alias("SourceColumnID"),
-        F.coalesce(F.col("AliasName"), F.col("ColumnName")).alias("StagingColumn"),
-    )
-    rows = (
-        catalog.output_column_config.where(F.col("OutputTableID") == output_table_id)
-        .join(src_cols, "SourceColumnID")
-        .orderBy("TargetPosition")
-        .collect()
+    staging = {c["ColumnID"]: staging_column(c) for c in catalog.column_config}
+    rows = sorted(
+        (
+            r
+            for r in catalog.output_column_config
+            if r["OutputTableID"] == output_table_id and r["SourceColumnID"] in staging
+        ),
+        key=lambda r: r["TargetPosition"],
     )
     mapping: list[tuple[str, str, str]] = []
     keys: list[str] = []
     for r in rows:
-        expr = r["AdditionalTransform"] or r["StagingColumn"]
+        expr = r["AdditionalTransform"] or staging[r["SourceColumnID"]]
         expr = dialect.validate(expr)
         mapping.append((expr, r["TargetColumnName"], r["TargetDataType"]))
         if r["IsKey"]:
@@ -132,27 +135,6 @@ def apply_changeset(
     ).select(*keys, *[F.col(f"new_{c}").alias(c) for c in vals])
     survived = base.join(deletes, keys, "left_anti")
     return merge_upsert(survived, upserts, keys)
-
-
-def merge_into_parquet(
-    spark: SparkSession, target_path: str, updates: DataFrame, keys: list[str]
-) -> int:
-    """Read-merge-rewrite a parquet target (file-format stand-in for Delta
-    MERGE). Returns the post-merge row count."""
-    try:
-        target = spark.read.parquet(target_path)
-        merged = merge_upsert(target, updates, keys)
-    except Exception:
-        merged = updates  # first load
-    # rewrite via temp dir to avoid reading+overwriting the same path
-    tmp = target_path.rstrip("/") + "__merge_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    import shutil, os
-
-    if os.path.exists(target_path):
-        shutil.rmtree(target_path)
-    os.rename(tmp, target_path)
-    return spark.read.parquet(target_path).count()
 
 
 def with_audit_timestamps(

@@ -1,4 +1,5 @@
-"""Scale-contract guards: jaccard_pairs df-cap skew guard, ANN collect cap."""
+"""Scale-contract guards: jaccard_pairs df-cap skew guard, ANN collect cap,
+a control plane that launches no Spark job."""
 
 from __future__ import annotations
 
@@ -6,8 +7,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from smfg_datawarehouse_spark.audit import AuditLedger
+from smfg_datawarehouse_spark.catalog import seed_fixture_catalog
+from smfg_datawarehouse_spark.compiler import compile_extraction_plans
+from smfg_datawarehouse_spark.incremental import WatermarkStore
 from smfg_datawarehouse_spark.operators.dedup import jaccard_pairs
 from smfg_datawarehouse_spark.operators.similarity import _collect_matrix
+from smfg_datawarehouse_spark.runner import realtime_plans
+from smfg_datawarehouse_spark.transform import output_mapping_plan
 
 
 def _boilerplate_corpus(spark, n_docs: int):
@@ -73,6 +80,59 @@ def test_jaccard_default_is_lazy(spark):
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before
     assert df.count() >= 0  # and it still executes
+
+
+def _last_job_id(spark) -> int:
+    # the newest id, not a count: the status store retains a bounded
+    # number of jobs, so a count can stop growing in a long session
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _audited_run(audit: AuditLedger) -> str:
+    pid = audit.create_process_master()
+    audit.update_process_master(pid, status="RUNNING")
+    sid = audit.log_stage_detail(pid, "STAGING_EXTRACT", table_name="tpch.orders")
+    audit.update_stage_detail(sid, status="SUCCESS", row_count=3)
+    return audit.finalize_run(pid)
+
+
+def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
+    """Config, plans, watermarks and ledger bookkeeping are KB-sized
+    driver-side metadata: none of them may cost a Spark job."""
+    cat = seed_fixture_catalog(spark)
+    for row in cat.table_config:
+        if row["TableName"] == "orders":
+            row["RefreshFrequency"] = "REALTIME"
+    audit_dir = str(tmp_path / "audit")
+    _audited_run(AuditLedger(spark, audit_dir))  # a ledger to reopen
+    store = WatermarkStore(spark, str(tmp_path / "state"))
+    store.advance("events", "2024-01-01 00:00:00")
+    steps = [
+        ("validate", cat.validate, []),
+        (
+            "compile_extraction_plans",
+            lambda: [p.full_table_name for p in compile_extraction_plans(cat)],
+            ["tpch.lineitem", "tpch.orders"],
+        ),
+        ("output_mapping_plan", lambda: output_mapping_plan(cat, 1)[0], "dw.fact_lineitem"),
+        (
+            "realtime_plans",
+            lambda: [p.full_table_name for p in realtime_plans(cat)],
+            ["tpch.orders"],
+        ),
+        ("WatermarkStore.get", lambda: store.get("events"), "2024-01-01 00:00:00"),
+        ("WatermarkStore.advance", lambda: store.advance("events", "2024-01-02"), None),
+        (
+            "AuditLedger on an existing ledger",
+            lambda: AuditLedger(spark, audit_dir)._next_process_id,
+            2,
+        ),
+        ("create/log/update/finalize_run", lambda: _audited_run(AuditLedger(spark, audit_dir)), "SUCCESS"),
+    ]
+    for name, step, expected in steps:
+        before = _last_job_id(spark)
+        assert step() == expected, name
+        assert _last_job_id(spark) == before, f"{name} launched a Spark job"
 
 
 def test_collect_matrix_rejects_oversized_query_set(spark):

@@ -36,3 +36,41 @@ def test_two_run_incremental_no_overlap_no_loss(spark, tmp_path):
     s3, wm3 = run_incremental_extract(events, "ts", store, "events")
     assert s3.count() == 0
     assert wm3 == store.get("events")
+
+
+def test_reopened_store_never_moves_watermark_back(spark, tmp_path):
+    """An engine restart opens a new store over the same ledger: its
+    advances must outrank every stored one, or ``get`` returns the
+    previous run's value and the next run extracts those rows again."""
+    a = WatermarkStore(spark, str(tmp_path))
+    a.advance("a", "2024-01-01 00:00:00")
+    a.advance("b", "2024-01-02 00:00:00")
+    b = WatermarkStore(spark, str(tmp_path))
+    b.advance("b", "2024-01-03 00:00:00")
+    assert b.get("b") == "2024-01-03 00:00:00"
+    assert WatermarkStore(spark, str(tmp_path)).get("b") == "2024-01-03 00:00:00"
+    assert b.get("a") == "2024-01-01 00:00:00"
+
+
+def test_reads_spark_written_watermarks(spark, tmp_path):
+    """A ``watermarks.parquet`` directory written by Spark (part files plus
+    ``_SUCCESS`` and ``.crc`` side files) reads back the same values."""
+    import os
+
+    from smfg_datawarehouse_spark.incremental import _STATE_SCHEMA
+    from smfg_datawarehouse_spark.session import local_rows_df
+
+    path = os.path.join(str(tmp_path), "watermarks.parquet")
+    for row in [("events", "2024-01-05 00:00:00", 1), ("events", "2024-01-09 00:00:00", 2),
+                ("orders", "42", 3)]:
+        local_rows_df(spark, [row], _STATE_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    store = WatermarkStore(spark, str(tmp_path))
+    assert store.get("events") == "2024-01-09 00:00:00"
+    assert store.get("orders") == "42"
+    assert store.get("missing") is None
+    store.advance("events", "2024-01-10 00:00:00")
+    assert store.get("events") == "2024-01-10 00:00:00"

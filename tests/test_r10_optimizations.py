@@ -61,6 +61,12 @@ def test_nullable_copy_relaxes_and_detaches():
     # detached: mutating the copy never touches the source
     cp.add("extra", "long")
     assert "extra" not in src.fieldNames()
+    # field metadata is user data, not a type node: it round-trips as is
+    meta = {"nullable": False, "note": {"containsNull": False}}
+    with_meta = StructType([StructField("m", LongType(), False, metadata=meta)])
+    relaxed = nullable_copy(with_meta)
+    assert relaxed["m"].nullable
+    assert relaxed["m"].metadata == meta
 
 
 def test_manifest_declared_read_matches_inference(spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.audit import AuditLedger
@@ -192,3 +193,102 @@ def test_retries_exhausted_still_partial(spark, tmp_path):
         .count()
     )
     assert n_attempts == 3  # 1 + 2 retries, all preserved
+
+
+#: (steps, expected Status, expected Remarks). A ``("log", stage, table,
+#: status)`` step logs one stage row with that status; an ``("update", i,
+#: status)`` step closes the i-th logged row, the way the runner closes a
+#: table row after its micro-batch rows are logged.
+FINALIZE_CASES = {
+    "retried_table_final_attempt_wins": (
+        [
+            ("log", "STAGING_EXTRACT", "s.a", "FAILED"),
+            ("log", "STAGING_EXTRACT", "s.b", "SUCCESS"),
+            ("log", "STAGING_EXTRACT", "s.a", "SUCCESS"),
+        ],
+        "SUCCESS",
+        "2 tables succeeded, 0 failed",
+    ),
+    "null_table_name_rows_are_own_units": (
+        [
+            ("log", "INIT_STAGE", None, "SUCCESS"),
+            ("log", "INIT_STAGE", None, "FAILED"),
+        ],
+        "PARTIAL",
+        "1 tables succeeded, 1 failed",
+    ),
+    "null_stage_name_row_is_kept": (
+        [
+            ("log", None, "s.a", "FAILED"),
+            ("log", "STAGING_EXTRACT", "s.a", "SUCCESS"),
+        ],
+        "PARTIAL",
+        "1 tables succeeded, 1 failed",
+    ),
+    "microbatch_rows_are_excluded": (
+        [
+            ("log", "REALTIME_STAGING", "s.a", "PROCESSING"),
+            ("log", "REALTIME_MICROBATCH", "s.a", "FAILED"),
+            ("log", "REALTIME_MICROBATCH", "s.a", "SUCCESS"),
+            ("update", 0, "SUCCESS"),
+        ],
+        "SUCCESS",
+        "1 tables succeeded, 0 failed",
+    ),
+    "failure_after_good_microbatch_is_failed": (
+        [
+            ("log", "REALTIME_STAGING", "s.a", "PROCESSING"),
+            ("log", "REALTIME_MICROBATCH", "s.a", "SUCCESS"),
+            ("update", 0, "FAILED"),
+        ],
+        "FAILED",
+        "0 tables succeeded, 1 failed",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(FINALIZE_CASES))
+def test_finalize_run_rollup(spark, tmp_path, case):
+    steps, want_status, want_remarks = FINALIZE_CASES[case]
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+    other = audit.create_process_master()  # rows of another run never count
+    audit.log_stage_detail(other, "STAGING_EXTRACT", table_name="s.a", status="FAILED")
+    pid = audit.create_process_master()
+    sids = []
+    for step in steps:
+        if step[0] == "log":
+            _, stage, table, status = step
+            sids.append(
+                audit.log_stage_detail(pid, stage, table_name=table, status=status)
+            )
+        else:
+            _, i, status = step
+            audit.update_stage_detail(sids[i], status=status)
+    assert audit.finalize_run(pid) == want_status
+    master = audit.process_master().where(F.col("ProcessID") == pid).collect()[0]
+    assert (master["Status"], master["Remarks"]) == (want_status, want_remarks)
+    assert master["ProcessEndAt"] is not None
+
+
+def test_finalize_run_rejects_unopened_process(spark, tmp_path):
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+    pid = audit.create_process_master()
+    with pytest.raises(ValueError, match="not opened"):
+        audit.finalize_run(pid + 1)
+    # a reopened ledger did not open the earlier process either
+    with pytest.raises(ValueError, match="not opened"):
+        AuditLedger(spark, str(tmp_path / "audit")).finalize_run(pid)
+
+
+def test_unreadable_ledger_file_raises(spark, tmp_path):
+    """Only a missing or empty ledger directory starts ids at 1: restarting
+    ids over a ledger that could not be read would let ``latest_wins``
+    merge two different processes into one."""
+    AuditLedger(spark, str(tmp_path / "audit")).create_process_master()
+    with open(tmp_path / "audit" / "process_master" / "junk.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(ValueError, match="magic bytes"):  # pyarrow.ArrowInvalid
+        AuditLedger(spark, str(tmp_path / "audit"))
+    empty = tmp_path / "empty"
+    (empty / "process_master").mkdir(parents=True)
+    assert AuditLedger(spark, str(empty)).create_process_master() == 1

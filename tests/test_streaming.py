@@ -294,12 +294,9 @@ def test_metadata_realtime_dispatch_end_to_end(spark, tmp_path):
 
     cat = seed_fixture_catalog(spark)
     # flip orders to REALTIME in metadata — the dispatch driver
-    cat.table_config = cat.table_config.withColumn(
-        "RefreshFrequency",
-        F.when(F.col("TableName") == "orders", F.lit("REALTIME")).otherwise(
-            F.col("RefreshFrequency")
-        ),
-    )
+    for row in cat.table_config:
+        if row["TableName"] == "orders":
+            row["RefreshFrequency"] = "REALTIME"
     assert [p.full_table_name for p in realtime_plans(cat)] == ["tpch.orders"]
 
     audit = AuditLedger(spark, str(tmp_path / "audit"))
