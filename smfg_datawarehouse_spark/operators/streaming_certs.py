@@ -179,7 +179,10 @@ def _stage_ordered_slices(
     unchanged (same rows, same columns — the ``_sl`` tag lives only in
     the directory name); every consumer is row-order-invariant within a
     file and each cert stays strict-differential green. An empty slice
-    stages no file, same as an empty coalesced write."""
+    raises ``ValueError``: the ``partitionBy`` write lands no file for it
+    (a per-slice coalesced write landed a schema-only file), so skipping
+    it would silently shift the micro-batch numbering of every later
+    slice."""
     union = None
     for i, sl in enumerate(frames):
         tagged = sl.withColumn("_sl", F.lit(i))
@@ -191,11 +194,16 @@ def _stage_ordered_slices(
         .mode("overwrite")
         .parquet(stage_root)
     )
+    empty = [
+        i
+        for i in range(len(frames))
+        if not _os.path.isdir(_os.path.join(stage_root, f"_sl={i}"))
+    ]
+    if empty:  # checked before any file moves into ``raw``
+        raise ValueError(f"empty slices {empty}: every slice must stage one file")
     base = _os.path.getmtime(raw)
     for i in range(len(frames)):
         wdir = _os.path.join(stage_root, f"_sl={i}")
-        if not _os.path.isdir(wdir):
-            continue
         part = next(f for f in _os.listdir(wdir) if f.endswith(".parquet"))
         name = names[i] if names else f"slice-{i}.parquet"
         dst = _os.path.join(raw, name)

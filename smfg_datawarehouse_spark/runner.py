@@ -8,13 +8,21 @@ Parallelism: a thread pool submits independent per-table Spark jobs
 (max_workers mirrors the DAG's ``concurrency=5``); Spark's scheduler
 interleaves them across executor slots. No orchestrator dependency in the
 engine core — an external Airflow can still call these functions per stage.
+
+Both runners land through one path, :func:`_land`: ``write_staging``
+applies the all-NA drop and writes, and the audited row count is read
+from the parquet footers of the files that write added — one Spark job
+per landing, no persisted recount.
 """
 
 from __future__ import annotations
 
+import os
+import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from smfg_datawarehouse_spark.audit import AuditLedger
@@ -30,6 +38,57 @@ class TableResult:
     row_count: int | None = None
     output_path: str | None = None
     error: str | None = None
+
+
+def _parquet_files(path: str) -> set[str]:
+    if not os.path.isdir(path):
+        return set()
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
+
+
+def _land(df: DataFrame, zones: LakeZones, plan: ExtractionPlan, mode: str) -> tuple[str, int]:
+    """Write ``df`` to the plan's staging directory; return ``(path, rows
+    written)``. The rows are the footer counts of the parquet files this
+    write added: Spark names part files with the write's job UUID, so the
+    listing after minus the listing before is exactly this write's output
+    under both ``overwrite`` and ``append``."""
+    before = _parquet_files(zones.staging_table_dir(plan.schema_name, plan.table_name))
+    path = write_staging(df, zones, plan.schema_name, plan.table_name, mode=mode)
+    added = _parquet_files(path) - before
+    return path, sum(pq.read_metadata(os.path.join(path, f)).num_rows for f in added)
+
+
+def _open_process(
+    catalog: ConfigCatalog, audit: AuditLedger, process_type: str, init_stage: str, stage: str
+) -> int:
+    """Validate the catalog, open a process-master row at ``init_stage``
+    and mark it RUNNING at ``stage``."""
+    errors = catalog.validate()
+    if errors:
+        raise ValueError(f"catalog validation failed: {errors}")
+    process_id = audit.create_process_master(
+        process_type=process_type, current_stage=init_stage
+    )
+    audit.update_process_master(process_id, status="RUNNING", current_stage=stage)
+    return process_id
+
+
+def _audited_table(
+    audit: AuditLedger, process_id: int, stage: str, plan: ExtractionPlan, work
+) -> TableResult:
+    """One table's stage row around ``work() -> (path, rows)``: logged as
+    PROCESSING, closed as SUCCESS with the row count or as FAILED with the
+    error (per-table isolation, L6)."""
+    sid = audit.log_stage_detail(
+        process_id, stage, table_id=plan.table_id, table_name=plan.full_table_name
+    )
+    try:
+        path, n = work()
+    except Exception as exc:
+        audit.update_stage_detail(sid, status="FAILED", error_msg=str(exc)[:2000])
+        return TableResult(plan.full_table_name, "FAILED", error=str(exc))
+    audit.update_stage_detail(sid, status="SUCCESS", row_count=n, output_path=path)
+    return TableResult(plan.full_table_name, "SUCCESS", n, path)
 
 
 def run_staging_extraction(
@@ -59,22 +118,13 @@ def run_staging_extraction(
     Returns (process_id, per-table results); run status derivable from the
     ledger (SUCCESS/PARTIAL/FAILED, L6).
     """
-    errors = catalog.validate()
-    if errors:
-        raise ValueError(f"catalog validation failed: {errors}")
-
-    process_id = audit.create_process_master(
-        process_type=process_type, current_stage="INIT_STAGE"
-    )
-    audit.update_process_master(
-        process_id, status="RUNNING", current_stage="STAGING_EXTRACT"
+    process_id = _open_process(
+        catalog, audit, process_type, "INIT_STAGE", "STAGING_EXTRACT"
     )
 
     if source_reader is None:
 
         def source_reader(s: SparkSession, plan: ExtractionPlan) -> DataFrame:
-            import os
-
             return s.read.parquet(
                 os.path.join(zones.raw, plan.schema_name, plan.table_name)
             )
@@ -82,51 +132,22 @@ def run_staging_extraction(
     plans = compile_extraction_plans(catalog)
 
     def extract_one(plan: ExtractionPlan) -> TableResult:
-        import time
-
         # each worker thread tags its jobs into a per-table FAIR pool so
         # concurrent extractions share executors instead of queueing FIFO
         spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"extract-{plan.table_id}"
         )
-        last_err = ""
+
+        def work() -> tuple[str, int]:
+            return _land(plan.apply(source_reader(spark, plan)), zones, plan, "overwrite")
+
         for attempt in range(retries + 1):
             if attempt and retry_delay_sec:
                 time.sleep(retry_delay_sec)
-            sid = audit.log_stage_detail(
-                process_id,
-                "STAGING_EXTRACT",
-                table_id=plan.table_id,
-                table_name=plan.full_table_name,
-            )
-            try:
-                src = source_reader(spark, plan)
-                # all-NA drop applied HERE (not inside write_staging) so the
-                # audited row count and the written rows come from one
-                # persisted computation — the former write-then-re-read-
-                # parquet count cost a full extra scan per table
-                staged = plan.apply(src).na.drop("all").persist()
-                try:
-                    n = staged.count()
-                    path = write_staging(
-                        staged,
-                        zones,
-                        plan.schema_name,
-                        plan.table_name,
-                        drop_all_na=False,
-                    )
-                finally:
-                    staged.unpersist()
-                audit.update_stage_detail(
-                    sid, status="SUCCESS", row_count=n, output_path=path
-                )
-                return TableResult(plan.full_table_name, "SUCCESS", n, path)
-            except Exception as exc:  # per-table isolation (L6)
-                last_err = str(exc)
-                audit.update_stage_detail(
-                    sid, status="FAILED", error_msg=last_err[:2000]
-                )
-        return TableResult(plan.full_table_name, "FAILED", error=last_err)
+            result = _audited_table(audit, process_id, "STAGING_EXTRACT", plan, work)
+            if result.status == "SUCCESS":
+                break
+        return result
 
     results: list[TableResult] = []
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
@@ -164,7 +185,10 @@ def run_realtime_staging(
     Streaming query over its raw-zone directory through the SAME compiled
     ``ExtractionPlan`` as the batch path (projection/rename/transform/
     filter are stateless, hence streaming-valid), landing micro-batches in
-    the staging zone via ``foreachBatch`` with per-batch audit rows.
+    the staging zone via ``foreachBatch`` with per-batch audit rows. Each
+    micro-batch lands through the batch path's :func:`_land` in append
+    mode, so its audited row count is read from the parquet footers of
+    the files it added — no persisted recount.
 
     Trigger is ``AvailableNow`` — drain the current backlog and stop —
     which is the testable cadence of the always-on production query (same
@@ -186,34 +210,19 @@ def run_realtime_staging(
     Returns (process_id, per-table results) exactly like the batch runner;
     failure isolation and SUCCESS/PARTIAL/FAILED rollup are shared (L6).
     """
-    import os
-
-    errors = catalog.validate()
-    if errors:
-        raise ValueError(f"catalog validation failed: {errors}")
-
+    process_id = _open_process(
+        catalog, audit, process_type, "REALTIME_STAGING", "REALTIME_STAGING"
+    )
     plans = realtime_plans(catalog)
-    process_id = audit.create_process_master(
-        process_type=process_type, current_stage="REALTIME_STAGING"
-    )
-    audit.update_process_master(
-        process_id, status="RUNNING", current_stage="REALTIME_STAGING"
-    )
     ckpt_root = checkpoint_root or os.path.join(zones.logs, "checkpoints")
 
     results: list[TableResult] = []
     for plan in plans:
-        sid = audit.log_stage_detail(
-            process_id,
-            "REALTIME_STAGING",
-            table_id=plan.table_id,
-            table_name=plan.full_table_name,
-        )
         src_dir = os.path.join(zones.raw, plan.schema_name, plan.table_name)
         out_path = zones.staging_table_dir(plan.schema_name, plan.table_name)
         ckpt_dir = os.path.join(ckpt_root, plan.schema_name, plan.table_name)
         marker = os.path.join(ckpt_dir, "_landed_batches")
-        totals = {"rows": 0, "batches": 0}
+        totals = {"rows": 0}
 
         def _landed(batch_id: int) -> bool:
             try:
@@ -233,26 +242,9 @@ def run_realtime_staging(
             # appended it, skip (idempotent at-least-once, see docstring).
             if _landed(batch_id):
                 return
-            # inside foreachBatch the micro-batch is an ordinary DataFrame:
-            # all-NA drop applied HERE (as in the batch path) so the audited
-            # row count and the appended rows come from one persisted
-            # computation — counting pre-drop would overstate landed rows
-            staged = batch_df.na.drop("all").persist()
-            try:
-                n = staged.count()
-                write_staging(
-                    staged,
-                    zones,
-                    _plan.schema_name,
-                    _plan.table_name,
-                    mode="append",
-                    drop_all_na=False,
-                )
-            finally:
-                staged.unpersist()
+            _path, n = _land(batch_df, zones, _plan, "append")
             _mark_landed(batch_id)
             _totals["rows"] += n
-            _totals["batches"] += 1
             audit.log_stage_detail(
                 process_id,
                 "REALTIME_MICROBATCH",
@@ -263,7 +255,7 @@ def run_realtime_staging(
                 output_path=out_path,
             )
 
-        try:
+        def drain() -> tuple[str, int]:
             # streaming sources can't infer schema — peek the batch footer
             schema = spark.read.parquet(src_dir).schema
             stream = spark.readStream.schema(schema).parquet(src_dir)
@@ -275,15 +267,9 @@ def run_realtime_staging(
                 .start()
             )
             q.awaitTermination()
-            audit.update_stage_detail(
-                sid, status="SUCCESS", row_count=totals["rows"], output_path=out_path
-            )
-            results.append(
-                TableResult(plan.full_table_name, "SUCCESS", totals["rows"], out_path)
-            )
-        except Exception as exc:  # per-table isolation, same as batch (L6)
-            audit.update_stage_detail(sid, status="FAILED", error_msg=str(exc)[:2000])
-            results.append(TableResult(plan.full_table_name, "FAILED", error=str(exc)))
+            return out_path, totals["rows"]
+
+        results.append(_audited_table(audit, process_id, "REALTIME_STAGING", plan, drain))
 
     audit.finalize_run(process_id)
     return process_id, results

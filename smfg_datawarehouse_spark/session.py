@@ -153,6 +153,12 @@ def ensure_min_parallelism(df, n_parts: int | None = None):
     through untouched. Results are partition-count-invariant in every
     caller by construction (partial top-k + global resolve, per-row
     kernels, exact-integer aggregations).
+
+    Caveat: pass narrow scans only. For a frame whose plan ends in an
+    exchange, ``getNumPartitions`` reports the static shuffle-partition
+    count, while AQE may coalesce those partitions to one at runtime; the
+    gate then skips the repartition and the kernel runs single-task.
+    The ``.rdd`` probe also costs one extra planning pass.
     """
     if n_parts is None:
         n_parts = df.sparkSession.sparkContext.defaultParallelism

@@ -14,6 +14,7 @@ output is a parameter, not a hard-coded behavior.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,29 +70,31 @@ def compact(
     """
     n_files = max(min_files, _dir_bytes(path) // target_file_bytes or min_files)
     df = spark.read.parquet(path)
-    base = path.rstrip("/")
-    tmp = base + "__compact_tmp"
-    old = base + "__compact_old"
+    tmp = path.rstrip("/") + "__compact_tmp"
     df.coalesce(int(n_files)).write.mode("overwrite").parquet(tmp)
-    # Crash-safe swap via two renames (each atomic on a local/POSIX fs):
-    # rename-old-away -> rename-new-in -> delete-old. A crash in the gap
-    # leaves either the original dir or the fully-written new dir at
-    # `path` — a reader never observes an absent directory, and recovery
-    # is restoring/removing the suffixed leftovers. (Object stores have
-    # no atomic rename; there the production shape is a manifest commit —
-    # Delta/Iceberg-style — not this.)
-    import shutil
+    _swap_dir(tmp, path)
+    return path
 
+
+def _swap_dir(new: str, path: str) -> None:
+    """Replace directory ``path`` with the fully written directory ``new``
+    by two renames (each atomic on a local/POSIX fs): rename-old-away ->
+    rename-new-in -> delete-old. A failed rename-in rolls the original
+    back, so a reader never observes an absent ``path``; a leftover old
+    directory from an earlier crash is cleared first. The one swap every
+    compaction uses. (Object stores have no atomic rename; there the
+    production shape is a manifest commit — Delta/Iceberg-style — not
+    this.)"""
+    old = path.rstrip("/") + "__compact_old"
     if os.path.exists(old):  # leftover from a previous crashed swap
         shutil.rmtree(old)
     os.rename(path, old)
     try:
-        os.rename(tmp, path)
+        os.rename(new, path)
     except OSError:
         os.rename(old, path)  # roll back: restore the original dir
         raise
     shutil.rmtree(old)
-    return path
 
 
 def write_staging(
@@ -100,14 +103,12 @@ def write_staging(
     schema_name: str,
     table_name: str,
     mode: str = "overwrite",
-    drop_all_na: bool = True,
 ) -> str:
-    """Staging-zone write. ``drop_all_na`` replicates the reference's
-    consolidation-time row-quality filter (all-NA rows skipped,
+    """Staging-zone write. Replicates the reference's consolidation-time
+    row-quality filter (all-NA rows skipped,
     ``staging_data_extraction.py:53-56``) as ``na.drop("all")``."""
     path = zones.staging_table_dir(schema_name, table_name)
-    out = df.na.drop("all") if drop_all_na else df
-    out.write.mode(mode).parquet(path)
+    df.na.drop("all").write.mode(mode).parquet(path)
     return path
 
 
@@ -274,7 +275,7 @@ def binpack_compact(
     new directory as HARD LINKS (same inode — zero bytes copied or
     rewritten). This is the incremental OPTIMIZE a continuously-ingesting
     100 TB table runs hourly: cost scales with the small-file backlog,
-    not the table. Same crash-safe two-rename swap as ``compact`` (a
+    not the table. Same crash-safe swap as ``compact`` (``_swap_dir``: a
     reader never observes an absent directory); on an object store the
     production shape is a manifest commit that adds the packed files and
     drops the packed-away ones (``ManifestTable`` is that shape).
@@ -282,8 +283,6 @@ def binpack_compact(
     Returns {"n_before", "n_after", "n_bins", "kept": [basenames]} for
     the caller to assert layout invariants against.
     """
-    import shutil
-
     files = sorted(
         f for f in os.listdir(path) if f.endswith(".parquet")
     )
@@ -306,9 +305,7 @@ def binpack_compact(
             bins.append([f])
             bin_free.append(target_file_bytes - sizes[f])
 
-    base = path.rstrip("/")
-    tmp = base + "__binpack_tmp"
-    old = base + "__binpack_old"
+    tmp = path.rstrip("/") + "__binpack_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     for f in big:
@@ -318,15 +315,7 @@ def binpack_compact(
             1
         ).write.mode("append").parquet(tmp)
 
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.rename(old, path)
-        raise
-    shutil.rmtree(old)
+    _swap_dir(tmp, path)
     n_after = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
     return {
         "n_before": len(files),
@@ -399,11 +388,10 @@ def sorted_compact(
     into the first group (zero bytes, zero rows — no layout effect)
     rather than silently dropped with the old directory.
 
-    Swap protocol: write everything into a temp dir, then two renames
-    (``path`` → ``._compact_old``, staged → ``path``). A reader never
-    sees a half-written table, but a crash BETWEEN the two renames
-    leaves the table at ``._compact_old`` needing a manual rename —
-    single-writer maintenance semantics, not the manifest-commit
+    Swap protocol: write everything into a temp dir, then the same
+    crash-safe two-rename swap as ``compact`` (``_swap_dir``: a failed
+    rename-in restores the original). A reader never sees a half-written
+    table — single-writer maintenance semantics, not the manifest-commit
     protocol (``manifest.append_once`` covers concurrent readers).
     Returns {"n_before", "n_after", "groups"}.
     """
@@ -440,10 +428,7 @@ def sorted_compact(
     groups[0].extend(empties)  # zero-row files: keep their rows (none), drop the files
 
     tmp = path.rstrip("/") + "._compact_tmp"
-    if os.path.exists(tmp):
-        import shutil
-
-        shutil.rmtree(tmp)
+    shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     for i, grp in enumerate(groups):
         (
@@ -462,11 +447,6 @@ def sorted_compact(
                 os.rename(
                     os.path.join(gdir, f), os.path.join(final, f"part-{i:05d}.parquet")
                 )
-    old = path.rstrip("/") + "._compact_old"
-    os.rename(path, old)
-    os.rename(final, path)
-    import shutil
-
-    shutil.rmtree(old)
+    _swap_dir(final, path)
     shutil.rmtree(tmp)
     return {"n_before": len(files), "n_after": len(groups), "groups": len(groups)}

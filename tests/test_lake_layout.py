@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.plans.inspect import formatted_plan
 from smfg_datawarehouse_spark.queries import load_events
+from smfg_datawarehouse_spark.sources import lake
 from smfg_datawarehouse_spark.sources.lake import (
     write_bucketed_table,
     write_partitioned,
@@ -104,27 +106,38 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert rows[1]["score"] is None and rows[2]["score"] == 9.5
 
 
-def test_compact_swap_crash_safe(spark, tmp_path, monkeypatch):
-    """compact()'s swap must never leave a window where `path` is absent:
-    kill the swap at the worst point (after rename-old-away, before
-    rename-new-in fails) and assert the original dir is restored intact."""
+#: each compaction with arguments that compact the test table to one file
+COMPACTIONS = {
+    "compact": lambda spark, path: lake.compact(spark, path, target_file_bytes=1 << 30),
+    "binpack_compact": lambda spark, path: lake.binpack_compact(
+        spark, path, target_file_bytes=1 << 30
+    ),
+    "sorted_compact": lambda spark, path: lake.sorted_compact(spark, path, "id", target_files=1),
+}
+
+
+@pytest.mark.parametrize("compaction", sorted(COMPACTIONS))
+def test_compact_swap_crash_safe(spark, tmp_path, monkeypatch, compaction):
+    """A compaction's swap must never leave a window where `path` is
+    absent: kill the swap at the worst point (after rename-old-away, when
+    the rename of the new directory onto `path` fails) and assert the
+    original dir is restored intact."""
     import os
 
-    from smfg_datawarehouse_spark.sources import lake
-
+    run = COMPACTIONS[compaction]
     path = str(tmp_path / "tbl")
     spark.range(100).withColumn("v", F.col("id") * 2).write.parquet(path)
     before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
 
     real_rename = os.rename
     def failing_rename(src, dst):
-        if src.endswith("__compact_tmp"):  # the rename-new-in step
+        if dst == path and not src.endswith("_old"):  # the rename-new-in step
             raise OSError("injected crash mid-swap")
         return real_rename(src, dst)
 
     monkeypatch.setattr(os, "rename", failing_rename)
     try:
-        lake.compact(spark, path, target_file_bytes=1 << 30)
+        run(spark, path)
         raise AssertionError("expected the injected OSError to propagate")
     except OSError:
         pass
@@ -134,8 +147,10 @@ def test_compact_swap_crash_safe(spark, tmp_path, monkeypatch):
     assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before
     assert not os.path.exists(path + "__compact_old")
 
-    # and a clean run afterwards still compacts to one file
-    lake.compact(spark, path, target_file_bytes=1 << 30)
+    # and a clean run afterwards, over an earlier crash's leftover old
+    # dir, still compacts to one file
+    os.makedirs(path + "__compact_old")
+    run(spark, path)
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert len(files) == 1
     assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before

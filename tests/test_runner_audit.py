@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.audit import AuditLedger
 from smfg_datawarehouse_spark.catalog import seed_fixture_catalog
-from smfg_datawarehouse_spark.runner import run_staging_extraction
+from smfg_datawarehouse_spark.compiler import compile_extraction_plans
+from smfg_datawarehouse_spark.runner import run_realtime_staging, run_staging_extraction
 from smfg_datawarehouse_spark.sources.lake import LakeZones
 from smfg_datawarehouse_spark.transform import (
     apply_output_mapping,
@@ -49,6 +50,105 @@ def test_full_run_success(spark, tmp_path):
     counts = {r["TableName"]: r["RowCount"] for r in sd.collect()}
     assert counts["tpch.lineitem"] == li.count()
     assert all(r["Status"] == "SUCCESS" for r in sd.collect())
+
+
+def _last_job_id(spark) -> int:
+    # the newest id, not a count (as in test_guards): the status store
+    # retains a bounded number of jobs
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def test_one_spark_job_per_staged_table(spark, tmp_path):
+    """With an explicit-schema source reader, staging a table is its one
+    write job: the audited row count comes from the written files'
+    parquet footers, not from a persisted recount."""
+    zones = LakeZones(str(tmp_path / "lake"))
+    _setup_raw(spark, zones)
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+    cat = seed_fixture_catalog(spark)
+
+    def src_dir(plan):
+        return os.path.join(zones.raw, plan.schema_name, plan.table_name)
+
+    schemas = {p.table_name: spark.read.parquet(src_dir(p)).schema for p in compile_extraction_plans(cat)}
+
+    def reader(s, plan):
+        return s.read.schema(schemas[plan.table_name]).parquet(src_dir(plan))
+
+    before = _last_job_id(spark)
+    _pid, results = run_staging_extraction(spark, cat, zones, audit, source_reader=reader)
+    assert [r.status for r in results] == ["SUCCESS"] * 2
+    assert _last_job_id(spark) - before == len(results)
+    for r in results:
+        assert r.row_count == spark.read.parquet(r.output_path).count()
+
+
+def _append_null_rows(spark, src_dir: str, partial: bool) -> None:
+    """Append one file of three all-NULL rows (plus, if ``partial``, one
+    row whose only non-NULL value is ``o_orderkey = -1``) to ``src_dir``."""
+    schema = spark.read.parquet(src_dir).schema
+    rows = [(None,) * len(schema)] * 3
+    if partial:
+        rows.append(tuple(-1 if f.name == "o_orderkey" else None for f in schema))
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src_dir)
+
+
+def _all_null(df):
+    return df.where(" AND ".join(f"`{c}` IS NULL" for c in df.columns))
+
+
+def test_all_na_rows_not_landed_batch(spark, tmp_path):
+    zones = LakeZones(str(tmp_path / "lake"))
+    _setup_raw(spark, zones)
+    src_dir = os.path.join(zones.raw, "tpch", "orders")
+    n_src = spark.read.parquet(src_dir).count()
+    _append_null_rows(spark, src_dir, partial=True)
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+
+    pid, results = run_staging_extraction(spark, seed_fixture_catalog(spark), zones, audit)
+    staged = spark.read.parquet(zones.staging_table_dir("tpch", "orders"))
+    assert staged.count() == n_src + 1  # the partly-NULL row is kept
+    assert _all_null(staged).count() == 0
+    audited = {
+        r["TableName"]: r["RowCount"]
+        for r in audit.stage_detail().where(F.col("ProcessID") == pid).collect()
+    }
+    for r in results:
+        landed = spark.read.parquet(r.output_path).count()
+        assert audited[r.table] == r.row_count == landed
+
+
+def test_all_na_rows_not_landed_realtime(spark, tmp_path):
+    zones = LakeZones(str(tmp_path / "lake"))
+    _setup_raw(spark, zones)
+    src_dir = os.path.join(zones.raw, "tpch", "orders")
+    n_src = spark.read.parquet(src_dir).count()
+    _append_null_rows(spark, src_dir, partial=True)
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+    cat = seed_fixture_catalog(spark)
+    for row in cat.table_config:
+        if row["TableName"] == "orders":
+            row["RefreshFrequency"] = "REALTIME"
+
+    def micro_counts(pid):
+        sd = audit.stage_detail().where(
+            (F.col("ProcessID") == pid) & (F.col("StageName") == "REALTIME_MICROBATCH")
+        )
+        return [r["RowCount"] for r in sd.collect()]
+
+    pid, results = run_realtime_staging(spark, cat, zones, audit)
+    out = zones.staging_table_dir("tpch", "orders")
+    staged = spark.read.parquet(out)
+    assert staged.count() == n_src + 1
+    assert _all_null(staged).count() == 0
+    assert results[0].row_count == sum(micro_counts(pid)) == staged.count()
+
+    # a micro-batch of only all-NULL rows lands no rows and audits 0
+    _append_null_rows(spark, src_dir, partial=False)
+    pid2, results2 = run_realtime_staging(spark, cat, zones, audit)
+    assert results2[0].status == "SUCCESS"
+    assert results2[0].row_count == 0 and micro_counts(pid2) == [0]
+    assert spark.read.parquet(out).count() == n_src + 1
 
 
 def test_partial_run_on_table_failure(spark, tmp_path):

@@ -785,3 +785,19 @@ def test_s25_mv_refresh_batch_split_invariance(spark, tmp_path):
         for r in partial(orders).collect()
     )
     assert two == oneshot
+
+
+def test_stage_ordered_slices_rejects_empty_slice(spark, tmp_path):
+    """An empty slice would stage no file and shift the micro-batch
+    numbering of every later slice: it must raise before any slice file
+    moves into the raw directory."""
+    from smfg_datawarehouse_spark.operators.streaming_certs import _stage_ordered_slices
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    df = spark.range(10)
+    with pytest.raises(ValueError, match=r"empty slices \[1\]"):
+        _stage_ordered_slices(
+            str(tmp_path / "src"), str(raw), [df.where("id < 5"), df.where("id > 99"), df]
+        )
+    assert list(raw.iterdir()) == []
