@@ -106,13 +106,6 @@ class ExtractionPlan:
             out = out.where(F.expr(self.filter_sql))
         return out.select(*self.columns())
 
-    def to_sql(self, from_clause: str | None = None) -> str:
-        cols = ", ".join(f"{expr} AS {alias}" for expr, alias in self.projections)
-        sql = f"SELECT {cols} FROM {from_clause or self.full_table_name}"
-        if self.filter_sql:
-            sql += f" WHERE {self.filter_sql}"
-        return sql
-
 
 def compile_extraction_plans(catalog: ConfigCatalog) -> list[ExtractionPlan]:
     """Structural compile: active tables → validated ExtractionPlans.

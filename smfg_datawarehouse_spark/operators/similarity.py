@@ -185,13 +185,16 @@ MAX_COLLECTED_VECTORS = 100_000
 
 
 def _collect_matrix(
-    df: DataFrame, id_col: str, vec_col: str, max_rows: int = MAX_COLLECTED_VECTORS
+    df: DataFrame, id_col: str, vec_col: str, max_rows: int | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
     """Collect a small vector table to (ids, matrix), sorted by id.
 
     Enforces the small-side contract: raises ``ValueError`` when the table
-    exceeds ``max_rows`` (checked with a ``limit(max+1).count()`` probe —
-    never collects the oversized set)."""
+    exceeds ``max_rows`` (default :data:`MAX_COLLECTED_VECTORS`, read at
+    call time; checked with a ``limit(max+1).count()`` probe — never
+    collects the oversized set)."""
+    if max_rows is None:
+        max_rows = MAX_COLLECTED_VECTORS
     probe = df.limit(max_rows + 1).count()
     if probe > max_rows:
         raise ValueError(
@@ -1662,12 +1665,10 @@ def x106_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange is the cell-sized groupBy. Bit-exactness contract on
     # :func:`_cosine_cells_np` (same fold/tie/ANSI semantics the
     # expression form had); pinned in tests/test_r10_optimizations.py.
-    cent_rows = sorted(
-        (r["cid"], r["cv"])
-        for r in vecs.where(F.col("vec_id") % 29 == 7)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-        .collect()
+    cids, cmat = _collect_matrix(
+        vecs.where(F.col("vec_id") % 29 == 7), "vec_id", "v"
     )
+    cent_rows = list(zip(cids.tolist(), cmat.tolist()))
     vecs = ensure_min_parallelism(vecs)
     assigned = _cosine_cells_np(vecs, cent_rows, carry_v=False).select(
         "vec_id", "cid"

@@ -1,12 +1,15 @@
-"""Structured-Streaming certifications [T2]: s01-s21 (s17 gate-registered).
+"""Structured-Streaming certifications [T2]: s01-s26 (s17 gate-registered).
 
 Every streaming path as a registered, oracle-checked query: each stages
 the events fixture as a raw-zone landing directory (multi-file backlog
 where cross-micro-batch state is the point), drains it with
-AvailableNow into a memory sink, and hash-checks the drained result
-against a plain batch SQL oracle — certified stream ≡ batch. Moved out
-of ``events_analytics.py`` in the round-5 module split (zero behavior
-change); shared window/join oracles stay with their batch twins there.
+AvailableNow, and hash-checks the drained result against a plain batch
+SQL oracle — certified stream ≡ batch. Every drain goes through
+``streaming.windows``: memory-sink drains through
+``run_stream_to_memory`` under a fixed ``<tag>_mem`` name, and
+``foreachBatch`` sinks (s10, s15, s20, s24-s26) hand their writer to
+``drain_available``. Shared window/join oracles stay with their batch
+twins in ``events_analytics.py``.
 """
 
 from __future__ import annotations
@@ -35,6 +38,8 @@ from smfg_datawarehouse_spark.queries import (
     t,
 )
 from smfg_datawarehouse_spark.streaming.windows import (
+    drain_available,
+    run_stream_to_memory,
     session_agg,
     sliding_agg,
     tumbling_agg,
@@ -101,7 +106,7 @@ def s18_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    counters = _drain_stream(spark, counters_stream, "s18", "complete")
+    counters = run_stream_to_memory(spark, counters_stream, "s18_mem", "complete")
 
     exact = (
         load_events(spark, sf_dir)
@@ -159,7 +164,9 @@ def s01_streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame
     from smfg_datawarehouse_spark.streaming.windows import events_stream
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s01"))
-    return _drain_stream(spark, tumbling_agg(stream, "1 hour"), "s01", "complete")
+    return run_stream_to_memory(
+        spark, tumbling_agg(stream, "1 hour"), "s01_mem", "complete"
+    )
 
 
 def _stage_ordered_slices(
@@ -212,41 +219,6 @@ def _stage_ordered_slices(
         _os.utime(dst, (mt, mt))
 
 
-def _drain_stream(
-    spark: SparkSession,
-    streaming_df: DataFrame,
-    tag: str,
-    output_mode: str,
-    progress_sink: list | None = None,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain via ``run_stream_to_memory`` under a FIXED per-tag sink name,
-    dropping the previous run's memory table first — repeated
-    certification/bench passes in one long-lived app would otherwise
-    accumulate a uuid-named drained result set in driver memory per run
-    (the same bound ``_scratch_dir`` enforces for files)."""
-    from smfg_datawarehouse_spark.streaming.windows import run_stream_to_memory
-
-    from smfg_datawarehouse_spark.streaming.windows import (
-        DRAIN_STATE_PARTITIONS,
-    )
-
-    name = f"{tag}_mem"
-    spark.catalog.dropTempView(name)
-    return run_stream_to_memory(
-        spark,
-        streaming_df,
-        name,
-        output_mode,
-        state_partitions=(
-            DRAIN_STATE_PARTITIONS
-            if state_partitions is None
-            else state_partitions
-        ),
-        progress_sink=progress_sink,
-    )
-
-
 def _stage_events_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
     """Copy the events fixture file into a per-app scratch DIRECTORY —
     streaming file sources read directories of arriving files (the
@@ -292,8 +264,8 @@ def s02_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     # applyInPandasWithState runs real per-key compute in PYTHON workers:
     # parallelism here is sized to the compute, not the state volume
     # (r9 A/B: 4 state partitions regressed this drain ~+0.4 s)
-    drained = _drain_stream(
-        spark, running_user_totals(stream), "s02", "update",
+    drained = run_stream_to_memory(
+        spark, running_user_totals(stream), "s02_mem", "update",
         state_partitions=8,
     )
     final = F.max(F.struct("n_events", "total_micros")).alias("s")
@@ -317,8 +289,8 @@ def s03_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.streaming.windows import events_stream
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s03"))
-    return _drain_stream(
-        spark, view_purchase_conversions(stream), "s03", "append"
+    return run_stream_to_memory(
+        spark, view_purchase_conversions(stream), "s03_mem", "append"
     )
 
 
@@ -358,7 +330,7 @@ def s04_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.dropDuplicates(["event_id"]).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    return _drain_stream(spark, deduped, "s04", "append")
+    return run_stream_to_memory(spark, deduped, "s04_mem", "append")
 
 
 @register("s05_streaming_session_window", _Q22_ORACLE)
@@ -378,7 +350,9 @@ def s05_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.streaming.windows import events_stream, session_agg
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s05"))
-    return _drain_stream(spark, session_agg(stream, "5 minutes"), "s05", "complete")
+    return run_stream_to_memory(
+        spark, session_agg(stream, "5 minutes"), "s05_mem", "complete"
+    )
 
 
 @register("s06_streaming_sliding_window", _Q21_ORACLE)
@@ -393,8 +367,8 @@ def s06_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.streaming.windows import events_stream, sliding_agg
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s06"))
-    return _drain_stream(
-        spark, sliding_agg(stream, "1 hour", "30 minutes"), "s06", "complete"
+    return run_stream_to_memory(
+        spark, sliding_agg(stream, "1 hour", "30 minutes"), "s06_mem", "complete"
     )
 
 
@@ -434,7 +408,7 @@ def s07_streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = enrich_with_dimension(stream, dim).select(
         "event_id", "user_id", "event_type", "segment"
     )
-    return _drain_stream(spark, enriched, "s07", "append")
+    return run_stream_to_memory(spark, enriched, "s07_mem", "append")
 
 
 _OUTER_VIEW_PURCHASE_ORACLE = """
@@ -516,8 +490,8 @@ def s08_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hb.write.mode("append").parquet(src_dir)
 
     stream = events_stream(spark, src_dir)
-    return _drain_stream(
-        spark, view_purchase_conversions_outer(stream), "s08", "append"
+    return run_stream_to_memory(
+        spark, view_purchase_conversions_outer(stream), "s08_mem", "append"
     )
 
 
@@ -549,7 +523,9 @@ def s09_streaming_backlog_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(
         spark, _os.path.join(src_dir, "raw"), max_files_per_trigger=1
     )
-    return _drain_stream(spark, tumbling_agg(stream, "1 hour"), "s09", "complete")
+    return run_stream_to_memory(
+        spark, tumbling_agg(stream, "1 hour"), "s09_mem", "complete"
+    )
 
 
 @register(
@@ -608,17 +584,12 @@ def s10_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         vt.merge(compact, ["user_id"], precedence=["ts", "event_id"])
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option(
+    drain_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
             "checkpointLocation", _os.path.join(src_dir, "ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("s10 CDC drain did not terminate within 600s")
     if vt.current_version() is None:
         raise RuntimeError("s10 drain landed no snapshot")
     return vt.read().select("event_id", "user_id", "ts", "event_type", "value")
@@ -720,8 +691,9 @@ def s11_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, raw, watermark="30 minutes", max_files_per_trigger=1
     )
     progress: list = []
-    out = _drain_stream(
-        spark, tumbling_agg(stream, "1 hour"), "s11", "append", progress
+    out = run_stream_to_memory(
+        spark, tumbling_agg(stream, "1 hour"), "s11_mem", "append",
+        progress_sink=progress,
     )
     dropped = sum(
         op.get("numRowsDroppedByWatermark", 0) or 0
@@ -774,8 +746,8 @@ def s12_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.streaming.windows import events_stream
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s12"))
-    return _drain_stream(
-        spark, view_purchase_converted_views(stream), "s12", "append"
+    return run_stream_to_memory(
+        spark, view_purchase_converted_views(stream), "s12_mem", "append"
     )
 
 
@@ -815,35 +787,14 @@ def s13_state_store_introspection(spark: SparkSession, sf_dir: str) -> DataFrame
     import os as _os
 
     from smfg_datawarehouse_spark.queries import _scratch_dir
-    from smfg_datawarehouse_spark.streaming.windows import (
-        DRAIN_STATE_PARTITIONS,
-        events_stream,
-    )
+    from smfg_datawarehouse_spark.streaming.windows import events_stream
 
     src = _scratch_dir(spark, "s13")
     raw = _stage_events_dir(spark, sf_dir, "s13_raw")
     ckpt = _os.path.join(src, "ckpt")
     stream = events_stream(spark, raw, watermark="30 minutes")
     agg = tumbling_agg(stream, "1 hour")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(DRAIN_STATE_PARTITIONS)
-    )
-    try:
-        spark.catalog.dropTempView("s13_mem")
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("s13_mem")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("s13 drain did not terminate within 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_stream_to_memory(spark, agg, "s13_mem", "append", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.window.start").alias("window_start"),
@@ -941,7 +892,9 @@ def s14_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     progress: list = []
-    out = _drain_stream(spark, deduped, "s14", "append", progress)
+    out = run_stream_to_memory(
+        spark, deduped, "s14_mem", "append", progress_sink=progress
+    )
     dropped_by_batch = {
         p["batchId"]: sum(
             op.get("numRowsDroppedByWatermark", 0) or 0
@@ -1035,15 +988,12 @@ def s15_streaming_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataF
         published.append(batch_id)
 
     stream = events_stream(spark, raw, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", _os.path.join(src, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available(
+        spark,
+        stream.writeStream.foreachBatch(gate).option(
+            "checkpointLocation", _os.path.join(src, "ckpt")
+        ),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("s15 WAP drain did not terminate within 600s")
     if sum(quarantined) != n_bad or len(published) != 2:
         raise RuntimeError(
             f"s15 gate diverged: quarantined {sum(quarantined)} rows "
@@ -1076,10 +1026,7 @@ def s16_checkpoint_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
     import os as _os
 
     from smfg_datawarehouse_spark.queries import _scratch_dir, load_events
-    from smfg_datawarehouse_spark.streaming.windows import (
-        DRAIN_STATE_PARTITIONS,
-        events_stream,
-    )
+    from smfg_datawarehouse_spark.streaming.windows import events_stream
 
     base = _scratch_dir(spark, "s16")
     src = _os.path.join(base, "raw")
@@ -1090,32 +1037,23 @@ def s16_checkpoint_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
         "overwrite"
     ).parquet(src)
 
-    def drain(name: str) -> int:
-        spark.catalog.dropTempView(name)
-        q = (
-            tumbling_agg(events_stream(spark, src), "1 hour")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def drain(name: str) -> tuple[DataFrame, int]:
+        progress: list = []
+        out = run_stream_to_memory(
+            spark,
+            tumbling_agg(events_stream(spark, src), "1 hour"),
+            name,
+            "complete",
+            progress_sink=progress,
+            checkpoint=ckpt,
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(f"s16 drain '{name}' did not terminate")
-        return sum(p["numInputRows"] for p in q.recentProgress)
+        return out, sum(p["numInputRows"] for p in progress)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(DRAIN_STATE_PARTITIONS))
-    try:
-        p1_rows = drain("s16_phase1_mem")
-        ev.where(F.col("event_id") % 3 != 0).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        p2_rows = drain("s16_phase2_mem")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _, p1_rows = drain("s16_phase1_mem")
+    ev.where(F.col("event_id") % 3 != 0).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    phase2, p2_rows = drain("s16_phase2_mem")
 
     if p2_rows >= total:
         raise RuntimeError(
@@ -1127,7 +1065,7 @@ def s16_checkpoint_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
             f"phases read {p1_rows}+{p2_rows} rows, fixture has {total} — "
             "rows were lost or double-read across the restart"
         )
-    return spark.table("s16_phase2_mem")
+    return phase2
 
 
 S17_SKIP_REASON: str | None = None
@@ -1150,8 +1088,8 @@ try:  # probe the exact dependency the v2 worker protocol imports
         from smfg_datawarehouse_spark.streaming.windows import events_stream
 
         stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s17"))
-        drained = _drain_stream(
-            spark, running_user_totals_v2(stream), "s17", "update"
+        drained = run_stream_to_memory(
+            spark, running_user_totals_v2(stream), "s17_mem", "update"
         )
         final = F.max(F.struct("n_events", "total_micros")).alias("s")
         return drained.groupBy("user_id").agg(final).select(
@@ -1254,7 +1192,7 @@ def s19_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "idx")
         .agg(F.max("rho").alias("rho"))
     )
-    regs = _drain_stream(spark, regs_stream, "s19", "complete")
+    regs = run_stream_to_memory(spark, regs_stream, "s19_mem", "complete")
 
     rolled = regs.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_present"),
@@ -1321,15 +1259,12 @@ def s20_streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFra
         append_once(table, seen[batch_id], "s20", batch_id)
 
     stream = events_stream(spark, raw, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _os.path.join(src, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available(
+        spark,
+        stream.writeStream.foreachBatch(sink).option(
+            "checkpointLocation", _os.path.join(src, "ckpt")
+        ),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("s20 drain did not terminate")
     if len(seen) < 2:
         raise RuntimeError(f"expected a multi-batch drain, saw {sorted(seen)}")
 
@@ -1392,7 +1327,7 @@ def s21_streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily_stream = stream.groupBy(
         F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(F.kll_sketch_agg_double("value", 200).alias("sk"))
-    daily = _drain_stream(spark, daily_stream, "s21", "complete")
+    daily = run_stream_to_memory(spark, daily_stream, "s21_mem", "complete")
 
     merged = daily.agg(F.collect_list("sk").alias("sks")).select(
         F.expr(
@@ -1526,7 +1461,7 @@ def s22_streaming_chained_aggregation(spark: SparkSession, sf_dir: str) -> DataF
             "max_slice_cnt",
         )
     )
-    return _drain_stream(spark, daily, "s22", "append")
+    return run_stream_to_memory(spark, daily, "s22_mem", "append")
 
 
 @register("s23_streaming_source_union", _S01_ORACLE)
@@ -1565,8 +1500,8 @@ def s23_streaming_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, raw_a, max_files_per_trigger=1).unionByName(
         events_stream(spark, raw_b, max_files_per_trigger=1)
     )
-    return _drain_stream(
-        spark, tumbling_agg(stream, "1 hour"), "s23", "complete"
+    return run_stream_to_memory(
+        spark, tumbling_agg(stream, "1 hour"), "s23_mem", "complete"
     ).select(
         F.col("window_start"), "event_type", "cnt", "total_value"
     )
@@ -1724,15 +1659,12 @@ def s24_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     stream = events_stream(spark, raw, max_files_per_trigger=1).select(
         "event_id", "user_id", "ts", "event_type"
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", _os.path.join(src, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", _os.path.join(src, "ckpt")
+        ),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("s24 SCD2 drain did not terminate within 600s")
     if vt.current_version() is None:
         raise RuntimeError("s24 drain landed no dimension snapshot")
     return vt.read().select(
@@ -1814,15 +1746,12 @@ def s25_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(raw)
     )
-    q = (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", _os.path.join(src, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available(
+        spark,
+        stream.writeStream.foreachBatch(refresh).option(
+            "checkpointLocation", _os.path.join(src, "ckpt")
+        ),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("s25 MV refresh drain did not terminate in 600s")
     if vt.current_version() is None:
         raise RuntimeError("s25 drain landed no MV snapshot")
     return vt.read().select(
@@ -2061,15 +1990,12 @@ def s26_streaming_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         .option("maxFilesPerTrigger", 1)
         .parquet(raw)
     )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", _os.path.join(src, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_available(
+        spark,
+        stream.writeStream.foreachBatch(maintain).option(
+            "checkpointLocation", _os.path.join(src, "ckpt")
+        ),
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("s26 index-maintenance drain did not terminate in 600s")
 
     verdicts = spark.read.parquet(verd_path).localCheckpoint(eager=True)
     # wave↔batch purity from the log itself: a wave split across batches

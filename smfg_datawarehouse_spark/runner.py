@@ -29,6 +29,7 @@ from smfg_datawarehouse_spark.audit import AuditLedger
 from smfg_datawarehouse_spark.catalog import ConfigCatalog
 from smfg_datawarehouse_spark.compiler import ExtractionPlan, compile_extraction_plans
 from smfg_datawarehouse_spark.sources.lake import LakeZones, write_staging
+from smfg_datawarehouse_spark.streaming.windows import drain_available
 
 
 @dataclass
@@ -190,14 +191,16 @@ def run_realtime_staging(
     mode, so its audited row count is read from the parquet footers of
     the files it added — no persisted recount.
 
-    Trigger is ``AvailableNow`` — drain the current backlog and stop —
-    which is the testable cadence of the always-on production query (same
-    checkpointed source offsets; a long-running deployment simply omits
-    the trigger). Checkpoints persist under the lake's logs zone keyed by
-    the SCHEMA-QUALIFIED table name (two same-named tables in different
-    schemas must not share source offsets), so a re-run after new raw
-    files arrive processes ONLY the new files (streaming-incremental, the
-    realtime analogue of T1's watermark).
+    Trigger is ``AvailableNow`` — drain the current backlog and stop,
+    through :func:`~smfg_datawarehouse_spark.streaming.windows.drain_available`
+    with no timeout — which is the testable cadence of the always-on
+    production query (same checkpointed source offsets; a long-running
+    deployment simply omits the trigger). Checkpoints persist under the
+    lake's logs zone keyed by the SCHEMA-QUALIFIED table name (two
+    same-named tables in different schemas must not share source
+    offsets), so a re-run after new raw files arrive processes ONLY the
+    new files (streaming-incremental, the realtime analogue of T1's
+    watermark).
 
     Delivery is at-least-once with idempotent replay in the common case:
     each landed micro-batch records its ``batch_id`` in a marker file next
@@ -259,14 +262,12 @@ def run_realtime_staging(
             # streaming sources can't infer schema — peek the batch footer
             schema = spark.read.parquet(src_dir).schema
             stream = spark.readStream.schema(schema).parquet(src_dir)
-            q = (
+            writer = (
                 plan.apply(stream)
                 .writeStream.foreachBatch(land_batch)
                 .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
+            drain_available(spark, writer, timeout_s=None)
             return out_path, totals["rows"]
 
         results.append(_audited_table(audit, process_id, "REALTIME_STAGING", plan, drain))

@@ -6,9 +6,12 @@ same knobs that matter on a real cluster:
 - AQE on (runtime re-planning, skew-join handling, partition coalescing)
 - UTC session timezone (determinism across environments)
 - Arrow enabled for the pandas-UDF escape hatches
-- ``spark.sql.shuffle.partitions`` sized to the local core count rather
-  than the 200 default; on a production cluster this is overridden by AQE
-  coalescing + explicit ``repartition`` at write boundaries.
+- ``spark.sql.shuffle.partitions`` 32 (or the ``shuffle_partitions``
+  argument) rather than the 200 default; on a production cluster this is
+  overridden by AQE coalescing + explicit ``repartition`` at write
+  boundaries.
+- ``spark.driver.memory`` sized to the host: half of physical RAM, never
+  above 16g (``SPARK_GRAFT_DRIVER_MEM`` overrides it).
 
 Reference parity note: the reference has no engine/session concept — it
 opens SQLAlchemy engines per task (``airflow_utility/process_logger.py:41-77``).
@@ -20,6 +23,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Driver heap for this host: half of its physical RAM, never above
+    16g, in MiB."""
+    ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, ram_bytes // 2**21)}m"
+
 
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
@@ -49,8 +60,10 @@ _DEFAULTS = {
     ),
     # local mode = driver-only: a moderate heap beats a huge one — measured
     # bench variance with 48g showed multi-second GC spikes on long
-    # many-query sessions; 16g is stable (overridable via SPARK_GRAFT_DRIVER_MEM)
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # many-query sessions; 16g is stable. A small host gets half its RAM,
+    # leaving the rest to the Python workers and the OS.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or default_driver_memory(),
     "spark.driver.maxResultSize": "4g",
 }
 
@@ -60,8 +73,8 @@ _DEFAULTS = {
 #: keeps every version of every key in executor memory — fine for the
 #: certification drains here, an OOM at production state volumes).
 #: Off by default locally (the default store is faster for tiny state and
-#: avoids RocksDB JNI warm-up in the 191-query bench); flip on via
-#: ``SPARK_GRAFT_ROCKSDB_STATE=1`` or get_spark(rocksdb_state=True).
+#: avoids RocksDB JNI warm-up in the 191-query bench); a deployment turns
+#: it on by passing this dict as ``get_spark(extra_conf=...)``.
 #: Results are state-store-provider-invariant — tests/test_streaming
 #: certifies stream==batch under both providers.
 ROCKSDB_STATE_CONF = {
@@ -80,28 +93,17 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
-    ``rocksdb_state`` (or ``SPARK_GRAFT_ROCKSDB_STATE=1``) switches
-    Structured Streaming to the RocksDB state store (see
-    :data:`ROCKSDB_STATE_CONF`).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
     conf = dict(_DEFAULTS)
-    n_shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    )
-    conf["spark.sql.shuffle.partitions"] = str(n_shuffle)
-    if rocksdb_state is None:
-        rocksdb_state = os.environ.get("SPARK_GRAFT_ROCKSDB_STATE", "") == "1"
-    if rocksdb_state:
-        conf.update(ROCKSDB_STATE_CONF)
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or 32)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -40,6 +40,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _swap_pointer(path: str, doc: dict) -> None:
+    """Atomically replace the pointer file ``path`` with ``doc`` as JSON:
+    write a sibling temp file, then ``os.replace`` it over ``path``.
+    Readers see the old pointer or the new one, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    os.replace(tmp, path)
+
+
 def nullable_copy(schema):
     """Detached, all-nullable copy of a StructType.
 
@@ -161,10 +171,7 @@ class ManifestTable:
         v = (self.current_version() or 0) + 1
         with open(self._manifest_path(v), "w") as fh:
             json.dump({"version": v, "files": sorted(files), "txns": txns}, fh)
-        tmp = self._current_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": v}, fh)
-        os.replace(tmp, self._current_path())
+        _swap_pointer(self._current_path(), {"version": v})
         return v
 
     def txns(self, version: int | None = None) -> dict[str, int]:
@@ -398,10 +405,7 @@ class MultiTableCatalog:
 
         with ThreadPoolExecutor(max_workers=max(1, len(writes))) as pool:
             pinned.update(dict(pool.map(_commit, writes.items())))
-        tmp = self._current_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"tables": pinned}, fh)
-        os.replace(tmp, self._current_path())
+        _swap_pointer(self._current_path(), {"tables": pinned})
         return pinned
 
     def read(self, name: str) -> DataFrame:
@@ -510,10 +514,7 @@ class ManifestTree:
         }
         with open(os.path.join(self.path, "manifest", branch["branch"]), "w") as fh:
             json.dump({"files": sorted(files)}, fh)
-        tmp = self._root_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"branches": self._root() + [branch]}, fh)
-        os.replace(tmp, self._root_path())
+        _swap_pointer(self._root_path(), {"branches": self._root() + [branch]})
         return branch
 
     def read_pruned(self, lo, hi) -> tuple[DataFrame, int, int]:

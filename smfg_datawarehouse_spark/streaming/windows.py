@@ -9,6 +9,7 @@ compile to ordinary grouped aggregation (no state store).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -128,6 +129,59 @@ def session_agg(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
 DRAIN_STATE_PARTITIONS = 4
 
 
+#: Bound on one bounded drain, in seconds. A drain still running at the
+#: bound is stopped and raises: a partial sink would hash-fail a
+#: certification with no hint of why.
+DRAIN_TIMEOUT_S = 600
+
+_DEFAULT_TIMEOUT = object()
+
+
+def drain_available(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    *,
+    state_partitions: int | None = None,
+    timeout_s: float | None = _DEFAULT_TIMEOUT,  # type: ignore[assignment]
+) -> list[dict]:
+    """Start ``writer`` with ``Trigger.AvailableNow``, wait for it to drain
+    the current backlog, and return its per-micro-batch progress dicts.
+
+    ``writer`` is caller-built (memory sink or ``foreachBatch``, with the
+    caller's options and checkpoint). ``timeout_s`` defaults to
+    :data:`DRAIN_TIMEOUT_S`, read at call time; ``None`` waits without
+    bound. On timeout the query is stopped and ``TimeoutError`` raised.
+
+    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` to this
+    drain (state-store partition sizing — see DRAIN_STATE_PARTITIONS):
+    Structured Streaming pins the count into the query's checkpoint at
+    first start, and the prior value is restored only after the query
+    has terminated. The override IS session-global while the drain runs:
+    a batch query planned concurrently on the same SparkSession from
+    another driver thread would inherit it. This engine runs one query
+    per session at a time; a multi-threaded deployment should drain on a
+    dedicated ``spark.newSession()``."""
+    if timeout_s is _DEFAULT_TIMEOUT:
+        timeout_s = DRAIN_TIMEOUT_S
+    if state_partitions is not None:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        q = writer.trigger(availableNow=True).start()
+        if timeout_s is None:
+            q.awaitTermination()
+        elif not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(
+                f"streaming drain '{q.name or q.id}' did not terminate "
+                f"within {timeout_s}s"
+            )
+        return q.recentProgress
+    finally:
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def run_stream_to_memory(
     spark: SparkSession,
     streaming_df: DataFrame,
@@ -135,50 +189,33 @@ def run_stream_to_memory(
     output_mode: str = "complete",
     state_partitions: int | None = DRAIN_STATE_PARTITIONS,
     progress_sink: list | None = None,
+    checkpoint: str | None = None,
 ) -> DataFrame:
-    """Drain a streaming query with Trigger.AvailableNow into a memory
-    sink; returns the result table. Complete output mode for windowed aggs
-    (the default); append for stateless transforms/joins.
+    """Drain a streaming query with :func:`drain_available` into a memory
+    sink named ``query_name``; returns the result table. Complete output
+    mode for windowed aggs (the default); append for stateless
+    transforms/joins.
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` to THIS
-    drain (state-store partition sizing — see DRAIN_STATE_PARTITIONS):
-    Structured Streaming pins the count into the query's checkpoint at
-    start, so setting it before ``start()`` and restoring after the drain
-    cannot leak into THIS query's future plans — every drain here uses a
-    fresh checkpoint. The set-then-restore IS session-global while the
-    drain runs, though: an unrelated batch query planned concurrently on
-    the same SparkSession from another driver thread would inherit the
-    override. This engine's runners are single-threaded on the driver
-    (one query in flight per session); a multi-threaded deployment should
-    hand this function a dedicated ``spark.newSession()`` so the override
-    is scoped to that session's conf.
+    A previous memory table of the same name is dropped first, so
+    repeated drains under one fixed name return only the latest drain's
+    rows and a long-lived app holds one result set per name.
 
     ``progress_sink``: pass a list to receive the query's per-micro-batch
     ``StreamingQueryProgress`` dicts after the drain — the handle itself
     is gone once the query terminates, and watermark-semantics
     certifications (late-drop counts, batch boundaries) need the
-    operator metrics, not just the sink table."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            # a timed-out drain would silently surface a PARTIAL memory table
-            # (and hash-fail certification inexplicably) — fail loudly instead
-            q.stop()
-            raise TimeoutError(
-                f"streaming drain '{query_name}' did not terminate within 600s"
-            )
-        if progress_sink is not None:
-            progress_sink.extend(q.recentProgress)
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    operator metrics, not just the sink table. ``checkpoint`` pins the
+    query's checkpoint location (state-store reads, restart recovery);
+    by default each drain gets a fresh temporary one."""
+    spark.catalog.dropTempView(query_name)
+    writer = (
+        streaming_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    progress = drain_available(spark, writer, state_partitions=state_partitions)
+    if progress_sink is not None:
+        progress_sink.extend(progress)
     return spark.table(query_name)

@@ -149,6 +149,33 @@ def test_collect_matrix_rejects_oversized_query_set(spark):
     assert len(ids) == 500 and mat.shape == (500, 2)
 
 
+def test_x106_centroid_collect_honors_cap(spark, monkeypatch):
+    """x106 collects its IVF centroids under the MAX_COLLECTED_VECTORS
+    small-side contract: a cap below the centroid count refuses."""
+    from conftest import SF_DIR
+
+    from smfg_datawarehouse_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "MAX_COLLECTED_VECTORS", 1)
+    with pytest.raises(ValueError, match="refusing to collect"):
+        similarity.x106_ivf_cell_balance(spark, SF_DIR)
+
+
+def test_default_driver_memory_fits_host(monkeypatch):
+    """The default driver heap is half of physical RAM, never above 16g."""
+    from smfg_datawarehouse_spark import session
+
+    def stub_ram(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+    stub_ram(15)
+    mb = int(session.default_driver_memory().removesuffix("m"))
+    assert mb <= 7.5 * 1024
+    stub_ram(64)
+    assert session.default_driver_memory() == "16384m"
+
+
 def test_tfidf_prefix_filter_bounds_candidates(spark):
     """All-Pairs prefix filtering (Bayardo WWW'07): on a corpus where doc
     groups share one mid-frequency token (df below the skew cap) but are

@@ -801,3 +801,40 @@ def test_stage_ordered_slices_rejects_empty_slice(spark, tmp_path):
             str(tmp_path / "src"), str(raw), [df.where("id < 5"), df.where("id > 99"), df]
         )
     assert list(raw.iterdir()) == []
+
+
+def test_drain_timeout_stops_query_and_restores_partitions(
+    spark, events_dir, monkeypatch
+):
+    """A drain that outlives DRAIN_TIMEOUT_S raises, leaves no active
+    query behind, and restores the session's shuffle-partition setting
+    it overrode for the drain's state stores."""
+    from smfg_datawarehouse_spark.streaming import windows
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(windows, "DRAIN_TIMEOUT_S", 0.001)
+    stream = events_stream(spark, events_dir)
+    with pytest.raises(TimeoutError, match="did not terminate"):
+        run_stream_to_memory(
+            spark, tumbling_agg(stream, "1 hour"), "timeout_test", state_partitions=3
+        )
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+
+
+def test_repeated_drain_under_one_name_returns_latest_rows(spark, events_dir):
+    """Two drains under one memory-sink name: the table returned (and the
+    name itself) hold the second drain's rows only."""
+    from pyspark.sql import functions as F
+
+    ids = events_stream(spark, events_dir).select("event_id")
+    first = run_stream_to_memory(
+        spark, ids.where(F.col("event_id") % 2 == 0), "redrain_test", "append"
+    )
+    assert first.count() > 0
+    second = run_stream_to_memory(
+        spark, ids.where(F.col("event_id") % 2 == 1), "redrain_test", "append"
+    )
+    odd = [r.event_id for r in second.collect()]
+    assert odd and all(i % 2 == 1 for i in odd)
+    assert spark.table("redrain_test").count() == len(odd)
