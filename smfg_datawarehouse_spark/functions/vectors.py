@@ -1,10 +1,12 @@
 """Vector math over ``array<float/double>`` columns — pure Catalyst expressions.
 
 Built for the similarity-search surface (BASELINE.json extension ops). Using
-``F.zip_with`` + ``F.aggregate`` keeps the math in the JVM with codegen; a
-Pandas-UDF variant exists in ``operators/similarity.py`` for comparison but
-benchmarks slower at small k and equal at large batch, so the expression form
-is the default.
+``F.zip_with`` + ``F.aggregate`` keeps the math in the JVM. Both folds run
+left to right from ``0.0`` (``acc + x*y``), the IEEE-identical fold of
+DuckDB's ``list_reduce``, so scores are bit-exact against the oracle; the
+exact rerank of the ANN ladders (``operators.similarity._exact_rerank``)
+and l25's index probe are built on them. The numpy scan kernels in
+``operators/similarity.py`` run the same fold per Arrow batch.
 """
 
 from __future__ import annotations

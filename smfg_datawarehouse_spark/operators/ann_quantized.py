@@ -3,8 +3,11 @@ projection, Matryoshka prefix recall, and reciprocal-rank-fusion hybrid
 retrieval.
 
 Split out of ``operators/similarity.py`` (round-5 module-size split,
-zero behavior change); the shared exact/IVF kernels and the collect-cap
-guard stay there and are imported below.
+zero behavior change). Every scorer here runs the shared vector top-k
+scan of that module — one capped driver collect (``_collect_matrix``),
+one broadcast corpus pass (``_scan_topk``) and, for the two-stage
+ladders, one exact rerank (``_exact_rerank``); each keeps only its own
+quantizer, ADC table or projection and its per-batch scoring.
 """
 
 from __future__ import annotations
@@ -17,17 +20,17 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.operators.similarity import (
-    MAX_COLLECTED_VECTORS,
-    _quant,
-    hyperplane_weight,
-    _km_dist,
-    _PARTIAL_SCHEMA,
     _collect_matrix,
     _dcos,
-    _global_topk,
+    _exact_rerank,
+    _km_dist,
     _lr_cosine,
+    _quant,
+    _scan_topk,
     _topk_rows,
+    _vectors,
     brute_force_topk,
+    hyperplane_weight,
 )
 from smfg_datawarehouse_spark.queries import register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
@@ -77,89 +80,31 @@ def sq8_rerank_topk(
     Coarse score = int-dot(codes)·scale_c·scale_q — the integer dot is
     EXACT (≤ dim·127² fits long), so the approximation itself is
     deterministic and the oracle replays both stages bit-for-bit.
-    Plan shape: ONE compressed corpus scan via ``mapInPandas`` partial
-    top-coarse_k (query codes broadcast, nothing pair-shaped shuffled —
-    same skeleton as :func:`brute_force_topk`), then the rerank joins the
-    Q×coarse_k candidate set (broadcast — KBs) back to corpus vectors, so
-    full-precision vectors are touched only for 0.01% of the corpus."""
-    ccodes = _sq8_codes(corpus, id_col, vec_col)
-    qcodes = _sq8_codes(queries, id_col, vec_col)
-    probe = qcodes.limit(MAX_COLLECTED_VECTORS + 1).count()
-    if probe > MAX_COLLECTED_VECTORS:
-        raise ValueError(
-            f"refusing to collect >{MAX_COLLECTED_VECTORS} query vectors; "
-            "swap roles or use the IVF path for corpus-sized query sets"
-        )
-    qrows = qcodes.select("vid", "scale", "c").collect()
-    qrows.sort(key=lambda r: r.vid)
-    qids = np.array([r.vid for r in qrows], dtype=np.int64)
-    qsc = np.array([r.scale for r in qrows], dtype=np.float64)
-    qc = np.stack([np.asarray(r.c, dtype=np.int64) for r in qrows])
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qsc, qc))
-    n_parts = spark.sparkContext.defaultParallelism
+    Plan shape: ONE compressed corpus scan (:func:`_scan_topk`, query
+    codes broadcast, partial top-coarse_k, nothing pair-shaped shuffled),
+    then :func:`_exact_rerank` joins the Q×coarse_k candidate set
+    (broadcast — KBs) back to corpus vectors, so full-precision vectors
+    are touched only for 0.01% of the corpus."""
+    qids, qc, qsc = _collect_matrix(
+        _sq8_codes(queries, id_col, vec_col), "vid", "c", extra=(F.col("scale"),)
+    )
 
-    def score_partition(it):
-        ids, qscale, qcode = bq.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            nid = pdf["vid"].to_numpy(dtype=np.int64)
-            csc = pdf["scale"].to_numpy(dtype=np.float64)
-            cm = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["c"]])
-            idot = cm @ qcode.T  # exact int64
-            # mirror the oracle: (CAST(idot AS DOUBLE) * scale_c) * scale_q
-            approx = (idot.astype(np.float64) * csc[:, None]) * qscale[None, :]
-            yield _topk_rows(approx, nid, ids, coarse_k)
+    def score(pdf, ids, qscale, qcode):
+        nid = pdf["vid"].to_numpy(dtype=np.int64)
+        csc = pdf["scale"].to_numpy(dtype=np.float64)
+        cm = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["c"]])
+        idot = cm @ qcode.T  # exact int64
+        # mirror the oracle: (CAST(idot AS DOUBLE) * scale_c) * scale_q
+        approx = (idot.astype(np.float64) * csc[:, None]) * qscale[None, :]
+        yield _topk_rows(approx, nid, ids, coarse_k)
 
-    partial = ensure_min_parallelism(
-        ccodes.select("vid", "scale", "c")
-    ).mapInPandas(score_partition, _PARTIAL_SCHEMA)
-    coarse = _global_topk(partial, coarse_k).select(
-        "query_id", "neighbor_id", F.col("cos_sim").alias("approx_score")
-    )
-    cv = corpus.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    qv = queries.select(
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    joined = cv.join(F.broadcast(coarse), "neighbor_id").join(
-        F.broadcast(qv), "query_id"
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(col, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    rr = joined.select(
-        "query_id", "neighbor_id", "approx_score",
-        (dot / (norm(F.col("qv")) * norm(F.col("cv")))).alias("cos_sim"),
-    ).where(
-        # zero-norm candidates (scale-0 codes can reach the coarse top-50)
-        # rerank to NaN, which Spark's DESC sort ranks FIRST but the
-        # oracle's NULL ranks last — exclude non-finite on both sides
-        # (same convention _topk_rows applies in the coarse stage)
-        F.col("cos_sim").isNotNull()
-        & ~F.isnan("cos_sim")
-        & (F.abs("cos_sim") != float("inf"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        rr.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "approx_score", "cos_sim",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    coarse = _scan_topk(
+        _sq8_codes(corpus, id_col, vec_col).select("vid", "scale", "c"),
+        (qids, qsc, qc.astype(np.int64)),
+        score,
+        coarse_k,
+    ).select("query_id", "neighbor_id", F.col("cos_sim").alias("approx_score"))
+    return _exact_rerank(coarse, corpus, queries, k, id_col, vec_col)
 
 
 _SQ8_ORACLE = f"""
@@ -297,9 +242,9 @@ def pq_adc_topk(
     (assign + micro-mean, k·m·dim aggregated rows to the driver — KBs);
     encoding is a pure scan expression (codebook literals, zero
     shuffle); the ADC scan is ONE ``mapInPandas`` pass over the codes
-    with the per-query tables broadcast (nothing pair-shaped shuffles,
-    partial top-k per partition — :func:`brute_force_topk`'s skeleton);
-    the exact-cosine rerank touches full-precision vectors for only
+    with the per-query tables broadcast (:func:`_scan_topk`: nothing
+    pair-shaped shuffles, partial top-k per partition); the exact-cosine
+    rerank (:func:`_exact_rerank`) touches full-precision vectors for only
     Q×coarse_k candidates (broadcast join)."""
     import math
 
@@ -311,14 +256,12 @@ def pq_adc_topk(
     # partition count — a naturally-wide scan at real scale keeps its
     # partitioning instead of being forced through a corpus-wide
     # exchange (and possibly NARROWED to defaultParallelism).
-    n_parts_ = corpus.sparkSession.sparkContext.defaultParallelism
-    vecs = corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    if vecs.rdd.getNumPartitions() < n_parts_:
-        vecs = vecs.repartition(n_parts_)
-    vecs = vecs.persist()
+    vecs = ensure_min_parallelism(
+        corpus.select(
+            F.col(id_col).cast("long").alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        )
+    ).persist()
     try:
         first = vecs.orderBy("vec_id").limit(kc).collect()
         if not first:
@@ -459,71 +402,21 @@ def pq_adc_topk(
                         acc += dlt * dlt
                     dt[qi, sub, cid] = math.floor(acc * 1000000.0 + 0.5)
 
-        spark = corpus.sparkSession
-        bdt = spark.sparkContext.broadcast((qids, dt))
-        n_parts = spark.sparkContext.defaultParallelism
+        def score(pdf, ids, dtab):
+            nid = pdf["vec_id"].to_numpy(dtype=np.int64)
+            cm = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+            approx = np.zeros((len(nid), len(ids)), dtype=np.int64)
+            for sub in range(m):
+                # dtab[:, sub, :] is Q×kc; gather per corpus code → Q×b
+                approx += dtab[:, sub, :][:, cm[:, sub]].T
+            # negate so _topk_rows' score-DESC order = distance ASC;
+            # int64/1e6 → double is exact at these magnitudes
+            yield _topk_rows(-(approx.astype(np.float64) / 1e6), nid, ids, coarse_k)
 
-        def score_partition(it):
-            ids, dtab = bdt.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                nid = pdf["vec_id"].to_numpy(dtype=np.int64)
-                cm = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-                approx = np.zeros((len(nid), len(ids)), dtype=np.int64)
-                for sub in range(m):
-                    # dtab[:, sub, :] is Q×kc; gather per corpus code → Q×b
-                    approx += dtab[:, sub, :][:, cm[:, sub]].T
-                # negate so _topk_rows' score-DESC order = distance ASC;
-                # int64/1e6 → double is exact at these magnitudes
-                yield _topk_rows(-(approx.astype(np.float64) / 1e6), nid, ids, coarse_k)
-
-        partial = ensure_min_parallelism(
-            codes.select("vec_id", "codes")
-        ).mapInPandas(score_partition, _PARTIAL_SCHEMA)
-        coarse = _global_topk(partial, coarse_k).select(
+        coarse = _scan_topk(codes, (qids, dt), score, coarse_k).select(
             "query_id", "neighbor_id", (-F.col("cos_sim")).alias("adc_dist")
         )
-        cv_ = corpus.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        qv = queries.select(
-            F.col(id_col).cast("long").alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        )
-        joined = cv_.join(F.broadcast(coarse), "neighbor_id").join(
-            F.broadcast(qv), "query_id"
-        )
-        dot = F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        norm = lambda col: F.sqrt(  # noqa: E731
-            F.aggregate(
-                F.transform(col, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-            )
-        )
-        rr = joined.select(
-            "query_id", "neighbor_id", "adc_dist",
-            (dot / (norm(F.col("qv")) * norm(F.col("cv")))).alias("cos_sim"),
-        ).where(
-            F.col("cos_sim").isNotNull()
-            & ~F.isnan("cos_sim")
-            & (F.abs("cos_sim") != float("inf"))
-        )
-        w = W.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id")
-        )
-        return (
-            rr.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "adc_dist", "cos_sim",
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
+        return _exact_rerank(coarse, corpus, queries, k, id_col, vec_col)
     finally:
         # the persist only serves the bounded training collects; the
         # returned plan re-reads the source (one extra scan) rather than
@@ -736,8 +629,6 @@ def x99_jl_projection_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same single-scan partial-top-k kernel as x10, and the exact rerank
     touches only Q×25 fetched vectors. Both the projection AND the
     approximation are replayed bit-exactly by the oracle."""
-    from smfg_datawarehouse_spark.functions.vectors import dot_product, l2_norm
-
     signs = jl_signs(JL_DIM, 64)
     e = t(spark, sf_dir, "embeddings")
     ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -754,39 +645,22 @@ def x99_jl_projection_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter prunes it to the driver-collected batch).
     qids, qmat = _collect_matrix(queries, "vec_id", "p")
     S = np.array(signs, dtype=np.float64)  # (JL_DIM, 64)
-    n_parts = spark.sparkContext.defaultParallelism
 
-    def score_partition(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            V = np.stack(pdf["cv"].values).astype(np.float64)
-            P = np.zeros((len(V), S.shape[0]))
-            for i in range(V.shape[1]):
-                P = P + V[:, i][:, None] * S[:, i][None, :]
-            yield _topk_rows(_lr_cosine(P, qmat), nid, qids, JL_SHORTLIST)
+    def score(pdf, ids, qm, signs_):
+        nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        V = np.stack(pdf["cv"].values).astype(np.float64)
+        P = np.zeros((len(V), signs_.shape[0]))
+        for i in range(V.shape[1]):
+            P = P + V[:, i][:, None] * signs_[:, i][None, :]
+        yield _topk_rows(_lr_cosine(P, qm), nid, ids, JL_SHORTLIST)
 
-    c = ensure_min_parallelism(
-        ed.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
-    )
-    short = _global_topk(
-        c.mapInPandas(score_partition, _PARTIAL_SCHEMA), JL_SHORTLIST
+    short = _scan_topk(
+        _vectors(ed, "vec_id", "v", "neighbor_id", "cv"),
+        (qids, qmat, S),
+        score,
+        JL_SHORTLIST,
     ).select("query_id", "neighbor_id")
-    qv = ed.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    cv = ed.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
-    cos = dot_product(F.col("qv"), F.col("cv")) / (
-        l2_norm(F.col("qv")) * l2_norm(F.col("cv"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= JL_K)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank"))
-    )
+    return _exact_rerank(short, ed, queries, JL_K, vec_col="v")
 
 
 MRL_PREFIXES = (4, 8, 16, 32)
@@ -809,48 +683,22 @@ def multi_prefix_topk(
     values), at 1/|prefixes| of the scan + decode cost. The global
     resolve is one (prefix, query)-keyed window over |prefixes|×Q×k
     partial rows."""
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qmat))
-    n_parts = spark.sparkContext.defaultParallelism
     prefixes = tuple(prefixes)
 
-    def score_partition(it):
-        ids, qm = bq.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-            for L in prefixes:
-                out = _topk_rows(
-                    _lr_cosine(cm[:, :L], qm[:, :L]), nid, ids, k
-                )
-                out.insert(0, "prefix_dim", np.int64(L))
-                yield out
+    def score(pdf, ids, qm):
+        nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
+        for L in prefixes:
+            out = _topk_rows(_lr_cosine(cm[:, :L], qm[:, :L]), nid, ids, k)
+            out.insert(0, "prefix_dim", np.int64(L))
+            yield out
 
-    c = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-    )
-    partial = c.mapInPandas(
-        score_partition, "prefix_dim long, " + _PARTIAL_SCHEMA
-    )
-    w = W.partitionBy("prefix_dim", "query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "prefix_dim",
-            "query_id",
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return _scan_topk(
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        _collect_matrix(queries, id_col, vec_col),
+        score,
+        k,
+        keys=("prefix_dim", "query_id"),
     )
 
 
@@ -909,7 +757,7 @@ def x100_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     e = t(spark, sf_dir, "embeddings")
     ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     qd = ed.where(F.col("vec_id") % 25 == 0)
-    exact = brute_force_topk(ed, qd, dim=64, vec_col="v", k=MRL_K).select(
+    exact = brute_force_topk(ed, qd, vec_col="v", k=MRL_K).select(
         "query_id", "neighbor_id"
     )
     # all four prefix rankings come from ONE corpus scan (bit-identical
@@ -1011,7 +859,7 @@ def x112_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     for L in RRF_DIMS:
         edl = ed if L == 64 else ed.select("vec_id", F.slice("v", 1, L).alias("v"))
         qdl = qd if L == 64 else qd.select("vec_id", F.slice("v", 1, L).alias("v"))
-        lst = brute_force_topk(edl, qdl, dim=L, vec_col="v", k=RRF_LIST_K).select(
+        lst = brute_force_topk(edl, qdl, vec_col="v", k=RRF_LIST_K).select(
             "query_id", "neighbor_id", "rank"
         )
         lists = lst if lists is None else lists.unionByName(lst)
@@ -1111,7 +959,7 @@ def x153_mrr_prefix_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
     ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     qd = ed.where(F.col("vec_id") % 25 == 0)
-    truth = brute_force_topk(ed, qd, dim=64, vec_col="v", k=1).select(
+    truth = brute_force_topk(ed, qd, vec_col="v", k=1).select(
         "query_id", F.col("neighbor_id").alias("nn_id")
     )
     # all four prefix shortlists from ONE corpus scan (bit-identical to

@@ -575,7 +575,7 @@ def decode_wav_pcm16(payload: bytes) -> dict:
         if parsed is None:
             return bad
         fmt, data_len, samples = parsed
-        audio_fmt, n_ch, rate, byte_rate, block_align, bits = fmt
+        _audio_fmt, n_ch, rate, byte_rate, block_align, bits = fmt
         n = len(samples)
         return {
             "sample_rate": rate,

@@ -3,21 +3,29 @@
 The compressed/quantized ANN ladder (SQ8, PQ-ADC, JL projection,
 Matryoshka, RRF fusion) lives in ``operators/ann_quantized.py`` and the
 IVF-celled k-NN graph in ``operators/ann_graph.py`` (round-5 module
-split); the shared exact/IVF kernels they import stay here.
+split); the shared kernels they import stay here.
+
+**The shared vector top-k scan.** Every ANN scorer (brute force, IVF,
+hard negatives, SQ8, PQ-ADC, JL, Matryoshka prefixes) is one call of
+:func:`_scan_topk`: the small query side is collected once under the
+driver-size cap (:func:`_collect_matrix`), broadcast, and the corpus
+streams through ONE ``mapInPandas`` pass that keeps a partial top-k per
+Arrow batch; one window resolves the global top-k. The two-stage
+ladders finish with one :func:`_exact_rerank`. A scorer owns only its
+per-batch scoring (and its quantizer, ADC table or projection).
 
 Three strategies, all oracle-checked (SURVEY §2.12; reference has no vector
 ops — this is the BASELINE.json LLM-pipeline extension surface):
 
 - **Brute-force cosine top-k** (:func:`brute_force_topk`) — exact baseline.
-  The query set (an ANN query batch, small by contract) is broadcast as a
-  numpy matrix; the corpus streams through ONE ``mapInPandas`` pass that
-  scores batches vectorized and keeps per-partition top-k per query.
-  Nothing pair-shaped is shuffled — the final global top-k window sees only
-  (partitions × Q × k) rows. At 100 TB: one scan, no pair materialization.
+  The shared scan with the query matrix as payload: every batch is scored
+  against every query. Nothing pair-shaped is shuffled — the final global
+  top-k window sees only (partitions × Q × k) rows. At 100 TB: one scan,
+  no pair materialization.
 - **IVF (inverted-file) top-k** (:func:`ivf_topk`) — the ANN scale path.
   A deterministic centroid set coarse-quantizes the corpus; each query
   probes its ``nprobe`` nearest cells and scores only vectors assigned
-  there. Same single-scan shape; compute drops by ~nprobe/n_centroids.
+  there. The same shared scan; compute drops by ~nprobe/n_centroids.
   Centroid choice is data-derived + deterministic, so DuckDB can replay the
   exact assignment and the result is hash-checkable (recall < 1 by design,
   but *deterministically* so).
@@ -45,10 +53,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from smfg_datawarehouse_spark.functions.vectors import dot_product, l2_norm
 from smfg_datawarehouse_spark.queries import register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
@@ -185,14 +194,22 @@ MAX_COLLECTED_VECTORS = 100_000
 
 
 def _collect_matrix(
-    df: DataFrame, id_col: str, vec_col: str, max_rows: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Collect a small vector table to (ids, matrix), sorted by id.
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    max_rows: int | None = None,
+    extra: tuple[Column, ...] = (),
+) -> tuple[np.ndarray, ...]:
+    """Collect a small vector table to ``(ids, matrix, *extras)``, sorted
+    by id — the one driver collect of the vector family.
 
     Enforces the small-side contract: raises ``ValueError`` when the table
     exceeds ``max_rows`` (default :data:`MAX_COLLECTED_VECTORS`, read at
     call time; checked with a ``limit(max+1).count()`` probe — never
-    collects the oversized set)."""
+    collects the oversized set). ``extra`` scalar columns ride the same
+    collect, one numpy array each (sq8's code scales, x64's labels). An
+    empty table yields empty ids and a 0×0 matrix; callers that must
+    fail on it (l25's cell-layout check) raise themselves."""
     if max_rows is None:
         max_rows = MAX_COLLECTED_VECTORS
     probe = df.limit(max_rows + 1).count()
@@ -204,25 +221,110 @@ def _collect_matrix(
             "or cosine_near_dup's LSH banding"
         )
     rows = df.select(
-        F.col(id_col).cast("long").alias("i"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col(id_col).cast("long"),
+        F.col(vec_col).cast("array<double>"),
+        *extra,
     ).collect()
-    rows.sort(key=lambda r: r.i)
-    ids = np.array([r.i for r in rows], dtype=np.int64)
-    mat = np.stack([np.asarray(r.v, dtype=np.float64) for r in rows])
-    return ids, mat
+    rows.sort(key=lambda r: r[0])
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = (
+        np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+        if rows
+        else np.zeros((0, 0))
+    )
+    extras = [np.array([r[2 + j] for r in rows]) for j in range(len(extra))]
+    return (ids, mat, *extras)
 
 
-def _global_topk(partial: DataFrame, k: int) -> DataFrame:
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank"))
+def _vectors(df: DataFrame, id_col: str, vec_col: str, id_as: str, vec_as: str) -> DataFrame:
+    """``(id long, vector array<double>)`` under the given names — the
+    typed shape every scorer and rerank reads."""
+    return df.select(
+        F.col(id_col).cast("long").alias(id_as),
+        F.col(vec_col).cast("array<double>").alias(vec_as),
     )
 
 
-_PARTIAL_SCHEMA = "query_id long, neighbor_id long, cos_sim double"
+def _scan_topk(
+    frame: DataFrame,
+    payload: tuple,
+    score_batch,
+    k: int,
+    keys: tuple[str, ...] = ("query_id",),
+) -> DataFrame:
+    """The one vector top-k scan every ANN scorer runs.
+
+    ``payload`` — the driver-side query arrays, probe maps or ADC tables —
+    is broadcast once. ``frame`` streams through ONE ``mapInPandas`` pass
+    (widened by :func:`ensure_min_parallelism`); for each non-empty Arrow
+    batch ``score_batch(pdf, *payload)`` yields partial top-k frames of
+    ``(*keys, neighbor_id, cos_sim)``. One ``(*keys, cos_sim DESC,
+    neighbor_id)`` window then resolves the global top-``k``:
+    ``(*keys, neighbor_id, cos_sim, rank)``. Partial selection uses the
+    window's own order (:func:`_topk_rows`), so the result is the same
+    for any partitioning of ``frame``; nothing pair-shaped is shuffled —
+    the window sees only partitions × queries × k rows."""
+    bc = frame.sparkSession.sparkContext.broadcast(payload)
+
+    def score_partition(batches):
+        args = bc.value
+        for pdf in batches:
+            if len(pdf):
+                yield from score_batch(pdf, *args)
+
+    schema = "".join(f"{c} long, " for c in keys) + "neighbor_id long, cos_sim double"
+    partial = ensure_min_parallelism(frame).mapInPandas(score_partition, schema)
+    w = W.partitionBy(*keys).orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(*keys, "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank"))
+    )
+
+
+def _exact_rerank(
+    cands: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact-cosine top-``k`` over an ANN candidate set — the second stage
+    of the SQ8, PQ and JL ladders.
+
+    ``cands`` is ``(query_id, neighbor_id, *extra)`` (Q × shortlist rows);
+    it and the query vectors are broadcast into the corpus, so full
+    vectors are touched only for the candidates. The cosine is the
+    left-to-right expression fold (``functions.vectors``), bit-exact with
+    the oracle's ``list_reduce``. Non-finite scores (zero-norm vectors)
+    are dropped: Spark's DESC sort would rank NaN first, the oracle ranks
+    NULL last. Returns ``(query_id, neighbor_id, *extra, cos_sim, rank)``."""
+    extra = [c for c in cands.columns if c not in ("query_id", "neighbor_id")]
+    qv, cv = F.col("qv"), F.col("cv")
+    scored = (
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+        .join(F.broadcast(cands), "neighbor_id")
+        .join(F.broadcast(_vectors(queries, id_col, vec_col, "query_id", "qv")), "query_id")
+        .select(
+            "query_id", "neighbor_id", *extra,
+            (dot_product(qv, cv) / (l2_norm(qv) * l2_norm(cv))).alias("cos_sim"),
+        )
+        .where(
+            F.col("cos_sim").isNotNull()
+            & ~F.isnan("cos_sim")
+            & (F.abs("cos_sim") != float("inf"))
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", *extra, "cos_sim",
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -233,32 +335,23 @@ _PARTIAL_SCHEMA = "query_id long, neighbor_id long, cos_sim double"
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, cos_sim, rank)."""
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qmat))
 
-    def score_partition(it):
-        ids, qm = bq.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-            yield _topk_rows(_lr_cosine(cm, qm), nid, ids, k)
+    def score(pdf, qids, qmat):
+        nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
+        yield _topk_rows(_lr_cosine(cm, qmat), nid, qids, k)
 
-    c = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
+    return _scan_topk(
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        _collect_matrix(queries, id_col, vec_col),
+        score,
+        k,
     )
-    return _global_topk(c.mapInPandas(score_partition, _PARTIAL_SCHEMA), k)
 
 
 # ---------------------------------------------------------------------------
@@ -270,7 +363,6 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
@@ -295,34 +387,25 @@ def ivf_topk(
         order = np.lexsort((cids, -qsel[qi]))[:nprobe]
         for ci in order:
             cell_to_q.setdefault(int(ci), []).append(qi)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qmat, cmat, cell_to_q))
 
-    def score_partition(it):
-        ids, qm, cm_, c2q = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
+    def score(pdf, ids, qm, cm_, c2q):
+        nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        vm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
+        acos = _lr_cosine(vm, cm_)
+        assign = np.argmax(np.where(np.isfinite(acos), acos, -np.inf), axis=1)
+        for cell in np.unique(assign):
+            qidx = c2q.get(int(cell))
+            if not qidx:
                 continue
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            vm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-            acos = _lr_cosine(vm, cm_)
-            assign = np.argmax(np.where(np.isfinite(acos), acos, -np.inf), axis=1)
-            for cell in np.unique(assign):
-                qidx = c2q.get(int(cell))
-                if not qidx:
-                    continue
-                rows = np.flatnonzero(assign == cell)
-                yield _topk_rows(
-                    _lr_cosine(vm[rows], qm[qidx]), nid[rows], ids[qidx], k
-                )
+            rows = np.flatnonzero(assign == cell)
+            yield _topk_rows(_lr_cosine(vm[rows], qm[qidx]), nid[rows], ids[qidx], k)
 
-    c = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
+    return _scan_topk(
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        (qids, qmat, cmat, cell_to_q),
+        score,
+        k,
     )
-    return _global_topk(c.mapInPandas(score_partition, _PARTIAL_SCHEMA), k)
 
 
 # ---------------------------------------------------------------------------
@@ -375,7 +458,6 @@ def cosine_near_dup(
     planes = np.array(hyperplanes(n_tables, bits, dim))  # (tables*bits, dim)
     spark = corpus.sparkSession
     bp = spark.sparkContext.broadcast(planes)
-    n_parts = spark.sparkContext.defaultParallelism
     nh = n_tables * bits
 
     sig_schema = "vec_id long, v array<double>, " + ", ".join(
@@ -501,7 +583,7 @@ def x10_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[X] Exact cosine top-10 neighbors for every 25th vector."""
     e = t(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") % 25 == 0)
-    return brute_force_topk(e, queries, dim=64, k=10)
+    return brute_force_topk(e, queries, k=10)
 
 
 _IVF_ORACLE = f"""
@@ -553,7 +635,7 @@ def x11_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") % 25 == 0)
     cents = e.where(F.col("vec_id") % 29 == 7)
-    return ivf_topk(e, queries, cents, dim=64, k=10, nprobe=3)
+    return ivf_topk(e, queries, cents, k=10, nprobe=3)
 
 
 def _near_dup_oracle() -> str:
@@ -920,7 +1002,6 @@ def semantic_dedup(
     cids, cmat = _collect_matrix(centroids, id_col, vec_col)
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast((cids, cmat))
-    n_parts = spark.sparkContext.defaultParallelism
 
     def assign_partition(it):
         cs, cm = bc.value
@@ -1371,7 +1452,7 @@ def x63_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.join(docs.where(~is_eval), emb.vec_id == docs.doc_id)
         .select("doc_id", "embedding")
     )
-    top1 = brute_force_topk(tr, ev, dim=64, id_col="doc_id", k=1)
+    top1 = brute_force_topk(tr, ev, id_col="doc_id", k=1)
     src = docs.where(is_eval)
     return (
         top1.join(F.broadcast(src), top1.query_id == src.doc_id)
@@ -1398,50 +1479,27 @@ def hard_negatives_topk(
     dual-encoder trainer wants in its negatives batch because they are
     maximally confusable.
 
-    Same single-scan skeleton as :func:`brute_force_topk` (query matrix +
-    labels broadcast, per-partition partial top-k), with the label
-    constraint applied INSIDE the scoring kernel so excluded same-label
-    rows never inflate the partial candidate sets."""
-    # probe BEFORE collecting (same contract as _collect_matrix): the
-    # guard must prevent the oversized driver transfer, not follow it
-    probe = queries.limit(MAX_COLLECTED_VECTORS + 1).count()
-    if probe > MAX_COLLECTED_VECTORS:
-        raise ValueError(
-            f"refusing to collect >{MAX_COLLECTED_VECTORS} query vectors "
-            "for hard-negative mining; mine in query-side batches instead"
-        )
-    qrows = queries.select(
-        F.col(id_col).cast("long").alias("i"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.col(label_col).cast("long").alias("l"),
-    ).collect()
-    qrows.sort(key=lambda r: r.i)
-    qids = np.array([r.i for r in qrows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r.v, dtype=np.float64) for r in qrows])
-    qlab = np.array([r.l for r in qrows], dtype=np.int64)
-    spark = corpus.sparkSession
-    bq = spark.sparkContext.broadcast((qids, qmat, qlab))
-    n_parts = spark.sparkContext.defaultParallelism
-
-    def score_partition(it):
-        ids, qm, ql = bq.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            nlab = pdf["nl"].to_numpy(dtype=np.int64)
-            cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
-            same_label = nlab[:, None] == ql[None, :]
-            yield _topk_rows(_lr_cosine(cm, qm), nid, ids, k, extra_mask=same_label)
-
-    c = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-            F.col(label_col).cast("long").alias("nl"),
-        )
+    One :func:`_scan_topk` pass with the query labels broadcast beside
+    the query matrix; the label constraint is applied INSIDE the scoring
+    kernel so excluded same-label rows never inflate the partial
+    candidate sets."""
+    qids, qmat, qlab = _collect_matrix(
+        queries, id_col, vec_col, extra=(F.col(label_col).cast("long"),)
     )
-    return _global_topk(c.mapInPandas(score_partition, _PARTIAL_SCHEMA), k)
+
+    def score(pdf, ids, qm, ql):
+        nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+        nlab = pdf["nl"].to_numpy(dtype=np.int64)
+        cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
+        same_label = nlab[:, None] == ql[None, :]
+        yield _topk_rows(_lr_cosine(cm, qm), nid, ids, k, extra_mask=same_label)
+
+    frame = corpus.select(
+        F.col(id_col).cast("long").alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col(label_col).cast("long").alias("nl"),
+    )
+    return _scan_topk(frame, (qids, qmat, qlab.astype(np.int64)), score, k)
 
 
 _HARDNEG_ORACLE = f"""
@@ -1709,9 +1767,7 @@ def l25_ann_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-memory form, is the entire point of persisting the index."""
     import os as _os
 
-    from smfg_datawarehouse_spark.functions.vectors import dot_product, l2_norm
     from smfg_datawarehouse_spark.queries import _scratch_dir
-    from smfg_datawarehouse_spark.session import local_rows_df
 
     base = _scratch_dir(spark, "l25")
     cents_path = _os.path.join(base, "ivf_centroids")
@@ -1719,32 +1775,24 @@ def l25_ann_index_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = t(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    # norms are factored OUT of every pair loop below (computed once per
-    # row/centroid/query, not once per pair — identical IEEE values, the
-    # division just reads the precomputed column; at k centroids this
-    # cuts the assignment arithmetic ~3×: dot only, not dot+2 norms)
-    cos = dot_product(F.col("v"), F.col("cv")) / (
-        F.col("_vn") * F.col("_cn")
-    )
-
     # ---- build: centroids + cell-clustered corpus -------------------------
-    # The centroid table is k×dim (the x57/x144 driver-collect budget):
-    # collect it ONCE, persist the lake artifact from the Arrow local
-    # frame, and ride the in-memory frame for both the assignment and the
-    # probe — the r8 build paid a corpus-scan write, a count job, and two
-    # disk re-reads for the same k rows (VERDICT r8 item 2).
-    cent_rows = sorted(
-        (r["cid"], r["cv"])
-        for r in vecs.where(F.col("vec_id") % 29 == 7)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-        .collect()
+    # The centroid table is k×dim, collected ONCE under the driver-size
+    # cap; the lake artifact is written from the Arrow local frame, and
+    # the in-memory frame serves both the assignment and the probe, so no
+    # disk re-read of the same k rows is needed.
+    cids, cmat = _collect_matrix(
+        vecs.where(F.col("vec_id") % 29 == 7), "vec_id", "v"
     )
+    cent_rows = list(zip(cids.tolist(), cmat.tolist()))
     n_cells = len(cent_rows)
     cents = local_rows_df(spark, cent_rows, "cid long, cv array<double>")
     # k×dim rows are ONE file at any scale (k centroids) — a 32-slice
     # local-relation write costs ~0.5 s of tiny-file task overhead here
     # and lands 32 shard files for 69 rows (guide §6 small-files)
     cents.coalesce(1).write.mode("overwrite").parquet(cents_path)
+    # norms are factored OUT of the pair loops below (computed once per
+    # centroid/query/neighbor, not once per pair — identical IEEE values,
+    # the division just reads the precomputed column)
     cents = cents.withColumn("_cn", l2_norm(F.col("cv")))
     # Assignment kernel (r9 optimization, guide §4.2; factored into the
     # shared :func:`_cosine_cells_np` in r10): the argmax over

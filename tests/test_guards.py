@@ -149,16 +149,28 @@ def test_collect_matrix_rejects_oversized_query_set(spark):
     assert len(ids) == 500 and mat.shape == (500, 2)
 
 
-def test_x106_centroid_collect_honors_cap(spark, monkeypatch):
-    """x106 collects its IVF centroids under the MAX_COLLECTED_VECTORS
-    small-side contract: a cap below the centroid count refuses."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "x106_ivf_cell_balance",
+        "x59_sq8_rerank_topk",
+        "x64_hard_negative_mining",
+        "l25_ann_index_persistence",
+    ],
+)
+def test_x106_centroid_collect_honors_cap(spark, monkeypatch, name):
+    """Every driver collect of query vectors or IVF centroids runs under
+    the MAX_COLLECTED_VECTORS small-side contract, read at call time: a
+    cap below the collected count refuses."""
     from conftest import SF_DIR
 
+    from smfg_datawarehouse_spark import queries as qmod
     from smfg_datawarehouse_spark.operators import similarity
 
+    query = qmod.all_queries()[name]  # import every module before the patch
     monkeypatch.setattr(similarity, "MAX_COLLECTED_VECTORS", 1)
     with pytest.raises(ValueError, match="refusing to collect"):
-        similarity.x106_ivf_cell_balance(spark, SF_DIR)
+        query(spark, SF_DIR)
 
 
 def test_default_driver_memory_fits_host(monkeypatch):
@@ -303,3 +315,51 @@ def test_every_query_has_a_plans_row():
     plans = open("/root/repo/PLANS.md").read()
     missing = [n for n in all_queries() if f"| {n} |" not in plans]
     assert not missing, f"PLANS.md missing rows (regenerate): {missing}"
+
+
+def test_no_unused_locals():
+    """Every local a function assigns is read somewhere in that function
+    (its nested closures included). Names starting with ``_`` are exempt,
+    so a deliberate discard reads ``_name``. Comprehension, lambda and
+    class scopes are not checked."""
+    import ast
+    import pathlib
+
+    import smfg_datawarehouse_spark
+
+    nested = (
+        ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef,
+        ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp,
+    )
+
+    def own_scope(fn):
+        stack = list(ast.iter_child_nodes(fn))
+        while stack:
+            node = stack.pop()
+            yield node
+            if not isinstance(node, nested):
+                stack.extend(ast.iter_child_nodes(node))
+
+    root = pathlib.Path(smfg_datawarehouse_spark.__file__).parent
+    unused = []
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            stores, declared = {}, set()
+            for node in own_scope(fn):
+                if isinstance(node, (ast.Global, ast.Nonlocal)):
+                    declared.update(node.names)
+                elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+                    stores.setdefault(node.id, node.lineno)
+            loads = {
+                n.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            unused += [
+                f"{path.relative_to(root)}:{line} {fn.name}: {name}"
+                for name, line in stores.items()
+                if not name.startswith("_") and name not in declared | loads
+            ]
+    assert not unused, unused

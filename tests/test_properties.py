@@ -555,3 +555,50 @@ def test_crossversion_stability_conservation(spark, tmp_path_factory):
         r["n_groups"] for r in out if r["status"] in ("stable", "displaced")
     )
     assert stable_plus_displaced == v1_hashes
+
+
+def _repr_rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_vector_topk_scan_is_layout_invariant(spark):
+    """The shared top-k scan keeps partial top-k per batch and resolves one
+    global window, so the result is repr-identical for any corpus layout:
+    one partition, seven, or a hash layout that leaves partitions empty."""
+    from conftest import SF_DIR
+
+    from smfg_datawarehouse_spark.operators.similarity import brute_force_topk
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    queries = e.where(F.col("vec_id") % 25 == 0)
+    # two hash keys over more partitions than the engine's default
+    # parallelism: empty partitions reach the scan un-repartitioned
+    n = spark.sparkContext.defaultParallelism + 1
+    sparse = e.repartition(n, F.col("vec_id") % 2)
+    assert min(sparse.rdd.glom().map(len).collect()) == 0
+    results = [
+        _repr_rows(brute_force_topk(layout, queries, k=10))
+        for layout in (e.coalesce(1), e.repartition(7), sparse)
+    ]
+    assert results[0] and results[0] == results[1] == results[2]
+
+
+def test_multi_prefix_topk_equals_per_prefix_brute_force(spark):
+    """multi_prefix_topk scores every prefix in one scan; per prefix it
+    must equal brute_force_topk over the sliced vectors exactly."""
+    from conftest import SF_DIR
+
+    from smfg_datawarehouse_spark.operators.ann_quantized import multi_prefix_topk
+    from smfg_datawarehouse_spark.operators.similarity import brute_force_topk
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    qd = ed.where(F.col("vec_id") % 25 == 0)
+    prefixes = (4, 16)
+    multi = multi_prefix_topk(ed, qd, prefixes, k=5)
+    for L in prefixes:
+        sliced = ed.select("vec_id", F.slice("v", 1, L).alias("v"))
+        qsliced = qd.select("vec_id", F.slice("v", 1, L).alias("v"))
+        single = brute_force_topk(sliced, qsliced, vec_col="v", k=5)
+        got = multi.where(F.col("prefix_dim") == L).drop("prefix_dim")
+        assert _repr_rows(got) == _repr_rows(single) != []
