@@ -56,10 +56,11 @@ def shingle_table(
 ) -> DataFrame:
     """(doc_id, shingle[, df]) — exploded DISTINCT k-gram table of a corpus.
 
-    - Repartitions to ``defaultParallelism`` before the explode: a compact
-      upstream source (one parquet row group at test scale; one scan split
-      at 100 TB) would otherwise run the ~50-300× row-inflating explode and
-      the regex tokenization in a single task.
+    - Widens the input with ``session.ensure_min_parallelism`` before the
+      explode: a compact upstream source (one parquet row group at test
+      scale) would otherwise run the ~50-300× row-inflating explode and
+      the regex tokenization in a single task, while a scan that already
+      has ``defaultParallelism`` splits passes through unshuffled.
     - ``with_df=True`` attaches global document frequency as a ``df``
       column via ``count(*) over (partition by shingle)`` — one
       shingle-keyed exchange, which every df consumer (prefix filtering,

@@ -24,7 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.queries import register, t
-from smfg_datawarehouse_spark.session import local_rows_df
+from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
 # ---------------------------------------------------------------------------
 # building blocks (importable API)
@@ -157,45 +157,25 @@ def jaccard_pairs(
         # the cache each side replays the whole window+join lineage
         .cache()
     )
+    # the skew-guard cap rides the plan as a broadcast one-row aggregate,
+    # one definition for both guard modes: greatest(64, floor(sqrt(n)) + 1)
+    # (== math.isqrt(n) + 1 for n < 2^52), or an explicit df_cap literal
+    cap = (
+        F.greatest(F.lit(64), F.floor(F.sqrt(F.count(F.lit(1)))).cast("long") + 1)
+        if df_cap is None
+        else F.lit(int(df_cap)).cast("long")
+    )
+    cap_df = F.broadcast(sets_df.agg(cap.alias("_df_cap")))
     if df_cap is None and on_drop == "warn":
-        # lazy default: cap computed inside the plan (broadcast one-row
-        # aggregate) so constructing the frame triggers zero Spark jobs
-        # floor(sqrt(n)) + 1 == math.isqrt(n) + 1 for n < 2^52 — MUST match
-        # the eager branch's formula exactly or the two modes would compute
-        # different candidate sets on non-perfect-square corpus sizes
-        cap_df = F.broadcast(
-            sets_df.agg(
-                F.greatest(
-                    F.lit(64), F.floor(F.sqrt(F.count(F.lit(1)))).cast("long") + 1
-                ).alias("_df_cap")
-            )
-        )
+        # lazy default: constructing the frame triggers zero Spark jobs
         ranked = (
             ranked_all.crossJoin(cap_df)
             .where(F.col("df") <= F.col("_df_cap"))
             .select("doc_id", "shingle", "rk", "set_size")
         )
     else:
-        # r10 (guide §1/§5 driver-cost): the eager guard ran TWO actions —
-        # a sets_df.count() just to derive df_cap, then the guard
-        # aggregation. The cap now rides the plan as a broadcast one-row
-        # aggregate (the SAME floor(sqrt(n))+1 == isqrt(n)+1 formula the
-        # lazy branch uses — see the equality note above), so ONE job
-        # returns cap + all three guard counters. Semantics identical:
-        # same cap value, same raise/warn contract, same post-filter.
-        if df_cap is None:
-            cap_df = F.broadcast(
-                sets_df.agg(
-                    F.greatest(
-                        F.lit(64),
-                        F.floor(F.sqrt(F.count(F.lit(1)))).cast("long") + 1,
-                    ).alias("_df_cap")
-                )
-            )
-        else:
-            cap_df = F.broadcast(
-                sets_df.agg(F.lit(int(df_cap)).cast("long").alias("_df_cap"))
-            )
+        # eager guard: ONE job returns the cap and all three guard
+        # counters, then the same raise/warn contract and post-filter
         guard = (
             ranked_all.crossJoin(cap_df)
             .agg(
@@ -405,11 +385,10 @@ def minhash_candidates(
 
 
 def _word_token_sets(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc_id, token) distinct word sets (repartitioned before explode)."""
+    """(doc_id, token) distinct word sets (widened before the explode)."""
     from smfg_datawarehouse_spark.functions import word_tokens
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(n_parts).select(
+    return ensure_min_parallelism(docs).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(word_tokens(F.col(text_col)))).alias("tok"),
     )
@@ -1538,8 +1517,8 @@ def substring_dup_pairs(
     ``max_shared_span`` = longest run + k − 1 is EXACT for spans ≥ k —
     no bounded extension step needed, the run-length IS the extension.
 
-    Scale shape: the explode is corpus-token-linear (repartitioned
-    first); the anchor join is the Σ_anchor df² candidate pattern with a
+    Scale shape: the explode is corpus-token-linear (widened first);
+    the anchor join is the Σ_anchor df² candidate pattern with a
     ``df_cap`` boilerplate guard (anchors in > ``df_cap`` docs are
     dropped — an anchor shared by half the corpus is boilerplate, and
     O(df²) on it would dominate; the cap is honest lossiness, documented
@@ -1549,9 +1528,8 @@ def substring_dup_pairs(
     """
     from smfg_datawarehouse_spark.functions import word_tokens
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     toks = (
-        docs.repartition(n_parts)
+        ensure_min_parallelism(docs)
         .select(
             F.col(id_col).alias("doc_id"),
             word_tokens(F.col(text_col)).alias("tk"),
@@ -1692,9 +1670,8 @@ def intra_doc_repetition(
     cap; windows/rollups are doc-keyed. No Python UDFs."""
     from smfg_datawarehouse_spark.functions import word_tokens
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     toks = (
-        docs.repartition(n_parts)
+        ensure_min_parallelism(docs)
         .select(
             F.col(id_col).alias("doc_id"),
             word_tokens(F.col(text_col)).alias("tk"),
@@ -2456,8 +2433,7 @@ def x137_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes and a sort-merge join: 7.2 s → ~2 s at sf0.1.)"""
     from smfg_datawarehouse_spark.functions import word_shingles
 
-    n_parts = spark.sparkContext.defaultParallelism
-    d = t(spark, sf_dir, "documents").repartition(n_parts)
+    d = ensure_min_parallelism(t(spark, sf_dir, "documents"))
     by_gram = (
         d.select(
             "source", F.explode(word_shingles(F.col("text"), 3)).alias("gram")
@@ -3050,8 +3026,7 @@ def x149_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE chunk-hash-keyed agg + join — the same single-keyed-shuffle
     profile as exact dedup (x01), applied at sub-document grain. Nothing
     pairwise."""
-    n_parts = spark.sparkContext.defaultParallelism
-    d = t(spark, sf_dir, "documents").repartition(n_parts)
+    d = ensure_min_parallelism(t(spark, sf_dir, "documents"))
     chunks = cdc_chunks(d)
     owners = chunks.groupBy("chunk_hash").agg(F.min("doc_id").alias("owner"))
     dup = F.sum(

@@ -2,9 +2,12 @@
 with typed metadata, processed through Arrow-batched ``mapInPandas``.
 
 The Spark-side plumbing is real and tested end-to-end: schema contract,
-partitioning before the (potentially 10-100×-cost) per-asset decode,
-batch-shaped pandas UDF signature. The actual media decode is stubbed —
-image/audio libraries aren't in this container — behind
+and one per-asset pass (:func:`_per_asset`) that every generator, decoder
+and feature stage runs through. It widens its input with
+``session.ensure_min_parallelism`` before the (potentially 10-100×-cost)
+per-asset work, so decode parallelism tracks cores rather than upstream
+file count, and a wide scan is not reshuffled. The actual media decode
+is stubbed — image/audio libraries aren't in this container — behind
 :func:`decode_image_stub`, which either raises ``NotImplementedError``
 (real-decode mode) or produces deterministic fake features (test mode),
 exactly as a PIL/librosa implementation would slot in.
@@ -15,8 +18,9 @@ the lake, or a binary column in parquet (used here).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from smfg_datawarehouse_spark.queries import register, t
+from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 ASSET_SCHEMA = T.StructType(
     [
@@ -98,29 +103,47 @@ def decode_image_stub(payload: bytes, fake: bool = True) -> dict:
     }
 
 
-def extract_features(assets: DataFrame, batch_hint: int | None = None) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Repartitions before the expensive per-asset work so decode parallelism
-    tracks cluster cores, not upstream file count — the key scale knob for
-    media pipelines where decode dominates I/O.
-    """
-    n_parts = batch_hint or assets.sparkSession.sparkContext.defaultParallelism
+def _per_asset(
+    frame: DataFrame,
+    schema: T.StructType,
+    per_row: Callable[[tuple], dict | list[dict]],
+) -> DataFrame:
+    """The one Arrow-batched per-asset pass: widen ``frame`` with
+    ``ensure_min_parallelism`` (decode parallelism tracks cores, not
+    upstream file count — the key scale knob for media pipelines where
+    decode dominates I/O), then call ``per_row`` on each row (a named
+    tuple of ``frame``'s columns). ``per_row`` returns one output row as
+    a dict, or a list of them (zero or more rows per asset); the batch's
+    rows become one pandas frame with ``schema``'s columns."""
+    names = [f.name for f in schema.fields]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            feats = [decode_image_stub(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [f["n_bytes"] for f in feats],
-                    "content_hash": [f["content_hash"] for f in feats],
-                    "feature_ok": [f["feature_ok"] for f in feats],
-                }
-            )
+            if len(pdf) == 0:
+                continue
+            rows = []
+            for r in pdf.itertuples(index=False):
+                out = per_row(r)
+                if isinstance(out, dict):
+                    rows.append(out)
+                else:
+                    rows.extend(out)
+            yield pd.DataFrame(rows, columns=names)
 
-    return assets.repartition(n_parts).mapInPandas(batches, FEATURE_SCHEMA)
+    return ensure_min_parallelism(frame).mapInPandas(batches, schema)
+
+
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over binary payloads."""
+    return _per_asset(
+        assets,
+        FEATURE_SCHEMA,
+        lambda r: {
+            "asset_id": r.asset_id,
+            "kind": r.kind,
+            **decode_image_stub(r.payload),
+        },
+    )
 
 
 def documents_as_assets(docs: DataFrame) -> DataFrame:
@@ -213,32 +236,25 @@ def decode_dims_stub(payload: bytes, fake: bool = True) -> tuple[int, int, int]:
 def resize_and_sample(assets: DataFrame, target: int = RESIZE_TARGET,
                       stride: int = FRAME_STRIDE) -> DataFrame:
     """Image-resize + video-frame-sample metadata pass over binary payloads
-    (Arrow-batched ``mapInPandas``; repartitioned so decode parallelism
-    tracks cores, not file count). In a real deployment the same batch
+    (one :func:`_per_asset` pass). In a real deployment the same batch
     shape carries the resized pixel buffers / sampled frames as binary
     columns; here the decode is the deterministic stub above."""
-    n_parts = assets.sparkSession.sparkContext.defaultParallelism
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            dims = [decode_dims_stub(p) for p in pdf["payload"]]
-            w = pd.Series([d[0] for d in dims], dtype="int64")
-            h = pd.Series([d[1] for d in dims], dtype="int64")
-            nf = pd.Series([d[2] for d in dims], dtype="int64")
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "orig_w": w,
-                    "orig_h": h,
-                    "scale_x": float(target) / w,
-                    "scale_y": float(target) / h,
-                    "n_frames": nf,
-                    "n_sampled": (nf + stride - 1) // stride,
-                }
-            )
+    def per_row(r) -> dict:
+        w, h, nf = decode_dims_stub(r.payload)
+        return {
+            "asset_id": r.asset_id,
+            "kind": r.kind,
+            "orig_w": w,
+            "orig_h": h,
+            # numpy division: a (0, 0, 0) unparseable header scales to inf
+            "scale_x": np.float64(target) / w,
+            "scale_y": np.float64(target) / h,
+            "n_frames": nf,
+            "n_sampled": (nf + stride - 1) // stride,
+        }
 
-    return assets.repartition(n_parts).mapInPandas(batches, TRANSFORM_SCHEMA)
+    return _per_asset(assets, TRANSFORM_SCHEMA, per_row)
 
 
 _HEX = "strpos('0123456789abcdef', substring({h}, {i}, 1)) - 1"
@@ -395,46 +411,22 @@ def documents_as_png_assets(docs: DataFrame) -> DataFrame:
     image bytes would enter from a binaryFile read instead."""
     import hashlib
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
+    def per_row(r) -> dict:
+        hx = hashlib.md5(r.text.encode("utf-8")).hexdigest()
+        w = 8 + int(hx[0:2], 16) % 32
+        h = 8 + int(hx[2:4], 16) % 32
+        return {"asset_id": r.doc_id, "payload": encode_png_gray8(w, h, r.doc_id)}
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                hx = hashlib.md5(text.encode("utf-8")).hexdigest()
-                w = 8 + int(hx[0:2], 16) % 32
-                h = 8 + int(hx[2:4], 16) % 32
-                payloads.append(encode_png_gray8(w, h, int(doc_id)))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return (
-        docs.select("doc_id", "text").repartition(n_parts).mapInPandas(gen, PNG_SCHEMA)
-    )
+    return _per_asset(docs.select("doc_id", "text"), PNG_SCHEMA, per_row)
 
 
 def decode_png_assets(assets: DataFrame) -> DataFrame:
     """Arrow-batched real-PNG decode stage (header + CRC + inflate)."""
-    n_parts = assets.sparkSession.sparkContext.defaultParallelism
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_png_header(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"].astype("int64"),
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "bit_depth": [f["bit_depth"] for f in feats],
-                    "color_type": [f["color_type"] for f in feats],
-                    "n_pixels": [f["n_pixels"] for f in feats],
-                    "crc_ok": [f["crc_ok"] for f in feats],
-                    "idat_ok": [f["idat_ok"] for f in feats],
-                }
-            )
-
-    return assets.repartition(n_parts).mapInPandas(batches, PNG_DECODE_SCHEMA)
+    return _per_asset(
+        assets,
+        PNG_DECODE_SCHEMA,
+        lambda r: {"asset_id": r.asset_id, **decode_png_header(r.payload)},
+    )
 
 
 _PNG_ORACLE = f"""
@@ -600,52 +592,22 @@ def documents_as_wav_assets(docs: DataFrame) -> DataFrame:
     binaryFile read of actual audio objects."""
     import hashlib
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
+    def per_row(r) -> dict:
+        hx = hashlib.md5(r.text.encode("utf-8")).hexdigest()
+        n = 64 + int(hx[4:6], 16) % 192
+        rate = 8000 * (1 + int(hx[6], 16) % 3)
+        return {"asset_id": r.doc_id, "payload": encode_wav_pcm16(n, rate)}
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf["text"]:
-                hx = hashlib.md5(text.encode("utf-8")).hexdigest()
-                n = 64 + int(hx[4:6], 16) % 192
-                rate = 8000 * (1 + int(hx[6], 16) % 3)
-                payloads.append(encode_wav_pcm16(n, rate))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return (
-        docs.select("doc_id", "text").repartition(n_parts).mapInPandas(gen, WAV_SCHEMA)
-    )
+    return _per_asset(docs.select("doc_id", "text"), WAV_SCHEMA, per_row)
 
 
 def decode_wav_assets(assets: DataFrame) -> DataFrame:
     """Arrow-batched real-WAV decode stage (chunk walk + sample unpack)."""
-    n_parts = assets.sparkSession.sparkContext.defaultParallelism
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_wav_pcm16(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"].astype("int64"),
-                    **{
-                        k: [f[k] for f in feats]
-                        for k in (
-                            "sample_rate",
-                            "n_channels",
-                            "bit_depth",
-                            "n_samples",
-                            "duration_us",
-                            "peak",
-                            "abs_sum",
-                            "pcm_ok",
-                        )
-                    },
-                }
-            )
-
-    return assets.repartition(n_parts).mapInPandas(batches, WAV_DECODE_SCHEMA)
+    return _per_asset(
+        assets,
+        WAV_DECODE_SCHEMA,
+        lambda r: {"asset_id": r.asset_id, **decode_wav_pcm16(r.payload)},
+    )
 
 
 _WAV_ORACLE = f"""
@@ -751,35 +713,26 @@ def ahash_png_assets(assets: DataFrame) -> DataFrame:
     integer cross-multiplication, so no float mean ever exists to
     diverge. 64 bits packed as two BIGINT halves (1<<63 is not DuckDB-
     representable)."""
-    import numpy as np
 
-    n_parts = assets.sparkSession.sparkContext.defaultParallelism
+    def per_row(r) -> dict:
+        img = decode_png_pixels(r.payload).astype(np.int64)
+        h, w = img.shape
+        bi = (np.arange(h) * 8) // h
+        bj = (np.arange(w) * 8) // w
+        idx = (bi[:, None] * 8 + bj[None, :]).ravel()
+        bs = np.bincount(idx, weights=img.ravel(), minlength=64).astype(np.int64)
+        bn = np.bincount(idx, minlength=64).astype(np.int64)
+        ts, tn = int(bs.sum()), int(bn.sum())
+        bits = (bs * tn) > (ts * bn)
+        return {
+            "asset_id": r.asset_id,
+            "width": w,
+            "height": h,
+            "ahash_hi": sum(1 << (b - 32) for b in range(32, 64) if bits[b]),
+            "ahash_lo": sum(1 << b for b in range(32) if bits[b]),
+        }
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("asset_id", "width", "height", "ahash_hi", "ahash_lo")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                img = decode_png_pixels(payload).astype(np.int64)
-                h, w = img.shape
-                bi = (np.arange(h) * 8) // h
-                bj = (np.arange(w) * 8) // w
-                idx = (bi[:, None] * 8 + bj[None, :]).ravel()
-                bs = np.bincount(idx, weights=img.ravel(), minlength=64).astype(
-                    np.int64
-                )
-                bn = np.bincount(idx, minlength=64).astype(np.int64)
-                ts, tn = int(bs.sum()), int(bn.sum())
-                bits = (bs * tn) > (ts * bn)
-                lo = sum(1 << b for b in range(32) if bits[b])
-                hi = sum(1 << (b - 32) for b in range(32, 64) if bits[b])
-                out["asset_id"].append(int(aid))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ahash_hi"].append(hi)
-                out["ahash_lo"].append(lo)
-            yield pd.DataFrame(out)
-
-    return assets.repartition(n_parts).mapInPandas(batches, AHASH_SCHEMA)
+    return _per_asset(assets, AHASH_SCHEMA, per_row)
 
 
 #: Closed-form replay of every aHash bit (shared by x107 and x136): the
@@ -941,20 +894,13 @@ def x122_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     a framing off-by-one, endianness slip, or dropped tail frame cannot
     hash-match."""
     assets = documents_as_wav_assets(t(spark, sf_dir, "documents"))
-    n_parts = assets.sparkSession.sparkContext.defaultParallelism
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                for feat in wav_frame_features(payload):
-                    rows.append({"asset_id": int(aid), **feat})
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in WAV_FRAME_SCHEMA.fields],
-            )
-
-    return assets.repartition(n_parts).mapInPandas(batches, WAV_FRAME_SCHEMA)
+    return _per_asset(
+        assets,
+        WAV_FRAME_SCHEMA,
+        lambda r: [
+            {"asset_id": r.asset_id, **feat} for feat in wav_frame_features(r.payload)
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------

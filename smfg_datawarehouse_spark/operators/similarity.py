@@ -1563,8 +1563,6 @@ def covariance_partials(
     """
     dim_row = vectors.select(F.size(vec_col).alias("d")).head()
     dim = int(dim_row["d"])
-    if n_parts is None:
-        n_parts = vectors.sparkSession.sparkContext.defaultParallelism
 
     def fold(it):
         acc12 = np.zeros((dim, dim), np.int64)

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.functions import ordered_concat_ws, word_tokens
 from smfg_datawarehouse_spark.queries import davg, register, t
-from smfg_datawarehouse_spark.session import local_rows_df
+from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
 _STOPWORDS_EN = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
@@ -58,7 +58,6 @@ def winnowing_fingerprints(
     up front rather than a second unbounded window pass. One linear explode
     + one doc_id shuffle, no quadratic stage.
     """
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     txt = F.lower(F.col(text_col))
     ng = (F.length(txt) - (k - 1)).alias("ng")
     # CASE-guarded: sequence(1, ng) would generate a DESCENDING range for
@@ -68,7 +67,7 @@ def winnowing_fingerprints(
         F.substring(F.md5(F.col("_txt").substr(F.col("pos"), F.lit(k))), 1, 8), 16, 10
     ).cast("bigint")
     g = (
-        docs.repartition(n_parts)
+        ensure_min_parallelism(docs)
         .select(
             F.col(id_col).alias("doc_id"),
             txt.alias("_txt"),
@@ -578,11 +577,10 @@ def x27_bigrams_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda w, i: F.concat_ws(" ", w, F.element_at(tk, i + F.lit(2))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # repartition before the row-multiplying explode: the corpus arrives as
-    # few scan splits, and without this the explode+count runs single-task
-    n_parts = spark.sparkContext.defaultParallelism
+    # widen before the row-multiplying explode: the corpus arrives as few
+    # scan splits, and without this the explode+count runs single-task
     return (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
@@ -755,7 +753,6 @@ def x34_cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFram
     Σ|sources-per-gram|² — bounded by the source count, never |docs|² —
     and the big explode crosses the wire exactly once."""
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     tk = F.col("_tk")
     grams = F.when(
         F.size(tk) >= 3,
@@ -775,7 +772,7 @@ def x34_cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     return (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select("source", F.explode(grams).alias("gram"))
         .groupBy("gram")
@@ -822,9 +819,8 @@ def x35_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary tie at rank 100 breaks on the token string: deterministic cut.
     OOV rate is a single int/int divide — bit-stable."""
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     tok = (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select("doc_id", F.explode("_tk").alias("tokw"))
     )
@@ -898,9 +894,8 @@ def x36_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sum accumulates in exact decimal — bit-stable at any partition
     count."""
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     tok = (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select("source", F.explode("_tk").alias("tokw"))
     )
@@ -971,9 +966,8 @@ def doc_mean_token_prob(d: DataFrame, extra_cols: list[str] | None = None) -> Da
     per-language bucketing) through the rollup as additional group keys —
     functionally dependent on doc_id, so the grouping is unchanged."""
     extras = extra_cols or []
-    n_parts = d.sparkSession.sparkContext.defaultParallelism
     tok = (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select("doc_id", *extras, F.explode("_tk").alias("tokw"))
     )
@@ -1273,17 +1267,17 @@ def x46_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries its token count and an md5 content hash so downstream dedup
     can drop repeated chunks without re-reading text. Token arrays
     materialize once per row (`withColumn`) so the per-chunk slice never
-    re-tokenizes; the explode multiplies rows AFTER a repartition, so the
-    expansion parallelizes instead of riding a few scan splits. Scan-side
-    only — zero joins, zero shuffles beyond the repartition."""
+    re-tokenizes; the explode multiplies rows AFTER the scan is widened
+    (``ensure_min_parallelism``), so the expansion parallelizes instead of
+    riding a few scan splits. Scan-side only — zero joins, zero shuffles
+    beyond that widening."""
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     tk = F.col("_tk")
     starts = F.when(
         F.size(tk) >= 1, F.sequence(F.lit(1), F.size(tk), F.lit(48))
     ).otherwise(F.array().cast("array<int>"))
     st = (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select("doc_id", "_tk", F.explode(starts).alias("s"))
     )
@@ -1337,13 +1331,12 @@ def x53_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy on the chunk hash — the same single-shuffle shape as x01
     exact doc dedup, corpus-linear at any scale."""
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     tk = F.col("_tk")
     starts = F.when(
         F.size(tk) >= 1, F.sequence(F.lit(1), F.size(tk), F.lit(48))
     ).otherwise(F.array().cast("array<int>"))
     chunks = (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select("doc_id", "_tk", F.explode(starts).alias("s"))
         .select(
@@ -1417,9 +1410,7 @@ def x141_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     would re-explode only the vocab, never the corpus. Counts exact
     BIGINTs; top-k is a TakeOrderedAndProject."""
     from smfg_datawarehouse_spark.functions import word_tokens
-
-    n_parts = spark.sparkContext.defaultParallelism
-    d = t(spark, sf_dir, "documents").repartition(n_parts)
+    d = ensure_min_parallelism(t(spark, sf_dir, "documents"))
     words = (
         d.select(F.explode(word_tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
@@ -1574,9 +1565,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
     Logic is exactly the certified x147 shape (vocab-sized rounds,
     argmax collect, boundary-safe column-function fold)."""
     from smfg_datawarehouse_spark.functions import word_tokens
-
-    n_parts = spark.sparkContext.defaultParallelism
-    d = t(spark, sf_dir, "documents").repartition(n_parts)
+    d = ensure_min_parallelism(t(spark, sf_dir, "documents"))
     seqs = (
         d.select(F.explode(word_tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
@@ -1750,8 +1739,7 @@ def x158_bpe_apply_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.col("tok")).cast("long").alias("l0"),
         F.size(F.split(F.col("seq"), " ")).cast("long").alias("lN"),
     )
-    n_parts = spark.sparkContext.defaultParallelism
-    d = t(spark, sf_dir, "documents").repartition(n_parts)
+    d = ensure_min_parallelism(t(spark, sf_dir, "documents"))
     src_tok = (
         d.select("source", F.explode(word_tokens(F.col("text"))).alias("tok"))
         .groupBy("source", "tok")

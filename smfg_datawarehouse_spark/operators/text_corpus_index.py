@@ -21,6 +21,7 @@ from smfg_datawarehouse_spark.operators.text_analysis import (
     quality_features,
     word_tokens,
 )
+from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 # ---------------------------------------------------------------------------
 # Corpus-level boilerplate n-gram coverage — the C4/CCNet boilerplate
@@ -54,9 +55,8 @@ def boilerplate_coverage(
     back to windows on the gram key (keyed shuffle — the set is
     corpus-dependent, so no broadcast assumption); rollup is doc-keyed.
     The n_docs total is a one-row broadcast. No Python UDFs."""
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     toks = (
-        docs.repartition(n_parts)
+        ensure_min_parallelism(docs)
         .select(
             F.col(id_col).alias("doc_id"),
             word_tokens(F.col(text_col)).alias("tk"),
@@ -1444,7 +1444,7 @@ def x139_tfidf_cosine_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.functions import word_tokens
 
     n_parts = spark.sparkContext.defaultParallelism
-    d = t(spark, sf_dir, "documents").repartition(n_parts)
+    d = ensure_min_parallelism(t(spark, sf_dir, "documents"))
     tk = (
         d.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("tok"))
         .groupBy("doc_id", "tok")

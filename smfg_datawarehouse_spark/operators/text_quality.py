@@ -24,6 +24,7 @@ from smfg_datawarehouse_spark.operators.text_analysis import (
     WINNOW_K,
     word_tokens,
 )
+from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 @register(
     "x58_eval_gram_decontamination",
@@ -71,8 +72,7 @@ def x58_eval_gram_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     from smfg_datawarehouse_spark.functions import word_shingles
 
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
-    g = d.repartition(n_parts).select(
+    g = ensure_min_parallelism(d).select(
         "doc_id",
         "source",
         F.explode(word_shingles(F.col("text"), 4)).alias("gram"),
@@ -366,8 +366,7 @@ def x68_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<struct<tok_a:string,tok_b:string>>"))
-    n_parts = spark.sparkContext.defaultParallelism
-    toks = d.repartition(n_parts).withColumn("_tk", word_tokens(F.col("text")))
+    toks = ensure_min_parallelism(d).withColumn("_tk", word_tokens(F.col("text")))
     # cached: both the bigram and the unigram rollup re-derive the token
     # array from the raw text otherwise (two full tokenization passes)
     toks = toks.select("_tk").cache()
@@ -622,31 +621,36 @@ def x73_char_diversity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from smfg_datawarehouse_spark.session import ensure_min_parallelism
-
     def hist(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             texts = pdf["text"].values
+            null = pd.isna(texts)
             n = np.zeros(len(texts), dtype=np.int64)
             sq = np.zeros(len(texts), dtype=np.int64)
             for j, s in enumerate(texts):
-                b = np.frombuffer(
-                    (s or "").lower().encode("utf-8"), dtype=np.uint8
-                )
+                if null[j]:
+                    continue
+                b = np.frombuffer(s.lower().encode("utf-8"), dtype=np.uint8)
                 h = np.bincount(b, minlength=123)[97:123].astype(np.int64)
                 n[j] = h.sum()
                 sq[j] = (h * h).sum()
             n2 = (n * n).astype(np.float64)
             with np.errstate(divide="ignore", invalid="ignore"):
                 gini = np.where(n > 0, (n * n - sq) / n2, 0.0)
+            # NULL text: n_alpha and is_diverse are NULL (SQL propagation
+            # through the oracle), gini takes the CASE's ELSE 0.0
+            n_alpha = pd.array(n, dtype="Int64")
+            is_diverse = pd.array((n > 0) & (gini >= 0.9), dtype="boolean")
+            n_alpha[null] = pd.NA
+            is_diverse[null] = pd.NA
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "n_alpha": n,
+                    "n_alpha": n_alpha,
                     "gini": gini,
-                    "is_diverse": (n > 0) & (gini >= 0.9),
+                    "is_diverse": is_diverse,
                 }
             )
 
@@ -702,8 +706,7 @@ def x74_eval_leakage_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.functions import word_shingles
 
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
-    g = d.repartition(n_parts).select(
+    g = ensure_min_parallelism(d).select(
         "doc_id",
         "source",
         F.explode(word_shingles(F.col("text"), 4)).alias("gram"),
@@ -1197,9 +1200,8 @@ def x87_domain_reweighting(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized), everything downstream is vocab- or domain-sized broadcasts;
     no corpus-sized shuffle beyond the count groupBy."""
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     tok = (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .withColumn("_tk", word_tokens(F.col("text")))
         .select("source", F.explode("_tk").alias("tokw"))
     )

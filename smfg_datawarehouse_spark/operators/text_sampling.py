@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.functions import word_tokens
 from smfg_datawarehouse_spark.queries import register, t
+from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 DSIR_BUCKETS = 1024
 
@@ -75,9 +76,8 @@ def x62_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-shaped. The hash family is the engine-portable md5-prefix used by
     MinHash (dedup.py)."""
     d = t(spark, sf_dir, "documents")
-    n_parts = spark.sparkContext.defaultParallelism
     tok = (
-        d.repartition(n_parts)
+        ensure_min_parallelism(d)
         .select(
             "doc_id",
             "lang",

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.functions import word_tokens
 from smfg_datawarehouse_spark.queries import register, t
+from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 # ---------------------------------------------------------------------------
 # count-min sketch frequency estimation (portable md5 hash rows)
@@ -407,7 +408,6 @@ def bloom_contamination(
     # per doc — instead of a per-position transform() lambda: higher-order
     # functions run INTERPRETED in Spark, and at millions of bigrams the
     # per-element lambda overhead dominates (measured ~3× on this op).
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
     tk = word_tokens(F.col(text_col))
     pairs = F.when(
         F.size(tk) >= 2,
@@ -417,7 +417,7 @@ def bloom_contamination(
         ),
     )
     toks = (
-        docs.repartition(n_parts)
+        ensure_min_parallelism(docs)
         .select(F.col(source_col).alias("source"), F.explode(pairs).alias("z"))
         .select(
             "source",
@@ -1140,8 +1140,8 @@ def _register_x129() -> None:
         vocabulary-sized) first-occurrence table by its winning doc —
         both shuffle partial aggregates, never raw exploded rows (the
         join-back formulation re-shuffled the exploded corpus and was
-        the bench's heaviest query). The corpus is repartitioned before
-        BOTH shingle passes — a compact source (one parquet row group
+        the bench's heaviest query). The corpus is widened before BOTH
+        shingle passes — a compact source (one parquet row group
         here; one scan split at scale) would otherwise run the ~300×
         row-inflating explode and the regex tokenization in one task
         (measured: 11 s single-task → ~1.5 s at sf0.1 on 32 cores).
@@ -1150,7 +1150,6 @@ def _register_x129() -> None:
         oracle is its CTE plus a MIN."""
         from smfg_datawarehouse_spark.functions import word_shingles
 
-        n_parts = spark.sparkContext.defaultParallelism
         raw = t(spark, sf_dir, "documents")
         # ONE tokenize+shingle pass, checkpointed as the doc-keyed ARRAY
         # table (corpus-sized rows, pre-explode — far smaller than the
@@ -1159,7 +1158,7 @@ def _register_x129() -> None:
         # query's single most expensive scan-side expression (VERDICT r7
         # item 3 — x129 had grown three rounds straight)
         arr = (
-            raw.repartition(n_parts)
+            ensure_min_parallelism(raw)
             .select("doc_id", word_shingles(F.col("text")).alias("arr"))
             .localCheckpoint(eager=False)
         )

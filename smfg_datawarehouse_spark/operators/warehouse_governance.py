@@ -24,7 +24,7 @@ from smfg_datawarehouse_spark.queries import (
     register,
     t,
 )
-from smfg_datawarehouse_spark.session import local_rows_df
+from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
 _PROFILE_NUM = [
     ("o_orderkey", "o_orderkey"),
@@ -96,13 +96,12 @@ def q88_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema. Reference parity: the metadata/config catalog surface (S4)
     describes declared shape; this describes the DATA.
 
-    The scan is repartitioned first: ~9 exact count_distincts expand the
-    row stream ~10× before the partial agg, and a compact single-row-
-    group source would run that expansion in ONE task (measured 2.9 s →
-    1.8 s at sf0.1; at scale the source arrives in many splits and the
-    exchange is a no-op-sized rebalance)."""
-    n_parts = spark.sparkContext.defaultParallelism
-    o = t(spark, sf_dir, "orders").repartition(n_parts)
+    The scan is widened first (``ensure_min_parallelism``): ~9 exact
+    count_distincts expand the row stream ~10× before the partial agg,
+    and a compact single-row-group source would run that expansion in
+    ONE task (measured 2.9 s → 1.8 s at sf0.1; at scale the source
+    arrives in many splits and passes through with no exchange)."""
+    o = ensure_min_parallelism(t(spark, sf_dir, "orders"))
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for name, expr in _PROFILE_NUM:
         c = F.expr(expr)

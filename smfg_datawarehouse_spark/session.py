@@ -140,30 +140,53 @@ def local_rows_df(spark: SparkSession, rows, schema):
     return spark.createDataFrame(pdf, schema=st)
 
 
+#: Physical operators that make a frame more than a narrow scan: an
+#: exchange of any kind (with AQE on, every plan that has one is wrapped in
+#: an AdaptiveSparkPlan) and a cached relation.
+_NOT_A_SCAN = ("Exchange", "AdaptiveSparkPlan", "InMemoryTableScan")
+
+
+def _is_narrow_scan(plan) -> bool:
+    """True when the physical ``plan`` is source scans under narrow
+    operators only: no exchange, no cached relation, no subquery."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if any(s in name for s in _NOT_A_SCAN) or node.subqueries().nonEmpty():
+            return False
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True
+
+
 def ensure_min_parallelism(df, n_parts: int | None = None):
-    """Repartition ``df`` ONLY when it currently has fewer partitions than
-    ``n_parts`` (default ``defaultParallelism``).
+    """Widen ``df`` to ``n_parts`` partitions (default ``defaultParallelism``)
+    for a CPU-bound kernel, deciding from the plan alone.
 
-    The CPU-kernel operators (mapInPandas scoring passes, shingle
-    explodes) need scan-width parallelism: a compact source arrives as
-    ONE split at test scale and the kernel would run single-task. But an
-    UNCONDITIONAL ``repartition(n)`` is wrong at 100 TB — it forces a
-    corpus-wide exchange and can NARROW a naturally-wide scan down to
-    the local core count (VERDICT r9 item 3). Gating on the observed
-    partition count keeps both scales honest: test-scale plans are
-    unchanged (1 split < n → same exchange as before), wide scans pass
-    through untouched. Results are partition-count-invariant in every
-    caller by construction (partial top-k + global resolve, per-row
-    kernels, exact-integer aggregations).
+    The CPU-kernel operators (mapInPandas scoring passes, tokenize and
+    shingle explodes, per-asset decodes) need scan-width parallelism: a
+    compact source arrives as ONE split at test scale and the kernel would
+    run single-task. But an unconditional ``repartition(n)`` is wrong at
+    100 TB: it forces a corpus-wide exchange and can NARROW a naturally
+    wide scan down to the local core count (VERDICT r9 item 3).
 
-    Caveat: pass narrow scans only. For a frame whose plan ends in an
-    exchange, ``getNumPartitions`` reports the static shuffle-partition
-    count, while AQE may coalesce those partitions to one at runtime; the
-    gate then skips the repartition and the kernel runs single-task.
-    The ``.rdd`` probe also costs one extra planning pass.
+    The rule: ``df`` passes through unchanged only when its physical plan
+    is a shuffle-free, cache-free scan (source scans under narrow
+    operators, no subquery) that already has at least ``n_parts``
+    partitions. A scan's partition count is its file-split count, known
+    at planning time. Every other frame gets ``repartition(n_parts)``
+    without a probe: the partition count of a shuffled frame is only
+    known after AQE has run its shuffle stages, and a cached frame's is
+    that of the plan it caches. So the helper launches no Spark job on
+    any input, and the one planning pass it makes is the frame's own
+    (reused by any later action on ``df``). Results are
+    partition-count-invariant in every caller by construction (partial
+    top-k + global resolve, per-row kernels, exact-integer aggregations).
     """
     if n_parts is None:
         n_parts = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n_parts:
-        return df.repartition(n_parts)
-    return df
+    qe = df._jdf.queryExecution()
+    if _is_narrow_scan(qe.executedPlan()) and qe.toRdd().getNumPartitions() >= n_parts:
+        return df
+    return df.repartition(n_parts)

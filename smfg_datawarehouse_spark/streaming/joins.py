@@ -12,11 +12,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def view_purchase_conversions(events: DataFrame, within: str = "30 minutes") -> DataFrame:
-    """Per-user view → purchase conversions within ``within``: each view
-    pairs with every later purchase by the same user inside the window.
-    In streaming both inputs carry the events watermark, so join state is
-    bounded by (watermark delay + interval)."""
+def _view_purchase_join(events: DataFrame, within: str, how: str) -> DataFrame:
+    """Views joined to purchases by the same user at or after the view and
+    no later than ``within`` after it, with join type ``how``. A
+    ``left_semi`` join returns only the view columns (the optimizer prunes
+    the purchase side down to the join keys)."""
     views = events.where(F.col("event_type") == "view").select(
         F.col("user_id").alias("v_user"),
         F.col("event_id").alias("view_id"),
@@ -28,20 +28,24 @@ def view_purchase_conversions(events: DataFrame, within: str = "30 minutes") -> 
         F.col("ts").alias("purchase_ts"),
         F.col("value").alias("purchase_value"),
     )
+    cols = [F.col("v_user").alias("user_id"), "view_id", "view_ts"]
+    if how != "left_semi":
+        cols += ["purchase_id", "purchase_ts", "purchase_value"]
     return views.join(
         purchases,
         (F.col("v_user") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("view_ts"))
         & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {within}")),
-        "inner",
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "view_ts",
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-    )
+        how,
+    ).select(*cols)
+
+
+def view_purchase_conversions(events: DataFrame, within: str = "30 minutes") -> DataFrame:
+    """Per-user view → purchase conversions within ``within``: each view
+    pairs with every later purchase by the same user inside the window.
+    In streaming both inputs carry the events watermark, so join state is
+    bounded by (watermark delay + interval)."""
+    return _view_purchase_join(events, within, "inner")
 
 
 def view_purchase_conversions_outer(
@@ -58,31 +62,7 @@ def view_purchase_conversions_outer(
     stays bounded exactly like the inner join — the time bound plus both
     sides' watermarks is what makes outer stream-stream joins legal at
     all (Spark rejects an unbounded outer stream join outright)."""
-    views = events.where(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {within}")),
-        "left_outer",
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "view_ts",
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-    )
+    return _view_purchase_join(events, within, "left_outer")
 
 
 def view_purchase_converted_views(
@@ -100,26 +80,7 @@ def view_purchase_converted_views(
     state, and the time bound + watermark evicts it just like the inner
     join's. No unmatched-side wait exists (unmatched views simply never
     emit), so an AvailableNow drain needs no heartbeat machinery."""
-    views = events.where(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {within}")),
-        "left_semi",
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "view_ts",
-    )
+    return _view_purchase_join(events, within, "left_semi")
 
 
 def enrich_with_dimension(

@@ -1,5 +1,5 @@
 """Scale-contract guards: jaccard_pairs df-cap skew guard, ANN collect cap,
-a control plane that launches no Spark job."""
+a control plane that launches no Spark job, one job-free widening rule."""
 
 from __future__ import annotations
 
@@ -363,3 +363,87 @@ def test_no_unused_locals():
                 if not name.startswith("_") and name not in declared | loads
             ]
     assert not unused, unused
+
+
+def test_kernels_widen_only_through_ensure_min_parallelism():
+    """One widening rule: an unkeyed ``.repartition(x)`` whose single
+    argument is neither an int literal nor a column (a name string or a
+    ``col(...)`` call) is sized at run time, from defaultParallelism or
+    any other variable, and belongs in ``session.ensure_min_parallelism``,
+    which leaves a wide scan alone. Literal file counts
+    (``repartition(3)``) and keyed repartitions are not widening and stay
+    where they are."""
+    import ast
+    import pathlib
+
+    import smfg_datawarehouse_spark
+
+    def is_column(arg):
+        if isinstance(arg, ast.Constant):
+            return isinstance(arg.value, (int, str))
+        return isinstance(arg, ast.Call) and getattr(
+            arg.func, "attr", getattr(arg.func, "id", None)
+        ) == "col"
+
+    root = pathlib.Path(smfg_datawarehouse_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+                and len(node.args) == 1
+                and not node.keywords
+                and not is_column(node.args[0])
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, hits
+
+
+def test_ensure_min_parallelism_decides_from_the_plan(spark, tmp_path):
+    """A narrow scan is widened, a scan with enough splits passes through
+    with no Exchange, and a shuffled or cached frame is widened without
+    probing its partition count. No input launches a Spark job."""
+    from conftest import SF_DIR
+
+    from smfg_datawarehouse_spark.session import ensure_min_parallelism
+
+    def exchanges(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+    def widened_to(df, n_parts):
+        top = df._jdf.queryExecution().logical().toString()
+        return top.startswith(f"Repartition {n_parts}, true")
+
+    n = 2
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs.repartition(n + 1).write.parquet(str(tmp_path / "wide"))
+    wide = spark.read.parquet(str(tmp_path / "wide"))
+    splits = wide.rdd.getNumPartitions()
+    assert splits >= n
+    cached = docs.select("doc_id", "text").cache()
+    try:
+        cases = [
+            ("1-split scan", docs, n, False),
+            (f"{n + 1}-file scan", wide, n, True),
+            ("wide scan under a filter", wide.where("doc_id > 0"), n, True),
+            ("scan narrower than n", wide, splits + 1, False),
+            ("groupBy output", docs.groupBy("source").count(), n, False),
+            ("repartition(k) output", docs.repartition(n + 1), n, False),
+            ("cached frame", cached, 1, False),
+        ]
+        for name, df, want, passes in cases:
+            before = _last_job_id(spark)
+            out = ensure_min_parallelism(df, want)
+            assert _last_job_id(spark) == before, f"{name} launched a Spark job"
+            if passes:
+                assert out is df and exchanges(out) == 0, name
+            else:
+                assert widened_to(out, want), name
+    finally:
+        cached.unpersist()
+    # the widened frame still runs and keeps every row
+    assert ensure_min_parallelism(docs, n).count() == docs.count()

@@ -99,6 +99,22 @@ def test_tokenizer_fertility_all_degenerate_lang(spark, tmp_path_factory):
     assert out["en"]["bytes_per_token"] is not None
 
 
+def test_char_diversity_null_and_unicode_lower_parity(spark, tmp_path_factory):
+    """x73 on NULL, empty and mixed-case text and on the two non-ASCII
+    capitals whose lowercase is an ASCII letter. NULL text is
+    (NULL, 0.0, NULL) in both engines, as SQL's NULL propagation through
+    the oracle's CASE gives it. The kernel's ``str.lower`` does not read
+    the locale and agrees with DuckDB's ``lower`` on U+212A (KELVIN
+    SIGN) -> 'k' and U+0130 -> 'i' (Python appends a combining dot,
+    which is not an a-z byte)."""
+    d = tmp_path_factory.mktemp("edge_x73")
+    rows = [(0, None), (1, ""), (2, "Abc"), (3, "\u212a"), (4, "\u0130")]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
+        str(d / "documents.parquet")
+    )
+    _compare(spark, str(d), "x73_char_diversity_filter")
+
+
 def test_bpe_stats_zero_token_parity(spark, edge_sf_dir):
     """x24's per-doc chars_per_token on a whitespace-only doc: NULL in
     both engines, not NULL-vs-Infinity."""
