@@ -24,6 +24,23 @@ def dot_product(a: Column, b: Column) -> Column:
     )
 
 
+def squared_l2(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance of two array columns: ``(x - y)²`` folded
+    left to right from ``0.0``."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def max_abs(a: Column) -> Column:
+    """Largest ``|x|`` of an array column (``0.0`` for an empty array)."""
+    return F.aggregate(
+        F.transform(a, lambda x: F.abs(x)), F.lit(0.0), lambda acc, v: F.greatest(acc, v)
+    )
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)

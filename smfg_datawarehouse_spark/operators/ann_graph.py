@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from smfg_datawarehouse_spark.functions.vectors import dot_product
 from smfg_datawarehouse_spark.queries import register, t
 
 KNN_K = 5
@@ -31,12 +32,9 @@ _CENT_RULE = 29, 7  # centroid seed: vec_id % 29 == 7 (x11's deterministic rule)
 def _fold_cosine(a: Column, b: Column) -> Column:
     """Left-to-right fold cosine of two array<double> columns — the exact
     arithmetic DuckDB's ``list_reduce`` replays (see similarity._DCOS)."""
-    def dot(x: Column, y: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-        )
-
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+    return dot_product(a, b) / (
+        F.sqrt(dot_product(a, a)) * F.sqrt(dot_product(b, b))
+    )
 
 
 def knn_graph(
@@ -138,18 +136,13 @@ def knn_graph(
     # see above), so the broadcast join survives unchanged and only ONE
     # interpreted fold (the pair dot) remains per pair — a 3× cut of
     # the per-pair interpreted CPU with zero plan change.
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
-        )
-
     pairs = cand.join(members, "probe_cell").where(
         F.col("vec_id") != F.col("neighbor_id")
     )
     scored = pairs.select(
         F.col("vec_id").alias("query_id"),
         "neighbor_id",
-        (dot(F.col("v"), F.col("nv")) / (F.col("vn") * F.col("nvn"))).alias(
+        (dot_product(F.col("v"), F.col("nv")) / (F.col("vn") * F.col("nvn"))).alias(
             "cos_sim"
         ),
     )

@@ -19,11 +19,12 @@ All pure DataFrame/Catalyst code — no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.queries import register, t
+from smfg_datawarehouse_spark.functions import shingle_table
+from smfg_datawarehouse_spark.queries import hex_int, md5_int, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
 # ---------------------------------------------------------------------------
@@ -42,24 +43,6 @@ def latest_wins_dedup(df: DataFrame, keys: list[str], order_col: str) -> DataFra
     """Classic CDC-style dedup: newest row per key survives."""
     w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
     return df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
-
-
-def shingle_sets(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    mode: str = "word",
-) -> DataFrame:
-    """(id, shingle) exploded distinct k-gram sets (word or char shingles).
-
-    Thin historical alias of the named corpus kernel
-    ``functions.shingle_table`` (VERDICT r7 item 7) — kept because it is
-    the established import across the dedup/sketch operators.
-    """
-    from smfg_datawarehouse_spark.functions import shingle_table
-
-    return shingle_table(docs, text_col, id_col, k=k, mode=mode)
 
 
 def jaccard_pairs(
@@ -122,8 +105,8 @@ def jaccard_pairs(
         raise ValueError(f"on_drop must be 'warn' or 'raise', got {on_drop!r}")
     # ``shingles``: pre-computed (doc_id, shingle) frame (e.g. shared with
     # a MinHash kernel over the same corpus) — skips re-tokenizing.
-    sh = shingles if shingles is not None else shingle_sets(
-        docs, text_col, id_col, k, mode
+    sh = shingles if shingles is not None else shingle_table(
+        docs, text_col, id_col, k=k, mode=mode
     )
     # full sets as sorted arrays (for exact verification) — cached: the
     # interpreted higher-order shingling runs exactly ONCE; every later
@@ -283,13 +266,13 @@ def minhash_signatures(
     cache) — skips re-tokenizing the corpus when a caller needs both the
     signatures and the raw sets.
     """
-    sh = shingles if shingles is not None else shingle_sets(
-        docs, text_col, id_col, k, mode
+    sh = shingles if shingles is not None else shingle_table(
+        docs, text_col, id_col, k=k, mode=mode
     )
     hashed = sh.select("doc_id", F.md5("shingle").alias("_h")).select(
         "doc_id",
-        F.conv(F.substring("_h", 1, 8), 16, 10).cast("bigint").alias("_ha"),
-        F.conv(F.substring("_h", 9, 8), 16, 10).cast("bigint").alias("_hb"),
+        hex_int("_h").alias("_ha"),
+        hex_int("_h", 9).alias("_hb"),
     )
     aggs = [
         F.min(
@@ -317,56 +300,14 @@ def minhash_candidates(
     sharing any band hash become candidates; estimated similarity = fraction
     of matching minhashes. Returns (doc_a, doc_b, est_jaccard ≥ est_threshold).
     """
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, text_col, id_col, k, num_hashes, mode, shingles)
-    # carry the whole signature (as one array) through the band explode:
-    # candidates verify in-place from the joined arrays — no join-back to
-    # the signature table, so the whole op is ONE keyed shuffle + join.
-    # 16 BIGINTs = 128 B/row replicated ×bands; at 100 TB that stays linear
-    # and beats two extra signature-table shuffles. Band key = the joined
-    # minhash values themselves ("12|34|…"): injective, so no hash call and
-    # no false bucket collisions.
-    stacked = (
-        sig.select(
-            "doc_id",
-            F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("sig"),
-        )
-        .select(
-            "doc_id",
-            "sig",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("bi"),
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1).cast(
-                                        "string"
-                                    )
-                                    for r in range(rows_per_band)
-                                ],
-                            ).alias("bh"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band"),
-        )
-        .select("doc_id", "sig", "band.bi", "band.bh")
-        # cached: both sides of the self-join read the materialized bands
-        # instead of replaying the 16-hash signature aggregation twice
-        .cache()
-    )
+    # the whole op is ONE keyed shuffle + join: candidates verify in place
+    # from the signature each band row carries. Cached: both sides of the
+    # self-join read the materialized bands instead of replaying the
+    # 16-hash signature aggregation twice.
+    stacked = lsh_band_rows(sig, num_hashes, bands).cache()
     a, b = stacked.alias("a"), stacked.alias("b")
-    matches = F.aggregate(
-        F.zip_with(
-            F.col("a.sig"), F.col("b.sig"), lambda x, y: F.when(x == y, 1).otherwise(0)
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
+    matches = _sig_agreement("a.sig", "b.sig")
     return (
         a.join(
             b,
@@ -402,15 +343,15 @@ def simhash_signatures(
 ) -> DataFrame:
     """32-bit SimHash per document over distinct word tokens.
 
-    Token hash = first 8 hex digits of md5 (portable), decoded with ONE
-    conv() into a 32-bit value ``v``; hex digit ``j//4+1`` carries weight
+    Token hash = first 8 hex digits of md5 (portable), read as ONE
+    32-bit word ``v`` (``md5_int``); hex digit ``j//4+1`` carries weight
     ``16^(7 - j//4)``, so bit j of the signature is
     ``(v >> (4*(7 - j//4) + j%4)) & 1``. Per-bit +1/-1 sums reduce to
     counting set bits (``2*ones >= tokens`` sets the output bit). Pure
     expressions — one explode + one groupBy, linear in corpus size.
     """
     toks = _word_token_sets(docs, text_col, id_col).withColumn(
-        "v", F.expr(f"CAST(conv(substring(md5(tok), 1, {SIMHASH_BITS // 4}), 16, 10) AS BIGINT)")
+        "v", md5_int("tok", 1, SIMHASH_BITS // 4)
     )
     aggs = [
         F.sum(F.expr(f"(shiftright(v, {4 * (7 - j // 4) + j % 4}) & 1)")).alias(f"n{j}")
@@ -1042,7 +983,7 @@ def x56_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     other exchange. Counts are exact ints; the rate is one int/int
     divide — bit-stable."""
     d = t(spark, sf_dir, "documents")
-    sh = shingle_sets(d, "text", "doc_id", k=3, mode="word")
+    sh = shingle_table(d, "text", "doc_id", k=3, mode="word")
     wsh = W.partitionBy("shingle")
     uniq = F.when(F.col("df") == 1, 1).otherwise(0)
     return (
@@ -1202,7 +1143,7 @@ def x14_minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # one tokenization for both consumers: the signature pass and the
     # exact-set collect read this cache instead of re-shingling the corpus
-    sh = shingle_sets(d, "text", "doc_id", k=3, mode="word").cache()
+    sh = shingle_table(d, "text", "doc_id", k=3, mode="word").cache()
     cand = minhash_candidates(
         d, "text", "doc_id",
         k=3, num_hashes=_NUM_HASHES, bands=_BANDS,
@@ -1330,7 +1271,8 @@ def lsh_band_rows(
     signature rides each band row as one BIGINT array so candidate
     verification happens in place on the joined rows (no join-back to
     the signature table); ``bh`` is the band's concatenated minhashes —
-    the LSH bucket key."""
+    the LSH bucket key, injective, so no hash call and no false bucket
+    collisions."""
     rows_per_band = num_hashes // bands
     return (
         sig.select(
@@ -1364,6 +1306,17 @@ def lsh_band_rows(
     )
 
 
+def _sig_agreement(a: str, b: str, same=lambda x, y: x == y) -> Column:
+    """How many positions of the signature arrays ``a`` and ``b`` agree
+    under ``same`` (default: equal minhashes) — an integer fold, so an
+    estimate of agreement / num_hashes is one exact division."""
+    return F.aggregate(
+        F.zip_with(F.col(a), F.col(b), lambda x, y: F.when(same(x, y), 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+
+
 def lsh_index_match(index: DataFrame, batch_bands: DataFrame) -> DataFrame:
     """Score a SMALL batch of band rows against a standing LSH index:
     broadcast the batch into the index's band table, verify candidates
@@ -1372,13 +1325,7 @@ def lsh_index_match(index: DataFrame, batch_bands: DataFrame) -> DataFrame:
     x61's tie-break). Asymmetric by construction: the index side is the
     scan, the batch side is the broadcast — no corpus-wide pair shuffle
     exists at any corpus size."""
-    matches = F.aggregate(
-        F.zip_with(
-            F.col("n.sig"), F.col("c.sig"), lambda x, y: F.when(x == y, 1).otherwise(0)
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
+    matches = _sig_agreement("n.sig", "c.sig")
     scored = (
         index.alias("c")
         .join(
@@ -1888,20 +1835,10 @@ def x105_lsh_banding_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     its certified single-shuffle shape."""
     d = t(spark, sf_dir, "documents")
     gate = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("x105:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.lit("x105:"), F.col("doc_id").cast("string")))
         % 1000000
         < _X105_GATE_MILLI
     )
-    from smfg_datawarehouse_spark.functions import shingle_table
-
     d_s = d.where(gate)
     sh = shingle_table(
         d_s, "text", "doc_id", k=3, mode="word", checkpoint=True
@@ -2980,7 +2917,7 @@ def cdc_chunks(docs: DataFrame, gate: int = _X149_GATE) -> DataFrame:
     flagged = toks.withColumn(
         "is_boundary",
         (
-            F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
+            md5_int("tok")
             % gate
             == 0
         ).cast("int"),
@@ -3106,8 +3043,6 @@ def x154_weighted_jaccard_rescore(
     the x56/x139 vocabulary rule); per-pair union/intersection weights
     come from ONE explode of the candidate pairs' shingles (pair-keyed
     agg, LSH-bounded pair space). Nothing corpus²."""
-    from smfg_datawarehouse_spark.functions import shingle_table
-
     d = t(spark, sf_dir, "documents")
     sh = shingle_table(
         d, "text", "doc_id", k=3, mode="word", checkpoint=True

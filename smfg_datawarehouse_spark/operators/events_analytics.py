@@ -16,7 +16,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.queries import _davg_sql, _dsum_sql, davg, dsum, register, t
+from smfg_datawarehouse_spark.queries import (
+    _davg_sql,
+    _dsum_sql,
+    davg,
+    dsum,
+    exact,
+    micro,
+    register,
+    t,
+)
 from smfg_datawarehouse_spark.streaming.windows import (
     session_agg,
     sliding_agg,
@@ -143,7 +152,7 @@ def q24_window_lag_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         (micros - F.lag(micros).over(w)).alias("micros_since_prev"),
-        F.sum(F.col("value").cast("decimal(30,6)"))
+        F.sum(exact("value"))
         .over(w.rowsBetween(W.unboundedPreceding, 0))
         .cast("double")
         .alias("running_value"),
@@ -419,7 +428,7 @@ def q42_rolling_hour_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("ts").cast("long").alias("ts_sec"),
         "value",
-        F.sum(F.col("value").cast("decimal(30,6)"))
+        F.sum(exact("value"))
         .over(w)
         .cast("double")
         .alias("rolling_1h_value"),
@@ -544,7 +553,7 @@ def q73_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(unix_micros(nxt) - unix_micros(ts)) DIV 1000000").alias(
                 "dt_sec"
             ),
-            F.floor(F.col("value") * 1e6 + 0.5).cast("long").alias("v_micro"),
+            micro("value").alias("v_micro"),
         )
         .where(F.col("dt_sec") > 0)
     )
@@ -1104,7 +1113,7 @@ def q83_grain_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
     ).agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum(F.col("value").cast("decimal(30,6)")).alias("dec_value"),
+        F.sum(exact("value")).alias("dec_value"),
     )
     return (
         hourly.groupBy(
@@ -1219,7 +1228,7 @@ def q85_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.groupBy("user_id").agg(
         F.max("ts").alias("last_seen"),
         F.count(F.lit(1)).cast("long").alias("frequency"),
-        F.sum(F.floor(F.col("value") * 1000000.0 + 0.5).cast("long"))
+        F.sum(micro("value"))
         .cast("long")
         .alias("monetary_micros"),
     )
@@ -1635,7 +1644,7 @@ def q94_rolling_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "ts",
             F.expr("(unix_micros(ts) - m) DIV 1000000").cast("long").alias("x"),
-            F.floor(F.col("value") * 1000000.0 + 0.5).cast("long").alias("y"),
+            micro("value").alias("y"),
         )
         .withColumn("b", F.expr("x DIV 86400").cast("long"))
     )
@@ -1868,7 +1877,7 @@ def x117_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.hour("ts").cast("long").alias("hour")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(30,6)")).alias("s_dec"),
+        F.sum(exact("value")).alias("s_dec"),
     )
     wt = W.partitionBy("event_type")
     tot = h.select(

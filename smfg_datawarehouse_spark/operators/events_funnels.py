@@ -21,6 +21,7 @@ from smfg_datawarehouse_spark.queries import (
     davg,
     dsum,
     load_events,
+    micro,
     register,
     t,
 )
@@ -584,7 +585,7 @@ def q106_decile_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_events(spark, sf_dir)
     base = e.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 1000000.0 + 0.5).cast("long"))
+        F.sum(micro("value"))
         .cast("long")
         .alias("monetary_micros"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))

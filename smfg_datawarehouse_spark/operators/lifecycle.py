@@ -21,7 +21,10 @@ from smfg_datawarehouse_spark.queries import (
     _scratch_dir,
     davg,
     dsum,
+    exact,
     load_events,
+    md5_int,
+    micro,
     register,
     t,
 )
@@ -194,8 +197,8 @@ def q81_bloom_join_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     key = F.col("key")
-    h1 = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5(key), 9, 8), 16, 10).cast("long")
+    h1 = md5_int(key)
+    h2 = md5_int(key, 9)
     bit_exprs = [((h1 + F.lit(j) * h2) % _Q81_M).alias(f"b{j}") for j in range(_Q81_K)]
     bits = (
         urgent.select(F.explode(F.array(*[(h1 + F.lit(j) * h2) % _Q81_M for j in range(_Q81_K)])).alias("bit"))
@@ -1271,7 +1274,7 @@ def l32_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = old_probe.drop("pweek").unionByName(new_probe.drop("pday"))
     return both.groupBy(F.to_date("ts").alias("probe_day")).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.floor(F.col("value") * 1000000.0 + 0.5).cast("long"))
+        F.sum(micro("value"))
         .cast("long")
         .alias("total_micros"),
     )
@@ -1354,7 +1357,7 @@ def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.floor(F.col("value") * 1000000.0 + 0.5).cast("long"))
+            F.sum(micro("value"))
             .cast("long")
             .alias("total_micros"),
         )
@@ -1499,9 +1502,7 @@ def l36_mv_tail_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", F.col("o_orderdate")).alias("month")
         ).agg(
             F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)")).alias(
-                "rev_partial"
-            ),
+            F.sum(exact("o_totalprice")).alias("rev_partial"),
         )
 
     # refresh: materialize history below the cutover, with the decimal
@@ -2010,9 +2011,7 @@ def l40_curation_run_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("total_tokens"),
         (
-            F.sum(
-                F.floor(F.col("quality_score") * 1e6 + 0.5).cast("long")
-            ).cast("double")
+            F.sum(micro("quality_score")).cast("double")
             / 1e6
             / F.count(F.lit(1))
         ).alias("avg_quality"),

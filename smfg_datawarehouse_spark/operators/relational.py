@@ -20,6 +20,7 @@ from smfg_datawarehouse_spark.queries import (
     _scratch_dir,
     davg,
     dsum,
+    exact,
     load_events,
     register,
     t,
@@ -714,7 +715,7 @@ def q44_salted_event_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["event_type"],
         salt_from=F.col("event_id"),
         partial_aggs=[
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("_s"),
+            F.sum(exact("value")).alias("_s"),
             F.count(F.lit(1)).alias("_c"),
         ],
         final_aggs=[
@@ -867,9 +868,7 @@ def q107_ratio_to_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(30,6)"
-                )
+                exact(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("rev_dec")
         )
     )

@@ -57,8 +57,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions.vectors import dot_product, l2_norm
-from smfg_datawarehouse_spark.queries import register, t
+from smfg_datawarehouse_spark.functions.vectors import (
+    dot_product,
+    l2_norm,
+    max_abs,
+    squared_l2,
+)
+from smfg_datawarehouse_spark.queries import MICRO, micro, micro_np, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
 # ---------------------------------------------------------------------------
@@ -751,12 +756,14 @@ def x08_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("long").alias("label"),
         F.posexplode("embedding").alias("dim", "val"),
     )
-    micro = F.floor(F.col("val").cast("double") * 1000000.0 + 0.5).cast("long")
     return (
         ex.groupBy("label", F.col("dim").cast("long").alias("dim"))
         .agg(
-            (F.sum(micro).cast("double") / 1000000.0 / F.count(F.lit(1)))
-            .alias("centroid_val"),
+            (
+                F.sum(micro(F.col("val").cast("double"))).cast("double")
+                / 1000000.0
+                / F.count(F.lit(1))
+            ).alias("centroid_val"),
             F.count(F.lit(1)).alias("n_vectors"),
         )
     )
@@ -806,17 +813,13 @@ def x13_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
-    max_abs = F.aggregate(
-        F.transform(F.col("v"), lambda x: F.abs(x)),
-        F.lit(0.0),
-        lambda a, b: F.greatest(a, b),
-    )
+    amax = max_abs(F.col("v"))
     scaled = xd.select(
         "vec_id",
         F.size("v").cast("long").alias("dim"),
         "v",
-        max_abs.alias("max_abs"),
-        (max_abs / 127.0).alias("scale"),
+        amax.alias("max_abs"),
+        (amax / 127.0).alias("scale"),
     )
     scale = F.col("scale")
 
@@ -876,9 +879,7 @@ def x42_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.col("embedding")).alias("dim", "val")
     ).select(
         F.col("dim").cast("long").alias("dim"),
-        F.floor(F.col("val").cast("double") * 1e6 + 0.5)
-        .cast("long")
-        .alias("uv"),
+        micro(F.col("val").cast("double")).alias("uv"),
     )
     s = F.sum("uv").cast("double")
     ssq = F.sum(F.col("uv") * F.col("uv")).cast("double")
@@ -936,9 +937,7 @@ def x43_centroid_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "label",
         "dim",
-        F.floor(F.col("val").cast("double") * 1e6 + 0.5)
-        .cast("long")
-        .alias("uv"),
+        micro(F.col("val").cast("double")).alias("uv"),
     )
     cen = ex.groupBy("label", "dim").agg(
         (F.sum("uv").cast("double") / 1e6 / F.count(F.lit(1))).alias("c")
@@ -1103,9 +1102,7 @@ def _quant(x: float) -> float:
     """Snap to the 1e-6 grid: floor(x·1e6 + 0.5)/1e6 — the same half-up
     micro-unit convention the SQL oracle and x08 centroids use, so driver-
     side Python arithmetic and engine-side folds stay bit-identical."""
-    import math
-
-    return math.floor(x * 1000000.0 + 0.5) / 1000000.0
+    return float(micro_np(x)) / MICRO
 
 
 def _km_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
@@ -1129,11 +1126,7 @@ def _km_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFra
     scored = F.transform(
         carr,
         lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("v"), c["cv"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
+            squared_l2(F.col("v"), c["cv"]).alias("dist"),
             c["cid"].alias("cid"),
         ),
     )
@@ -1225,10 +1218,10 @@ def _km_partials_np(
             pick = np.argmin(np.where(np.isnan(D), np.inf, D), axis=1)
             clusters = cids[pick]
             if mode == "update":
-                micro = np.floor(V * 1000000.0 + 0.5).astype(np.int64)
+                micros = micro_np(V)
                 out = {"cluster": [], "dim": [], "ms": [], "n": []}
                 for cid in np.unique(clusters):
-                    rows = micro[clusters == cid]
+                    rows = micros[clusters == cid]
                     ms = rows.sum(axis=0)
                     for d in range(V.shape[1]):
                         out["cluster"].append(int(cid))
@@ -1238,7 +1231,7 @@ def _km_partials_np(
                 yield pd.DataFrame(out)
             else:
                 dist = D[np.arange(len(V)), pick]
-                md = np.floor(dist * 1000000.0 + 0.5).astype(np.int64)
+                md = micro_np(dist)
                 out = {"cluster": [], "n": [], "msd": [], "mx": []}
                 for cid in np.unique(clusters):
                     mask = clusters == cid
@@ -1944,28 +1937,20 @@ def x142_centroid_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("int").alias("label"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    micro = (
+    sums = (
         e.select("label", F.posexplode("v").alias("dim", "val"))
         .groupBy("label", "dim")
         .agg(
-            F.sum(
-                F.floor(F.col("val") * 1000000.0 + 0.5).cast("long")
-            ).alias("ms"),
+            F.sum(micro("val")).alias("ms"),
             F.count(F.lit(1)).alias("n"),
         )
     )
     cent = (
-        micro.select(
+        sums.select(
             "label",
             "dim",
             (
-                F.floor(
-                    F.col("ms").cast("double")
-                    / 1000000.0
-                    / F.col("n").cast("double")
-                    * 1000000.0
-                    + 0.5
-                )
+                micro(F.col("ms").cast("double") / 1000000.0 / F.col("n").cast("double"))
                 / 1000000.0
             ).alias("m"),
         )
@@ -1992,18 +1977,12 @@ def x142_centroid_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _d2(cand: F.Column) -> F.Column:
-        return F.aggregate(
-            F.zip_with(F.col("v"), cand["c"], lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-
     best = F.array_min(
         F.transform(
             F.col("cents"),
             lambda cand: F.struct(
-                _d2(cand).alias("d2"), cand["cand_label"].alias("cand_label")
+                squared_l2(F.col("v"), cand["c"]).alias("d2"),
+                cand["cand_label"].alias("cand_label"),
             ),
         )
     )
@@ -2095,12 +2074,7 @@ def x144_maxmin_diversity_sample(
     seed = e.orderBy("vec_id").limit(1).first()
 
     def d2_to(vec: list[float]):
-        lit = F.array(*[F.lit(float(x)) for x in vec])
-        return F.aggregate(
-            F.zip_with("v", lit, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
+        return squared_l2(F.col("v"), F.array(*[F.lit(float(x)) for x in vec]))
 
     selected = [(1, int(seed.vec_id), None)]
     cur = (

@@ -33,7 +33,10 @@ from smfg_datawarehouse_spark.queries import (
     _scratch_dir,
     davg,
     dsum,
+    exact,
     load_events,
+    md5_int,
+    micro,
     register,
     t,
 )
@@ -1177,10 +1180,7 @@ def s19_streaming_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _os.path.join(src, "raw")
     load_events(spark, sf_dir).repartition(3).write.mode("overwrite").parquet(raw)
 
-    hv = F.expr(
-        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) "
-        "AS BIGINT) % 4294967296"
-    )
+    hv = md5_int(F.col("user_id").cast("string")) % 4294967296
     stream = events_stream(spark, raw, max_files_per_trigger=1)
     regs_stream = (
         stream.select("event_type", hv.alias("hv"))
@@ -1278,7 +1278,7 @@ def s20_streaming_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFra
         )
     return table.read().groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.floor(F.col("value") * 1000000.0 + 0.5).cast("long"))
+        F.sum(micro("value"))
         .cast("long")
         .alias("total_micros"),
     )
@@ -1724,9 +1724,7 @@ def s25_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("month", F.col("o_orderdate")).alias("month")
         ).agg(
             F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)")).alias(
-                "rev_partial"
-            ),
+            F.sum(exact("o_totalprice")).alias("rev_partial"),
         )
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
@@ -1735,9 +1733,7 @@ def s25_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             delta = vt.read().unionByName(delta)
         combined = delta.groupBy("month").agg(
             F.sum("n_orders").cast("long").alias("n_orders"),
-            F.sum("rev_partial")
-            .cast("decimal(30,6)")
-            .alias("rev_partial"),
+            exact(F.sum("rev_partial")).alias("rev_partial"),
         )
         vt.write(combined)
 

@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.functions import ordered_concat_ws, word_tokens
-from smfg_datawarehouse_spark.queries import davg, register, t
+from smfg_datawarehouse_spark.queries import davg, md5_int, micro, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
 _STOPWORDS_EN = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -63,9 +63,7 @@ def winnowing_fingerprints(
     # CASE-guarded: sequence(1, ng) would generate a DESCENDING range for
     # ng < 1; the null branch explodes to zero rows for short docs
     positions = F.when(F.length(txt) >= k, F.sequence(F.lit(1), F.length(txt) - (k - 1)))
-    h32 = F.conv(
-        F.substring(F.md5(F.col("_txt").substr(F.col("pos"), F.lit(k))), 1, 8), 16, 10
-    ).cast("bigint")
+    h32 = md5_int(F.col("_txt").substr(F.col("pos"), F.lit(k)))
     g = (
         ensure_min_parallelism(docs)
         .select(
@@ -528,9 +526,7 @@ def x40_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # and DuckDB resolve differently; floor(x*1e6 + 0.5) is one
             # identical IEEE chain in both engines
             (
-                F.sum(
-                    F.floor(F.col("quality_score") * 1e6 + 0.5).cast("long")
-                ).cast("double")
+                F.sum(micro("quality_score")).cast("double")
                 / 1e6
                 / F.count(F.lit(1))
             ).alias("avg_quality"),

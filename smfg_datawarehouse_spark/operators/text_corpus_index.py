@@ -617,7 +617,7 @@ def x102_length_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ns").cast("long").alias("n_docs"),
         (F.max("nb") - 1).cast("long").alias("dof"),
         (
-            F.sum(term.cast("decimal(30,6)")).cast("double")
+            dsum(term)
             - F.max("ns").cast("double")
         ).alias("chi2"),
     )

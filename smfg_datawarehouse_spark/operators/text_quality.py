@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.queries import davg, dsum, register, t
+from smfg_datawarehouse_spark.queries import davg, dsum, micro, register, t
 from smfg_datawarehouse_spark.operators.text_analysis import (
     _STOPWORDS_EN,
     doc_mean_token_prob,
@@ -99,6 +99,44 @@ def x58_eval_gram_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _gopher_gates(docs: DataFrame, *keep) -> DataFrame:
+    """The Gopher rule gates (Rae et al. 2021, §A1.1) per non-empty
+    document: ``keep`` columns, the features (``n_words``,
+    ``mean_word_len``, ``frac_alpha_words``, ``n_stopword_hits``), one flag
+    per gate and their conjunction ``passes_gopher``. Every double is one
+    division of exact integers, so each verdict is engine-exact."""
+    base = docs.select(*keep, word_tokens(F.col("text")).alias("t")).where(
+        F.size("t") >= 1
+    )
+    n_words = F.size("t").cast("long")
+    sum_len = F.aggregate(
+        F.transform(F.col("t"), lambda w: F.length(w)), F.lit(0), lambda a, b: a + b
+    )
+    mean_wl = sum_len.cast("double") / F.size("t")
+    alpha = F.size(F.filter(F.col("t"), lambda w: w.rlike("^[a-z]+$")))
+    frac_alpha = alpha.cast("double") / F.size("t")
+    stops = F.size(F.filter(F.col("t"), lambda w: w.isin(_STOPWORDS_EN))).cast("long")
+    feats = base.select(
+        *keep,
+        n_words.alias("n_words"),
+        mean_wl.alias("mean_word_len"),
+        frac_alpha.alias("frac_alpha_words"),
+        stops.alias("n_stopword_hits"),
+    )
+    f_wc = (F.col("n_words") >= 50) & (F.col("n_words") <= 100000)
+    f_mwl = (F.col("mean_word_len") >= 3.0) & (F.col("mean_word_len") <= 10.0)
+    f_alpha = F.col("frac_alpha_words") >= 0.8
+    f_stop = F.col("n_stopword_hits") >= 2
+    return feats.select(
+        *keep, "n_words", "mean_word_len", "frac_alpha_words", "n_stopword_hits",
+        f_wc.alias("flag_word_count"),
+        f_mwl.alias("flag_mean_word_len"),
+        f_alpha.alias("flag_alpha"),
+        f_stop.alias("flag_stopwords"),
+        (f_wc & f_mwl & f_alpha & f_stop).alias("passes_gopher"),
+    )
+
+
 @register(
     "x60_gopher_quality_gates",
     r"""
@@ -144,36 +182,7 @@ def x60_gopher_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scan-side Catalyst expressions only — zero shuffles, runs at parquet
     read speed at any corpus size; every double is a single division of
     exact integers so the verdict booleans are engine-exact."""
-    d = t(spark, sf_dir, "documents")
-    tk = word_tokens(F.col("text"))
-    base = d.select("doc_id", tk.alias("t")).where(F.size("t") >= 1)
-    n_words = F.size("t").cast("long")
-    sum_len = F.aggregate(
-        F.transform(F.col("t"), lambda w: F.length(w)), F.lit(0), lambda a, b: a + b
-    )
-    mean_wl = sum_len.cast("double") / F.size("t")
-    alpha = F.size(F.filter(F.col("t"), lambda w: w.rlike("^[a-z]+$")))
-    frac_alpha = alpha.cast("double") / F.size("t")
-    stops = F.size(F.filter(F.col("t"), lambda w: w.isin(_STOPWORDS_EN))).cast("long")
-    feats = base.select(
-        "doc_id",
-        n_words.alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        frac_alpha.alias("frac_alpha_words"),
-        stops.alias("n_stopword_hits"),
-    )
-    f_wc = (F.col("n_words") >= 50) & (F.col("n_words") <= 100000)
-    f_mwl = (F.col("mean_word_len") >= 3.0) & (F.col("mean_word_len") <= 10.0)
-    f_alpha = F.col("frac_alpha_words") >= 0.8
-    f_stop = F.col("n_stopword_hits") >= 2
-    return feats.select(
-        "doc_id", "n_words", "mean_word_len", "frac_alpha_words", "n_stopword_hits",
-        f_wc.alias("flag_word_count"),
-        f_mwl.alias("flag_mean_word_len"),
-        f_alpha.alias("flag_alpha"),
-        f_stop.alias("flag_stopwords"),
-        (f_wc & f_mwl & f_alpha & f_stop).alias("passes_gopher"),
-    )
+    return _gopher_gates(t(spark, sf_dir, "documents"), "doc_id")
 
 
 @register(
@@ -234,46 +243,37 @@ def x65_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan with one source-keyed shuffle of aggregated rows. Complements
     x55 (dedup impact) — together they are the admission report.
 
-    All scoring expressions are shared verbatim with x21/x60 (composite
-    quality, rule gates); means follow the davg exact-decimal convention
-    so every double is engine-exact."""
+    The composite quality is x21's; the rule gates are x60's
+    (:func:`_gopher_gates`, which also drops empty/whitespace-only docs:
+    their ratio denominators are undefined and they carry no admission
+    signal). Every double is engine-exact."""
     d = t(spark, sf_dir, "documents")
     text = F.col("text")
-    tk = word_tokens(text)
     n_chars = F.length(text)
     alpha_ratio = (
         F.length(F.regexp_replace(F.lower(text), "[^a-z]", "")).cast("double")
         / n_chars
     )
     len_norm = F.least(n_chars, F.lit(500)).cast("double") / F.lit(500.0)
-    # empty/whitespace-only docs are excluded (same guard as x60): their
-    # ratio denominators are undefined and they carry no admission signal
-    base = d.select(
-        "source", "lang", tk.alias("t"),
-        alpha_ratio.alias("alpha_ratio"), len_norm.alias("len_norm"),
-    ).where(F.size("t") >= 1)
-    n_tokens = F.size("t")
-    stop_hits = F.size(F.filter(F.col("t"), lambda w: w.isin(_STOPWORDS_EN)))
+    gates = _gopher_gates(
+        d.select(
+            "source", "lang", "text",
+            alpha_ratio.alias("alpha_ratio"), len_norm.alias("len_norm"),
+        ),
+        "source", "lang", "alpha_ratio", "len_norm",
+    )
+    n_tokens = F.col("n_words")
     q = (
         F.lit(0.4) * F.col("alpha_ratio")
         + F.lit(0.3)
-        * F.when(n_tokens > 0, stop_hits.cast("double") / n_tokens).otherwise(0.0)
+        * F.when(
+            n_tokens > 0, F.col("n_stopword_hits").cast("double") / n_tokens
+        ).otherwise(0.0)
         + F.lit(0.3) * F.col("len_norm")
     )
-    sum_word_len = F.aggregate(
-        F.transform(F.col("t"), lambda w: F.length(w)), F.lit(0), lambda a, b: a + b
-    )
-    alpha_words = F.size(F.filter(F.col("t"), lambda w: w.rlike("^[a-z]+$")))
-    gopher = (
-        (n_tokens >= 50) & (n_tokens <= 100000)
-        & (sum_word_len.cast("double") / n_tokens >= 3.0)
-        & (sum_word_len.cast("double") / n_tokens <= 10.0)
-        & (alpha_words.cast("double") / n_tokens >= 0.8)
-        & (stop_hits >= 2)
-    )
-    scored = base.select(
+    scored = gates.select(
         "source", "lang", n_tokens.alias("n_tokens"), q.alias("q"),
-        gopher.alias("gopher_pass"),
+        F.col("passes_gopher").alias("gopher_pass"),
     )
     return scored.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -291,7 +291,7 @@ def x65_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # floor(q*1e6+0.5) is pure IEEE arithmetic — identical everywhere
         # (same reasoning as x08's centroid accumulation)
         (
-            F.sum(F.floor(F.col("q") * 1000000.0 + 0.5).cast("long")).cast("double")
+            F.sum(micro("q")).cast("double")
             / 1000000.0
             / F.count(F.lit(1))
         ).alias("mean_quality"),
@@ -1486,26 +1486,14 @@ def x124_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus" — the report that decides threshold changes before a 100 TB
     re-filter. One corpus scan (same gate expressions as x60), aggregated
     map-side into four rows; integer-exact throughout."""
-    d = t(spark, sf_dir, "documents")
-    tk = word_tokens(F.col("text"))
-    base = d.select("doc_id", tk.alias("t")).where(F.size("t") >= 1)
-    n_words = F.size("t").cast("long")
-    sum_len = F.aggregate(
-        F.transform(F.col("t"), lambda w: F.length(w)), F.lit(0), lambda a, b: a + b
-    )
-    mean_wl = sum_len.cast("double") / F.size("t")
-    frac_alpha = (
-        F.size(F.filter(F.col("t"), lambda w: w.rlike("^[a-z]+$"))).cast("double")
-        / F.size("t")
-    )
-    stops = F.size(F.filter(F.col("t"), lambda w: w.isin(_STOPWORDS_EN))).cast("long")
-    flags = base.select(
-        (~((n_words >= 50) & (n_words <= 100000))).alias("k1"),
-        (~((mean_wl >= 3.0) & (mean_wl <= 10.0))).alias("k2"),
-        (~(frac_alpha >= 0.8)).alias("k3"),
-        (~(stops >= 2)).alias("k4"),
-    )
+    gates = _gopher_gates(t(spark, sf_dir, "documents"))
     ks = ["k1", "k2", "k3", "k4"]
+    flags = gates.select(
+        *[
+            (~F.col(f"flag_{gate}")).alias(k)
+            for k, gate in zip(ks, _X124_GATES, strict=True)
+        ]
+    )
 
     def one(x):
         return F.sum(F.when(x, 1).otherwise(0)).cast("long")

@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.functions import word_tokens
-from smfg_datawarehouse_spark.queries import register, t
+from smfg_datawarehouse_spark.queries import exact, md5_int, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 DSIR_BUCKETS = 1024
@@ -88,7 +88,7 @@ def x62_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "pos",
             (
-                F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
+                md5_int("tok")
                 % DSIR_BUCKETS
             ).alias("bucket"),
         )
@@ -246,11 +246,7 @@ def x67_mixture_sampling_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")))
         % 1000000
     )
     # n_docs/rate_milli ride along the broadcast and come back out via
@@ -308,13 +304,7 @@ def x72_shard_layout_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny-aggregate pattern as x67), so the corpus is scanned once."""
     d = t(spark, sf_dir, "documents")
     shard = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
         % _X72_S
     )
     tk = d.select(
@@ -526,9 +516,7 @@ def x84_weighted_bernoulli_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     u = d.select(
         "source",
         (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-            ).cast("long")
+            md5_int(F.col("doc_id").cast("string"))
             / F.lit(4294967296.0)
         ).alias("u"),
     )
@@ -629,21 +617,11 @@ def x101_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w", F.least(F.lit(1.0), F.sqrt(r) + r).alias("p")
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("pos").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(
+            F.concat(
+                F.col("doc_id").cast("string"), F.lit(":"), F.col("pos").cast("string")
+            )
+        )
         / F.lit(4294967296.0)
     )
     surv = tok.join(F.broadcast(keep), "w").where(u < F.col("p"))
@@ -722,7 +700,7 @@ def x109_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     cd = F.col("c").cast("double")
     p = freq.withColumn("u", F.sqrt(F.sqrt(cd * F.col("c") * F.col("c"))))
-    z = F.sum(F.col("u").cast("decimal(30,6)")).over(W.partitionBy()).cast("double")
+    z = F.sum(exact("u")).over(W.partitionBy()).cast("double")
     return (
         p.withColumn("z", z)
         .select(
@@ -780,11 +758,7 @@ def x114_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire — the mechanism is embarrassingly scan-local at 100 TB."""
     d = t(spark, sf_dir, "documents")
     b = F.when(F.col("lang") == "en", 1).otherwise(0)
-    u32 = F.conv(
-        F.substring(F.md5(F.concat(F.lit("rr:"), F.col("doc_id").cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
+    u32 = md5_int(F.concat(F.lit("rr:"), F.col("doc_id").cast("string")))
     flip = F.when(u32 % 4 == 0, 1).otherwise(0)
     r = d.select(
         "source",
@@ -884,22 +858,16 @@ def x132_feistel_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 65536).alias("r"),
     )
     for i in range(_FEISTEL_ROUNDS):
-        f_i = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("feistel:"),
-                        F.col("epoch").cast("string"),
-                        F.lit(f":{i}:"),
-                        F.col("r").cast("string"),
-                    )
-                ),
-                1,
-                4,
+        f_i = md5_int(
+            F.concat(
+                F.lit("feistel:"),
+                F.col("epoch").cast("string"),
+                F.lit(f":{i}:"),
+                F.col("r").cast("string"),
             ),
-            16,
-            10,
-        ).cast("long")
+            1,
+            4,
+        )
         out = out.select(
             "doc_id",
             "epoch",

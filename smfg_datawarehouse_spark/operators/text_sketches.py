@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.functions import word_tokens
-from smfg_datawarehouse_spark.queries import register, t
+from smfg_datawarehouse_spark.queries import hex_int, md5_int, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 # ---------------------------------------------------------------------------
@@ -32,9 +32,7 @@ def _cms_buckets(tok: Column, d_rows: int = CMS_D, width: int = CMS_W) -> Column
     engine (same family as the MinHash signatures in dedup.py)."""
     return F.array(
         *[
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"cms{d}:"), tok)), 1, 8), 16, 10
-            ).cast("bigint")
+            md5_int(F.concat(F.lit(f"cms{d}:"), tok))
             % width
             for d in range(d_rows)
         ]
@@ -365,8 +363,8 @@ def _bloom_bits(tok: Column, k: int = BLOOM_K, m: int = BLOOM_M) -> Column:
     matters: rows may collide on a bit, and membership means *every
     distinct position* is set."""
     h = F.md5(tok)
-    a = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
-    b = F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint")
+    a = hex_int(h)
+    b = hex_int(h, 9)
     return F.array_distinct(F.array(*[(a + F.lit(j) * b) % m for j in range(k)]))
 
 
@@ -403,7 +401,7 @@ def bloom_contamination(
     # (filter build, probe, exact membership, totals) — without the cache
     # each replays the corpus explode+distinct. Repartition BEFORE the
     # explode: a compact source (one scan split) would otherwise shingle
-    # the whole corpus in one task (same pitfall shingle_sets documents).
+    # the whole corpus in one task (same pitfall shingle_table documents).
     # Bigrams come from arrays_zip over two slices — one vectorized pass
     # per doc — instead of a per-position transform() lambda: higher-order
     # functions run INTERPRETED in Spark, and at millions of bigrams the
@@ -566,24 +564,18 @@ def x108_shard_content_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop, or duplication between publisher and consumer flips the
     checksum; the oracle recomputes it independently."""
     d = t(spark, sf_dir, "documents")
-    row_hash = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("doc_id").cast("string"),
-                    F.col("text"),
-                    F.col("lang"),
-                    F.col("source"),
-                    F.col("n_chars").cast("string"),
-                )
-            ),
-            1,
-            15,
+    row_hash = md5_int(
+        F.concat_ws(
+            "|",
+            F.col("doc_id").cast("string"),
+            F.col("text"),
+            F.col("lang"),
+            F.col("source"),
+            F.col("n_chars").cast("string"),
         ),
-        16,
-        10,
-    ).cast("long")
+        1,
+        15,
+    )
     return d.groupBy((F.col("doc_id") % 16).alias("shard")).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum(F.length("text")).cast("long").alias("content_chars"),
@@ -638,8 +630,8 @@ def x118_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay bit-exact."""
     e = t(spark, sf_dir, "events")
     key = F.col("user_id").cast("string")
-    ha = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-    hb = F.conv(F.substring(F.md5(key), 9, 8), 16, 10).cast("long")
+    ha = md5_int(key)
+    hb = md5_int(key, 9)
     pos = e.select(
         F.explode(F.array(*[F.lit(i) for i in range(CMS_D)])).alias("i"),
         ha.alias("ha"),
@@ -687,53 +679,16 @@ _X123_BANDS = 4
 def _bbit_pairs(docs: DataFrame) -> DataFrame:
     from smfg_datawarehouse_spark.operators.dedup import (
         _NUM_HASHES,
+        _sig_agreement,
+        lsh_band_rows,
         minhash_signatures,
     )
 
-    rows_per_band = _NUM_HASHES // _X123_BANDS
     sig = minhash_signatures(docs, "text", "doc_id", k=3, num_hashes=_NUM_HASHES)
-    stacked = (
-        sig.select(
-            "doc_id",
-            F.array(*[F.col(f"mh{i}") for i in range(_NUM_HASHES)]).alias("sig"),
-        )
-        .select(
-            "doc_id",
-            "sig",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("bi"),
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at(
-                                        "sig", b * rows_per_band + r + 1
-                                    ).cast("string")
-                                    for r in range(rows_per_band)
-                                ],
-                            ).alias("bh"),
-                        )
-                        for b in range(_X123_BANDS)
-                    ]
-                )
-            ).alias("band"),
-        )
-        .select("doc_id", "sig", F.col("band.bi").alias("bi"), F.col("band.bh").alias("bh"))
-        .cache()
-    )
+    stacked = lsh_band_rows(sig, _NUM_HASHES, _X123_BANDS).cache()
     a, b = stacked.alias("a"), stacked.alias("b")
-
-    def fold_matches(cmp):
-        return F.aggregate(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), cmp),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-
-    full = fold_matches(lambda x, y: F.when(x == y, 1).otherwise(0))
-    bits = fold_matches(lambda x, y: F.when(x % 2 == y % 2, 1).otherwise(0))
+    full = _sig_agreement("a.sig", "b.sig")
+    bits = _sig_agreement("a.sig", "b.sig", lambda x, y: x % 2 == y % 2)
     est_full = (full / F.lit(float(_NUM_HASHES))).cast("double")
     est_1bit = F.greatest(
         F.lit(0.0),
@@ -1030,12 +985,12 @@ def _register_x126() -> None:
             _BANDS,
             _NUM_HASHES,
             minhash_candidates,
-            shingle_sets,
             simhash_signatures,
         )
+        from smfg_datawarehouse_spark.functions import shingle_table
 
         d = t(spark, sf_dir, "documents")
-        sh = shingle_sets(d, "text", "doc_id", k=3, mode="word").cache()
+        sh = shingle_table(d, "text", "doc_id", k=3, mode="word").cache()
         cand = minhash_candidates(
             d, "text", "doc_id",
             k=3, num_hashes=_NUM_HASHES, bands=_BANDS,

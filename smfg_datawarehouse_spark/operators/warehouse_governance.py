@@ -20,7 +20,10 @@ from smfg_datawarehouse_spark.queries import (
     _scratch_dir,
     davg,
     dsum,
+    exact,
     load_events,
+    md5_int,
+    micro,
     register,
     t,
 )
@@ -464,13 +467,11 @@ def q91_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Σx² − Σx·mean)/(n−1) form on exact integer sums — no catastrophic
     cancellation because the sums are exact before the subtraction."""
     e = load_events(spark, sf_dir)
-    u = F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    u = md5_int(F.col("user_id").cast("string"))
     assigned = e.select(
         "event_type",
         F.when(u % 2 == 0, "A").otherwise("B").alias("variant"),
-        F.floor(F.col("value") * 1000000.0 + 0.5).cast("long").alias("v_us"),
+        micro("value").alias("v_us"),
     )
     dec = "decimal(38,0)"
     is_a, is_b = F.col("variant") == "A", F.col("variant") == "B"
@@ -1171,9 +1172,7 @@ def q103_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(
             F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(30,6)"
-                )
+                exact(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("rev_dec")
         )
     )
@@ -1367,8 +1366,8 @@ def l29_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_sorted_with_zonemap(o, path, "o_orderdate", n_files=8)
 
     rd = spark.read.parquet(path)
-    ha = F.conv(F.substring(F.md5(F.col("key")), 1, 8), 16, 10).cast("long")
-    hb = F.conv(F.substring(F.md5(F.col("key")), 9, 8), 16, 10).cast("long")
+    ha = md5_int(F.col("key"))
+    hb = md5_int(F.col("key"), 9)
     words = (
         rd.select(
             F.input_file_name().alias("file"),
@@ -1637,7 +1636,7 @@ def q105_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("ts").alias("p_ts"),
         F.col("event_id").alias("p_id"),
-        F.floor(F.col("value") * 1000000.0 + 0.5).cast("long").alias("v_us"),
+        micro("value").alias("v_us"),
     )
     tch = e.where(F.col("event_type").isin("view", "click")).select(
         "user_id",
@@ -1756,7 +1755,7 @@ def l33_manifest_tree_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.floor(F.col("value") * 1000000.0 + 0.5).cast("long"))
+            F.sum(micro("value"))
             .cast("long")
             .alias("total_micros"),
         )

@@ -20,6 +20,7 @@ from smfg_datawarehouse_spark.queries import (
     _scratch_dir,
     davg,
     dsum,
+    exact,
     load_events,
     register,
     t,
@@ -189,7 +190,7 @@ def q50_primary_supplier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = (
         li.repartition(F.col("l_partkey"))
         .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(30,6)")).alias("qty"))
+        .agg(F.sum(exact("l_quantity")).alias("qty"))
     )
     wr = W.partitionBy("l_partkey").orderBy(F.col("qty").desc(), F.col("l_suppkey"))
     wt = W.partitionBy("l_partkey")
@@ -1137,11 +1138,7 @@ def q112_abc_classification(
     the result — tests/test_plans pins width-invariance."""
     li = t(spark, sf_dir, "lineitem")
     pr = li.groupBy("l_partkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(30,6)"
-            )
-        ).alias("rev")
+        F.sum(exact(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("rev")
     )
     # band monotone non-decreasing in (rev DESC): floor(-rev / width).
     # the double cast only buckets — order inside a band is exact decimal
@@ -1170,7 +1167,7 @@ def q112_abc_classification(
             "l_partkey",
             "rev",
             (
-                F.coalesce(F.col("_off"), F.lit(0).cast("decimal(30,6)"))
+                F.coalesce(F.col("_off"), exact(F.lit(0)))
                 + F.col("_run")
             ).alias("cum"),
             "_total",

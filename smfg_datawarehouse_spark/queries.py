@@ -11,6 +11,21 @@ Determinism conventions (so Spark and the DuckDB oracle hash-match):
   ``DECIMAL(30,6)`` (deterministic round-to-nearest), the sum is exact
   decimal (associative — partition order can't change it), and the final
   value is cast back to double. AVG = exact-decimal-sum / count.
+  ``exact`` is that cast; ``dsum``/``davg`` and every partial, windowed or
+  cumulative exact sum are built from it.
+- **Micro-units**: ``micro`` rounds a double half-up onto the 1e-6 grid as
+  an integer, ``floor(x·1e6 + 0.5)`` — one IEEE multiply-add-floor chain
+  that every engine evaluates identically; sums of micro-units are exact
+  BIGINT arithmetic. A site uses micro-units instead of ``davg`` when its
+  input is a *computed* double (a ratio, a score, a distance): such a
+  value can land exactly on a ``DECIMAL`` rounding tie, which Spark
+  resolves half-up and DuckDB half-even. ``micro_np`` is the numpy twin
+  for the Arrow kernels that replay the same grid.
+- **Hash words**: ``md5_int`` is the oracle's
+  ``('0x' || substring(md5(x), start, length))::BIGINT`` — a window of the
+  md5 hex digest read as an integer (4, 8 or 15 hex digits all fit a
+  BIGINT). ``hex_int`` reads a window of a digest already computed, so a
+  site that takes two words from one hash hashes once.
 - **Counts/ints**: cast to BIGINT on both sides.
 - **Top-k / windows**: always a unique tie-break key in the ORDER BY.
 - **Ratios of exact ints**: plain double division (single op, no
@@ -26,6 +41,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -441,14 +457,49 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def dsum(col: F.Column) -> F.Column:
+def exact(col: F.Column | str) -> F.Column:
+    """``col`` as ``DECIMAL(30,6)``: the exact form every deterministic
+    float sum accumulates in (oracle: ``CAST(x AS DECIMAL(30,6))``)."""
+    return (F.col(col) if isinstance(col, str) else col).cast("decimal(30,6)")
+
+
+def dsum(col: F.Column | str) -> F.Column:
     """Deterministic float SUM: exact decimal accumulation, double result."""
-    return F.sum(col.cast("decimal(30,6)")).cast("double")
+    return F.sum(exact(col)).cast("double")
 
 
-def davg(col: F.Column) -> F.Column:
+def davg(col: F.Column | str) -> F.Column:
     """Deterministic float AVG matching `CAST(SUM(DECIMAL) AS DOUBLE)/COUNT`."""
-    return F.sum(col.cast("decimal(30,6)")).cast("double") / F.count(F.lit(1))
+    return dsum(col) / F.count(F.lit(1))
+
+
+#: The micro-unit grid: ``micro`` counts multiples of 1/MICRO.
+MICRO = 1000000.0
+
+
+def micro(col: F.Column | str) -> F.Column:
+    """``floor(col·1e6 + 0.5)`` as BIGINT — ``col`` rounded half-up to
+    integer micro-units (oracle: ``CAST(floor(x * 1000000.0 + 0.5) AS
+    BIGINT)``)."""
+    col = F.col(col) if isinstance(col, str) else col
+    return F.floor(col * MICRO + 0.5).cast("long")
+
+
+def micro_np(x):
+    """numpy twin of :func:`micro` for Arrow kernels: the same IEEE ops,
+    as int64 (a scalar gives a 0-d int64)."""
+    return np.floor(np.asarray(x) * MICRO + 0.5).astype(np.int64)
+
+
+def hex_int(digest: F.Column | str, start: int = 1, length: int = 8) -> F.Column:
+    """Hex digits ``start .. start+length-1`` of a hex digest as BIGINT."""
+    return F.conv(F.substring(digest, start, length), 16, 10).cast("bigint")
+
+
+def md5_int(col: F.Column | str, start: int = 1, length: int = 8) -> F.Column:
+    """A window of ``md5(col)``'s hex digest as BIGINT (oracle:
+    ``('0x' || substring(md5(x), start, length))::BIGINT``)."""
+    return hex_int(F.md5(col), start, length)
 
 
 def fixture_plans(spark: SparkSession):

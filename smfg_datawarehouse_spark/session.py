@@ -99,11 +99,18 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
-    )
+    master = master or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or 32)
+    if master.startswith("local"):
+        # Python workers unpickle the engine's functions by module name, so
+        # they need the package's parent directory on their path even when
+        # the driver found it only through sys.path; Spark appends any
+        # inherited PYTHONPATH to this one
+        conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))
+        )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

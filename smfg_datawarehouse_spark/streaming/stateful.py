@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from smfg_datawarehouse_spark.queries import micro_np
+
 _OUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -47,17 +49,14 @@ _STATE_SCHEMA = T.StructType(
 def _accumulate(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
-    import numpy as np
-
     (user_id,) = key
     n, tot = state.get if state.exists else (0, 0)
     for pdf in pdfs:
         n += len(pdf)
         if len(pdf):
-            # floor(x*1e6 + 0.5): same IEEE ops as the batch twin
-            # F.floor(value*1e6 + 0.5), so stream == batch bit-exactly
-            micros = np.floor(pdf["value"].to_numpy() * 1_000_000.0 + 0.5)
-            tot += int(micros.astype(np.int64).sum())
+            # micro_np is the numpy twin of the batch queries' micro(),
+            # so stream == batch bit-exactly
+            tot += int(micro_np(pdf["value"].to_numpy()).sum())
     state.update((n, tot))
     yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "total_micros": [tot]})
 

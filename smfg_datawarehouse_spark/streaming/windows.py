@@ -13,6 +13,8 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from smfg_datawarehouse_spark.queries import dsum
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -64,15 +66,11 @@ def events_stream(
     return stream.withWatermark("ts", watermark)
 
 
-def _dsum(col):  # deterministic float sum (see queries.py convention)
-    return F.sum(F.col(col).cast("decimal(30,6)")).cast("double")
-
-
 def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
     """Per (tumbling window, event_type): count + value sum."""
     return (
         events.groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), _dsum("value").alias("total_value"))
+        .agg(F.count(F.lit(1)).alias("cnt"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -99,7 +97,7 @@ def session_agg(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
     value sum. In streaming mode requires a watermark on ts."""
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), _dsum("value").alias("total_value"))
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("session_start"),
             "user_id",

@@ -447,3 +447,100 @@ def test_ensure_min_parallelism_decides_from_the_plan(spark, tmp_path):
         cached.unpersist()
     # the widened frame still runs and keeps every row
     assert ensure_min_parallelism(docs, n).count() == docs.count()
+
+
+def test_bit_exact_conventions_come_from_queries_helpers():
+    """One spelling per bit-exact convention: outside ``queries.py`` no
+    Column casts to ``decimal(30,6)`` (use ``exact``/``dsum``/``davg``),
+    converts hex with ``conv`` — as ``F.conv(...)`` or inside an
+    ``F.expr`` string — (use ``md5_int``/``hex_int``), or rounds onto the
+    micro grid with ``F.floor(x * 1e6 + 0.5)`` (use ``micro``). Oracle
+    SQL text is no argument of these calls, so it is not flagged."""
+    import ast
+    import pathlib
+    import re
+
+    import smfg_datawarehouse_spark
+
+    def name_of(func):
+        return getattr(func, "attr", getattr(func, "id", None))
+
+    def text_of(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr):
+            return "".join(
+                v.value for v in node.values if isinstance(v, ast.Constant)
+            )
+        return ""
+
+    def is_grid(node):
+        return (
+            isinstance(node, ast.Constant) and node.value == 1e6
+        ) or name_of(node) == "MICRO"
+
+    def is_micro_rounding(node):
+        (arg,) = node.args
+        return (
+            isinstance(arg, ast.BinOp)
+            and isinstance(arg.op, ast.Add)
+            and isinstance(arg.right, ast.Constant)
+            and arg.right.value == 0.5
+            and isinstance(arg.left, ast.BinOp)
+            and isinstance(arg.left.op, ast.Mult)
+            and is_grid(arg.left.right)
+        )
+
+    decimal = re.compile(r"decimal\(\s*30\s*,\s*6\s*\)", re.IGNORECASE)
+    root = pathlib.Path(smfg_datawarehouse_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "queries.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = name_of(node.func)
+            on_f = isinstance(node.func, ast.Attribute) and name_of(node.func.value) == "F"
+            args = [text_of(a).strip() for a in node.args]
+            if (
+                (fn == "cast" and args and decimal.fullmatch(args[0]))
+                or (fn == "conv" and on_f)
+                or (fn == "expr" and any("conv(" in a for a in args))
+                or (fn == "floor" and on_f and len(args) == 1 and is_micro_rounding(node))
+            ):
+                hits.append(f"{path.relative_to(root)}:{node.lineno} {fn}")
+    assert not hits, hits
+
+
+def test_workers_import_the_engine_found_through_sys_path(tmp_path):
+    """A driver that finds the engine only through ``sys.path`` — no
+    PYTHONPATH, cwd outside the checkout — still runs a query whose
+    Arrow pass unpickles engine functions on the Python workers (x120)."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    from conftest import SF_DIR
+
+    import smfg_datawarehouse_spark
+
+    repo = str(pathlib.Path(smfg_datawarehouse_spark.__file__).resolve().parents[1])
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from smfg_datawarehouse_spark.queries import all_queries\n"
+        "from smfg_datawarehouse_spark.session import get_spark\n"
+        "spark = get_spark(app_name='sys-path-driver')\n"
+        f"rows = all_queries()['x120_knn_graph'](spark, {SF_DIR!r}).collect()\n"
+        "print('rows', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert int(done.stdout.split("rows", 1)[1]) > 0

@@ -345,6 +345,14 @@ def test_x85_pq_rerank_joins_broadcast(spark):
     assert_no_cartesian(df)
 
 
+def test_x85_widens_the_corpus_once(spark):
+    # the ADC scan encodes each Arrow batch itself, so the returned plan
+    # widens the corpus in one round-robin Exchange; the rest are the
+    # top-k window's and the rerank's
+    df = qmod.all_queries()["x85_pq_adc_topk"](spark, SF)
+    assert exchange_count(df) <= 3
+
+
 def test_x86_substring_anchor_join_no_cartesian(spark):
     # the anchor self-join must key on the anchor text (Σ df² candidate
     # pattern), never degrade to a cartesian pair enumeration
