@@ -12,8 +12,10 @@ from smfg_datawarehouse_spark.functions.vectors import (
     l2_norm,
 )
 from smfg_datawarehouse_spark.functions.text import (
+    WS_RUN,
     attach_shingle_df,
     char_shingles,
+    collapse_ws,
     shingle_table,
     term_scoped_postings,
     word_shingles,
@@ -25,8 +27,10 @@ __all__ = [
     "cosine_similarity",
     "dot_product",
     "l2_norm",
+    "WS_RUN",
     "attach_shingle_df",
     "char_shingles",
+    "collapse_ws",
     "shingle_table",
     "term_scoped_postings",
     "word_shingles",

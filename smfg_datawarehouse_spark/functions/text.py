@@ -21,6 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: One run of whitespace as the DuckDB oracles see it. Their ``\s`` is
+#: RE2's ``[\t\n\f\r ]``; Java's ``\s`` also matches U+000B, so a bare
+#: ``\s+`` in a Spark split tokenizes ``'a\x0bb'`` differently. Every
+#: engine-side whitespace split or collapse uses this class.
+WS_RUN = r"[\t\n\f\r ]+"
+
 
 def char_shingles(text: Column, k: int = 5, lowercase: bool = True) -> Column:
     """Distinct character k-grams of ``text`` as ``array<string>``.
@@ -39,10 +45,23 @@ def char_shingles(text: Column, k: int = 5, lowercase: bool = True) -> Column:
     )
 
 
+def collapse_ws(text: Column) -> Column:
+    r"""Lowercased ``text`` with each :data:`WS_RUN` replaced by one space
+    and Unicode space separators (category Zs) stripped from both ends:
+    the oracles' ``trim(regexp_replace(lower(text), '\s+', ' ', 'g'))``.
+    DuckDB's ``trim`` strips every Zs code point (U+00A0, U+2003, ...),
+    Spark's ``trim`` only U+0020, so the ends are stripped by regex
+    (``\z``, not ``$``: Java's ``$`` also matches before a final U+0085)."""
+    return F.regexp_replace(
+        F.regexp_replace(F.lower(text), WS_RUN, " "), r"^\p{Zs}+|\p{Zs}+\z", ""
+    )
+
+
 def word_tokens(text: Column, lowercase: bool = True) -> Column:
-    """Whitespace tokens as ``array<string>`` (empty strings removed)."""
+    """Whitespace tokens (split on :data:`WS_RUN`) as ``array<string>``,
+    empty strings removed."""
     t = F.lower(text) if lowercase else text
-    return F.filter(F.split(t, r"\s+"), lambda w: w != "")
+    return F.filter(F.split(t, WS_RUN), lambda w: w != "")
 
 
 def shingle_table(

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from smfg_datawarehouse_spark.audit import append_event, max_event_value, read_events
+from smfg_datawarehouse_spark.audit import append_event, read_events
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -45,25 +45,26 @@ _STATE_SCHEMA = T.StructType(
 class WatermarkStore:
     """Append-only watermark ledger; latest Seq per table wins.
 
-    ``Seq`` continues from the stored maximum, so a store reopened after
-    an engine restart outranks every earlier run's watermarks."""
+    The ledger is read once, when the store opens: ``get`` answers from
+    the in-memory latest-per-table map and ``advance`` updates it as it
+    appends the event, so neither grows with the ledger's history. One
+    store per ledger per process; ``Seq`` continues from the stored
+    maximum, so a store reopened after an engine restart outranks every
+    earlier run's watermarks."""
 
     def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
         self.path = os.path.join(state_dir, "watermarks.parquet")
-        self._seq = max_event_value(self.path, _STATE_SCHEMA, "Seq")
+        events = read_events(self.path, _STATE_SCHEMA)
+        rows = []
+        if events is not None:
+            d = events.to_pydict()
+            rows = sorted(zip(d["Seq"], d["TableName"], d["WatermarkValue"]), key=lambda r: r[0])
+        self._marks = {name: value for _seq, name, value in rows}
+        self._seq = rows[-1][0] if rows else 0
 
     def get(self, table: str) -> str | None:
-        events = read_events(self.path, _STATE_SCHEMA)
-        if events is None:
-            return None
-        d = events.to_pydict()
-        rows = [
-            (seq, value)
-            for name, value, seq in zip(d["TableName"], d["WatermarkValue"], d["Seq"])
-            if name == table
-        ]
-        return max(rows, key=lambda r: r[0])[1] if rows else None
+        return self._marks.get(table)
 
     def advance(self, table: str, value: Any) -> None:
         """Record a new watermark (stringified; lexicographic-safe for ISO
@@ -74,6 +75,7 @@ class WatermarkStore:
             _STATE_SCHEMA,
             {"TableName": table, "WatermarkValue": str(value), "Seq": self._seq},
         )
+        self._marks[table] = str(value)
 
 
 def incremental_slice(
@@ -87,23 +89,3 @@ def incremental_slice(
     if last_watermark is None:
         return df
     return df.where(F.col(ts_col) > F.lit(last_watermark).cast(df.schema[ts_col].dataType))
-
-
-def run_incremental_extract(
-    df: DataFrame,
-    ts_col: str,
-    store: WatermarkStore,
-    table: str,
-) -> tuple[DataFrame, str | None]:
-    """One incremental run: slice past the watermark, compute the new
-    high-water mark from the slice, advance the store. Returns
-    (slice, new_watermark). The slice DataFrame stays lazy; the single
-    ``max`` aggregation is the only extra action."""
-    last = store.get(table)
-    sliced = incremental_slice(df, ts_col, last)
-    new_wm = sliced.agg(F.max(ts_col).alias("wm")).first()["wm"]
-    if new_wm is not None:
-        # ISO format keeps string comparison == timestamp comparison
-        store.advance(table, new_wm.isoformat(sep=" ") if hasattr(new_wm, "isoformat") else new_wm)
-        return sliced, str(new_wm)
-    return sliced, last

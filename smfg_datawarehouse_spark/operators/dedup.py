@@ -1,10 +1,9 @@
-"""Deduplication operators [X] — exact, latest-wins, n-gram Jaccard, MinHash.
+"""Deduplication operators [X] — exact, n-gram Jaccard, MinHash.
 
 Designed scale-first:
 
 - **Exact dedup** groups by a content hash (md5) — one shuffle on the hash;
   at 100 TB the hash groupBy is the canonical approach (no full-text compare).
-- **Latest-wins dedup** is the window-dedup pattern (`row_number() = 1`).
 - **n-gram Jaccard** explodes distinct shingles and self-joins on shingle —
   exact but quadratic in per-shingle document frequency; appropriate for
   verification / small corpora. The scale path is MinHash+LSH below.
@@ -23,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import shingle_table
+from smfg_datawarehouse_spark.functions import WS_RUN, collapse_ws, shingle_table
 from smfg_datawarehouse_spark.queries import hex_int, md5_int, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
@@ -36,12 +35,6 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
     """Keep the lowest-id row per exact content duplicate group."""
     h = F.md5(F.concat_ws("\x1f", *content_cols))
     w = W.partitionBy(h).orderBy(F.col(id_col))
-    return df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
-
-
-def latest_wins_dedup(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """Classic CDC-style dedup: newest row per key survives."""
-    w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
     return df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
 
 
@@ -2261,16 +2254,13 @@ def x134_normalization_dedup_lift(spark: SparkSession, sf_dir: str) -> DataFrame
     stages = [
         ("0_raw", F.col("text")),
         ("1_casefold", F.lower(F.col("text"))),
-        (
-            "2_ws_collapse",
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")),
-        ),
+        ("2_ws_collapse", collapse_ws(F.col("text"))),
         (
             "3_alnum_only",
             F.trim(
                 F.regexp_replace(
                     F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""),
-                    r"\s+",
+                    WS_RUN,
                     " ",
                 )
             ),

@@ -10,18 +10,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import ordered_concat_ws
 from smfg_datawarehouse_spark.queries import (
     fixture_plans,
-    _davg_sql,
-    _dsum_sql,
     _scratch_dir,
-    davg,
     dsum,
-    load_events,
     register,
     t,
 )
@@ -252,13 +246,13 @@ def l01_runner_audit_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l02_versioned_merge_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J3/S7] q19's MERGE scenario run through the durable path: the
-    target snapshot lands as ``VersionedTable`` v0, the update batch
-    merges into an atomic v1 snapshot (old version intact for time
-    travel), and the returned state is read back FROM STORAGE — the
-    declared DW-load upsert with Delta-style visibility semantics on
-    plain parquet. Same oracle as q19: durability must not change MERGE
-    semantics."""
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    target snapshot lands as ``ManifestTable`` version 1, the update
+    batch merges into version 2 through one conditional CURRENT swap
+    (version 1 stays intact for time travel), and the returned state is
+    read back FROM STORAGE — the declared DW-load upsert with
+    Delta-style visibility semantics on plain parquet. Same oracle as
+    q19: durability must not change MERGE semantics."""
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     o = t(spark, sf_dir, "orders")
     target = o.where("o_orderdate < DATE '1997-01-01'").select(
@@ -270,7 +264,7 @@ def l02_versioned_merge_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.col("o_totalprice") * 2).alias("o_totalprice"),
         "o_orderdate",
     )
-    vt = VersionedTable(spark, _scratch_dir(spark, "vt"))
+    vt = ManifestTable(spark, _scratch_dir(spark, "vt"))
     vt.write(target)
     vt.merge(updates, ["o_orderkey"])
     return vt.read()
@@ -302,7 +296,6 @@ def l03_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``staging_data_extraction.py:30-80``) extended to Spark's DataSource
     formats."""
     import os
-    import tempfile
 
     from pyspark.sql import types as T
 

@@ -7,18 +7,13 @@ documented in ``queries.py``; reference citations live in each docstring.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import ordered_concat_ws
 from smfg_datawarehouse_spark.queries import (
-    _davg_sql,
     _dsum_sql,
-    _scratch_dir,
-    davg,
     dsum,
     load_events,
     micro,

@@ -13,13 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import ordered_concat_ws
 from smfg_datawarehouse_spark.queries import (
     _scratch_path,
-    _davg_sql,
     _dsum_sql,
     _scratch_dir,
-    davg,
     dsum,
     exact,
     load_events,
@@ -599,21 +596,24 @@ def l11_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def l12_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J3/S7] TIME TRAVEL certification: l02's merge lifecycle, then
-    BOTH snapshots are read back from storage — ``read(version=0)`` must
-    still return the exact pre-merge state after the merge has moved the
-    current pointer to v1, and ``read()`` must return the merged state.
-    The union (tagged with a version column) hash-checks both reads in
-    one oracle: a merge that mutated v0 in place, or a version pointer
-    that resolves wrongly, fails the hash. This is the audit/debugging
-    contract a versioned lake exists for (reproduce yesterday's training
-    mix exactly); the reference declares the same intent with its
+    BOTH snapshots are read back from storage — ``read(version=base)``
+    (the version ``write`` returned) must still return the exact
+    pre-merge state after the merge has swapped CURRENT to the next
+    manifest, and ``read()`` must return the merged state. The union
+    (tagged 0 = pre-merge, 1 = merged) hash-checks both reads in one
+    oracle: a merge that mutated the base files in place, or a version
+    pointer that resolves wrongly, fails the hash. This is the
+    audit/debugging contract a versioned lake exists for (reproduce
+    yesterday's training mix exactly); the reference declares the same
+    intent with its
     RecordAdded/RecordUpdated bookkeeping
     (reference/source_code/sql/1. Metadata Creation.sql:133,146).
 
-    Scale shape: snapshots are directory-versioned parquet — each read
-    is a plain pruned scan of ONE version directory; no log replay, no
-    copy-on-read. The merge itself is l02's single key-shuffle."""
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    Scale shape: each snapshot is a manifest of immutable parquet files
+    — each read is a plain pruned scan of exactly that file list; no log
+    replay, no copy-on-read. The merge itself is l02's single
+    key-shuffle."""
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     o = t(spark, sf_dir, "orders")
     target = o.where("o_orderdate < DATE '1997-01-01'").select(
@@ -625,10 +625,10 @@ def l12_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") * 2).alias("o_totalprice"),
         "o_orderdate",
     )
-    vt = VersionedTable(spark, _scratch_dir(spark, "l12"))
-    vt.write(target)
+    vt = ManifestTable(spark, _scratch_dir(spark, "l12"))
+    base = vt.write(target)
     vt.merge(updates, ["o_orderkey"])
-    v0 = vt.read(version=0).select(F.lit(0).cast("long").alias("version"), "*")
+    v0 = vt.read(version=base).select(F.lit(0).cast("long").alias("version"), "*")
     v1 = vt.read().select(F.lit(1).cast("long").alias("version"), "*")
     return v0.unionByName(v1)
 
@@ -654,18 +654,20 @@ def l13_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J3/S7] RETENTION/VACUUM certification, the storage-cost half of
     the versioned-lake contract (l12 proves old versions stay readable;
     this proves they can be RECLAIMED without touching the current one):
-    write v0 → merge to v1 → ``vacuum(keep_last=1)``. Structural gates
-    raise if vacuum kept the wrong set (versions() must be exactly [1])
-    or if the evicted v0 is still readable (time travel to it must now
-    fail) — then the surviving current snapshot is read back from
+    write (version b) → merge (version m) → ``vacuum(keep_last=1)``.
+    Structural gates (:func:`_vacuum_certified`) raise if vacuum kept the
+    wrong set (``versions()`` must be exactly ``[m]``), if the files only
+    b referenced are not exactly the ones vacuum reports removed and
+    physically gone, or if b is still readable (time travel to it must
+    now fail) — then the surviving current snapshot is read back from
     storage and hash-checked against the same MERGE oracle as l02: a
-    vacuum that deleted files out from under v1 hash-fails, a vacuum
-    that missed v0 raises.
+    vacuum that deleted files out from under m hash-fails, a vacuum
+    that missed b raises.
 
     At 100 TB vacuum IS the cost model — snapshots-forever doubles
     storage every restatement cycle; this certifies eviction is exact
     (newest-k survive, everything else physically gone)."""
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     o = t(spark, sf_dir, "orders")
     target = o.where("o_orderdate < DATE '1997-01-01'").select(
@@ -677,21 +679,31 @@ def l13_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") * 2).alias("o_totalprice"),
         "o_orderdate",
     )
-    vt = VersionedTable(spark, _scratch_dir(spark, "l13"))
-    vt.write(target)
-    vt.merge(updates, ["o_orderkey"])
-    removed = vt.vacuum(keep_last=1)
-    if removed != [0] or vt.versions() != [1]:
+    vt = ManifestTable(spark, _scratch_dir(spark, "l13"))
+    base = vt.write(target)
+    merged = vt.merge(updates, ["o_orderkey"])
+    _vacuum_certified(vt, evicted=base, keep=[merged])
+    return vt.read()
+
+
+def _vacuum_certified(mt, evicted: int, keep: list[int]) -> None:
+    """The retention gate l13 and l21 share: ``vacuum(keep_last=len(keep))``
+    must leave exactly the versions ``keep``, report as removed exactly the
+    files only ``evicted`` referenced, leave none of them on disk, and make
+    time travel to ``evicted`` raise FileNotFoundError."""
+    only_evicted = set(mt.manifest(evicted)).difference(*(mt.manifest(v) for v in keep))
+    removed = set(mt.vacuum(keep_last=len(keep)))
+    on_disk = [f for f in only_evicted if os.path.exists(os.path.join(mt.path, f))]
+    if mt.versions() != keep or removed != only_evicted or on_disk:
         raise RuntimeError(
-            f"vacuum kept wrong versions: removed={removed}, left={vt.versions()}"
+            f"vacuum kept wrong versions or files: left={mt.versions()}, removed "
+            f"{len(removed)} files, {len(only_evicted)} evicted, {len(on_disk)} still on disk"
         )
     try:
-        vt.read(version=0)
+        mt.read(version=evicted)
     except FileNotFoundError:
-        pass
-    else:
-        raise RuntimeError("vacuumed v0 is still readable")
-    return vt.read()
+        return
+    raise RuntimeError(f"vacuumed version {evicted} is still readable")
 
 
 @register(
@@ -891,20 +903,20 @@ def l15_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the change set BETWEEN two versions is derivable exactly):
     v0 = pre-1997 orders; v1 = a restatement that PURGES pre-1995 rows
     (retention), DOUBLES totals from 1996-06 on (correction), and lands
-    the 1997+ rows (new data). ``VersionedTable.diff`` classifies every
+    the 1997+ rows (new data). ``ManifestTable.diff`` classifies every
     key as insert/delete/update/unchanged via ONE full outer join with
     null-safe column comparison; the emitted change rows (unchanged
     excluded — this is what a downstream consumer replays) hash-check
     against a literal FULL OUTER JOIN oracle. This is the Delta
-    CDF / Iceberg-changelog capability on plain snapshot-versioned
-    parquet — no log, works between ANY two committed versions.
+    CDF / Iceberg-changelog capability on manifest-committed parquet —
+    no log, works between ANY two committed versions.
 
     Scale shape: one key-partitioned shuffle per side feeding a single
     sort-merge full outer join; column comparison is codegen'd per row.
     At 100 TB the diff of two snapshots costs the same as one big join —
     no per-merge log replay, and bucketing both snapshots by the merge
     keys would eliminate even that shuffle."""
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     o = t(spark, sf_dir, "orders")
     v0 = o.where("o_orderdate < DATE '1997-01-01'").select(
@@ -921,11 +933,10 @@ def l15_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("o_totalprice"),
         "o_orderdate",
     )
-    vt = VersionedTable(spark, _scratch_dir(spark, "l15"))
-    vt.write(v0)
-    vt.write(v1)
+    vt = ManifestTable(spark, _scratch_dir(spark, "l15"))
+    old, new = vt.write(v0), vt.write(v1)
     return (
-        vt.diff(0, 1, ["o_orderkey"])
+        vt.diff(old, new, ["o_orderkey"])
         .where("change_type <> 'unchanged'")
         .select(
             "change_type",
@@ -964,9 +975,9 @@ def l16_changelog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: replay costs O(base + changes) — one anti-join shuffle
     and one merge shuffle, both on the table key; the replica never
     rescans the source table. This is the snapshot-replication pattern
-    (Delta CDF consumers, cross-region replicas) on plain versioned
+    (Delta CDF consumers, cross-region replicas) on manifest-committed
     parquet."""
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
     from smfg_datawarehouse_spark.transform import apply_changeset
 
     o = t(spark, sf_dir, "orders")
@@ -984,13 +995,12 @@ def l16_changelog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("o_totalprice"),
         "o_orderdate",
     )
-    vt = VersionedTable(spark, _scratch_dir(spark, "l16"))
-    vt.write(v0)
-    vt.write(v1)
-    changes = vt.diff(0, 1, ["o_orderkey"]).where("change_type <> 'unchanged'")
-    rec = apply_changeset(vt.read(0), changes, ["o_orderkey"]).persist()
+    vt = ManifestTable(spark, _scratch_dir(spark, "l16"))
+    old, new = vt.write(v0), vt.write(v1)
+    changes = vt.diff(old, new, ["o_orderkey"]).where("change_type <> 'unchanged'")
+    rec = apply_changeset(vt.read(old), changes, ["o_orderkey"]).persist()
     try:
-        stored = vt.read(1)
+        stored = vt.read(new)
         n_rec, n_v1 = rec.count(), stored.count()
         n_extra = rec.exceptAll(stored).count()
         if n_rec != n_v1 or n_extra:
@@ -1543,13 +1553,14 @@ _L37_ORACLE = """
 def l37_changelog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J3/S7/T1] CHANGELOG REPLAY RECONSTRUCTION — the consumer side of
     CDC: a downstream system that never sees the table, only the v0
-    snapshot plus the per-version change sets (``VersionedTable.diff`` —
+    snapshot plus the per-version change sets (``ManifestTable.diff`` —
     the Delta CDF / Iceberg changelog equivalent), must reconstruct the
     current state EXACTLY. The dimension is built as three precedence
     merges (latest event per user over three event-time thirds), then
-    REPLAYED: start from snapshot v0, apply diff(0,1) then diff(1,2)
-    (delete keys dropped, insert/update new-images upserted), RAISE if
-    the replay differs from ``read(v2)`` in either direction, and return
+    REPLAYED: start from the first committed snapshot, apply the diff
+    of each consecutive pair of ``versions()`` (delete keys dropped,
+    insert/update new-images upserted), RAISE if the replay differs from
+    the newest snapshot in either direction, and return
     the replayed frame hash-checked against the batch latest-per-user
     oracle. l15 certifies the diff's row classification; this certifies
     the diff's COMPLETENESS — any change the diff misses or duplicates
@@ -1561,7 +1572,7 @@ def l37_changelog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     diffs come from one full-outer join per version pair; nothing
     corpus²."""
     src = _scratch_dir(spark, "l37")
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     ev = load_events(spark, sf_dir).select(
         "event_id", "user_id", "ts", "event_type", "value"
@@ -1580,7 +1591,7 @@ def l37_changelog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_rn")
         )
 
-    vt = VersionedTable(spark, os.path.join(src, "dim"))
+    vt = ManifestTable(spark, os.path.join(src, "dim"))
     vt.write(latest(ev.where(F.col("ts") < F.lit(t1))))
     vt.merge(
         latest(ev.where((F.col("ts") >= F.lit(t1)) & (F.col("ts") < F.lit(t2)))),

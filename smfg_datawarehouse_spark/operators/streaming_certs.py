@@ -28,11 +28,8 @@ from smfg_datawarehouse_spark.operators.events_analytics import (
 )
 from smfg_datawarehouse_spark.operators.text_sketches import _cms_buckets
 from smfg_datawarehouse_spark.queries import (
-    _davg_sql,
     _dsum_sql,
     _scratch_dir,
-    davg,
-    dsum,
     exact,
     load_events,
     md5_int,
@@ -548,7 +545,7 @@ def s10_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     production shape: the events fixture lands as a THREE-file backlog
     drained one file per micro-batch; each batch is compacted to its
     newest row per user and conditionally merged into a
-    ``VersionedTable`` with ``precedence=["ts","event_id"]`` (newer-wins;
+    ``ManifestTable`` with ``precedence=["ts","event_id"]`` (newer-wins;
     Delta's ``WHEN MATCHED AND s.ts > t.ts THEN UPDATE``). Because the
     precedence tuple — not arrival order — decides every collision, the
     final table is identical however the backlog splits into batches, and
@@ -564,14 +561,14 @@ def s10_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from smfg_datawarehouse_spark.queries import _scratch_dir, load_events
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
     from smfg_datawarehouse_spark.streaming.windows import events_stream
 
     src_dir = _scratch_dir(spark, "s10")
     load_events(spark, sf_dir).repartition(3).write.mode("overwrite").parquet(
         _os.path.join(src_dir, "raw")
     )
-    vt = VersionedTable(spark, _os.path.join(src_dir, "table"))
+    vt = ManifestTable(spark, _os.path.join(src_dir, "table"))
     stream = events_stream(
         spark, _os.path.join(src_dir, "raw"), max_files_per_trigger=1
     ).select("event_id", "user_id", "ts", "event_type", "value")
@@ -655,7 +652,6 @@ def s11_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference/dag/SMFG_DW_ETL_DAG.py REALTIME branch) with out-of-order
     arrival tolerance made explicit."""
     import os as _os
-    import shutil as _shutil
     import time as _time
 
     from smfg_datawarehouse_spark.queries import _scratch_dir, load_events
@@ -854,7 +850,6 @@ def s14_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hash shuffle on the dedup key; state = keys within
     one watermark horizon; duplicates neither grow nor refresh state."""
     import os as _os
-    import shutil as _shutil
     import time as _time
 
     from smfg_datawarehouse_spark.queries import _scratch_dir, load_events
@@ -943,7 +938,6 @@ def s15_streaming_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataF
     check). At 100 TB: audit cost is one scan of the BATCH, publish is
     O(1); a poisoned upstream never costs more than its own batch."""
     import os as _os
-    import shutil as _shutil
     import time as _time
 
     from smfg_datawarehouse_spark.queries import _scratch_dir, load_events
@@ -1542,7 +1536,7 @@ def s24_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     the dimension's OPEN row per user (batch-internal LAG for the rest),
     CLOSES the open row at the user's first in-batch change, appends the
     new validity-interval rows with continued version numbers, and
-    publishes via one ``VersionedTable.merge`` keyed on (user_id,
+    publishes via one ``ManifestTable.merge`` keyed on (user_id,
     version). The converged table hash-checks against q79's BATCH SCD2
     oracle — so batch-built and stream-maintained history are certified
     IDENTICAL, the lambda-architecture equivalence that makes streaming
@@ -1579,9 +1573,9 @@ def s24_streaming_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     ]
     _stage_ordered_slices(src, raw, slices)
 
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
-    vt = VersionedTable(spark, _os.path.join(src, "dim"))
+    vt = ManifestTable(spark, _os.path.join(src, "dim"))
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select("user_id", "event_type", "ts", "event_id")
@@ -1694,7 +1688,7 @@ def s25_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained one per micro-batch; each batch folds its month-keyed
     DECIMAL partials (count + decimal revenue sum) ADDITIVELY into the
     MV — read current MV ⊎ batch partials, re-aggregate, publish as a
-    new atomic ``VersionedTable`` snapshot — and the converged MV must
+    new ``ManifestTable`` commit — and the converged MV must
     hash-equal the one-shot batch rollup of the whole table. The
     additive-decimal contract is the load-bearing part: folding DOUBLE
     partials batch-by-batch would accumulate a different rounding path
@@ -1707,17 +1701,15 @@ def s25_streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch's rows plus a |months|-sized combine with the current MV;
     the MV table never exceeds |months| rows, so refresh cost is
     O(batch) regardless of history size."""
-    import os as _os2
 
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
-    from smfg_datawarehouse_spark.streaming.windows import events_stream  # noqa: F401
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     src = _scratch_dir(spark, "s25")
     raw = _os.path.join(src, "raw")
     orders = t(spark, sf_dir, "orders")
     orders.repartition(3).write.mode("overwrite").parquet(raw)
 
-    vt = VersionedTable(spark, _os.path.join(src, "mv"))
+    vt = ManifestTable(spark, _os.path.join(src, "mv"))
 
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy(

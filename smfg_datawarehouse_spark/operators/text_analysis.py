@@ -14,8 +14,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import ordered_concat_ws, word_tokens
-from smfg_datawarehouse_spark.queries import davg, md5_int, micro, register, t
+from smfg_datawarehouse_spark.functions import collapse_ws, word_tokens
+from smfg_datawarehouse_spark.queries import md5_int, micro, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_df
 
 _STOPWORDS_EN = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -27,7 +27,7 @@ def token_count(text: Column) -> Column:
 
 def fingerprint(text: Column) -> Column:
     """Whitespace-normalized content fingerprint (md5 of canonical form)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
+    return F.md5(collapse_ws(text))
 
 
 WINNOW_K = 20  # char-gram width

@@ -14,13 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import ordered_concat_ws
-from smfg_datawarehouse_spark.queries import davg, dsum, register, t
-from smfg_datawarehouse_spark.operators.text_analysis import (
-    fingerprint,
-    quality_features,
-    word_tokens,
-)
+from smfg_datawarehouse_spark.functions import WS_RUN, ordered_concat_ws, word_tokens
+from smfg_datawarehouse_spark.queries import dsum, register, t
 from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 # ---------------------------------------------------------------------------
@@ -277,7 +272,7 @@ def token_chunking_udtf(chunk_tokens: int = 32):
 
             texts = batch.column("text")
             doc_ids = np.asarray(batch.column("doc_id"))
-            splits = pc.split_pattern_regex(texts, r"\s+")
+            splits = pc.split_pattern_regex(texts, WS_RUN)
             flat = pc.list_flatten(splits)
             parents = np.asarray(pc.list_parent_indices(splits))
             mask = np.asarray(pc.not_equal(flat, ""))
@@ -1156,9 +1151,7 @@ def x128_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.size(
-            F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
-        )
+        F.size(word_tokens(F.col("text"), lowercase=False))
         .cast("long")
         .alias("n_tok"),
         F.expr("doc_id DIV 64").alias("band"),
@@ -1326,7 +1319,7 @@ def x131_padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != ""))
+        F.size(word_tokens(F.col("text"), lowercase=False))
         .cast("long")
         .alias("n_tok"),
     )

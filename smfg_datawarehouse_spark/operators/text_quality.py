@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.queries import davg, dsum, micro, register, t
+from smfg_datawarehouse_spark.queries import micro, register, t
 from smfg_datawarehouse_spark.operators.text_analysis import (
     _STOPWORDS_EN,
     doc_mean_token_prob,

@@ -395,7 +395,6 @@ def bloom_contamination(
     m=2048 bits the filter runs at ~0.75 load, a real false-positive
     regime the eval actually exercises.
     """
-    from smfg_datawarehouse_spark.functions import word_shingles
 
     # cached: the distinct (source, bigram) set feeds FOUR consumers
     # (filter build, probe, exact membership, totals) — without the cache

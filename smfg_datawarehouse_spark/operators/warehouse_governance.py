@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import ordered_concat_ws
 from smfg_datawarehouse_spark.queries import (
     _davg_sql,
     _dsum_sql,
@@ -527,23 +526,27 @@ def l21_subject_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     the versioned lake — the compliance workflow every real warehouse
     must support, certified end-to-end:
 
-    1. v0 = the full customer snapshot (contains the subjects).
-    2. v1 = v0 anti-joined against the erasure set (``c_custkey % 53 = 0``
-       — in production, the DSR queue); the deletion is a NEW atomic
-       snapshot, so readers never see a half-deleted table.
-    3. ``diff(0, 1)`` must be exactly |subjects| deletes and ZERO
+    1. ``full`` = the full customer snapshot (contains the subjects).
+    2. ``erased`` = ``full`` anti-joined against the erasure set
+       (``c_custkey % 53 = 0`` — in production, the DSR queue); the
+       deletion is a NEW atomic manifest commit, so readers never see a
+       half-deleted table.
+    3. ``diff(full, erased)`` must be exactly |subjects| deletes and ZERO
        inserts/updates (survivors classify as ``unchanged``) — the
        erasure manifest (counted only; the certification never
        re-materializes subject PII outside the table).
-    4. ``vacuum(keep_last=1)`` physically destroys v0 — erasure is not
-       erasure while an old snapshot still serves the data; time travel
-       to v0 must now RAISE (asserted), and the erasure set anti-joined
-       against the surviving snapshot must be empty (asserted).
+    4. ``vacuum(keep_last=1)`` physically destroys ``full`` — erasure is
+       not erasure while an old snapshot still serves the data: l13's
+       retention gate asserts that only ``erased`` survives, that every
+       file only ``full`` referenced is deleted from disk, and that time
+       travel to ``full`` now RAISES; the erasure set anti-joined against
+       the surviving snapshot must be empty (asserted).
 
     The returned per-nation rollup reads the post-vacuum table from
     storage and hash-checks against the oracle's filtered aggregate — a
-    vacuum that deleted v1 files, or an anti-join that dropped the wrong
-    rows, fails the hash; a retained subject or readable v0 raises.
+    vacuum that deleted live files, or an anti-join that dropped the
+    wrong rows, fails the hash; a retained subject or readable ``full``
+    raises.
 
     Scale shape: the erasure set is a broadcast anti-join (DSR queues are
     tiny vs the table); the rewrite is one full-table scan+write — the
@@ -551,18 +554,19 @@ def l21_subject_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy-on-write price Delta/Iceberg DELETE pays. Reference parity: the
     curated-zone delete path the reference declares but never built
     (reference/dag/SMFG_DW_ETL_DAG.py load stage)."""
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.operators.lifecycle import _vacuum_certified
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     c = t(spark, sf_dir, "customer")
     subjects = c.where(F.col("c_custkey") % 53 == 0).select("c_custkey")
     n_subjects = subjects.count()
 
-    vt = VersionedTable(spark, _scratch_dir(spark, "l21"))
-    vt.write(c)
+    vt = ManifestTable(spark, _scratch_dir(spark, "l21"))
+    full = vt.write(c)
     survivors = c.join(F.broadcast(subjects), "c_custkey", "left_anti")
-    vt.write(survivors)
+    erased = vt.write(survivors)
 
-    changes = vt.diff(0, 1, ["c_custkey"])
+    changes = vt.diff(full, erased, ["c_custkey"])
     n_deletes = changes.where(F.col("change_type") == "delete").count()
     n_mutations = changes.where(
         F.col("change_type").isin("insert", "update")
@@ -573,18 +577,7 @@ def l21_subject_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" {n_mutations} inserts/updates (want 0)"
         )
 
-    removed = vt.vacuum(keep_last=1)
-    if removed != [0] or vt.versions() != [1]:
-        raise RuntimeError(
-            f"vacuum kept wrong versions: removed={removed}, left={vt.versions()}"
-        )
-    try:
-        vt.read(version=0)
-    except FileNotFoundError:
-        pass
-    else:
-        raise RuntimeError("erased v0 snapshot is still readable")
-
+    _vacuum_certified(vt, evicted=full, keep=[erased])
     current = vt.read()
     leaked = current.join(F.broadcast(subjects), "c_custkey", "left_semi")
     if leaked.limit(1).count() != 0:

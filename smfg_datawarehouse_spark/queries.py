@@ -43,10 +43,8 @@ from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.functions import ordered_concat_ws
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 

@@ -225,28 +225,19 @@ def run_realtime_staging(
         out_path = zones.staging_table_dir(plan.schema_name, plan.table_name)
         ckpt_dir = os.path.join(ckpt_root, plan.schema_name, plan.table_name)
         marker = os.path.join(ckpt_dir, "_landed_batches")
-        totals = {"rows": 0}
-
-        def _landed(batch_id: int) -> bool:
-            try:
-                with open(marker) as fh:
-                    return str(batch_id) in fh.read().split()
-            except FileNotFoundError:
-                return False
-
-        def _mark_landed(batch_id: int) -> None:
-            os.makedirs(ckpt_dir, exist_ok=True)
-            with open(marker, "a") as fh:
-                fh.write(f"{batch_id}\n")
+        totals = {"rows": 0, "landed": set()}
 
         def land_batch(batch_df: DataFrame, batch_id: int, _plan=plan, _totals=totals):
             # Replay guard: after a crash-restart Structured Streaming
             # re-delivers the last uncommitted batch_id; if we already
             # appended it, skip (idempotent at-least-once, see docstring).
-            if _landed(batch_id):
+            if str(batch_id) in _totals["landed"]:
                 return
             _path, n = _land(batch_df, zones, _plan, "append")
-            _mark_landed(batch_id)
+            os.makedirs(ckpt_dir, exist_ok=True)
+            with open(marker, "a") as fh:
+                fh.write(f"{batch_id}\n")
+            _totals["landed"].add(str(batch_id))
             _totals["rows"] += n
             audit.log_stage_detail(
                 process_id,
@@ -259,6 +250,12 @@ def run_realtime_staging(
             )
 
         def drain() -> tuple[str, int]:
+            # the marker is read once per drain, not once per micro-batch
+            try:
+                with open(marker) as fh:
+                    totals["landed"] = set(fh.read().split())
+            except FileNotFoundError:
+                pass
             # streaming sources can't infer schema — peek the batch footer
             schema = spark.read.parquet(src_dir).schema
             stream = spark.readStream.schema(schema).parquet(src_dir)

@@ -129,28 +129,6 @@ def write_partitioned(
     return path
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> str:
-    """Bucketed managed table: pre-shuffles data into ``num_buckets`` files
-    by hash of ``bucket_cols`` at WRITE time, so every later join/agg on
-    those keys skips its exchange entirely (plan shows a sort-merge join
-    with NO shuffle on the bucketed sides). The classic amortization for
-    fact tables joined repeatedly on the same key at scale; pair with
-    ``spark.sql.sources.bucketing.enabled`` (on by default).
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table_name)
-    return table_name
-
-
 def read_source(
     spark,
     fmt: str,

@@ -1,26 +1,34 @@
-"""Manifest-committed parquet tables — the OBJECT-STORE-safe commit
-protocol (Delta/Iceberg's core idea on plain parquet).
+"""Manifest-committed parquet tables — the one commit protocol for curated
+tables (Delta/Iceberg's core idea on plain parquet).
 
-:mod:`.lake`'s ``compact()`` swaps directories with rename — atomic
-enough on a POSIX local fs, but object stores have no atomic directory
-rename, and even locally a reader listing the directory mid-swap races
-the writer. Table formats solve this with an indirection: data files are
-IMMUTABLE and never renamed or deleted by a commit; what changes is a
-tiny MANIFEST (the list of files that make up the table), and the only
+The reference's declared DW-load stage upserts on key columns
+(``DW_Output_Column_Config.IsKey``, ``1. Metadata Creation.sql:133``); on a
+real lake that is Delta ``MERGE INTO``. Plain parquet directories cannot be
+updated in place safely, and object stores have no atomic directory
+rename, so every curated write goes through an indirection: data files are
+IMMUTABLE and never renamed or deleted by a commit; what changes is a tiny
+MANIFEST (the list of files that make up the table), and the only
 mutation in the whole protocol is an atomic single-object swap of the
 ``CURRENT`` pointer (``os.replace`` here; a conditional PUT / ETag swap
 on S3/GCS). Readers resolve CURRENT → manifest → file list once, then
 read a consistent snapshot no matter what commits land meanwhile:
 
 - ``write(df)``  — stage new files under ``data/batch-N/``, write
-  ``manifest/v{N}.json`` naming (prior files +) new files, swap CURRENT.
-  A crash before the swap leaves orphan files readers never see.
+  ``manifest/v{N}.json`` naming the new files, swap CURRENT. A crash
+  before the swap leaves orphan files readers never see.
 - ``append(df)`` — same, manifest = previous manifest's files + staged.
+- ``merge(updates, keys)`` — the key-based upsert (J3): read the current
+  snapshot, ``transform.merge_upsert``, stage the result and commit it
+  CONDITIONALLY on the base version, so a second writer working from
+  the same base gets :class:`CommitConflict` instead of a lost update.
 - ``compact()``  — rewrite the CURRENT file set into size-targeted
   files, commit a manifest naming only the new files. The OLD files
   stay on disk, so an in-flight reader of the old manifest is
   unaffected — the compaction race :func:`.lake.compact` documents is
   structurally gone.
+- ``read(version)`` / ``versions()`` / ``diff(v_from, v_to, keys)`` —
+  time travel and CDC over the committed manifests (versions start at
+  1; a manifest written without its CURRENT swap is not a version).
 - ``vacuum()``   — delete files referenced by NO retained manifest;
   the only destructive step, explicitly decoupled from commits.
 
@@ -36,8 +44,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+_MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 
 
 def _swap_pointer(path: str, doc: dict) -> None:
@@ -123,11 +136,29 @@ class ManifestTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.path, "manifest", f"v{version}.json")
 
+    def versions(self) -> list[int]:
+        """Committed versions, ascending: the manifests up to CURRENT that
+        vacuum kept. A manifest written without its CURRENT swap is not a
+        version. Driver-side directory listing, no data read."""
+        cur = self.current_version()
+        if cur is None:
+            return []
+        return [v for v in self._manifest_versions() if v <= cur]
+
+    def _manifest_versions(self) -> list[int]:
+        """Every manifest file on disk, committed or not, ascending."""
+        found = (_MANIFEST_RE.match(n) for n in os.listdir(os.path.join(self.path, "manifest")))
+        return sorted(int(m.group(1)) for m in found if m)
+
     def manifest(self, version: int | None = None) -> list[str]:
-        """File list (relative paths) of a committed snapshot."""
-        v = self.current_version() if version is None else version
+        """File list (relative paths) of a committed snapshot. A version
+        past CURRENT or removed by vacuum raises FileNotFoundError."""
+        cur = self.current_version()
+        v = cur if version is None else version
         if v is None:
             return []
+        if cur is None or v > cur:
+            raise FileNotFoundError(f"version {v} is not committed in {self.path}")
         with open(self._manifest_path(v)) as fh:
             return json.load(fh)["files"]
 
@@ -264,6 +295,29 @@ class ManifestTable:
                     raise
         raise AssertionError("unreachable")
 
+    def merge(
+        self,
+        updates: DataFrame,
+        keys: list[str],
+        precedence: list[str] | None = None,
+    ) -> int:
+        """Key-based MERGE (J3): updates win on key match, unmatched target
+        rows survive, new keys insert — committed as one new version.
+
+        ``precedence``: optional newer-wins columns (see
+        :func:`smfg_datawarehouse_spark.transform.merge_upsert`) — the
+        conditional-merge form that makes out-of-order CDC apply safe:
+        a stale update can never clobber a newer row already merged.
+
+        The commit is conditional on the version the merge read: a writer
+        whose base moved meanwhile gets :class:`CommitConflict` and its
+        staged files stay invisible (vacuum reclaims them)."""
+        from smfg_datawarehouse_spark.transform import merge_upsert
+
+        cur = self.current_version()
+        merged = updates if cur is None else merge_upsert(self.read(cur), updates, keys, precedence)
+        return self._commit(self._stage(merged, self._next_batch()), expected_version=cur or 0)
+
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read: resolve a manifest once, read exactly its files.
         Immune to concurrent commits (their files are disjoint) and to
@@ -272,6 +326,60 @@ class ManifestTable:
         if not files:
             raise FileNotFoundError(f"no committed snapshot in {self.path}")
         return self._read_files(files)
+
+    def diff(self, v_from: int, v_to: int, keys: list[str]) -> DataFrame:
+        """CDC snapshot diff: the row-level change set that turns snapshot
+        ``v_from`` into ``v_to``, keyed on ``keys``.
+
+        Returns one row per key present in either snapshot, classified as
+        ``insert`` (key only in ``v_to``), ``delete`` (only in ``v_from``),
+        ``update`` (both, any non-key column differs — null-safe), or
+        ``unchanged``; non-key columns come back twice as ``old_<col>`` /
+        ``new_<col>``. This is the changeset a downstream consumer replays
+        (Delta CDF / Iceberg changelog equivalent), derived here from two
+        plain snapshots with ONE full outer join keyed on the merge keys —
+        a single shuffle each side, no log required, so it works on any
+        pair of committed versions regardless of how many merges happened
+        between them."""
+        old = self.read(v_from)
+        new = self.read(v_to)
+        vals = [c for c in old.columns if c not in keys]
+        if set(old.columns) != set(new.columns):
+            raise ValueError(
+                f"schema mismatch between v{v_from} and v{v_to}: "
+                f"{sorted(old.columns)} vs {sorted(new.columns)}"
+            )
+        o = old.select(
+            *keys, *[F.col(c).alias(f"old_{c}") for c in vals]
+        ).withColumn("_in_old", F.lit(True))
+        n = new.select(
+            *keys, *[F.col(c).alias(f"new_{c}") for c in vals]
+        ).withColumn("_in_new", F.lit(True))
+        # null-safe key equality: a row whose merge key is NULL must match
+        # itself across versions (plain `=` would misclassify it as a
+        # simultaneous delete+insert). Catalyst extracts `<=>` as an
+        # equi-join key, so this still plans as a hash/sort-merge join.
+        cond = None
+        for k in keys:
+            c = o[k].eqNullSafe(n[k])
+            cond = c if cond is None else (cond & c)
+        joined = o.join(n, cond, "full_outer").select(
+            *[F.coalesce(o[k], n[k]).alias(k) for k in keys],
+            *[f"old_{c}" for c in vals],
+            *[f"new_{c}" for c in vals],
+            "_in_old",
+            "_in_new",
+        )
+        changed = F.lit(False)
+        for c in vals:
+            changed = changed | ~F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
+        return joined.withColumn(
+            "change_type",
+            F.when(F.col("_in_old").isNull(), F.lit("insert"))
+            .when(F.col("_in_new").isNull(), F.lit("delete"))
+            .when(changed, F.lit("update"))
+            .otherwise(F.lit("unchanged")),
+        ).drop("_in_old", "_in_new")
 
     def compact(self, target_file_bytes: int = 256 * 1024 * 1024) -> int:
         """Rewrite the current file set into size-targeted files and
@@ -287,13 +395,14 @@ class ManifestTable:
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Delete data files referenced by none of the last ``keep_last``
-        manifests (and drop older manifests). Returns removed rel-paths.
+        committed manifests (and drop every other manifest, including one
+        written without its CURRENT swap). Returns removed rel-paths.
         The only destructive operation; runs strictly AFTER commits, so a
         reader that resolved a retained manifest never loses a file."""
-        cur = self.current_version()
-        if cur is None:
+        committed = self.versions()
+        if not committed:
             return []
-        keep_versions = [v for v in range(cur - keep_last + 1, cur + 1) if v >= 1]
+        keep_versions = committed[-keep_last:] if keep_last > 0 else []
         referenced: set[str] = set()
         for v in keep_versions:
             referenced.update(self.manifest(v))
@@ -308,14 +417,10 @@ class ManifestTable:
                     removed.append(rel)
             if not any(fn.endswith(".parquet") for fn in os.listdir(subdir)):
                 # only marker/_SUCCESS debris left — drop the batch dir
-                import shutil
-
                 shutil.rmtree(subdir)
-        for name in os.listdir(os.path.join(self.path, "manifest")):
-            if name.startswith("v") and name.endswith(".json"):
-                v = int(name[1:-5])
-                if v not in keep_versions:
-                    os.remove(os.path.join(self.path, "manifest", name))
+        for v in self._manifest_versions():
+            if v not in keep_versions:
+                os.remove(self._manifest_path(v))
         return removed
 
     # -- write-audit-publish (WAP) ------------------------------------------

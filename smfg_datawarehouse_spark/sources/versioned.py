@@ -1,185 +1,15 @@
-"""Snapshot-versioned parquet tables — durable MERGE target + time travel.
+"""The curated-table name the benchmark harness imports.
 
-The reference's declared DW-load stage upserts on key columns
-(``DW_Output_Column_Config.IsKey``, ``1. Metadata Creation.sql:133``); on a
-real lake that is Delta ``MERGE INTO``. This container has no Delta, and
-plain parquet directories can't be updated in place safely — so the engine
-provides the minimal transactional core those systems share:
-
-- every write lands a COMPLETE new snapshot under ``path/v=N/``;
-- a snapshot is visible only once its ``_SUCCESS`` marker exists (Spark
-  writes it last), so readers never observe partial data — crash mid-write
-  leaves a dead directory that the next write supersedes;
-- readers resolve the latest committed version at call time (or pin an
-  older one — time travel);
-- ``merge`` = read current + ``merge_upsert`` + write next version: the
-  reference's key-based upsert with atomic visibility and rollback for
-  free.
-
-Version listing is a driver-side directory scan — O(versions), metadata
-only, never data. At warehouse scale this is exactly what table formats
-do (Delta/Iceberg keep the version log in metadata files); the snapshot
-data itself stays fully distributed.
+Curated tables have one commit protocol: :class:`.manifest.ManifestTable`
+(immutable data files, one atomic ``CURRENT`` pointer swap per version),
+which also carries ``merge``, ``diff``, time travel and vacuum.
+``VersionedTable`` stays importable under its old name for
+``perfbench/wl_etl.py`` and ``perfbench/layers.py``. It is the same class,
+not a subclass: ``layers.py`` patches ``write`` and ``merge`` through the
+class ``__dict__``, and a subclass that only inherits them would make
+every traced run fail with ``KeyError``.
 """
 
-from __future__ import annotations
+from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
-import os
-import re
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-_V_RE = re.compile(r"^v=(\d+)$")
-
-
-class VersionedTable:
-    """A parquet table with atomic snapshot versions under ``path/v=N/``."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        # per-version schema cache (r9 — same posture as ManifestTable's):
-        # every write records the landed schema so time-travel reads skip
-        # parquet footer inference; reads of versions this instance never
-        # wrote (re-opened table) fall back to inference unchanged.
-        # Metadata only — reads still scan the data files.
-        self._schemas: dict[int, object] = {}
-
-    # -- version bookkeeping (driver-side, metadata only) -------------------
-
-    def versions(self) -> list[int]:
-        """Committed versions (ascending): ``v=N`` dirs holding _SUCCESS."""
-        if not os.path.isdir(self.path):
-            return []
-        out = []
-        for name in os.listdir(self.path):
-            m = _V_RE.match(name)
-            if m and os.path.exists(os.path.join(self.path, name, "_SUCCESS")):
-                out.append(int(m.group(1)))
-        return sorted(out)
-
-    def current_version(self) -> int | None:
-        vs = self.versions()
-        return vs[-1] if vs else None
-
-    def _version_dir(self, version: int) -> str:
-        return os.path.join(self.path, f"v={version}")
-
-    # -- read / write -------------------------------------------------------
-
-    def read(self, version: int | None = None) -> DataFrame:
-        """Latest committed snapshot, or a pinned older one (time travel)."""
-        v = self.current_version() if version is None else version
-        if v is None or v not in self.versions():
-            raise FileNotFoundError(
-                f"no committed version {version!r} at {self.path}"
-            )
-        schema = self._schemas.get(v)
-        if schema is not None:
-            return self.spark.read.schema(schema).parquet(self._version_dir(v))
-        return self.spark.read.parquet(self._version_dir(v))
-
-    def write(self, df: DataFrame) -> int:
-        """Land ``df`` as the next snapshot; returns the new version.
-
-        Visibility is atomic: the snapshot joins ``versions()`` only when
-        Spark finishes the directory and drops ``_SUCCESS``.
-        """
-        cur = self.current_version()
-        nxt = 0 if cur is None else cur + 1
-        df.write.mode("errorifexists").parquet(self._version_dir(nxt))
-        from smfg_datawarehouse_spark.sources.manifest import nullable_copy
-
-        self._schemas[nxt] = nullable_copy(df.schema)
-        return nxt
-
-    def merge(
-        self,
-        updates: DataFrame,
-        keys: list[str],
-        precedence: list[str] | None = None,
-    ) -> int:
-        """Key-based MERGE (J3): updates win on key match, unmatched target
-        rows survive, new keys insert — as a new atomic snapshot.
-
-        ``precedence``: optional newer-wins columns (see
-        :func:`smfg_datawarehouse_spark.transform.merge_upsert`) — the
-        conditional-merge form that makes out-of-order CDC apply safe:
-        a stale update can never clobber a newer row already merged."""
-        from smfg_datawarehouse_spark.transform import merge_upsert
-
-        cur = self.current_version()
-        if cur is None:
-            return self.write(updates)
-        merged = merge_upsert(self.read(cur), updates, keys, precedence)
-        return self.write(merged)
-
-    def diff(self, v_from: int, v_to: int, keys: list[str]) -> DataFrame:
-        """CDC snapshot diff: the row-level change set that turns snapshot
-        ``v_from`` into ``v_to``, keyed on ``keys``.
-
-        Returns one row per key present in either snapshot, classified as
-        ``insert`` (key only in ``v_to``), ``delete`` (only in ``v_from``),
-        ``update`` (both, any non-key column differs — null-safe), or
-        ``unchanged``; non-key columns come back twice as ``old_<col>`` /
-        ``new_<col>``. This is the changeset a downstream consumer replays
-        (Delta CDF / Iceberg changelog equivalent), derived here from two
-        plain snapshots with ONE full outer join keyed on the merge keys —
-        a single shuffle each side, no log required, so it works on any
-        pair of committed versions regardless of how many merges happened
-        between them."""
-        old = self.read(v_from)
-        new = self.read(v_to)
-        vals = [c for c in old.columns if c not in keys]
-        if set(old.columns) != set(new.columns):
-            raise ValueError(
-                f"schema mismatch between v{v_from} and v{v_to}: "
-                f"{sorted(old.columns)} vs {sorted(new.columns)}"
-            )
-        o = old.select(
-            *keys, *[F.col(c).alias(f"old_{c}") for c in vals]
-        ).withColumn("_in_old", F.lit(True))
-        n = new.select(
-            *keys, *[F.col(c).alias(f"new_{c}") for c in vals]
-        ).withColumn("_in_new", F.lit(True))
-        # null-safe key equality: a row whose merge key is NULL must match
-        # itself across versions (plain `=` would misclassify it as a
-        # simultaneous delete+insert). Catalyst extracts `<=>` as an
-        # equi-join key, so this still plans as a hash/sort-merge join.
-        cond = None
-        for k in keys:
-            c = o[k].eqNullSafe(n[k])
-            cond = c if cond is None else (cond & c)
-        joined = o.join(n, cond, "full_outer").select(
-            *[F.coalesce(o[k], n[k]).alias(k) for k in keys],
-            *[f"old_{c}" for c in vals],
-            *[f"new_{c}" for c in vals],
-            "_in_old",
-            "_in_new",
-        )
-        changed = F.lit(False)
-        for c in vals:
-            changed = changed | ~F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
-        return joined.withColumn(
-            "change_type",
-            F.when(F.col("_in_old").isNull(), F.lit("insert"))
-            .when(F.col("_in_new").isNull(), F.lit("delete"))
-            .when(changed, F.lit("update"))
-            .otherwise(F.lit("unchanged")),
-        ).drop("_in_old", "_in_new")
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop all but the newest ``keep_last`` committed snapshots (and
-        any uncommitted debris); returns removed versions."""
-        keep = set(self.versions()[-keep_last:]) if keep_last > 0 else set()
-        removed = []
-        if not os.path.isdir(self.path):
-            return removed
-        for name in os.listdir(self.path):
-            m = _V_RE.match(name)
-            if m and int(m.group(1)) not in keep:
-                shutil.rmtree(os.path.join(self.path, name))
-                removed.append(int(m.group(1)))
-        return sorted(removed)
+VersionedTable = ManifestTable

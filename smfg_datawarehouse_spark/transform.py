@@ -7,8 +7,8 @@ metadata it already defined:
   Creation.sql:124-146``): optional ``AdditionalTransform`` (P7) →
   ``CAST(TargetDataType)`` → order by ``TargetPosition`` (O3)
 - key-based MERGE (J3) on ``IsKey`` columns — union + latest-wins over
-  DataFrames; the durable curated write is ``sources/versioned.py``'s
-  ``VersionedTable.merge`` (the Delta ``MERGE INTO`` form is a drop-in swap
+  DataFrames; the durable curated write is ``sources/manifest.py``'s
+  ``ManifestTable.merge`` (the Delta ``MERGE INTO`` form is a drop-in swap
   on a real deployment).
 
 The output mapping is compiled from the catalog's driver-side rows, so it
@@ -116,7 +116,7 @@ def merge_upsert(
 def apply_changeset(
     base: DataFrame, changes: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """Replay a CDC changeset (``VersionedTable.diff`` output shape:
+    """Replay a CDC changeset (``ManifestTable.diff`` output shape:
     ``keys + change_type + new_<col>...``) onto a base snapshot — the
     CONSUMER side of the changelog contract: ``apply_changeset(v_from,
     diff(v_from, v_to), keys) == v_to`` row-for-row. This is how a
@@ -135,20 +135,3 @@ def apply_changeset(
     ).select(*keys, *[F.col(f"new_{c}").alias(c) for c in vals])
     survived = base.join(deletes, keys, "left_anti")
     return merge_upsert(survived, upserts, keys)
-
-
-def with_audit_timestamps(
-    df: DataFrame, created: bool = True, updated: bool = True
-) -> DataFrame:
-    """Writer-injected timestamp defaults — the engine-side equivalent of
-    the reference's ``DEFAULT CURRENT_TIMESTAMP`` / ``ON UPDATE
-    CURRENT_TIMESTAMP`` column defaults (``1. Metadata Creation.sql:9-10,
-    15-16,72-73``): Spark has no write-time column defaults, so the load
-    path stamps them explicitly."""
-    out = df
-    ts = F.current_timestamp()
-    if created and "CreatedAt" not in df.columns:
-        out = out.withColumn("CreatedAt", ts)
-    if updated:
-        out = out.withColumn("UpdatedAt", ts)
-    return out

@@ -14,6 +14,7 @@ from smfg_datawarehouse_spark.incremental import WatermarkStore
 from smfg_datawarehouse_spark.operators.dedup import jaccard_pairs
 from smfg_datawarehouse_spark.operators.similarity import _collect_matrix
 from smfg_datawarehouse_spark.runner import realtime_plans
+from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 from smfg_datawarehouse_spark.transform import output_mapping_plan
 
 
@@ -97,8 +98,9 @@ def _audited_run(audit: AuditLedger) -> str:
 
 
 def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
-    """Config, plans, watermarks and ledger bookkeeping are KB-sized
-    driver-side metadata: none of them may cost a Spark job."""
+    """Config, plans, watermarks, ledger bookkeeping and curated-table
+    version metadata are KB-sized driver-side metadata: none of them may
+    cost a Spark job."""
     cat = seed_fixture_catalog(spark)
     for row in cat.table_config:
         if row["TableName"] == "orders":
@@ -107,6 +109,10 @@ def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
     _audited_run(AuditLedger(spark, audit_dir))  # a ledger to reopen
     store = WatermarkStore(spark, str(tmp_path / "state"))
     store.advance("events", "2024-01-01 00:00:00")
+    curated = ManifestTable(spark, str(tmp_path / "curated"))
+    base = curated.write(spark.range(3).withColumnRenamed("id", "k"))
+    merged = curated.merge(spark.range(2, 5).withColumnRenamed("id", "k"), ["k"])
+    evicted = sorted(curated.manifest(base))
     steps = [
         ("validate", cat.validate, []),
         (
@@ -128,6 +134,9 @@ def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
             2,
         ),
         ("create/log/update/finalize_run", lambda: _audited_run(AuditLedger(spark, audit_dir)), "SUCCESS"),
+        ("ManifestTable.versions", curated.versions, [base, merged]),
+        ("ManifestTable.current_version", curated.current_version, merged),
+        ("ManifestTable.vacuum", lambda: sorted(curated.vacuum(keep_last=1)), evicted),
     ]
     for name, step, expected in steps:
         before = _last_job_id(spark)
@@ -362,6 +371,59 @@ def test_no_unused_locals():
                 for name, line in stores.items()
                 if not name.startswith("_") and name not in declared | loads
             ]
+    assert not unused, unused
+
+
+def test_no_unused_imports():
+    """Every name an engine module imports is read in the scope that
+    imports it: a module-level import somewhere in the module (or listed
+    in its ``__all__``), a function-level import inside that function.
+    Package ``__init__`` files import their modules to register queries
+    and are not checked, nor is the ``google`` probe import that gates
+    the protobuf certification."""
+    import ast
+    import pathlib
+
+    import smfg_datawarehouse_spark
+
+    exempt = {("operators/streaming_certs.py", "google")}
+
+    def loads(scope):
+        return {
+            n.id
+            for n in ast.walk(scope)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+
+    root = pathlib.Path(smfg_datawarehouse_spark.__file__).parent
+    unused = []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        exported = {
+            e.value
+            for node in tree.body
+            if isinstance(node, ast.Assign)
+            and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+            for e in node.value.elts
+        }
+        stack = [(tree, loads(tree) | exported)]
+        while stack:
+            node, used = stack.pop()
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    stack.append((child, loads(child)))
+                elif isinstance(child, (ast.Import, ast.ImportFrom)):
+                    if getattr(child, "module", None) == "__future__":
+                        continue
+                    for alias in child.names:
+                        name = alias.asname or alias.name.split(".")[0]
+                        if name not in used and (rel, name) not in exempt:
+                            unused.append(f"{rel}:{child.lineno} {name}")
+                else:
+                    stack.append((child, used))
     assert not unused, unused
 
 

@@ -4,10 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.incremental import (
-    WatermarkStore,
-    run_incremental_extract,
-)
+from smfg_datawarehouse_spark.incremental import WatermarkStore, incremental_slice
 from smfg_datawarehouse_spark.queries import load_events
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -18,24 +15,34 @@ def test_two_run_incremental_no_overlap_no_loss(spark, tmp_path):
     events = load_events(spark, SF_DIR)
     cutoff = F.lit("2024-01-10 00:00:00").cast("timestamp")
 
+    def run(source):
+        """One incremental run: slice past the stored watermark, then
+        advance it to the slice's max (ISO text compares like the ts)."""
+        sliced = incremental_slice(source, "ts", store.get("events"))
+        wm = sliced.agg(F.max("ts")).first()[0]
+        if wm is not None:
+            store.advance("events", wm.isoformat(sep=" "))
+        return sliced
+
     # run 1: only the "arrived so far" prefix exists at the source
     first_batch = events.where(F.col("ts") < cutoff)
-    s1, wm1 = run_incremental_extract(first_batch, "ts", store, "events")
-    n1 = s1.count()
+    n1 = run(first_batch).count()
     assert n1 == first_batch.count()  # first run takes everything
-    assert store.get("events") == wm1
+    wm1 = store.get("events")
 
     # run 2: the full table is visible; only post-watermark rows extract
-    s2, wm2 = run_incremental_extract(events, "ts", store, "events")
+    s2 = run(events)
     n2 = s2.count()
     assert n1 + n2 == events.count()  # no loss
     assert s2.where(F.col("ts") <= F.lit(wm1).cast("timestamp")).count() == 0  # no overlap
+    wm2 = store.get("events")
     assert wm2 > wm1
 
     # run 3: nothing new → empty slice, watermark unchanged
-    s3, wm3 = run_incremental_extract(events, "ts", store, "events")
-    assert s3.count() == 0
-    assert wm3 == store.get("events")
+    assert run(events).count() == 0
+    assert store.get("events") == wm2
+    # a reopened store reads the same watermark back from the ledger
+    assert WatermarkStore(spark, str(tmp_path)).get("events") == wm2
 
 
 def test_reopened_store_never_moves_watermark_back(spark, tmp_path):

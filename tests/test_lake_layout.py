@@ -1,5 +1,5 @@
-"""Lake-layout scale features: partition pruning + bucketed shuffle-free
-joins, pinned against the actual physical plans."""
+"""Lake-layout scale features: partition pruning pinned against the
+actual physical plan, format round trips and compaction."""
 
 from __future__ import annotations
 
@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 from smfg_datawarehouse_spark.plans.inspect import formatted_plan
 from smfg_datawarehouse_spark.queries import load_events
 from smfg_datawarehouse_spark.sources import lake
-from smfg_datawarehouse_spark.sources.lake import (
-    write_bucketed_table,
-    write_partitioned,
-)
+from smfg_datawarehouse_spark.sources.lake import write_partitioned
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -30,35 +27,6 @@ def test_partition_pruning_reads_one_day(spark, tmp_path):
     assert m and "day" in m.group(1), "day filter must prune partitions"
     expected = events.where(F.col("day") == "2024-01-03").count()
     assert q.count() == expected
-
-
-def test_bucketed_join_skips_shuffle(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    write_bucketed_table(
-        orders, "b_orders", ["o_orderkey"], 8, sort_cols=["o_orderkey"]
-    )
-    write_bucketed_table(
-        lineitem, "b_lineitem", ["l_orderkey"], 8, sort_cols=["l_orderkey"]
-    )
-    try:
-        # force SMJ so the assertion targets the exchange, not the strategy
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("b_lineitem").join(
-            spark.table("b_orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = formatted_plan(j)
-        assert re.search(r"^\(\d+\) SortMergeJoin", plan, re.M)
-        # bucketing co-locates both sides: no shuffle exchange anywhere
-        assert not re.search(r"^\(\d+\) Exchange", plan, re.M), plan
-        assert j.count() == lineitem.count()
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_csv_json_round_trip(spark, tmp_path):

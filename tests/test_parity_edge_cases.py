@@ -524,3 +524,77 @@ def test_streaming_index_maintenance_cascade(spark, tmp_path_factory):
     )
     assert not out[37]["admitted"] and out[37]["dup_of"] == 2
     assert out[57]["admitted"] and out[57]["dup_of"] == -1
+
+
+#: Code points on which Java's ``\s``, Python's ``str.split()``/``re`` ``\s``
+#: and RE2's ``\s`` (the DuckDB oracles') disagree in some direction.
+_WS_EDGE = ["\x0b", "\x85", "\xa0", "\u2003", "\x1c"]
+
+
+def test_whitespace_class_matches_duckdb(spark):
+    """``word_tokens``, ``collapse_ws`` and ``fingerprint`` agree with the
+    oracles' ``regexp_split_to_array(…, '\\s+')`` and
+    ``trim(regexp_replace(…, '\\s+', ' ', 'g'))`` on every edge code point,
+    inside a word and at both ends of a document (where DuckDB's ``trim``
+    also strips U+00A0 and U+2003)."""
+    from pyspark.sql import functions as F
+
+    from smfg_datawarehouse_spark.functions import collapse_ws, word_tokens
+    from smfg_datawarehouse_spark.operators.text_analysis import fingerprint
+
+    texts = [f"a{c}b c\t d" for c in _WS_EDGE] + [f"{c} X {c}" for c in _WS_EDGE]
+    rows = list(enumerate(texts))
+    got = {
+        r["id"]: (list(r["tokens"]), list(r["raw_tokens"]), r["collapsed"], r["fp"])
+        for r in spark.createDataFrame(rows, "id long, text string")
+        .select(
+            "id",
+            word_tokens(F.col("text")).alias("tokens"),
+            word_tokens(F.col("text"), lowercase=False).alias("raw_tokens"),
+            collapse_ws(F.col("text")).alias("collapsed"),
+            fingerprint(F.col("text")).alias("fp"),
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    collapse = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+    want = {
+        i: (list(tok), list(raw), col, fp)
+        for i, tok, raw, col, fp in con.execute(
+            "SELECT id,"
+            " list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> ''),"
+            " list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''),"
+            f" {collapse}, md5({collapse}) FROM docs"
+        ).fetchall()
+    }
+    assert got == want
+    # U+000B is where Java's \s and RE2's differ: one token, not two
+    assert got[0][0] == ["a\x0bb", "c", "d"]
+
+
+def test_fixtures_hold_no_whitespace_edge_code_points():
+    """No string value in any fixture contains one of the edge code points,
+    so switching the engine's splits from Java's ``\\s`` to the RE2 class
+    moves no registered result."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from conftest import SF_DIR
+
+    pattern = "[" + "".join(_WS_EDGE) + "]"
+    files = sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*", "*.parquet")))
+    assert files
+    hits = []
+    for path in files:
+        table = pq.read_table(path)
+        for name in table.column_names:
+            col = table.column(name)
+            if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+                if pc.any(pc.match_substring_regex(col, pattern)).as_py():
+                    hits.append(f"{path}:{name}")
+    assert not hits, hits

@@ -151,6 +151,33 @@ def test_all_na_rows_not_landed_realtime(spark, tmp_path):
     assert spark.read.parquet(out).count() == n_src + 1
 
 
+def test_realtime_replayed_batch_lands_nothing(spark, tmp_path):
+    """A micro-batch whose id the ``_landed_batches`` marker already holds
+    (a replay after a crash between the append and the checkpoint commit)
+    appends no rows and logs no REALTIME_MICROBATCH row."""
+    zones = LakeZones(str(tmp_path / "lake"))
+    _setup_raw(spark, zones)
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+    cat = seed_fixture_catalog(spark)
+    for row in cat.table_config:
+        if row["TableName"] == "orders":
+            row["RefreshFrequency"] = "REALTIME"
+    ckpt = tmp_path / "ckpt"
+    marker = ckpt / "tpch" / "orders" / "_landed_batches"
+    marker.parent.mkdir(parents=True)
+    marker.write_text("0\n")
+
+    pid, results = run_realtime_staging(spark, cat, zones, audit, checkpoint_root=str(ckpt))
+    assert results[0].status == "SUCCESS" and results[0].row_count == 0
+    micro = audit.stage_detail().where(
+        (F.col("ProcessID") == pid) & (F.col("StageName") == "REALTIME_MICROBATCH")
+    )
+    assert micro.count() == 0
+    out = zones.staging_table_dir("tpch", "orders")
+    assert not [f for _r, _d, fs in os.walk(out) for f in fs if f.endswith(".parquet")]
+    assert marker.read_text().split() == ["0"]
+
+
 def test_partial_run_on_table_failure(spark, tmp_path):
     zones = LakeZones(str(tmp_path / "lake"))
     _setup_raw(spark, zones)
@@ -207,19 +234,6 @@ def test_audit_id_allocation_resumes(spark, tmp_path):
     audit2 = AuditLedger(spark, str(tmp_path / "audit"))  # fresh engine start
     p2 = audit2.create_process_master()
     assert p2 == p1 + 1
-
-
-def test_writer_injected_timestamps(spark):
-    from smfg_datawarehouse_spark.transform import with_audit_timestamps
-
-    df = spark.range(3).select(F.col("id").alias("k"))
-    stamped = with_audit_timestamps(df)
-    assert {"k", "CreatedAt", "UpdatedAt"} == set(stamped.columns)
-    row = stamped.first()
-    assert row["CreatedAt"] is not None and row["UpdatedAt"] is not None
-    # CreatedAt preserved on re-stamp (ON UPDATE semantics touch only UpdatedAt)
-    restamped = with_audit_timestamps(stamped)
-    assert restamped.columns.count("CreatedAt") == 1
 
 
 def test_retry_hook_recovers_and_ledger_keeps_attempt_history(spark, tmp_path):

@@ -223,32 +223,32 @@ def test_streaming_upsert_foreachbatch_latest_wins(spark, tmp_path):
     declared DW-load stage running at REALTIME cadence."""
     import os
 
+    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from smfg_datawarehouse_spark.operators.dedup import latest_wins_dedup
     from smfg_datawarehouse_spark.queries import load_events
+    from smfg_datawarehouse_spark.transform import merge_upsert
 
     src = load_events(spark, SF_DIR)
     src_dir = str(tmp_path / "src")
     src.repartition(3).write.parquet(src_dir)
 
     def latest(df):
-        return (
-            latest_wins_dedup(
-                df.withColumn("_ord", F.struct("ts", "event_id")), ["user_id"], "_ord"
-            ).drop("_ord")
-        )
+        w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
+        return df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
 
     expected = _rowset(latest(src))
 
     target_dir = str(tmp_path / "curated")
 
     def sink(batch_df, _bid):
-        merged = batch_df
+        merged = latest(batch_df)
         if os.path.exists(target_dir):
-            merged = merged.unionByName(spark.read.parquet(target_dir))
-        # materialize before overwriting the path the union just read from
-        out = latest(merged).localCheckpoint()
+            merged = merge_upsert(
+                spark.read.parquet(target_dir), merged, ["user_id"], precedence=["ts", "event_id"]
+            )
+        # materialize before overwriting the path the merge just read from
+        out = merged.localCheckpoint()
         out.write.mode("overwrite").parquet(target_dir)
 
     q = (
@@ -731,7 +731,7 @@ def test_s25_mv_refresh_batch_split_invariance(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from smfg_datawarehouse_spark.queries import t
-    from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     orders = t(spark, "/root/testdata/sf0.001", "orders")
 
@@ -748,7 +748,7 @@ def test_s25_mv_refresh_batch_split_invariance(spark, tmp_path):
     def run(n_files: int, tag: str):
         raw = str(tmp_path / f"raw{tag}")
         orders.repartition(n_files).write.mode("overwrite").parquet(raw)
-        vt = VersionedTable(spark, str(tmp_path / f"mv{tag}"))
+        vt = ManifestTable(spark, str(tmp_path / f"mv{tag}"))
 
         def refresh(batch_df, batch_id):
             delta = partial(batch_df)

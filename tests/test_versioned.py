@@ -1,63 +1,102 @@
-"""Snapshot-versioned table: atomic visibility, time travel, MERGE, vacuum,
-and the streaming foreachBatch-MERGE path on top of it."""
+"""Curated-table versions on the manifest commit: atomic visibility, time
+travel, MERGE (conditional on its base version), vacuum, and the streaming
+foreachBatch-MERGE path on top of it."""
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from smfg_datawarehouse_spark.sources.versioned import VersionedTable
+from smfg_datawarehouse_spark.sources.manifest import CommitConflict, ManifestTable
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.select("k", "v").collect())
 
 
+def _latest_per_user(df):
+    """Reference latest-wins state: the newest (ts, event_id) row per user."""
+    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
+    return df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
+
+
 def test_versioned_write_merge_time_travel_vacuum(spark, tmp_path):
-    vt = VersionedTable(spark, str(tmp_path / "tbl"))
+    vt = ManifestTable(spark, str(tmp_path / "tbl"))
     assert vt.versions() == [] and vt.current_version() is None
 
-    v0 = vt.write(spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING"))
-    assert v0 == 0 and vt.versions() == [0]
+    v1 = vt.write(spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING"))
+    assert v1 == 1 and vt.versions() == [1]
 
     # MERGE: key 2 updated, key 3 inserted, key 1 survives untouched
-    v1 = vt.merge(
+    v2 = vt.merge(
         spark.createDataFrame([(2, "B"), (3, "c")], "k INT, v STRING"), ["k"]
     )
-    assert v1 == 1
+    assert v2 == 2
     assert _rows(vt.read()) == [(1, "a"), (2, "B"), (3, "c")]
     # time travel: the old snapshot is intact
-    assert _rows(vt.read(version=0)) == [(1, "a"), (2, "b")]
+    assert _rows(vt.read(version=v1)) == [(1, "a"), (2, "b")]
 
-    v2 = vt.merge(spark.createDataFrame([(1, "A")], "k INT, v STRING"), ["k"])
-    assert vt.versions() == [0, 1, 2]
+    v3 = vt.merge(spark.createDataFrame([(1, "A")], "k INT, v STRING"), ["k"])
+    assert vt.versions() == [v1, v2, v3]
+    only_v1 = set(vt.manifest(v1)) - set(vt.manifest(v2)) - set(vt.manifest(v3))
     removed = vt.vacuum(keep_last=2)
-    assert removed == [0] and vt.versions() == [1, 2]
+    assert set(removed) == only_v1 and vt.versions() == [v2, v3]
+    assert not any(os.path.exists(os.path.join(vt.path, f)) for f in removed)
+    with pytest.raises(FileNotFoundError):
+        vt.read(version=v1)
     assert _rows(vt.read()) == [(1, "A"), (2, "B"), (3, "c")]
-    assert v2 == 2
 
 
 def test_versioned_uncommitted_snapshot_invisible(spark, tmp_path):
-    """A version directory without _SUCCESS (crashed write) is never
-    visible and is cleaned by vacuum."""
-    vt = VersionedTable(spark, str(tmp_path / "tbl"))
-    vt.write(spark.createDataFrame([(1, "a")], "k INT, v STRING"))
-    # simulate a crash: v=1 exists but has no _SUCCESS marker
-    dead = tmp_path / "tbl" / "v=1"
-    dead.mkdir()
-    (dead / "part-junk.parquet").write_bytes(b"not parquet")
-    assert vt.versions() == [0]
+    """A staged-but-uncommitted batch and a manifest written without its
+    CURRENT swap (a crash mid-commit) are never visible, and vacuum
+    reclaims both."""
+    vt = ManifestTable(spark, str(tmp_path / "tbl"))
+    v1 = vt.write(spark.createDataFrame([(1, "a")], "k INT, v STRING"))
+    # simulate a crash: a batch staged, its manifest written, CURRENT not swapped
+    staged = vt.stage(spark.createDataFrame([(2, "b")], "k INT, v STRING"))
+    with open(vt._manifest_path(v1 + 1), "w") as fh:
+        json.dump({"version": v1 + 1, "files": staged, "txns": {}}, fh)
+    assert vt.versions() == [v1] and vt.current_version() == v1
     assert _rows(vt.read()) == [(1, "a")]
-    vt.vacuum(keep_last=1)
-    assert not os.path.exists(str(dead))
+    with pytest.raises(FileNotFoundError):
+        vt.read(version=v1 + 1)
+    assert set(vt.vacuum(keep_last=1)) == set(staged)
+    assert not any(os.path.exists(os.path.join(vt.path, f)) for f in staged)
+    assert not os.path.exists(vt._manifest_path(v1 + 1))
+    assert _rows(vt.read()) == [(1, "a")]
+
+
+def test_merge_from_stale_base_conflicts(spark, tmp_path):
+    """Two writers merge from the same base: the one that commits second
+    gets CommitConflict, and the table keeps the first merge's result."""
+    schema = "k INT, v STRING"
+    first = ManifestTable(spark, str(tmp_path / "tbl"))
+    second = ManifestTable(spark, str(tmp_path / "tbl"))
+    base = first.write(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+
+    stage = second._stage
+
+    def stage_then_lose_race(df, batch):
+        files = stage(df, batch)  # second has read and staged from `base`
+        first.merge(spark.createDataFrame([(2, "first")], schema), ["k"])
+        return files
+
+    second._stage = stage_then_lose_race
+    with pytest.raises(CommitConflict):
+        second.merge(spark.createDataFrame([(1, "second")], schema), ["k"])
+    assert first.versions() == [base, base + 1]
+    assert _rows(first.read()) == [(1, "a"), (2, "first")]
 
 
 def test_versioned_streaming_merge(spark, tmp_path):
-    """foreachBatch MERGE into a VersionedTable: after N micro-batches the
-    table equals the batch latest-wins state, with one snapshot per batch
+    """foreachBatch MERGE into a curated table: after N micro-batches the
+    table equals the batch latest-wins state, with one version per batch
     and full history retained until vacuum."""
-    from smfg_datawarehouse_spark.operators.dedup import latest_wins_dedup
     from smfg_datawarehouse_spark.queries import load_events
 
     SF_DIR = "/root/testdata/sf0.001"
@@ -65,23 +104,14 @@ def test_versioned_streaming_merge(spark, tmp_path):
     src_dir = str(tmp_path / "src")
     src.repartition(3).write.parquet(src_dir)
 
-    vt = VersionedTable(spark, str(tmp_path / "curated"))
-
-    def latest(df):
-        return latest_wins_dedup(
-            df.withColumn("_ord", F.struct("ts", "event_id")), ["user_id"], "_ord"
-        ).drop("_ord")
+    vt = ManifestTable(spark, str(tmp_path / "curated"))
 
     def sink(batch_df, _bid):
-        # ts-aware upsert: union the previous snapshot with the batch and
-        # keep the latest row per user — plain updates-win MERGE would
-        # regress a user if a later batch carried an older event. Reading
-        # the old snapshot while writing the new one is safe: the write
-        # lands in a fresh v=N+1 directory.
-        merged = batch_df
-        if vt.current_version() is not None:
-            merged = vt.read().unionByName(batch_df)
-        vt.write(latest(merged))
+        # ts-aware upsert: the precedence merge keeps the newest row per
+        # user — plain updates-win MERGE would regress a user if a later
+        # batch carried an older event. Reading the old snapshot while
+        # staging the new one is safe: the merge stages a fresh batch dir.
+        vt.merge(_latest_per_user(batch_df), ["user_id"], precedence=["ts", "event_id"])
 
     q = (
         spark.readStream.schema(src.schema)
@@ -97,15 +127,15 @@ def test_versioned_streaming_merge(spark, tmp_path):
     def rowset(df):
         return sorted(tuple(str(v) for v in r) for r in df.collect())
 
-    assert len(vt.versions()) == 3  # one snapshot per micro-batch
-    assert rowset(vt.read()) == rowset(latest(src))
+    assert len(vt.versions()) == 3  # one version per micro-batch
+    assert rowset(vt.read()) == rowset(_latest_per_user(src))
 
 
 def test_merge_precedence_newer_wins(spark, tmp_path):
     """Conditional merge: a STALE update (lower precedence tuple) must not
     clobber the newer row already in the table; a newer one must; updates
     win exact-tuple ties. Order of merges can't change the outcome."""
-    vt = VersionedTable(spark, str(tmp_path / "tbl"))
+    vt = ManifestTable(spark, str(tmp_path / "tbl"))
     schema = "k INT, seq INT, v STRING"
     vt.write(spark.createDataFrame([(1, 5, "t5"), (2, 1, "t1")], schema))
 
@@ -126,7 +156,7 @@ def test_merge_precedence_newer_wins(spark, tmp_path):
     assert (1, 5, "tie") in got
 
     # reversed arrival order of the same two updates -> same final row
-    vt2 = VersionedTable(spark, str(tmp_path / "tbl2"))
+    vt2 = ManifestTable(spark, str(tmp_path / "tbl2"))
     vt2.write(spark.createDataFrame([(9, 2, "a")], schema))
     vt2.merge(spark.createDataFrame([(9, 7, "new")], schema), ["k"], ["seq"])
     vt2.merge(spark.createDataFrame([(9, 4, "old")], schema), ["k"], ["seq"])
@@ -134,23 +164,23 @@ def test_merge_precedence_newer_wins(spark, tmp_path):
 
 
 def test_snapshot_diff_classification(spark, tmp_path):
-    """diff(v0, v1) classifies insert/delete/update/unchanged with
+    """diff(old, new) classifies insert/delete/update/unchanged with
     null-safe comparison (NULL->NULL is unchanged, NULL->value is update)."""
-    vt = VersionedTable(spark, str(tmp_path / "tbl"))
+    vt = ManifestTable(spark, str(tmp_path / "tbl"))
     schema = "k INT, a STRING, b INT"
-    vt.write(
+    old = vt.write(
         spark.createDataFrame(
             [(1, "keep", 10), (2, "upd", 20), (3, "del", 30), (4, None, None)],
             schema,
         )
     )
-    vt.write(
+    new = vt.write(
         spark.createDataFrame(
             [(1, "keep", 10), (2, "UPD", 20), (4, None, 40), (5, "ins", 50)],
             schema,
         )
     )
-    d = {r["k"]: r for r in vt.diff(0, 1, ["k"]).collect()}
+    d = {r["k"]: r for r in vt.diff(old, new, ["k"]).collect()}
     assert d[1]["change_type"] == "unchanged"
     assert d[2]["change_type"] == "update"
     assert d[2]["old_a"] == "upd" and d[2]["new_a"] == "UPD"
@@ -163,11 +193,11 @@ def test_snapshot_diff_classification(spark, tmp_path):
 def test_snapshot_diff_null_key(spark, tmp_path):
     """A row whose merge key is NULL must match itself across versions
     (null-safe key join), not be misread as a delete+insert pair."""
-    vt = VersionedTable(spark, str(tmp_path / "tbl"))
+    vt = ManifestTable(spark, str(tmp_path / "tbl"))
     schema = "k INT, v STRING"
-    vt.write(spark.createDataFrame([(None, "same"), (1, "a")], schema))
-    vt.write(spark.createDataFrame([(None, "SAME"), (1, "a")], schema))
-    d = vt.diff(0, 1, ["k"]).collect()
+    old = vt.write(spark.createDataFrame([(None, "same"), (1, "a")], schema))
+    new = vt.write(spark.createDataFrame([(None, "SAME"), (1, "a")], schema))
+    d = vt.diff(old, new, ["k"]).collect()
     by_key = {r["k"]: r for r in d}
     assert len(d) == 2  # NULL key produced ONE row, not delete+insert
     assert by_key[None]["change_type"] == "update"
@@ -180,7 +210,7 @@ def test_precedence_merge_replay_idempotent(spark, tmp_path):
     replay after a crash between merge and checkpoint commit) must leave
     the table content unchanged — the precedence tuple makes the merge
     idempotent, so the CDC path tolerates redelivery without markers."""
-    vt = VersionedTable(spark, str(tmp_path / "tbl"))
+    vt = ManifestTable(spark, str(tmp_path / "tbl"))
     schema = "k INT, seq INT, v STRING"
     vt.write(spark.createDataFrame([(1, 1, "a"), (2, 9, "z")], schema))
     batch = spark.createDataFrame([(1, 5, "b"), (3, 2, "c")], schema)
@@ -191,24 +221,24 @@ def test_precedence_merge_replay_idempotent(spark, tmp_path):
 
 
 def test_apply_changeset_roundtrip(spark, tmp_path):
-    """apply_changeset(v0, diff(v0, v1)) == v1, whether or not the
+    """apply_changeset(old, diff(old, new)) == new, whether or not the
     changeset still carries its 'unchanged' rows."""
     from smfg_datawarehouse_spark.transform import apply_changeset
 
-    vt = VersionedTable(spark, str(tmp_path / "tbl"))
+    vt = ManifestTable(spark, str(tmp_path / "tbl"))
     schema = "k INT, a STRING, b INT"
-    vt.write(
+    old = vt.write(
         spark.createDataFrame(
             [(1, "keep", 10), (2, "upd", 20), (3, "del", 30)], schema
         )
     )
-    vt.write(
+    new = vt.write(
         spark.createDataFrame(
             [(1, "keep", 10), (2, "UPD", 21), (5, "ins", 50)], schema
         )
     )
-    want = sorted(tuple(r) for r in vt.read(1).collect())
-    full = vt.diff(0, 1, ["k"])
+    want = sorted(tuple(r) for r in vt.read(new).collect())
+    full = vt.diff(old, new, ["k"])
     for changes in (full, full.where("change_type <> 'unchanged'")):
-        got = apply_changeset(vt.read(0), changes, ["k"])
+        got = apply_changeset(vt.read(old), changes, ["k"])
         assert sorted(tuple(r) for r in got.collect()) == want
