@@ -129,6 +129,10 @@ def max_event_value(path: str, schema: T.StructType, col: str) -> int:
     return int(pc.max(events[col]).as_py() or 0)
 
 
+#: CreatedBy of every row the engine writes unless a call names another.
+CREATED_BY = "engine"
+
+
 def latest_wins(df: DataFrame, id_col: str) -> DataFrame:
     """Current-state view of an event table: one row per id, highest Seq."""
     w = W.partitionBy(id_col).orderBy(F.col("Seq").desc())
@@ -138,10 +142,9 @@ def latest_wins(df: DataFrame, id_col: str) -> DataFrame:
 class AuditLedger:
     """L1-L6 operations (SURVEY §2.8) over an event-sourced parquet ledger."""
 
-    def __init__(self, spark: SparkSession, base_dir: str, created_by: str = "engine"):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base_dir = base_dir
-        self.created_by = created_by
         self._lock = threading.Lock()
         self._process_dir = os.path.join(base_dir, "process_master")
         self._stage_dir = os.path.join(base_dir, "stage_detail")
@@ -152,9 +155,11 @@ class AuditLedger:
             max_event_value(self._stage_dir, STAGE_EVENT_SCHEMA, "StageDetailID") + 1
         )
         self._seq = 0
-        # driver-side cache of open rows so updates can re-emit full state
+        # driver-side cache of open rows so updates can re-emit full state;
+        # finalize_run releases a process's stage rows (they are on disk)
         self._process_state: dict[int, dict] = {}
         self._stage_state: dict[int, dict] = {}
+        self._process_stages: dict[int, list[int]] = {}
 
     # -- plumbing ----------------------------------------------------------
 
@@ -183,7 +188,7 @@ class AuditLedger:
                 ProcessStartAt=now,
                 CurrentStage=current_stage,
                 Status=status,
-                CreatedBy=created_by or self.created_by,
+                CreatedBy=created_by or CREATED_BY,
                 EventAt=now,
             )
             self._process_state[pid] = state
@@ -247,10 +252,11 @@ class AuditLedger:
                 Status=status,
                 ErrorMessage=error_msg,
                 OutputPath=output_path,
-                CreatedBy=created_by or self.created_by,
+                CreatedBy=created_by or CREATED_BY,
                 EventAt=now,
             )
             self._stage_state[sid] = state
+            self._process_stages.setdefault(process_id, []).append(sid)
             append_event(self._stage_dir, STAGE_EVENT_SCHEMA, state)
             return sid
 
@@ -311,15 +317,19 @@ class AuditLedger:
         rows) are excluded from the unit count entirely.
 
         The rollup reads this ledger's in-memory stage state, so only a
-        process opened by this ledger can be finalized."""
+        process opened by this ledger can be finalized. It reads only this
+        process's rows and then releases them: their events are already on
+        disk, so a long-running scheduler's ledger holds the stage rows of
+        unfinished runs only."""
         with self._lock:
             # only create_process_master sets ProcessStartAt
             if "ProcessStartAt" not in self._process_state.get(process_id, {}):
                 raise ValueError(f"process {process_id} was not opened by this ledger")
             rows = [
                 (r["StageDetailID"], r["StageName"], r["TableName"], r["Status"])
-                for r in self._stage_state.values()
-                if r.get("ProcessID") == process_id
+                for r in map(
+                    self._stage_state.pop, self._process_stages.pop(process_id, [])
+                )
             ]
         final: dict[tuple, str] = {}
         for sid, stage, table, status in sorted(rows):

@@ -14,7 +14,6 @@ from smfg_datawarehouse_spark.functions.vectors import (
 from smfg_datawarehouse_spark.functions.text import (
     WS_RUN,
     attach_shingle_df,
-    char_shingles,
     collapse_ws,
     shingle_table,
     term_scoped_postings,
@@ -29,7 +28,6 @@ __all__ = [
     "l2_norm",
     "WS_RUN",
     "attach_shingle_df",
-    "char_shingles",
     "collapse_ws",
     "shingle_table",
     "term_scoped_postings",

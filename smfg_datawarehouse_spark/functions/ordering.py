@@ -59,8 +59,6 @@ def distributed_ntile(
     order_cols: list[str],
     band: Column,
     out_col: str,
-    n_total: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """``NTILE(n) OVER (ORDER BY order_cols)`` (1-based, exact SQL
     semantics: the first ``N mod n`` buckets get ``ceil(N/n)`` rows, the
@@ -78,16 +76,12 @@ def distributed_ntile(
     follows the :func:`global_ordinals` monotonicity contract.
 
     ``df`` is referenced twice (band offsets + ordinal join) and its row
-    count is needed for the bucket split, so by default the input is
+    count is needed for the bucket split, so the input is
     ``localCheckpoint``-ed first — one materialization instead of three
-    upstream replays. Callers layering several ntiles over the SAME
-    frame should checkpoint once themselves, pass ``checkpoint=False``
-    and the shared ``n_total`` (a bounded scalar driver read, same class
-    as a config/centroid read)."""
-    if checkpoint:
-        df = df.localCheckpoint()
-    if n_total is None:
-        n_total = df.count()
+    upstream replays — and then counted (a bounded scalar driver read,
+    same class as a config/centroid read)."""
+    df = df.localCheckpoint()
+    n_total = df.count()
     rn = "_nt_rn"
     with_rn = global_ordinals(df, order_cols, band, out_col=rn)
     # exact Python-int split (ordinals stay BIGINT end-to-end; the

@@ -23,21 +23,17 @@ def salted_join(
     small: DataFrame,
     keys: list[str],
     salt_from: Column,
-    buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: the big side salts each row into one of
-    ``buckets`` sub-keys (deterministic hash of ``salt_from``); the small
-    side replicates ``buckets``× so every sub-key finds its match. One
-    hot key becomes ``buckets`` parallel tasks at the cost of replicating
-    the small side — the classic trade when broadcast doesn't fit."""
+    """Skew-resistant inner equi-join: the big side salts each row into
+    one of 8 sub-keys (deterministic hash of ``salt_from``); the small
+    side replicates 8× so every sub-key finds its match. One hot key
+    becomes 8 parallel tasks at the cost of replicating the small side —
+    the classic trade when broadcast doesn't fit."""
     b = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(salt_from), F.lit(buckets)).cast("int")
+        "_salt", F.pmod(F.xxhash64(salt_from), F.lit(8)).cast("int")
     )
-    s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-    return b.join(s, [*keys, "_salt"], how).drop("_salt")
+    s = small.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(7))))
+    return b.join(s, [*keys, "_salt"], "inner").drop("_salt")
 
 
 def salted_two_stage_agg(

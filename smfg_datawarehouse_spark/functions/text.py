@@ -28,23 +28,6 @@ from pyspark.sql import functions as F
 WS_RUN = r"[\t\n\f\r ]+"
 
 
-def char_shingles(text: Column, k: int = 5, lowercase: bool = True) -> Column:
-    """Distinct character k-grams of ``text`` as ``array<string>``.
-
-    Empty array for strings shorter than k.
-    """
-    t = F.lower(text) if lowercase else text
-    n = F.length(t)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: t.substr(i, F.lit(k)),
-            )
-        )
-    )
-
-
 def collapse_ws(text: Column) -> Column:
     r"""Lowercased ``text`` with each :data:`WS_RUN` replaced by one space
     and Unicode space separators (category Zs) stripped from both ends:
@@ -65,15 +48,10 @@ def word_tokens(text: Column, lowercase: bool = True) -> Column:
 
 
 def shingle_table(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    mode: str = "word",
-    with_df: bool = False,
-    checkpoint: bool = False,
+    docs: DataFrame, with_df: bool = False, checkpoint: bool = False
 ) -> DataFrame:
-    """(doc_id, shingle[, df]) — exploded DISTINCT k-gram table of a corpus.
+    """(doc_id, shingle[, df]) — exploded DISTINCT word 3-gram table of a
+    corpus with ``doc_id`` and ``text`` columns.
 
     - Widens the input with ``session.ensure_min_parallelism`` before the
       explode: a compact upstream source (one parquet row group at test
@@ -94,10 +72,8 @@ def shingle_table(
     """
     from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
-    make = word_shingles if mode == "word" else char_shingles
     sh = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(make(F.col(text_col), k)).alias("shingle"),
+        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
     )
     if with_df:
         sh = attach_shingle_df(sh)
@@ -106,7 +82,7 @@ def shingle_table(
     return sh
 
 
-def attach_shingle_df(sh: DataFrame, col: str = "shingle") -> DataFrame:
+def attach_shingle_df(sh: DataFrame) -> DataFrame:
     """Attach global document frequency to an exploded (id, shingle)
     frame as a ``df`` column — via ``count(*) over (partition by
     shingle)``, ONE shingle-keyed exchange that every df consumer
@@ -120,16 +96,11 @@ def attach_shingle_df(sh: DataFrame, col: str = "shingle") -> DataFrame:
     from pyspark.sql import Window as W
 
     return sh.withColumn(
-        "df", F.count(F.lit(1)).over(W.partitionBy(col))
+        "df", F.count(F.lit(1)).over(W.partitionBy("shingle"))
     )
 
 
-def term_scoped_postings(
-    docs: DataFrame,
-    terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def term_scoped_postings(docs: DataFrame, terms: list[str]) -> DataFrame:
     """Positional postings (doc_id, pos, tok) FILTERED to ``terms``
     scan-side — the shared serving kernel of the positional-retrieval
     ladder (x150 exact phrase, x162 NEAR/k): one repartitioned scan +
@@ -143,22 +114,21 @@ def term_scoped_postings(
     return (
         ensure_min_parallelism(docs)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(word_tokens(F.col(text_col))).alias("pos", "tok"),
+            "doc_id", F.posexplode(word_tokens(F.col("text"))).alias("pos", "tok")
         )
         .where(F.col("tok").isin(list(terms)))
         .localCheckpoint(eager=False)
     )
 
 
-def word_shingles(text: Column, k: int = 3, lowercase: bool = True) -> Column:
+def word_shingles(text: Column, k: int = 3) -> Column:
     """Distinct word k-gram shingles (Broder w-shingling) as ``array<string>``.
 
     Far more discriminative than character k-grams on small-vocabulary text
     (char-5-gram document frequency is ~100× higher on the test corpus),
     which keeps shingle-join dedup cost near-linear.
     """
-    tokens = word_tokens(text, lowercase)
+    tokens = word_tokens(text)
     n = F.size(tokens)
     return F.when(n < k, F.array().cast("array<string>")).otherwise(
         F.array_distinct(

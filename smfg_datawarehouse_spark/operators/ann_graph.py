@@ -37,17 +37,12 @@ def _fold_cosine(a: Column, b: Column) -> Column:
     )
 
 
-def knn_graph(
-    emb: DataFrame,
-    k: int = KNN_K,
-    nprobe: int = KNN_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, neighbor_id, cos_sim, rank) — IVF-celled k-NN graph.
+def knn_graph(emb: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim, rank) — IVF-celled ``KNN_K``-NN
+    graph.
 
     One Arrow-batched corpus pass assigns every vector to its nearest
-    coarse cell AND derives its ``nprobe`` probe cells: the (bounded)
+    coarse cell AND derives its ``KNN_NPROBE`` probe cells: the (bounded)
     centroid matrix is broadcast as numpy and each batch scores against
     it vectorized (``_lr_cosine``'s per-dimension left fold — the same
     certified kernel x10/x11 use, bit-identical to the SQL
@@ -74,8 +69,8 @@ def knn_graph(
     )
 
     vecs = emb.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     mod, rem = _CENT_RULE
     cids, cmat = _collect_matrix(
@@ -103,7 +98,7 @@ def knn_graph(
                 "vn": np.sqrt(vn_acc),
             }
             picked = [
-                acids[np.lexsort((acids, -sims[i]))[:nprobe]].tolist()
+                acids[np.lexsort((acids, -sims[i]))[:KNN_NPROBE]].tolist()
                 for i in range(len(pdf))
             ]
             rows["cell"] = [p[0] for p in picked]
@@ -149,7 +144,7 @@ def knn_graph(
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= KNN_K)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
 

@@ -39,13 +39,13 @@ from smfg_datawarehouse_spark.session import ensure_min_parallelism, local_rows_
 SQ8_COARSE_K = 50
 
 
-def _sq8_codes(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, v double[], scale, c int64-codes[]) with the x13 symmetric-SQ8
+def _sq8_codes(df: DataFrame) -> DataFrame:
+    """(vid, v double[], scale, c int64-codes[]) of ``embedding`` with the x13 symmetric-SQ8
     layout: scale = max_abs/127, code = clamp(floor(x/scale + 0.5), ±127).
     Zero vectors code to all-zero (scale 0). Pure scan-side expressions."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     base = df.select(
-        F.col(id_col).cast("long").alias("vid"), v.alias("v"),
+        F.col("vec_id").cast("long").alias("vid"), v.alias("v"),
         (max_abs(v) / 127.0).alias("scale"),
     )
     scale = F.col("scale")
@@ -61,19 +61,12 @@ def _sq8_codes(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def sq8_rerank_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    coarse_k: int = SQ8_COARSE_K,
-) -> DataFrame:
+def sq8_rerank_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Two-stage ANN, the production memory-bound layout: the corpus is
     scanned as int8 codes (4× smaller than float32, 8× smaller than the
-    double working set), a coarse top-``coarse_k`` per query is selected on
-    the compressed approximation, and only those candidates are re-scored
-    with exact double cosine for the final top-``k``.
+    double working set), a coarse top-``SQ8_COARSE_K`` per query is selected
+    on the compressed approximation, and only those candidates are
+    re-scored with exact double cosine for the final top-10.
 
     Coarse score = int-dot(codes)·scale_c·scale_q — the integer dot is
     EXACT (≤ dim·127² fits long), so the approximation itself is
@@ -84,7 +77,7 @@ def sq8_rerank_topk(
     (broadcast — KBs) back to corpus vectors, so full-precision vectors
     are touched only for 0.01% of the corpus."""
     qids, qc, qsc = _collect_matrix(
-        _sq8_codes(queries, id_col, vec_col), "vid", "c", extra=(F.col("scale"),)
+        _sq8_codes(queries), "vid", "c", extra=(F.col("scale"),)
     )
 
     def score(pdf, ids, qscale, qcode):
@@ -94,15 +87,15 @@ def sq8_rerank_topk(
         idot = cm @ qcode.T  # exact int64
         # mirror the oracle: (CAST(idot AS DOUBLE) * scale_c) * scale_q
         approx = (idot.astype(np.float64) * csc[:, None]) * qscale[None, :]
-        yield _topk_rows(approx, nid, ids, coarse_k)
+        yield _topk_rows(approx, nid, ids, SQ8_COARSE_K)
 
     coarse = _scan_topk(
-        _sq8_codes(corpus, id_col, vec_col).select("vid", "scale", "c"),
+        _sq8_codes(corpus).select("vid", "scale", "c"),
         (qids, qsc, qc.astype(np.int64)),
         score,
-        coarse_k,
+        SQ8_COARSE_K,
     ).select("query_id", "neighbor_id", F.col("cos_sim").alias("approx_score"))
-    return _exact_rerank(coarse, corpus, queries, k, id_col, vec_col)
+    return _exact_rerank(coarse, corpus, queries, 10)
 
 
 _SQ8_ORACLE = f"""
@@ -170,7 +163,7 @@ def x59_sq8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle — the full compressed-search pipeline is hash-certified."""
     e = t(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") % 25 == 0)
-    return sq8_rerank_topk(e, queries, k=10, coarse_k=SQ8_COARSE_K)
+    return sq8_rerank_topk(e, queries)
 
 
 # ---------------------------------------------------------------------------
@@ -209,20 +202,11 @@ def _pq_best(sv_sql: str, cb_sub: list[tuple[int, list[float]]]):
     )
 
 
-def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    m: int = PQ_M,
-    kc: int = PQ_K,
-    coarse_k: int = PQ_COARSE_K,
-) -> DataFrame:
-    """Product-quantization ANN (Jégou et al., IEEE TPAMI 2011 — the
+def pq_adc_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Product-quantization ANN top-10 (Jégou et al., IEEE TPAMI 2011 — the
     memory-bound complement to :func:`sq8_rerank_topk`'s scalar
-    quantization): vectors are split into ``m`` subspaces, each subspace
-    gets its own ``kc``-entry codebook (deterministic Lloyd: lowest-id
+    quantization): vectors are split into ``m = PQ_M`` subspaces, each subspace
+    gets its own ``kc = PQ_K``-entry codebook (deterministic Lloyd: lowest-id
     seeds + one micro-grid update round — the same kernel/grid as
     :func:`kmeans_lloyd`), and the corpus is stored as ``m`` small codes
     per vector (m·log2(kc) bits ≈ 2 bytes/vector here vs 256 bytes of
@@ -243,23 +227,23 @@ def pq_adc_topk(
     tables broadcast (:func:`_scan_topk`: nothing pair-shaped shuffles,
     partial top-k per partition); the exact-cosine
     rerank (:func:`_exact_rerank`) touches full-precision vectors for only
-    Q×coarse_k candidates (broadcast join)."""
+    Q×``PQ_COARSE_K`` candidates (broadcast join)."""
     # widen before persist (r9): the corpus arrives as one scan split at
     # test scale, so the Lloyd assign (m·kc distance evals per row)
     # otherwise runs as ONE task. r10 (VERDICT r9 item 3): gated on the
     # plan — a naturally-wide scan keeps its partitioning. The ADC scan
     # reads ``proj`` and widens it itself (:func:`_scan_topk`), so the
     # returned plan widens once.
-    proj = _vectors(corpus, id_col, vec_col, "vec_id", "v")
+    proj = _vectors(corpus, "vec_id", "embedding", "vec_id", "v")
     vecs = ensure_min_parallelism(proj).persist()
     try:
-        first = vecs.orderBy("vec_id").limit(kc).collect()
+        first = vecs.orderBy("vec_id").limit(PQ_K).collect()
         if not first:
             raise ValueError("empty corpus")
         dim = len(first[0]["v"])
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        dsub = dim // m
+        if dim % PQ_M:
+            raise ValueError(f"dim {dim} not divisible by PQ_M={PQ_M}")
+        dsub = dim // PQ_M
         # init: sub-slices of the kc lowest-id vectors, micro-quantized
         cb: dict[int, list[tuple[int, list[float]]]] = {
             sub: [
@@ -269,7 +253,7 @@ def pq_adc_topk(
                 )
                 for cid, row in enumerate(first)
             ]
-            for sub in range(m)
+            for sub in range(PQ_M)
         }
         # ONE Lloyd update round across ALL subspaces in a single job.
         # r10 (guide §4.2, the l25/x57 kernel promotion): the r9 form
@@ -285,7 +269,7 @@ def pq_adc_topk(
         # so the driver-side means are bit-identical.
         def _cb_mats(cb_state):
             mats = []
-            for sub_ in range(m):
+            for sub_ in range(PQ_M):
                 entries = cb_state[sub_]  # cid-ascending by construction
                 mats.append(
                     (
@@ -298,9 +282,9 @@ def pq_adc_topk(
             return mats
 
         def _assign_subs(V, mats):
-            """(n×dim) → (n×m) best-cid per subspace, expression-identical."""
-            picks = np.empty((len(V), m), dtype=np.int64)
-            for sub_ in range(m):
+            """(n×dim) → (n×PQ_M) best-cid per subspace, expression-identical."""
+            picks = np.empty((len(V), PQ_M), dtype=np.int64)
+            for sub_ in range(PQ_M):
                 cids_, C = mats[sub_]
                 S = V[:, sub_ * dsub:(sub_ + 1) * dsub]
                 D = np.zeros((len(S), len(C)))
@@ -322,7 +306,7 @@ def pq_adc_topk(
                 picks = _assign_subs(V, mats0)
                 micros = micro_np(V)
                 out = {"sub": [], "cid": [], "dim": [], "ms": [], "n": []}
-                for sub_ in range(m):
+                for sub_ in range(PQ_M):
                     Ssub = micros[:, sub_ * dsub:(sub_ + 1) * dsub]
                     for cid_ in np.unique(picks[:, sub_]):
                         rows_ = Ssub[picks[:, sub_] == cid_]
@@ -358,7 +342,7 @@ def pq_adc_topk(
                 )
                 for cid, cv in cb[sub]
             ]
-            for sub in range(m)
+            for sub in range(PQ_M)
         }
 
         mats1 = _cb_mats(cb)
@@ -366,10 +350,10 @@ def pq_adc_topk(
         # per-query ADC tables: exact left-to-right folds on the driver
         # (Q·m·kc·dsub float ops — trivial), micro-quantized to int64 so
         # the executor-side sum over subspaces is exact integer arithmetic
-        qids, qmat = _collect_matrix(queries, id_col, vec_col)
-        dt = np.empty((len(qids), m, kc), dtype=np.int64)
+        qids, qmat = _collect_matrix(queries, "vec_id", "embedding")
+        dt = np.empty((len(qids), PQ_M, PQ_K), dtype=np.int64)
         for qi in range(len(qids)):
-            for sub in range(m):
+            for sub in range(PQ_M):
                 qoff = sub * dsub
                 for cid, cv in cb[sub]:
                     acc = 0.0
@@ -384,17 +368,17 @@ def pq_adc_topk(
             # assignment kernel), then sum its table lookups
             cm = _assign_subs(np.stack(pdf["v"].values).astype(np.float64), mats1)
             approx = np.zeros((len(nid), len(ids)), dtype=np.int64)
-            for sub in range(m):
+            for sub in range(PQ_M):
                 # dtab[:, sub, :] is Q×kc; gather per corpus code → Q×b
                 approx += dtab[:, sub, :][:, cm[:, sub]].T
             # negate so _topk_rows' score-DESC order = distance ASC;
             # int64/1e6 → double is exact at these magnitudes
-            yield _topk_rows(-(approx.astype(np.float64) / 1e6), nid, ids, coarse_k)
+            yield _topk_rows(-(approx.astype(np.float64) / 1e6), nid, ids, PQ_COARSE_K)
 
-        coarse = _scan_topk(proj, (qids, dt), score, coarse_k).select(
+        coarse = _scan_topk(proj, (qids, dt), score, PQ_COARSE_K).select(
             "query_id", "neighbor_id", (-F.col("cos_sim")).alias("adc_dist")
         )
-        return _exact_rerank(coarse, corpus, queries, k, id_col, vec_col)
+        return _exact_rerank(coarse, corpus, queries, 10)
     finally:
         # the persist only serves the bounded training collects; the
         # returned plan re-reads the source (one extra scan) rather than
@@ -511,7 +495,7 @@ def x85_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index actually ships."""
     e = t(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") % 25 == 0)
-    return pq_adc_topk(e, queries, k=10)
+    return pq_adc_topk(e, queries)
 
 
 JL_DIM = 16
@@ -646,14 +630,10 @@ MRL_K = 10
 
 
 def multi_prefix_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    prefixes: tuple[int, ...],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
+    corpus: DataFrame, queries: DataFrame, prefixes: tuple[int, ...], k: int
 ) -> DataFrame:
-    """Exact cosine top-k for EVERY prefix dimension in ONE corpus scan:
+    """Exact cosine top-k of ``(vec_id, v)`` frames for EVERY prefix
+    dimension in ONE corpus scan:
     (prefix_dim, query_id, neighbor_id, cos_sim, rank). Each Arrow batch
     is scored once per prefix on numpy slices of the SAME decoded
     matrix — bit-identical to running ``brute_force_topk`` per sliced
@@ -672,8 +652,8 @@ def multi_prefix_topk(
             yield out
 
     return _scan_topk(
-        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
-        _collect_matrix(queries, id_col, vec_col),
+        _vectors(corpus, "vec_id", "v", "neighbor_id", "cv"),
+        _collect_matrix(queries, "vec_id", "v"),
         score,
         k,
         keys=("prefix_dim", "query_id"),

@@ -40,17 +40,13 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
 
 def jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.6,
-    mode: str = "word",
     df_cap: int | None = None,
-    on_drop: str = "warn",
     shingles: DataFrame | None = None,
     _return_candidates: bool = False,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs ≥ threshold — with
+    """Exact word-3-gram Jaccard similarity of ``docs`` (``doc_id``,
+    ``text``) for all pairs ≥ threshold — with
     PPJoin-style **prefix filtering** so the candidate join never goes
     all-pairs-quadratic.
 
@@ -75,32 +71,18 @@ def jaccard_pairs(
     corpora; pairs whose EVERY shared prefix shingle exceeds the cap are
     missed (use MinHash+LSH as the scale path for such corpora).
 
-    **Guard strictness** (``on_drop``):
-
-    - ``"warn"`` (default): fully LAZY — no Spark job runs until the
-      returned frame is acted on; the cap is applied via a broadcast
-      one-row aggregate inside the plan, and drops are silent (the cap is
-      documented-unreachable on natural corpora).
-    - ``"raise"``: eager guard — counts capped prefix rows up front and
-      raises ``RuntimeError`` if any would be dropped. Use in
-      oracle-certified contexts where the comparison SQL is uncapped and a
-      silent drop would surface as an inexplicable hash mismatch.
-    - passing an explicit finite ``df_cap`` also runs the eager guard and
-      logs the dropped mass (recall trade made visible).
+    The guard is eager and strict: one job counts the capped prefix rows
+    up front and raises ``RuntimeError`` if any would be dropped. Every
+    caller is oracle-certified, and the comparison SQL is uncapped, so a
+    silent drop would surface as an inexplicable hash mismatch.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
-    import logging
-
     from pyspark.sql import Window as W2
 
-    if on_drop not in ("warn", "raise"):
-        raise ValueError(f"on_drop must be 'warn' or 'raise', got {on_drop!r}")
     # ``shingles``: pre-computed (doc_id, shingle) frame (e.g. shared with
     # a MinHash kernel over the same corpus) — skips re-tokenizing.
-    sh = shingles if shingles is not None else shingle_table(
-        docs, text_col, id_col, k=k, mode=mode
-    )
+    sh = shingles if shingles is not None else shingle_table(docs)
     # full sets as sorted arrays (for exact verification) — cached: the
     # interpreted higher-order shingling runs exactly ONCE; every later
     # stage re-derives (doc, shingle) rows from this cache, not the corpus
@@ -133,8 +115,7 @@ def jaccard_pairs(
         # the cache each side replays the whole window+join lineage
         .cache()
     )
-    # the skew-guard cap rides the plan as a broadcast one-row aggregate,
-    # one definition for both guard modes: greatest(64, floor(sqrt(n)) + 1)
+    # the skew-guard cap: greatest(64, floor(sqrt(n)) + 1)
     # (== math.isqrt(n) + 1 for n < 2^52), or an explicit df_cap literal
     cap = (
         F.greatest(F.lit(64), F.floor(F.sqrt(F.count(F.lit(1)))).cast("long") + 1)
@@ -142,45 +123,33 @@ def jaccard_pairs(
         else F.lit(int(df_cap)).cast("long")
     )
     cap_df = F.broadcast(sets_df.agg(cap.alias("_df_cap")))
-    if df_cap is None and on_drop == "warn":
-        # lazy default: constructing the frame triggers zero Spark jobs
-        ranked = (
-            ranked_all.crossJoin(cap_df)
-            .where(F.col("df") <= F.col("_df_cap"))
-            .select("doc_id", "shingle", "rk", "set_size")
+    # ONE job returns the cap and all three guard counters
+    guard = (
+        ranked_all.crossJoin(cap_df)
+        .agg(
+            F.count(F.lit(1)).alias("prefix_rows"),
+            F.sum((F.col("df") > F.col("_df_cap")).cast("long")).alias(
+                "dropped_rows"
+            ),
+            F.sum(
+                F.when(F.col("df") > F.col("_df_cap"), F.col("df")).otherwise(0)
+            ).alias("dropped_mass"),
+            F.first("_df_cap").alias("cap"),
         )
-    else:
-        # eager guard: ONE job returns the cap and all three guard
-        # counters, then the same raise/warn contract and post-filter
-        guard = (
-            ranked_all.crossJoin(cap_df)
-            .agg(
-                F.count(F.lit(1)).alias("prefix_rows"),
-                F.sum((F.col("df") > F.col("_df_cap")).cast("long")).alias(
-                    "dropped_rows"
-                ),
-                F.sum(
-                    F.when(F.col("df") > F.col("_df_cap"), F.col("df")).otherwise(0)
-                ).alias("dropped_mass"),
-                F.first("_df_cap").alias("cap"),
-            )
-            .collect()[0]
+        .collect()[0]
+    )
+    df_cap = guard.cap if guard.cap is not None else df_cap
+    if guard.dropped_rows:
+        raise RuntimeError(
+            f"jaccard_pairs skew guard: dropped {guard.dropped_rows}/"
+            f"{guard.prefix_rows} prefix rows with df > {df_cap} "
+            f"(candidate mass avoided ≈ {guard.dropped_mass}); pairs "
+            "linked only by those shingles may be missed — use "
+            "MinHash+LSH for this corpus"
         )
-        df_cap = guard.cap if guard.cap is not None else df_cap
-        if guard.dropped_rows:
-            msg = (
-                f"jaccard_pairs skew guard: dropped {guard.dropped_rows}/"
-                f"{guard.prefix_rows} prefix rows with df > {df_cap} "
-                f"(candidate mass avoided ≈ {guard.dropped_mass}); pairs "
-                "linked only by those shingles may be missed — use "
-                "MinHash+LSH for this corpus"
-            )
-            if on_drop == "raise":
-                raise RuntimeError(msg)
-            logging.getLogger(__name__).warning(msg)
-        ranked = ranked_all.where(F.col("df") <= F.lit(df_cap)).select(
-            "doc_id", "shingle", "rk", "set_size"
-        )
+    ranked = ranked_all.where(F.col("df") <= F.lit(df_cap)).select(
+        "doc_id", "shingle", "rk", "set_size"
+    )
     # PPJoin positional filter: both prefix lists follow the same global
     # (df, shingle) order, so a match at positions (rk_a, rk_b) bounds the
     # overlap by 1 + min(|A|-rk_a, |B|-rk_b); Jaccard ≥ t needs overlap
@@ -234,16 +203,10 @@ MINHASH_PRIME = 4294967291  # largest 32-bit prime (Carter–Wegman modulus)
 
 
 def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 16,
-    mode: str = "word",
-    shingles: DataFrame | None = None,
+    docs: DataFrame, shingles: DataFrame | None = None
 ) -> DataFrame:
-    """K-wide MinHash signature per doc using a portable md5-derived
-    universal hash family.
+    """16-wide MinHash signature per doc of ``docs``' word 3-grams using
+    a portable md5-derived universal hash family.
 
     ONE md5 per shingle; its two 32-bit prefix words (a, b) seed the whole
     family ``hash_i(shingle) = (a + i·b) mod P`` (P = 4294967291, the
@@ -259,9 +222,7 @@ def minhash_signatures(
     cache) — skips re-tokenizing the corpus when a caller needs both the
     signatures and the raw sets.
     """
-    sh = shingles if shingles is not None else shingle_table(
-        docs, text_col, id_col, k=k, mode=mode
-    )
+    sh = shingles if shingles is not None else shingle_table(docs)
     hashed = sh.select("doc_id", F.md5("shingle").alias("_h")).select(
         "doc_id",
         hex_int("_h").alias("_ha"),
@@ -271,34 +232,28 @@ def minhash_signatures(
         F.min(
             (F.col("_ha") + F.lit(i) * F.col("_hb")) % F.lit(MINHASH_PRIME)
         ).alias(f"mh{i}")
-        for i in range(num_hashes)
+        for i in range(_NUM_HASHES)
     ]
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
     est_threshold: float = 0.5,
-    mode: str = "word",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """LSH-banded near-duplicate candidates with estimated Jaccard.
 
-    Signature split into ``bands`` bands of ``num_hashes/bands`` rows; docs
+    The 16-hash signature splits into 4 bands of 4 rows; docs
     sharing any band hash become candidates; estimated similarity = fraction
     of matching minhashes. Returns (doc_a, doc_b, est_jaccard ≥ est_threshold).
     """
-    sig = minhash_signatures(docs, text_col, id_col, k, num_hashes, mode, shingles)
+    sig = minhash_signatures(docs, shingles)
     # the whole op is ONE keyed shuffle + join: candidates verify in place
     # from the signature each band row carries. Cached: both sides of the
     # self-join read the materialized bands instead of replaying the
     # 16-hash signature aggregation twice.
-    stacked = lsh_band_rows(sig, num_hashes, bands).cache()
+    stacked = lsh_band_rows(sig).cache()
     a, b = stacked.alias("a"), stacked.alias("b")
     matches = _sig_agreement("a.sig", "b.sig")
     return (
@@ -311,29 +266,26 @@ def minhash_candidates(
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            (matches / F.lit(float(num_hashes))).cast("double").alias("est_jaccard"),
+            (matches / F.lit(float(_NUM_HASHES))).cast("double").alias("est_jaccard"),
         )
         .where(F.col("est_jaccard") >= est_threshold)
         .distinct()
     )
 
 
-def _word_token_sets(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _word_token_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, token) distinct word sets (widened before the explode)."""
     from smfg_datawarehouse_spark.functions import word_tokens
 
     return ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(word_tokens(F.col(text_col)))).alias("tok"),
+        "doc_id", F.explode(F.array_distinct(word_tokens(F.col("text")))).alias("tok")
     )
 
 
 SIMHASH_BITS = 32
 
 
-def simhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """32-bit SimHash per document over distinct word tokens.
 
     Token hash = first 8 hex digits of md5 (portable), read as ONE
@@ -343,7 +295,7 @@ def simhash_signatures(
     counting set bits (``2*ones >= tokens`` sets the output bit). Pure
     expressions — one explode + one groupBy, linear in corpus size.
     """
-    toks = _word_token_sets(docs, text_col, id_col).withColumn(
+    toks = _word_token_sets(docs).withColumn(
         "v", md5_int("tok", 1, SIMHASH_BITS // 4)
     )
     aggs = [
@@ -360,20 +312,15 @@ def simhash_signatures(
     return sums.select("doc_id", simhash.alias("simhash"))
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """All document pairs with SimHash Hamming distance ≤ ``max_hamming``.
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """All document pairs with SimHash Hamming distance ≤ 3.
 
     Banded candidate generation: the 32-bit signature splits into 4 bytes;
     a pair within Hamming 3 must agree on ≥1 whole byte (pigeonhole), so
     candidates come from equality joins on (band_index, band_byte) — never
     an all-pairs scan. Exact: verification recomputes the true distance.
     """
-    sig = simhash_signatures(docs, text_col, id_col).cache()
+    sig = simhash_signatures(docs).cache()
     bands = sig.select(
         "doc_id",
         "simhash",
@@ -406,7 +353,7 @@ def simhash_pairs(
                 F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
             ).cast("long").alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 3)
         .distinct()
     )
 
@@ -469,13 +416,13 @@ _JACCARD_ORACLE = f"""
 @register("x02_ngram_jaccard_pairs", _JACCARD_ORACLE)
 def x02_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[X] Exact word-3-gram Jaccard near-duplicate pairs (threshold 0.6),
-    prefix-filtered candidate generation. ``on_drop="raise"``: the oracle
-    is uncapped, so if the skew-guard cap would ever drop a prefix row the
-    query fails loudly instead of silently hash-mismatching the oracle."""
+    prefix-filtered candidate generation. The oracle is uncapped, so if
+    the skew-guard cap would ever drop a prefix row the query fails loudly
+    instead of silently hash-mismatching the oracle."""
     d = t(spark, sf_dir, "documents")
-    return jaccard_pairs(
-        d, "text", "doc_id", k=3, threshold=0.6, mode="word", on_drop="raise"
-    ).withColumn("jaccard", F.col("jaccard").cast("double"))
+    return jaccard_pairs(d, threshold=0.6).withColumn(
+        "jaccard", F.col("jaccard").cast("double")
+    )
 
 
 _NUM_HASHES = 16
@@ -570,7 +517,7 @@ def x04_simhash_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (pigeonhole-exact, no all-pairs scan); oracle brute-forces all
     pairs with an identical portable hash construction."""
     d = t(spark, sf_dir, "documents")
-    return simhash_pairs(d, "text", "doc_id", max_hamming=3)
+    return simhash_pairs(d)
 
 
 @register("x03_minhash_lsh_dupes", _MINHASH_ORACLE)
@@ -579,16 +526,7 @@ def x03_minhash_lsh_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (candidates via band-bucket join, O(docs×bands) shuffle, never O(docs²)).
     Portable md5 hash family keeps it oracle-checkable bit-for-bit."""
     d = t(spark, sf_dir, "documents")
-    return minhash_candidates(
-        d,
-        "text",
-        "doc_id",
-        k=3,
-        num_hashes=_NUM_HASHES,
-        bands=_BANDS,
-        est_threshold=0.5,
-        mode="word",
-    )
+    return minhash_candidates(d, est_threshold=0.5)
 
 
 #: Edge count below which connected_components runs exact union-find on
@@ -627,13 +565,10 @@ def _union_find_components(pairs: list[tuple[int, int]]) -> list[tuple[int, int]
 
 
 def connected_components(
-    edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-    driver_edge_cap: int = CC_DRIVER_EDGE_CAP,
+    edges: DataFrame, driver_edge_cap: int = CC_DRIVER_EDGE_CAP
 ) -> DataFrame:
-    """Duplicate-group clustering: connected components over near-dup pairs.
+    """Duplicate-group clustering: connected components over near-dup
+    pairs ``(doc_a, doc_b)``.
 
     Two tiers, picked by the MEASURED edge count:
 
@@ -644,7 +579,7 @@ def connected_components(
     - larger graphs: iterative min-label propagation (GraphFrames-style,
       no graph lib). Each round every node adopts the minimum label among
       itself and its neighbors; rounds needed = component diameter
-      (near-dup clusters are shallow). Each iteration is one join + one
+      (near-dup clusters are shallow; at most 25). Each iteration is one join + one
       groupBy — all shuffles keyed on node id — and ``localCheckpoint``
       truncates the growing lineage, THE critical pattern for iterative
       algorithms on Spark (without it the plan doubles each round and the
@@ -659,7 +594,7 @@ def connected_components(
     # tier-probe count and the fast-path collect / iterative-path
     # symmetrization, not once per action
     pair_df = edges.select(
-        F.col(a_col).cast("long").alias("src"), F.col(b_col).cast("long").alias("dst")
+        F.col("doc_a").cast("long").alias("src"), F.col("doc_b").cast("long").alias("dst")
     ).persist()
     try:
         n_edges = pair_df.count()
@@ -686,7 +621,7 @@ def connected_components(
     labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
     ).repartition(n_parts, "id").localCheckpoint()
-    for _ in range(max_iter):
+    for _ in range(25):
         neigh_min = (
             sym.join(labels, sym["dst"] == labels["id"])
             .groupBy("src")
@@ -743,7 +678,7 @@ def x06_dup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays it as a recursive transitive closure. This is the op a
     dedup pipeline actually ends with — keep one doc per group_id."""
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     return connected_components(edges)
 
 
@@ -759,7 +694,7 @@ def x88_cc_distributed_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent; union-find unions by min id), so the same
     recursive-closure oracle certifies both tiers."""
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     return connected_components(edges, driver_edge_cap=0)
 
 
@@ -834,7 +769,7 @@ def x45_dup_group_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.operators.text_analysis import quality_features
 
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     cc = connected_components(edges)
     scored = quality_features(d).select("doc_id", "quality_score")
     j = scored.join(F.broadcast(cc), "doc_id")
@@ -913,7 +848,7 @@ def x55_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smfg_datawarehouse_spark.functions import word_tokens
 
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     cc = connected_components(edges)
     # survivor = group label: connected_components contracts
     # group_id == min doc_id of the component, so "removed" is simply
@@ -976,7 +911,7 @@ def x56_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     other exchange. Counts are exact ints; the rate is one int/int
     divide — bit-stable."""
     d = t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", k=3, mode="word")
+    sh = shingle_table(d)
     wsh = W.partitionBy("shingle")
     uniq = F.when(F.col("df") == 1, 1).otherwise(0)
     return (
@@ -1136,12 +1071,8 @@ def x14_minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # one tokenization for both consumers: the signature pass and the
     # exact-set collect read this cache instead of re-shingling the corpus
-    sh = shingle_table(d, "text", "doc_id", k=3, mode="word").cache()
-    cand = minhash_candidates(
-        d, "text", "doc_id",
-        k=3, num_hashes=_NUM_HASHES, bands=_BANDS,
-        est_threshold=0.0, mode="word", shingles=sh,
-    )
+    sh = shingle_table(d).cache()
+    cand = minhash_candidates(d, est_threshold=0.0, shingles=sh)
     sets = (
         sh.groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("shingle")).alias("sh"))
@@ -1224,7 +1155,7 @@ def x48_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition count. Scale: all shuffles are node/edge-keyed — PageRank at
     the corpus scale this graph implies (dup pairs only) is edge-linear."""
     d = t(spark, sf_dir, "documents")
-    pairs = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    pairs = minhash_candidates(d, est_threshold=0.5)
     e = (
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .unionAll(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
@@ -1255,10 +1186,8 @@ def x48_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lsh_band_rows(
-    sig: DataFrame, num_hashes: int = _NUM_HASHES, bands: int = _BANDS
-) -> DataFrame:
-    """(doc_id, sig, bi, bh) band rows from a minhash signature frame —
+def lsh_band_rows(sig: DataFrame) -> DataFrame:
+    """(doc_id, sig, bi, bh) 4-band rows from a minhash signature frame —
     the standing-LSH-index row format shared by the incremental batch
     check (x61) and the streaming index maintenance cert (s26). The full
     signature rides each band row as one BIGINT array so candidate
@@ -1266,11 +1195,10 @@ def lsh_band_rows(
     the signature table); ``bh`` is the band's concatenated minhashes —
     the LSH bucket key, injective, so no hash call and no false bucket
     collisions."""
-    rows_per_band = num_hashes // bands
     return (
         sig.select(
             "doc_id",
-            F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("sig"),
+            F.array(*[F.col(f"mh{i}") for i in range(_NUM_HASHES)]).alias("sig"),
         )
         .select(
             "doc_id",
@@ -1284,13 +1212,13 @@ def lsh_band_rows(
                                 "|",
                                 *[
                                     F.element_at(
-                                        "sig", b * rows_per_band + r + 1
+                                        "sig", b * _ROWS_PER_BAND + r + 1
                                     ).cast("string")
-                                    for r in range(rows_per_band)
+                                    for r in range(_ROWS_PER_BAND)
                                 ],
                             ).alias("bh"),
                         )
-                        for b in range(bands)
+                        for b in range(_BANDS)
                     ]
                 )
             ).alias("band"),
@@ -1403,7 +1331,7 @@ def x61_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     Best-match selection (est desc, corpus id asc) and the ≥ 0.5 admission
     threshold are replayed exactly by the oracle."""
     d = t(spark, sf_dir, "documents")
-    sig = minhash_signatures(d, "text", "doc_id")
+    sig = minhash_signatures(d)
     # cached: batch and corpus branches both read the materialized
     # bands instead of replaying the 16-hash signature aggregation
     # twice (same reuse minhash_candidates applies to its self-join);
@@ -1437,21 +1365,14 @@ SUBSTR_MIN_SPAN = 20  # report pairs sharing a span of at least this many tokens
 SUBSTR_DF_CAP = 1000  # drop anchors appearing in more docs (boilerplate guard)
 
 
-def substring_dup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = SUBSTR_K,
-    min_span: int = SUBSTR_MIN_SPAN,
-    df_cap: int = SUBSTR_DF_CAP,
-) -> DataFrame:
-    """Doc pairs sharing a verbatim token span of ≥ ``min_span`` tokens,
-    with the exact longest-span length.
+def substring_dup_pairs(docs: DataFrame) -> DataFrame:
+    """Doc pairs sharing a verbatim token span of ≥ ``SUBSTR_MIN_SPAN``
+    tokens, with the exact longest-span length.
 
     The paper builds a corpus suffix array; the distributed re-expression
     is anchor-and-diagonal: every positional k-token window is an anchor,
     anchors join on their text, and a shared span of length L ≥ k shows up
-    as exactly L−k+1 anchor matches at consecutive positions on one
+    as exactly L−k+1 anchor matches (k = ``SUBSTR_K``) at consecutive positions on one
     DIAGONAL (pos_a − pos_b). A gaps-and-islands window over each
     (pair, diagonal) recovers every maximal run, so the reported
     ``max_shared_span`` = longest run + k − 1 is EXACT for spans ≥ k —
@@ -1459,7 +1380,7 @@ def substring_dup_pairs(
 
     Scale shape: the explode is corpus-token-linear (widened first);
     the anchor join is the Σ_anchor df² candidate pattern with a
-    ``df_cap`` boilerplate guard (anchors in > ``df_cap`` docs are
+    ``SUBSTR_DF_CAP`` boilerplate guard (anchors in more docs are
     dropped — an anchor shared by half the corpus is boilerplate, and
     O(df²) on it would dominate; the cap is honest lossiness, documented
     like the Jaccard prefix df-cap). Runs/spans are two window passes
@@ -1470,11 +1391,8 @@ def substring_dup_pairs(
 
     toks = (
         ensure_min_parallelism(docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            word_tokens(F.col(text_col)).alias("tk"),
-        )
-        .where(F.size("tk") >= k)
+        .select("doc_id", word_tokens(F.col("text")).alias("tk"))
+        .where(F.size("tk") >= SUBSTR_K)
     )
     # positional anchors: (doc_id, pos, k-token window joined on \x1f —
     # a separator that cannot appear inside a whitespace-split token)
@@ -1482,10 +1400,10 @@ def substring_dup_pairs(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(1), F.size("tk") - (k - 1)),
+                F.sequence(F.lit(1), F.size("tk") - (SUBSTR_K - 1)),
                 lambda p: F.struct(
                     p.alias("pos"),
-                    F.array_join(F.slice(F.col("tk"), p, k), "\x1f").alias("s"),
+                    F.array_join(F.slice(F.col("tk"), p, SUBSTR_K), "\x1f").alias("s"),
                 ),
             )
         ).alias("e"),
@@ -1493,7 +1411,7 @@ def substring_dup_pairs(
     allowed = (
         sh.groupBy("s")
         .agg(F.count_distinct("doc_id").alias("df"))
-        .where(F.col("df") <= df_cap)
+        .where(F.col("df") <= SUBSTR_DF_CAP)
         .select("s")
     )
     sh = sh.join(allowed, "s")
@@ -1511,7 +1429,7 @@ def substring_dup_pairs(
         "grp", F.col("pa") - F.row_number().over(run_w)
     )
     spans = runs.groupBy("doc_a", "doc_b", "diag", "grp").agg(
-        (F.count(F.lit(1)) + F.lit(k - 1)).cast("long").alias("span")
+        (F.count(F.lit(1)) + F.lit(SUBSTR_K - 1)).cast("long").alias("span")
     )
     return (
         spans.groupBy("doc_a", "doc_b")
@@ -1519,7 +1437,7 @@ def substring_dup_pairs(
             F.max("span").alias("max_shared_span"),
             F.count(F.lit(1)).cast("long").alias("n_shared_runs"),
         )
-        .where(F.col("max_shared_span") >= min_span)
+        .where(F.col("max_shared_span") >= SUBSTR_MIN_SPAN)
     )
 
 
@@ -1569,7 +1487,7 @@ _SUBSTR_ORACLE = f"""
 @register("x86_substring_dedup", _SUBSTR_ORACLE)
 def x86_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[X] SUBSTRING-LEVEL dedup (Lee et al. 2107.06499): doc pairs
-    sharing a verbatim run of ≥ {min_span} tokens, found via positional
+    sharing a verbatim run of ≥ 20 tokens, found via positional
     8-token anchors joined on text and gaps-and-islands runs per
     (pair, diagonal) — exact longest-shared-span per pair, the
     within-document granularity whole-doc dedup (x01/x03) cannot see."""
@@ -1580,13 +1498,7 @@ def x86_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 INTRA_REP_CAP = 256  # within-doc occurrence cap per anchor (degenerate-doc guard)
 
 
-def intra_doc_repetition(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = SUBSTR_K,
-    occ_cap: int = INTRA_REP_CAP,
-) -> DataFrame:
+def intra_doc_repetition(docs: DataFrame) -> DataFrame:
     """Per-document verbatim self-repetition profile — the trim signal of
     Lee et al. 2107.06499 §4 turned inward (a document repeating its own
     spans is boilerplate/generation-loop pathology; repetition-heavy docs
@@ -1594,12 +1506,12 @@ def intra_doc_repetition(
     this measures repeated token SPANS exactly).
 
     Same anchor-and-diagonal machinery as :func:`substring_dup_pairs`,
-    self-applied: every positional k-token window is an anchor; a pair of
+    self-applied: every positional k-token window (k = ``SUBSTR_K``) is an anchor; a pair of
     positions (i < j) holding the same anchor text lies on diagonal
     j − i, and a span repeated at offset d shows up as consecutive i on
     that diagonal — max run + k − 1 is the EXACT longest repeated token
-    span (≥ k; spans < k are invisible, documented). ``occ_cap`` drops
-    anchors occurring more than ``occ_cap`` times within one doc (a
+    span (≥ k; spans < k are invisible, documented). ``INTRA_REP_CAP`` drops
+    anchors occurring more often within one doc (a
     degenerate 'aaaa…' doc would otherwise cost O(occ²) pairs on itself;
     honest lossiness, same policy as the cross-doc ``df_cap``).
 
@@ -1612,27 +1524,24 @@ def intra_doc_repetition(
 
     toks = (
         ensure_min_parallelism(docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            word_tokens(F.col(text_col)).alias("tk"),
-        )
-        .where(F.size("tk") >= k)
+        .select("doc_id", word_tokens(F.col("text")).alias("tk"))
+        .where(F.size("tk") >= SUBSTR_K)
     )
     sh = toks.select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(1), F.size("tk") - (k - 1)),
+                F.sequence(F.lit(1), F.size("tk") - (SUBSTR_K - 1)),
                 lambda p: F.struct(
                     p.alias("pos"),
-                    F.array_join(F.slice(F.col("tk"), p, k), "\x1f").alias("s"),
+                    F.array_join(F.slice(F.col("tk"), p, SUBSTR_K), "\x1f").alias("s"),
                 ),
             )
         ).alias("e"),
     ).select("doc_id", F.col("e.pos").alias("pos"), F.col("e.s").alias("s"))
     occ_w = W.partitionBy("doc_id", "s")
     sh = sh.withColumn("occ", F.count(F.lit(1)).over(occ_w)).where(
-        F.col("occ") <= occ_cap
+        F.col("occ") <= INTRA_REP_CAP
     )
     base = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_windows"),
@@ -1652,7 +1561,7 @@ def intra_doc_repetition(
     spans = (
         m.withColumn("grp", F.col("pa") - F.row_number().over(run_w))
         .groupBy("doc_id", "diag", "grp")
-        .agg((F.count(F.lit(1)) + F.lit(k - 1)).cast("long").alias("span"))
+        .agg((F.count(F.lit(1)) + F.lit(SUBSTR_K - 1)).cast("long").alias("span"))
         .groupBy("doc_id")
         .agg(F.max("span").alias("max_repeat_span"))
     )
@@ -1809,7 +1718,7 @@ def x105_lsh_banding_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[X] LSH banding S-CURVE measured empirically — the tuning loop
     behind every MinHash dedup deployment: ground-truth pairs (exact
     word-3-gram Jaccard ≥ 0.3 via the lossless prefix-filtered kernel,
-    ``on_drop="raise"``) are bucketed by true-Jaccard decile and each
+    whose skew guard raises rather than drop) are bucketed by true-Jaccard decile and each
     decile reports what fraction the 4-band × 4-row LSH candidate
     generation catches. Theory says recall ≈ 1-(1-j^4)^4 per decile;
     this measures it on the actual corpus, which is how you pick
@@ -1833,16 +1742,13 @@ def x105_lsh_banding_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         < _X105_GATE_MILLI
     )
     d_s = d.where(gate)
-    sh = shingle_table(
-        d_s, "text", "doc_id", k=3, mode="word", checkpoint=True
-    )  # shared by BOTH kernels below
-    exact = jaccard_pairs(
-        d_s, "text", "doc_id", k=3, threshold=0.3, mode="word",
-        on_drop="raise", shingles=sh,
-    ).select("doc_a", "doc_b", F.col("jaccard").cast("double").alias("jaccard"))
-    cand = minhash_candidates(
-        d_s, "text", "doc_id", est_threshold=0.0, shingles=sh
-    ).select(F.col("doc_a").alias("c_a"), F.col("doc_b").alias("c_b"))
+    sh = shingle_table(d_s, checkpoint=True)  # shared by BOTH kernels below
+    exact = jaccard_pairs(d_s, threshold=0.3, shingles=sh).select(
+        "doc_a", "doc_b", F.col("jaccard").cast("double").alias("jaccard")
+    )
+    cand = minhash_candidates(d_s, est_threshold=0.0, shingles=sh).select(
+        F.col("doc_a").alias("c_a"), F.col("doc_b").alias("c_b")
+    )
     joined = exact.join(
         cand,
         (F.col("doc_a") == F.col("c_a")) & (F.col("doc_b") == F.col("c_b")),
@@ -1898,11 +1804,9 @@ _X111_ORACLE = f"""
 """
 
 
-def triangle_counts(
-    edges: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle count + local clustering coefficient over an
-    undirected edge list (one row per edge, ``a_col < b_col``, no
+    undirected edge list (one row per edge, ``doc_a < doc_b``, no
     duplicates). Degree-ordered orientation (Cohen / Suri-Vassilvitskii
     MapReduce form): every edge points from its lower-(degree, id)
     endpoint, wedges are generated only at each edge's low-degree end,
@@ -1911,9 +1815,8 @@ def triangle_counts(
     keeps a hub with degree 10⁶ from generating any wedge fan-out at
     all. Returns (doc_id, degree, triangles, clustering); counts are
     exact integers, the coefficient one integer-ratio division."""
-    edges = edges.select(
-        F.col(a_col).alias("doc_a"), F.col(b_col).alias("doc_b")
-    ).localCheckpoint()  # consumed by degree rollup + both orientation joins
+    # consumed by degree rollup + both orientation joins
+    edges = edges.select("doc_a", "doc_b").localCheckpoint()
     deg = (
         edges.select(F.col("doc_a").alias("id"))
         .unionAll(edges.select(F.col("doc_b").alias("id")))
@@ -1981,7 +1884,7 @@ def x111_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integers and the coefficient is one integer-ratio
     division, so the DuckDB replay is bit-exact."""
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     return triangle_counts(edges)
 
 
@@ -2071,7 +1974,7 @@ def x115_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one LSH pass: seeds + both vote rounds all fan out from the edge
     # list, so materialize it instead of replaying the banding join 5×
     edges = (
-        minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+        minhash_candidates(d, est_threshold=0.5)
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
@@ -2574,7 +2477,7 @@ def x146_quality_survivor_selection(
     from smfg_datawarehouse_spark.functions import word_tokens
 
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     cc = connected_components(edges)
     per_doc = d.select(
         "doc_id", F.size(word_tokens(F.col("text"))).cast("long").alias("n_tok")
@@ -2672,9 +2575,7 @@ def x148_adamic_adar_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-guard convention per ``jaccard_pairs`` (this file).
     """
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(
-        d, "text", "doc_id", k=3, est_threshold=0.5
-    ).select("doc_a", "doc_b")
+    edges = minhash_candidates(d, est_threshold=0.5).select("doc_a", "doc_b")
     return adamic_adar_scores(edges)
 
 
@@ -2802,7 +2703,7 @@ def x152_record_fusion_survivorship(
     are one (group, value)-keyed count + one group-keyed window each.
     All counts exact BIGINTs; every tiebreak is total."""
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", k=3, est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     cc = connected_components(edges)
     members = cc.join(
         d.select("doc_id", "lang", "source", F.col("n_chars").cast("long").alias("n_chars")),
@@ -2890,9 +2791,10 @@ _X149_ORACLE = rf"""
 """
 
 
-def cdc_chunks(docs: DataFrame, gate: int = _X149_GATE) -> DataFrame:
+def cdc_chunks(docs: DataFrame) -> DataFrame:
     """(doc_id, chunk_id, chunk_hash) under content-defined boundaries:
-    a chunk CLOSES at any token whose md5 lands in the gate class. The
+    a chunk CLOSES at any token whose md5 lands in the ``_X149_GATE``
+    class. The
     self-synchronization property (certified by hypothesis in
     tests/test_properties.py): because the boundary decision depends
     only on the token itself, an insertion/deletion perturbs ONLY the
@@ -2908,7 +2810,7 @@ def cdc_chunks(docs: DataFrame, gate: int = _X149_GATE) -> DataFrame:
         "is_boundary",
         (
             md5_int("tok")
-            % gate
+            % _X149_GATE
             == 0
         ).cast("int"),
     )
@@ -3035,11 +2937,11 @@ def x154_weighted_jaccard_rescore(
     agg, LSH-bounded pair space). Nothing corpus²."""
     d = t(spark, sf_dir, "documents")
     sh = shingle_table(
-        d, "text", "doc_id", k=3, mode="word", checkpoint=True
+        d, checkpoint=True
     )  # consumers: df agg, candidate gen (via shared arg), A-side, B-side
-    cand = minhash_candidates(
-        d, "text", "doc_id", est_threshold=0.5, shingles=sh
-    ).select("doc_a", "doc_b")
+    cand = minhash_candidates(d, est_threshold=0.5, shingles=sh).select(
+        "doc_a", "doc_b"
+    )
     nd = sh.agg(F.countDistinct("doc_id").cast("long").alias("nd"))
     w = (
         sh.groupBy("shingle")
@@ -3321,7 +3223,7 @@ def x157_split_leakage_certification(
     corpus). The distinct source-pair count runs on that same bounded
     edge set."""
     d = t(spark, sf_dir, "documents")
-    edges = minhash_candidates(d, "text", "doc_id", est_threshold=0.5)
+    edges = minhash_candidates(d, est_threshold=0.5)
     split = F.when(F.md5(F.col("source")) < "c", "train").otherwise("heldout")
     sides = d.select("doc_id", "source", split.alias("split"))
     a = sides.select(
@@ -3420,9 +3322,9 @@ def x159_dedup_roi_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     from smfg_datawarehouse_spark.functions import word_tokens
 
-    edges = minhash_candidates(
-        d, "text", "doc_id", est_threshold=0.5
-    ).localCheckpoint(eager=False)  # consumed per threshold: pairs + removed
+    edges = minhash_candidates(d, est_threshold=0.5).localCheckpoint(
+        eager=False
+    )  # consumed per threshold: pairs + removed
     thr = F.broadcast(
         local_rows_df(spark, [(k,) for k in _X159_THRESH_K], "k int")
     )

@@ -49,7 +49,7 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 def q20_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[T2] Tumbling 1-hour windows per event type — batch twin of the
     streaming aggregation (state-bounded by watermark in stream mode)."""
-    return tumbling_agg(t(spark, sf_dir, "events"), "1 hour")
+    return tumbling_agg(t(spark, sf_dir, "events"))
 
 
 _Q21_ORACLE = """
@@ -74,7 +74,7 @@ _Q21_ORACLE = """
 def q21_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[T2] Sliding windows (1h width / 30min slide): every event lands in
     exactly two windows; oracle materializes the same two buckets."""
-    return sliding_agg(t(spark, sf_dir, "events"), "1 hour", "30 minutes")
+    return sliding_agg(t(spark, sf_dir, "events"))
 
 
 _Q22_ORACLE = f"""
@@ -105,7 +105,7 @@ def q22_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs. the classic gaps-and-islands SQL construction. A new session starts
     when the gap to the previous event is >= the timeout (Spark merges an
     event only while it lands strictly inside session end = last_ts + gap)."""
-    return session_agg(t(spark, sf_dir, "events"), "5 minutes")
+    return session_agg(t(spark, sf_dir, "events"))
 
 
 @register(

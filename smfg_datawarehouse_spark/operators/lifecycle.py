@@ -1181,9 +1181,7 @@ def l19_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
-    joined = salted_join(
-        li, o, ["l_orderkey"], salt_from=F.col("l_partkey"), buckets=8
-    )
+    joined = salted_join(li, o, ["l_orderkey"], salt_from=F.col("l_partkey"))
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_items"),
         dsum(F.col("l_quantity")).alias("sum_qty"),

@@ -233,8 +233,7 @@ def decode_dims_stub(payload: bytes, fake: bool = True) -> tuple[int, int, int]:
     return w, ht, n_frames
 
 
-def resize_and_sample(assets: DataFrame, target: int = RESIZE_TARGET,
-                      stride: int = FRAME_STRIDE) -> DataFrame:
+def resize_and_sample(assets: DataFrame) -> DataFrame:
     """Image-resize + video-frame-sample metadata pass over binary payloads
     (one :func:`_per_asset` pass). In a real deployment the same batch
     shape carries the resized pixel buffers / sampled frames as binary
@@ -248,10 +247,10 @@ def resize_and_sample(assets: DataFrame, target: int = RESIZE_TARGET,
             "orig_w": w,
             "orig_h": h,
             # numpy division: a (0, 0, 0) unparseable header scales to inf
-            "scale_x": np.float64(target) / w,
-            "scale_y": np.float64(target) / h,
+            "scale_x": np.float64(RESIZE_TARGET) / w,
+            "scale_y": np.float64(RESIZE_TARGET) / h,
             "n_frames": nf,
-            "n_sampled": (nf + stride - 1) // stride,
+            "n_sampled": (nf + FRAME_STRIDE - 1) // FRAME_STRIDE,
         }
 
     return _per_asset(assets, TRANSFORM_SCHEMA, per_row)
@@ -833,8 +832,9 @@ WAV_FRAME_SCHEMA = T.StructType(
 )
 
 
-def wav_frame_features(payload: bytes, frame: int = WAV_FRAME) -> list[dict]:
-    """Per-frame (n, Σs², max|s|, sign crossings) from a real PCM parse.
+def wav_frame_features(payload: bytes) -> list[dict]:
+    """Per-``WAV_FRAME``-sample frame (n, Σs², max|s|, sign crossings)
+    from a real PCM parse.
 
     All-integer reductions (no float RMS — Σs² carries the same signal
     exactly), crossings counted on strict sign products within the frame
@@ -844,11 +844,11 @@ def wav_frame_features(payload: bytes, frame: int = WAV_FRAME) -> list[dict]:
         return []
     _, _, samples = parsed
     out = []
-    for f in range(0, len(samples), frame):
-        chunk = samples[f : f + frame]
+    for f in range(0, len(samples), WAV_FRAME):
+        chunk = samples[f : f + WAV_FRAME]
         out.append(
             {
-                "frame_idx": f // frame,
+                "frame_idx": f // WAV_FRAME,
                 "n_in_frame": len(chunk),
                 "sum_sq": sum(s * s for s in chunk),
                 "peak_abs": max(abs(s) for s in chunk),

@@ -292,7 +292,6 @@ def _exact_rerank(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact-cosine top-``k`` over an ANN candidate set — the second stage
@@ -308,9 +307,9 @@ def _exact_rerank(
     extra = [c for c in cands.columns if c not in ("query_id", "neighbor_id")]
     qv, cv = F.col("qv"), F.col("cv")
     scored = (
-        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+        _vectors(corpus, "vec_id", vec_col, "neighbor_id", "cv")
         .join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(_vectors(queries, id_col, vec_col, "query_id", "qv")), "query_id")
+        .join(F.broadcast(_vectors(queries, "vec_id", vec_col, "query_id", "qv")), "query_id")
         .select(
             "query_id", "neighbor_id", *extra,
             (dot_product(qv, cv) / (l2_norm(qv) * l2_norm(cv))).alias("cos_sim"),
@@ -364,32 +363,24 @@ def brute_force_topk(
 # ---------------------------------------------------------------------------
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    nprobe: int = 3,
-) -> DataFrame:
-    """IVF approximate top-k: probe ``nprobe`` nearest centroid cells.
+def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame) -> DataFrame:
+    """IVF approximate top-10: probe the 3 nearest centroid cells.
 
     Assignment = argmax cosine over centroids (ties → lowest centroid id;
     centroid matrix is sorted by id so ``argmax``'s first-max rule matches
     the oracle's ``ORDER BY cos DESC, cid`` exactly). One corpus scan:
     each batch assigns its rows to cells, then scores rows only against the
-    queries probing that cell — compute scales with nprobe/n_centroids,
+    queries probing that cell — compute scales with 3/n_centroids,
     never N×Q. Recall is deterministic, so the DuckDB replay hash-matches.
     """
-    cids, cmat = _collect_matrix(centroids, id_col, vec_col)
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
-    # driver-side probe: per query the nprobe best cells (cos desc, cid asc)
+    cids, cmat = _collect_matrix(centroids, "vec_id", "embedding")
+    qids, qmat = _collect_matrix(queries, "vec_id", "embedding")
+    # driver-side probe: per query the 3 best cells (cos desc, cid asc)
     qcos = _lr_cosine(qmat, cmat)
     qsel = np.where(np.isfinite(qcos), qcos, -np.inf)
     cell_to_q: dict[int, list[int]] = {}
     for qi in range(len(qids)):
-        order = np.lexsort((cids, -qsel[qi]))[:nprobe]
+        order = np.lexsort((cids, -qsel[qi]))[:3]
         for ci in order:
             cell_to_q.setdefault(int(ci), []).append(qi)
 
@@ -403,13 +394,13 @@ def ivf_topk(
             if not qidx:
                 continue
             rows = np.flatnonzero(assign == cell)
-            yield _topk_rows(_lr_cosine(vm[rows], qm[qidx]), nid[rows], ids[qidx], k)
+            yield _topk_rows(_lr_cosine(vm[rows], qm[qidx]), nid[rows], ids[qidx], 10)
 
     return _scan_topk(
-        _vectors(corpus, id_col, vec_col, "neighbor_id", "cv"),
+        _vectors(corpus, "vec_id", "embedding", "neighbor_id", "cv"),
         (qids, qmat, cmat, cell_to_q),
         score,
-        k,
+        10,
     )
 
 
@@ -440,33 +431,26 @@ def hyperplanes(n_tables: int, bits: int, dim: int) -> list[list[float]]:
     ]
 
 
-def cosine_near_dup(
-    corpus: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.45,
-    n_tables: int = HYPER_TABLES,
-    bits: int = HYPER_BITS,
-) -> DataFrame:
+def cosine_near_dup(corpus: DataFrame, dim: int) -> DataFrame:
     """Near-duplicate vector pairs: LSH-banded candidates, exact verify.
 
-    Each vector gets one bucket id per hash table (``bits`` sign bits of
-    deterministic hyperplane projections). Same-bucket pairs in ANY table
-    are verified with exact cosine ≥ threshold. Shuffle = one groupBy per
-    (table, bucket); per-bucket all-pairs verify runs vectorized inside
-    ``applyInPandas``. At scale, raise ``bits`` (smaller buckets / lower
-    recall per table) and ``n_tables`` (recall back up) — candidate cost is
+    Each vector gets one bucket id per hash table (``HYPER_BITS`` sign bits
+    of deterministic hyperplane projections). Same-bucket pairs in ANY of
+    the ``HYPER_TABLES`` tables are verified with exact cosine ≥ 0.45.
+    Shuffle = one groupBy per (table, bucket); per-bucket all-pairs verify
+    runs vectorized inside ``applyInPandas``. At scale, raise the bits
+    (smaller buckets / lower recall per table) and the tables (recall back
+    up) — candidate cost is
     Σ|bucket|², tunable independently of N². Returns (vec_a, vec_b,
     cos_sim), vec_a < vec_b, deduped across tables.
     """
-    planes = np.array(hyperplanes(n_tables, bits, dim))  # (tables*bits, dim)
+    planes = np.array(hyperplanes(HYPER_TABLES, HYPER_BITS, dim))  # (tables*bits, dim)
     spark = corpus.sparkSession
     bp = spark.sparkContext.broadcast(planes)
-    nh = n_tables * bits
+    nh = HYPER_TABLES * HYPER_BITS
 
     sig_schema = "vec_id long, v array<double>, " + ", ".join(
-        f"b{t} long" for t in range(n_tables)
+        f"b{t} long" for t in range(HYPER_TABLES)
     )
 
     def bucketize(it):
@@ -480,18 +464,18 @@ def cosine_near_dup(
                 proj += np.outer(vm[:, i], pl[:, i])
             bits_ = (proj >= 0).astype(np.int64)
             out = {"vec_id": pdf["vec_id"], "v": pdf["v"]}
-            for t_ in range(n_tables):
+            for t_ in range(HYPER_TABLES):
                 acc = np.zeros(vm.shape[0], dtype=np.int64)
-                for j in range(bits):
-                    acc += bits_[:, t_ * bits + j] << j
+                for j in range(HYPER_BITS):
+                    acc += bits_[:, t_ * HYPER_BITS + j] << j
                 out[f"b{t_}"] = acc
             yield pd.DataFrame(out)
 
     sig = (
         ensure_min_parallelism(
             corpus.select(
-                F.col(id_col).cast("long").alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
+                F.col("vec_id").cast("long").alias("vec_id"),
+                F.col("embedding").cast("array<double>").alias("v"),
             )
         )
         .mapInPandas(bucketize, sig_schema)
@@ -500,7 +484,7 @@ def cosine_near_dup(
     # to emit each pair only in its FIRST colliding table, so the output is
     # globally duplicate-free WITHOUT a distinct() — one whole shuffle round
     # on the verified pairs removed vs the emit-everywhere-then-dedup shape
-    bcols = [f"b{t_}" for t_ in range(n_tables)]
+    bcols = [f"b{t_}" for t_ in range(HYPER_TABLES)]
     stacked = sig.select(
         "vec_id",
         "v",
@@ -509,7 +493,7 @@ def cosine_near_dup(
             F.array(
                 *[
                     F.struct(F.lit(t_).alias("tbl"), F.col(f"b{t_}").alias("bucket"))
-                    for t_ in range(n_tables)
+                    for t_ in range(HYPER_TABLES)
                 ]
             )
         ).alias("tb"),
@@ -537,7 +521,7 @@ def cosine_near_dup(
         vm = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
         cos = _lr_cosine(vm, vm)
         with np.errstate(invalid="ignore"):
-            m = cos[iu, ju] >= threshold
+            m = cos[iu, ju] >= 0.45
         return pd.DataFrame(
             {"vec_a": ids[iu[m]], "vec_b": ids[ju[m]], "cos_sim": cos[iu[m], ju[m]]}
         )
@@ -640,7 +624,7 @@ def x11_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") % 25 == 0)
     cents = e.where(F.col("vec_id") % 29 == 7)
-    return ivf_topk(e, queries, cents, k=10, nprobe=3)
+    return ivf_topk(e, queries, cents)
 
 
 def _near_dup_oracle() -> str:
@@ -683,7 +667,7 @@ def x05_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding (4 tables × 4 bits, deterministic hyperplanes baked into the
     oracle as literals) + exact cosine ≥ 0.45 verification."""
     e = t(spark, sf_dir, "embeddings")
-    return cosine_near_dup(e, dim=64, threshold=0.45)
+    return cosine_near_dup(e, dim=64)
 
 
 _RECALL_ORACLE = f"""
@@ -966,17 +950,11 @@ def x43_centroid_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def semantic_dedup(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.3,
-) -> DataFrame:
+def semantic_dedup(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv:2303.09540): drop semantically
     redundant items by clustering embeddings and removing, within each
     cluster, every vector that has a higher-priority (lower-id) neighbor
-    with cosine ≥ ``threshold``.
+    with cosine ≥ 0.3.
 
     Scale shape — the whole point of clustering first: pairwise cosine is
     confined to cells, so the compute is Σ|cell|² instead of N² and no
@@ -998,7 +976,7 @@ def semantic_dedup(
 
     Returns (vec_id, cid, keep) for every corpus vector.
     """
-    cids, cmat = _collect_matrix(centroids, id_col, vec_col)
+    cids, cmat = _collect_matrix(centroids, "vec_id", "embedding")
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast((cids, cmat))
 
@@ -1017,8 +995,8 @@ def semantic_dedup(
     assigned = (
         ensure_min_parallelism(
             corpus.select(
-                F.col(id_col).cast("long").alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
+                F.col("vec_id").cast("long").alias("vec_id"),
+                F.col("embedding").cast("array<double>").alias("v"),
             )
         )
         .mapInPandas(assign_partition, "vec_id long, cid long, v array<double>")
@@ -1029,7 +1007,7 @@ def semantic_dedup(
         vm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
         cos = _lr_cosine(vm, vm)
         with np.errstate(invalid="ignore"):
-            dup = np.triu(cos >= threshold, k=1)  # [i, j]: i (lower id) ≥ τ j
+            dup = np.triu(cos >= 0.3, k=1)  # [i, j]: i (lower id) ≥ τ j
         removed = dup.any(axis=0)
         return pd.DataFrame(
             {"vec_id": pdf["vec_id"], "cid": pdf["cid"], "keep": ~removed}
@@ -1078,7 +1056,7 @@ def x54_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle — the approximation itself is hash-checked."""
     e = t(spark, sf_dir, "embeddings")
     cents = e.where(F.col("vec_id") % 29 == 7)
-    return semantic_dedup(e, cents, threshold=0.3)
+    return semantic_dedup(e, cents)
 
 
 # ---------------------------------------------------------------------------
@@ -1249,13 +1227,7 @@ def _km_partials_np(
     return vecs.mapInPandas(partials, schema)
 
 
-def kmeans_lloyd(
-    emb: DataFrame,
-    k: int = KMEANS_K,
-    iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lloyd(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column — the training
     step that produces IVF coarse quantizers (x11 consumes such centroids).
 
@@ -1268,8 +1240,8 @@ def kmeans_lloyd(
     never corpus rows. Returns per-cluster (n_vectors, inertia, max_dist),
     inertia accumulated in exact micro-units."""
     vecs = emb.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     # a compact source arrives as ONE scan split at test scale (and as
     # too-few splits after heavy filters at any scale): 3 assignment
@@ -1278,7 +1250,7 @@ def kmeans_lloyd(
     # unconditional corpus-wide exchange: a naturally-wide scan keeps
     # its partitioning).
     vecs = ensure_min_parallelism(vecs).cache()
-    init = vecs.orderBy("vec_id").limit(k).collect()
+    init = vecs.orderBy("vec_id").limit(KMEANS_K).collect()
     cents = [(cid, [_quant(float(x)) for x in row.v]) for cid, row in enumerate(init)]
     for _ in range(iters):
         # r10: partial-aggregate INSIDE the assignment pass — the old
@@ -1379,7 +1351,7 @@ def x57_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment exactly (micro-unit centroid grid), so even the iterative
     algorithm is hash-checked end to end."""
     e = t(spark, sf_dir, "embeddings")
-    return kmeans_lloyd(e, k=KMEANS_K, iters=KMEANS_ITERS)
+    return kmeans_lloyd(e)
 
 
 # ---------------------------------------------------------------------------
@@ -1459,15 +1431,8 @@ def x63_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hard_negatives_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    k: int = 5,
-) -> DataFrame:
-    """Hard-negative mining for contrastive training: per query, the k
+def hard_negatives_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Hard-negative mining for contrastive training: per query, the 5
     most-similar corpus vectors with a DIFFERENT label — the examples a
     dual-encoder trainer wants in its negatives batch because they are
     maximally confusable.
@@ -1477,7 +1442,7 @@ def hard_negatives_topk(
     kernel so excluded same-label rows never inflate the partial
     candidate sets."""
     qids, qmat, qlab = _collect_matrix(
-        queries, id_col, vec_col, extra=(F.col(label_col).cast("long"),)
+        queries, "vec_id", "embedding", extra=(F.col("label").cast("long"),)
     )
 
     def score(pdf, ids, qm, ql):
@@ -1485,14 +1450,14 @@ def hard_negatives_topk(
         nlab = pdf["nl"].to_numpy(dtype=np.int64)
         cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
         same_label = nlab[:, None] == ql[None, :]
-        yield _topk_rows(_lr_cosine(cm, qm), nid, ids, k, extra_mask=same_label)
+        yield _topk_rows(_lr_cosine(cm, qm), nid, ids, 5, extra_mask=same_label)
 
     frame = corpus.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        F.col(label_col).cast("long").alias("nl"),
+        F.col("vec_id").cast("long").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
+        F.col("label").cast("long").alias("nl"),
     )
-    return _scan_topk(frame, (qids, qmat, qlab.astype(np.int64)), score, k)
+    return _scan_topk(frame, (qids, qmat, qlab.astype(np.int64)), score, 5)
 
 
 _HARDNEG_ORACLE = f"""
@@ -1528,15 +1493,10 @@ def x64_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     it as a predicate on the exact cross join."""
     e = t(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") % 25 == 0)
-    return hard_negatives_topk(e, queries, k=5)
+    return hard_negatives_topk(e, queries)
 
 
-def covariance_partials(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    chunk: int = 256,
-    n_parts: int | None = None,
-) -> DataFrame:
+def covariance_partials(vectors: DataFrame, n_parts: int | None = None) -> DataFrame:
     """Per-partition partial sums for the embedding covariance matrix.
 
     The 100 TB shape for second-moment statistics: each partition folds its
@@ -1554,7 +1514,7 @@ def covariance_partials(
     1e6-row partitions that allows |x| ≤ 3, far above unit-normalized
     embeddings. The cross-partition merge upcasts to DECIMAL(38,0).
     """
-    dim_row = vectors.select(F.size(vec_col).alias("d")).head()
+    dim_row = vectors.select(F.size("embedding").alias("d")).head()
     dim = int(dim_row["d"])
 
     def fold(it):
@@ -1562,9 +1522,9 @@ def covariance_partials(
         acc1 = np.zeros(dim, np.int64)
         n = 0
         for pdf in it:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            for s in range(0, len(m), chunk):
-                c = m[s : s + chunk]
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            for s in range(0, len(m), 256):
+                c = m[s : s + 256]
                 acc12 += (
                     np.floor(np.einsum("ri,rj->rij", c, c) * 1e12 + 0.5)
                     .astype(np.int64)
@@ -1587,7 +1547,7 @@ def covariance_partials(
         )
 
     return (
-        ensure_min_parallelism(vectors.select(vec_col), n_parts)
+        ensure_min_parallelism(vectors.select("embedding"), n_parts)
         .mapInPandas(fold, "i int, j int, s12 long, si long, sj long, n long")
     )
 

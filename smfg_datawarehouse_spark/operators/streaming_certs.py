@@ -100,7 +100,7 @@ def s18_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters_stream = (
         stream.select(
             F.posexplode(
-                _cms_buckets(F.col("event_type"), _S18_D, _S18_W)
+                _cms_buckets(F.col("event_type"), _S18_W)
             ).alias("d", "bucket")
         )
         .groupBy("d", "bucket")
@@ -117,7 +117,7 @@ def s18_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact.select(
             "tok",
             "exact_cnt",
-            F.posexplode(_cms_buckets(F.col("tok"), _S18_D, _S18_W)).alias(
+            F.posexplode(_cms_buckets(F.col("tok"), _S18_W)).alias(
                 "d", "bucket"
             ),
         )
@@ -165,7 +165,7 @@ def s01_streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s01"))
     return run_stream_to_memory(
-        spark, tumbling_agg(stream, "1 hour"), "s01_mem", "complete"
+        spark, tumbling_agg(stream), "s01_mem", "complete"
     )
 
 
@@ -351,7 +351,7 @@ def s05_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s05"))
     return run_stream_to_memory(
-        spark, session_agg(stream, "5 minutes"), "s05_mem", "complete"
+        spark, session_agg(stream), "s05_mem", "complete"
     )
 
 
@@ -368,7 +368,7 @@ def s06_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = events_stream(spark, _stage_events_dir(spark, sf_dir, "s06"))
     return run_stream_to_memory(
-        spark, sliding_agg(stream, "1 hour", "30 minutes"), "s06_mem", "complete"
+        spark, sliding_agg(stream), "s06_mem", "complete"
     )
 
 
@@ -524,7 +524,7 @@ def s09_streaming_backlog_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _os.path.join(src_dir, "raw"), max_files_per_trigger=1
     )
     return run_stream_to_memory(
-        spark, tumbling_agg(stream, "1 hour"), "s09_mem", "complete"
+        spark, tumbling_agg(stream), "s09_mem", "complete"
     )
 
 
@@ -691,7 +691,7 @@ def s11_streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     progress: list = []
     out = run_stream_to_memory(
-        spark, tumbling_agg(stream, "1 hour"), "s11_mem", "append",
+        spark, tumbling_agg(stream), "s11_mem", "append",
         progress_sink=progress,
     )
     dropped = sum(
@@ -792,7 +792,7 @@ def s13_state_store_introspection(spark: SparkSession, sf_dir: str) -> DataFrame
     raw = _stage_events_dir(spark, sf_dir, "s13_raw")
     ckpt = _os.path.join(src, "ckpt")
     stream = events_stream(spark, raw, watermark="30 minutes")
-    agg = tumbling_agg(stream, "1 hour")
+    agg = tumbling_agg(stream)
     run_stream_to_memory(spark, agg, "s13_mem", "append", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
@@ -1038,7 +1038,7 @@ def s16_checkpoint_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFra
         progress: list = []
         out = run_stream_to_memory(
             spark,
-            tumbling_agg(events_stream(spark, src), "1 hour"),
+            tumbling_agg(events_stream(spark, src)),
             name,
             "complete",
             progress_sink=progress,
@@ -1495,7 +1495,7 @@ def s23_streaming_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         events_stream(spark, raw_b, max_files_per_trigger=1)
     )
     return run_stream_to_memory(
-        spark, tumbling_agg(stream, "1 hour"), "s23_mem", "complete"
+        spark, tumbling_agg(stream), "s23_mem", "complete"
     ).select(
         F.col("window_start"), "event_type", "cnt", "total_value"
     )

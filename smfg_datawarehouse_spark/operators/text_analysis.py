@@ -34,18 +34,12 @@ WINNOW_K = 20  # char-gram width
 WINNOW_W = 8  # winnowing window (guarantee: any match ≥ w+k-1 chars is caught)
 
 
-def winnowing_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03).
 
-    Rolling char k-grams are hashed (md5 32-bit prefix — portable); each
-    length-w window of consecutive gram hashes keeps its minimum,
-    rightmost-position tie-break. Hash and tie-break are packed into ONE
+    Rolling char k-grams (k = ``WINNOW_K``) are hashed (md5 32-bit prefix —
+    portable); each length-w (w = ``WINNOW_W``) window of consecutive gram
+    hashes keeps its minimum, rightmost-position tie-break. Hash and tie-break are packed into ONE
     BIGINT — ``hash32 · 10^7 + (9999999 − pos)`` — so a plain window
     ``min`` over longs is exact, engine-identical, and far cheaper than the
     equivalent 15-char string min (docs are < 10M chars by the 7-digit
@@ -58,7 +52,8 @@ def winnowing_fingerprints(
     up front rather than a second unbounded window pass. One linear explode
     + one doc_id shuffle, no quadratic stage.
     """
-    txt = F.lower(F.col(text_col))
+    k, w = WINNOW_K, WINNOW_W
+    txt = F.lower(F.col("text"))
     ng = (F.length(txt) - (k - 1)).alias("ng")
     # CASE-guarded: sequence(1, ng) would generate a DESCENDING range for
     # ng < 1; the null branch explodes to zero rows for short docs
@@ -67,7 +62,7 @@ def winnowing_fingerprints(
     g = (
         ensure_min_parallelism(docs)
         .select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             txt.alias("_txt"),
             ng,
             F.explode(positions).alias("pos"),
@@ -89,20 +84,13 @@ def winnowing_fingerprints(
     return sel.select("doc_id", F.expr("menc DIV 10000000").alias("fp_hash")).distinct()
 
 
-def winnowing_dup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    min_shared: int = 3,
-) -> DataFrame:
-    """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints —
+def winnowing_dup_pairs(docs: DataFrame) -> DataFrame:
+    """Document pairs sharing ≥ 3 winnowing fingerprints —
     MOSS-style overlap detection. Join key is the fingerprint hash (one
     shuffle); pair aggregation counts distinct shared fingerprints."""
     # cached: the pair join consumes the fingerprint set twice; without it
     # each side replays the explode + per-doc window selection
-    fps = winnowing_fingerprints(docs, text_col, id_col, k, w).cache()
+    fps = winnowing_fingerprints(docs).cache()
     a = fps.select(F.col("doc_id").alias("doc_a"), "fp_hash")
     b = fps.select(F.col("doc_id").alias("doc_b"), "fp_hash")
     return (
@@ -110,17 +98,17 @@ def winnowing_dup_pairs(
         .where(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
-        .where(F.col("shared_fps") >= min_shared)
+        .where(F.col("shared_fps") >= 3)
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append token/char statistics + a composite quality score.
+def quality_features(df: DataFrame) -> DataFrame:
+    """Append token/char statistics of ``text`` + a composite quality score.
 
     Score = 0.4·alpha_ratio + 0.3·stopword_ratio + 0.3·min(len,500)/500 —
     a stand-in for fastText-style quality classifiers, kept expression-only.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     tokens = word_tokens(text)
     n_chars = F.length(text)
     alpha_chars = F.length(F.regexp_replace(F.lower(text), "[^a-z]", ""))
@@ -150,14 +138,14 @@ _LANG_SETS = {
 }
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """n-gram/stopword-heuristic language ID.
+def lang_id(df: DataFrame) -> DataFrame:
+    """n-gram/stopword-heuristic language ID of ``text``.
 
     Counts token hits against per-language stopword sets; argmax wins,
     'und' (undetermined) when all zero. Deterministic tie-break by fixed
     language order en > fr > de > es.
     """
-    tokens = word_tokens(F.col(text_col))
+    tokens = word_tokens(F.col("text"))
 
     def hits(words: list[str]):
         # closure factory: a 2-arg lambda would be treated as the
@@ -308,19 +296,19 @@ def x23_winnowing_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[X] Rolling-hash winnowing fingerprint overlap (MOSS-style): doc
     pairs sharing ≥3 selected fingerprints (k=20-gram, window=8)."""
     d = t(spark, sf_dir, "documents")
-    return winnowing_dup_pairs(d, "text", "doc_id", min_shared=3)
+    return winnowing_dup_pairs(d)
 
 
 BPE_PATTERN = r"[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]"
 
 
-def bpe_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bpe_token_stats(docs: DataFrame) -> DataFrame:
     """GPT-2-style pre-tokenization (letter runs | single digits |
     punctuation) via ``regexp_extract_all`` — the sub-word-ready token
     stream a BPE vocabulary trainer consumes. Stays in codegen; the regex
     uses only character classes so it means the same thing in RE2/Java/PCRE.
     """
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(BPE_PATTERN), F.lit(0))
+    toks = F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), F.lit(0))
     return docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_bpe_tokens"),
@@ -328,7 +316,7 @@ def bpe_token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         # zero-token guard (whitespace-only doc): Spark's x/0 double
         # division is NULL but DuckDB's is Infinity — NULL in both
         F.when(
-            F.size(toks) > 0, F.length(text_col).cast("double") / F.size(toks)
+            F.size(toks) > 0, F.length("text").cast("double") / F.size(toks)
         ).alias("chars_per_token"),
     )
 
@@ -354,8 +342,8 @@ def x24_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_token_stats(t(spark, sf_dir, "documents"))
 
 
-def keyword_scores(docs: DataFrame, text_col: str = "text", top_k: int = 3) -> DataFrame:
-    """TF-IDF-style keyword extraction per document, transcendental-free:
+def keyword_scores(docs: DataFrame) -> DataFrame:
+    """TF-IDF-style top-3 keyword extraction per document, transcendental-free:
     score = tf × N / df (term frequency × inverse document-frequency
     *ratio*). Rational arithmetic only — one double division — so scores
     are bit-identical across engines (log-based idf would differ in the
@@ -365,7 +353,7 @@ def keyword_scores(docs: DataFrame, text_col: str = "text", top_k: int = 3) -> D
     """
     n_docs = docs.count()  # deterministic scalar, computed once driver-side
     toks = docs.select(
-        "doc_id", F.explode(word_tokens(F.col(text_col))).alias("tok")
+        "doc_id", F.explode(word_tokens(F.col("text"))).alias("tok")
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_ = F.broadcast(
@@ -377,7 +365,7 @@ def keyword_scores(docs: DataFrame, text_col: str = "text", top_k: int = 3) -> D
         tf.join(df_, "tok")
         .withColumn("score", score)
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= 3)
         .select("doc_id", "tok", "score", "rank")
     )
 
@@ -409,24 +397,24 @@ _KEYWORD_ORACLE = r"""
 @register("x25_keyword_extraction", _KEYWORD_ORACLE)
 def x25_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[X] Top-3 keywords per document by tf·(N/df) rarity weighting."""
-    return keyword_scores(t(spark, sf_dir, "documents"), top_k=3)
+    return keyword_scores(t(spark, sf_dir, "documents"))
 
 
 VOCAB_STOPWORDS = sorted(set(w for ws in _LANG_SETS.values() for w in ws) | set(_STOPWORDS_EN))
 
 
-def build_vocabulary(docs: DataFrame, text_col: str = "text", top_n: int = 50) -> DataFrame:
-    """Corpus vocabulary: top-N tokens by total frequency, stopwords
+def build_vocabulary(docs: DataFrame) -> DataFrame:
+    """Corpus vocabulary: top-50 tokens by total frequency, stopwords
     removed — the seed step of a tokenizer/vocab-training pipeline. One
     explode + one groupBy; the top-N is TakeOrderedAndProject (no full
     sort). Deterministic tie-break on the token itself."""
-    toks = docs.select(F.explode(word_tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.explode(word_tokens(F.col("text"))).alias("tok"))
     return (
         toks.where(~F.col("tok").isin(VOCAB_STOPWORDS))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.col("freq").desc(), "tok")
-        .limit(top_n)
+        .limit(50)
     )
 
 
@@ -450,7 +438,7 @@ _VOCAB_ORACLE = rf"""
 @register("x26_vocabulary_top50", _VOCAB_ORACLE)
 def x26_vocabulary_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[X] Stopword-filtered corpus vocabulary (top-50 tokens by frequency)."""
-    return build_vocabulary(t(spark, sf_dir, "documents"), top_n=50)
+    return build_vocabulary(t(spark, sf_dir, "documents"))
 
 
 _CURATION_ORACLE = r"""
@@ -1523,9 +1511,9 @@ def _x147_oracle() -> str:
     )
 
 
-def bpe_merge_fold(pa: str, pb: str, seq_col: str = "seq") -> F.Column:
+def bpe_merge_fold(pa: str, pb: str) -> F.Column:
     """Left-to-right non-overlapping BPE merge of adjacent symbols
-    (pa, pb) over a space-joined symbol sequence column.
+    (pa, pb) over the space-joined symbol sequence column ``seq``.
 
     Built from COLUMN functions, never from an f-string fed to
     ``F.expr``: pa/pb are corpus-derived tokens, and a quote or
@@ -1534,7 +1522,7 @@ def bpe_merge_fold(pa: str, pb: str, seq_col: str = "seq") -> F.Column:
     the accumulator must END with the complete symbol ``pa`` (equal to
     it, or preceded by a space), never a substring of a longer symbol.
     """
-    arr = F.split(F.col(seq_col), " ")
+    arr = F.split(F.col("seq"), " ")
 
     def _merge(acc: F.Column, x: F.Column) -> F.Column:
         hit = (

@@ -33,15 +33,10 @@ BOILER_K = 3  # token k-gram width
 BOILER_DF_FRAC = 0.01  # gram is boilerplate when df >= max(2, ceil(frac·n_docs))
 
 
-def boilerplate_coverage(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = BOILER_K,
-    df_frac: float = BOILER_DF_FRAC,
-) -> DataFrame:
-    """Per-document fraction of token k-gram windows whose gram occurs in
-    ≥ max(2, ceil(df_frac·n_docs)) DISTINCT documents. The threshold is
+def boilerplate_coverage(docs: DataFrame) -> DataFrame:
+    """Per-document fraction of token k-gram windows (k = ``BOILER_K``)
+    whose gram occurs in ≥ max(2, ceil(df_frac·n_docs)) DISTINCT documents
+    (df_frac = ``BOILER_DF_FRAC``). The threshold is
     proportional to corpus size — the definition that survives a 1000×
     scale-up (an absolute df would silently reclassify everything).
 
@@ -52,18 +47,15 @@ def boilerplate_coverage(
     The n_docs total is a one-row broadcast. No Python UDFs."""
     toks = (
         ensure_min_parallelism(docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            word_tokens(F.col(text_col)).alias("tk"),
-        )
-        .where(F.size("tk") >= k)
+        .select("doc_id", word_tokens(F.col("text")).alias("tk"))
+        .where(F.size("tk") >= BOILER_K)
     )
     windows = toks.select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(1), F.size("tk") - (k - 1)),
-                lambda p: F.array_join(F.slice(F.col("tk"), p, k), "\x1f"),
+                F.sequence(F.lit(1), F.size("tk") - (BOILER_K - 1)),
+                lambda p: F.array_join(F.slice(F.col("tk"), p, BOILER_K), "\x1f"),
             )
         ).alias("s"),
     )
@@ -76,7 +68,7 @@ def boilerplate_coverage(
         .where(
             F.col("gram_df")
             >= F.greatest(
-                F.lit(2), F.ceil(F.lit(df_frac) * F.col("n_docs"))
+                F.lit(2), F.ceil(F.lit(BOILER_DF_FRAC) * F.col("n_docs"))
             )
         )
         .select("s")
@@ -149,15 +141,9 @@ def x92_boilerplate_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return boilerplate_coverage(d)
 
 
-def build_inverted_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_df: int = 5,
-    postings_cap: int = 20,
-    top_terms: int = 100,
-) -> DataFrame:
-    """Inverted index head: per term, document frequency, total term
-    frequency, and the first ``postings_cap`` postings ("doc_id:tf",
+def build_inverted_index(docs: DataFrame) -> DataFrame:
+    """Inverted index head: for the top 100 terms with df ≥ 5, document
+    frequency, total term frequency, and the first 20 postings ("doc_id:tf",
     ascending doc_id) — the IR structure a retrieval/dedup pipeline
     builds over a corpus, with the honest head-truncation a 100 TB
     postings list needs (cap documented in the column name; full
@@ -169,7 +155,7 @@ def build_inverted_index(
     reuses the partitioning). Top-terms selection is
     TakeOrderedAndProject, not a global sort."""
     toks = docs.select(
-        "doc_id", F.explode(word_tokens(F.col(text_col))).alias("term")
+        "doc_id", F.explode(word_tokens(F.col("text"))).alias("term")
     )
     td = toks.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -184,7 +170,7 @@ def build_inverted_index(
         F.sum("tf").over(w).cast("long").alias("total_tf"),
     )
     return (
-        ranked.where(F.col("rn") <= postings_cap)
+        ranked.where(F.col("rn") <= 20)
         .groupBy("term", "df", "total_tf")
         .agg(
             ordered_concat_ws(
@@ -193,9 +179,9 @@ def build_inverted_index(
                 F.concat_ws(":", F.col("doc_id"), F.col("tf")),
             ).alias("postings_head")
         )
-        .where(F.col("df") >= min_df)
+        .where(F.col("df") >= 5)
         .orderBy(F.col("df").desc(), "term")
-        .limit(top_terms)
+        .limit(100)
     )
 
 
@@ -238,9 +224,9 @@ def x93_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_inverted_index(t(spark, sf_dir, "documents"))
 
 
-def token_chunking_udtf(chunk_tokens: int = 32):
+def token_chunking_udtf():
     """PyArrow-native UDTF (Spark 4.1 ``arrow_udtf``) that explodes each
-    document into fixed-size token-window chunks — the context-window
+    document into 32-token window chunks — the context-window
     chunking step every LLM training / RAG ingestion pipeline runs over
     the corpus. One output row per chunk: (doc_id, chunk_idx,
     chunk_text, n_tokens), last chunk ragged.
@@ -258,7 +244,7 @@ def token_chunking_udtf(chunk_tokens: int = 32):
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udtf
 
-    K = int(chunk_tokens)
+    K = 32
 
     @arrow_udtf(
         returnType=(
@@ -351,7 +337,7 @@ def x96_token_chunking_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel (no shuffle at all — the UDTF consumes scan partitions
     and multiplies rows in place)."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return token_chunking_udtf(32)(docs.asTable())
+    return token_chunking_udtf()(docs.asTable())
 
 
 @register(

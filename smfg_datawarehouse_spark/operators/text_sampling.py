@@ -1132,7 +1132,7 @@ def _register_x160() -> None:
         )
 
         d = t(spark, sf_dir, "documents")
-        edges = minhash_candidates(d, "text", "doc_id", est_threshold=0.5)
+        edges = minhash_candidates(d, est_threshold=0.5)
         dup_ids = (
             edges.select(F.col("doc_a").alias("doc_id"))
             .unionAll(edges.select(F.col("doc_b").alias("doc_id")))

@@ -24,30 +24,26 @@ from smfg_datawarehouse_spark.session import ensure_min_parallelism
 
 CMS_D = 4  # hash rows
 CMS_W = 256  # buckets per row
+CMS_TOP_K = 20  # tokens whose estimates are checked against exact counts
 
 
-def _cms_buckets(tok: Column, d_rows: int = CMS_D, width: int = CMS_W) -> Column:
-    """Array of the token's bucket per CMS hash row — portable
+def _cms_buckets(tok: Column, width: int = CMS_W) -> Column:
+    """Array of the token's bucket per each of the ``CMS_D`` hash rows — portable
     ``md5('cms{d}:' || tok)`` 32-bit prefix mod width, identical in any
     engine (same family as the MinHash signatures in dedup.py)."""
     return F.array(
         *[
             md5_int(F.concat(F.lit(f"cms{d}:"), tok))
             % width
-            for d in range(d_rows)
+            for d in range(CMS_D)
         ]
     )
 
 
-def cms_heavy_hitters(
-    docs: DataFrame,
-    text_col: str = "text",
-    d_rows: int = CMS_D,
-    width: int = CMS_W,
-    top_k: int = 20,
-) -> DataFrame:
+def cms_heavy_hitters(docs: DataFrame) -> DataFrame:
     """Count-min sketch token-frequency estimation, evaluated against the
-    exact counts for the corpus's top-k tokens (Cormode/Muthukrishnan '05).
+    exact counts for the corpus's top-``CMS_TOP_K`` tokens
+    (Cormode/Muthukrishnan '05).
 
     The sketch is the 100 TB path for frequency queries: counter state is
     a FIXED d×w grid (here 4×256 longs) regardless of vocabulary size —
@@ -58,23 +54,23 @@ def cms_heavy_hitters(
     re-checks. The exact side here is the *evaluation harness* (same
     pattern as x12 IVF recall / x14 MinHash error / x47 HLL gate).
     """
-    toks = docs.select(F.explode(word_tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.explode(word_tokens(F.col("text"))).alias("tok"))
     # counters: one pass, posexplode the D bucket ids per token occurrence
     counters = (
-        toks.select(F.posexplode(_cms_buckets(F.col("tok"), d_rows, width)).alias("d", "bucket"))
+        toks.select(F.posexplode(_cms_buckets(F.col("tok"))).alias("d", "bucket"))
         .groupBy("d", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("exact_cnt"))
     w = W.orderBy(F.col("exact_cnt").desc(), F.col("tok"))
     top = (
-        exact.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= top_k).drop("rn")
+        exact.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= CMS_TOP_K).drop("rn")
     )
     est = (
         top.select(
             "tok",
             "exact_cnt",
-            F.posexplode(_cms_buckets(F.col("tok"), d_rows, width)).alias("d", "bucket"),
+            F.posexplode(_cms_buckets(F.col("tok"))).alias("d", "bucket"),
         )
         .join(F.broadcast(counters), ["d", "bucket"])
         .groupBy("tok", "exact_cnt")
@@ -108,7 +104,7 @@ _CMS_ORACLE = f"""
         SELECT tok, exact_cnt,
                ROW_NUMBER() OVER (ORDER BY exact_cnt DESC, tok) AS rn
         FROM exact
-      ) WHERE rn <= 20
+      ) WHERE rn <= {CMS_TOP_K}
     ),
     est AS (
       SELECT t.tok, t.exact_cnt, CAST(min(c.cnt) AS BIGINT) AS est_cnt
@@ -138,21 +134,17 @@ def x49_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tfidf_cosine_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.3,
-    df_cap: int | None = None,
     prefix_filter: bool = True,
     _return_candidates: bool = False,
 ) -> DataFrame:
-    """Document pairs with TF-IDF cosine ≥ threshold — near-dup detection
-    with NO embedding column, pure sparse algebra on the token inverted
-    index.
+    """Document pairs with TF-IDF cosine ≥ threshold (0.3) — near-dup
+    detection with NO embedding column, pure sparse algebra on the token
+    inverted index.
 
     weight(doc, tok) = tf · (N/df) — rational idf (no transcendental log),
     so weights are bit-identical across engines. Tokens with document
-    frequency above ``df_cap`` (default ``max(64, ⌈√N⌉)``, the same skew
-    guard as jaccard_pairs) are pruned from the vocabulary BEFORE
+    frequency above ``max(64, ⌈√N⌉)`` (the same skew guard as
+    jaccard_pairs) are pruned from the vocabulary BEFORE
     weighting: this is simultaneously classic stopword pruning (high-df
     tokens carry ~zero idf weight) and the bound that keeps the
     inverted-index self-join's Σ df² candidate cost from detonating on
@@ -181,14 +173,13 @@ def tfidf_cosine_pairs(
     """
     from smfg_datawarehouse_spark.queries import dsum
 
-    n_docs = docs.count()
-    if df_cap is None:
-        import math
+    import math
 
-        df_cap = max(64, math.isqrt(n_docs) + 1)
+    threshold = 0.3
+    n_docs = docs.count()
+    df_cap = max(64, math.isqrt(n_docs) + 1)
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_tokens(F.col(text_col))).alias("tok"),
+        "doc_id", F.explode(word_tokens(F.col("text"))).alias("tok")
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dft = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).where(
@@ -354,10 +345,11 @@ BLOOM_M = 2048  # bits
 BLOOM_K = 4  # hash functions
 
 
-def _bloom_bits(tok: Column, k: int = BLOOM_K, m: int = BLOOM_M) -> Column:
+def _bloom_bits(tok: Column) -> Column:
     """The token's DISTINCT Bloom bit positions as ``array<bigint>``:
     Kirsch–Mitzenmacher double hashing — ONE md5, its two 32-bit prefix
-    words (a, b) derive all k positions as ``(a + j·b) mod m`` (preserves
+    words (a, b) derive all k = ``BLOOM_K`` positions as ``(a + j·b) mod m``
+    (m = ``BLOOM_M``) (preserves
     the asymptotic false-positive rate, ESA'06). One hash evaluation per
     token instead of k, and a k× smaller codegen footprint. Distinct
     matters: rows may collide on a bit, and membership means *every
@@ -365,23 +357,18 @@ def _bloom_bits(tok: Column, k: int = BLOOM_K, m: int = BLOOM_M) -> Column:
     h = F.md5(tok)
     a = hex_int(h)
     b = hex_int(h, 9)
-    return F.array_distinct(F.array(*[(a + F.lit(j) * b) % m for j in range(k)]))
+    return F.array_distinct(
+        F.array(*[(a + F.lit(j) * b) % BLOOM_M for j in range(BLOOM_K)])
+    )
 
 
-def bloom_contamination(
-    docs: DataFrame,
-    train_source: str,
-    text_col: str = "text",
-    source_col: str = "source",
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-) -> DataFrame:
+def bloom_contamination(docs: DataFrame, train_source: str) -> DataFrame:
     """Benchmark-decontamination membership sketch (Bloom '70): build a
     Bloom filter over the training source's token vocabulary, probe every
     OTHER source's tokens through it, and report Bloom hits next to exact
     membership per source.
 
-    At 100 TB the filter — at most ``m`` set-bit rows regardless of
+    At 100 TB the filter — at most ``BLOOM_M`` set-bit rows regardless of
     vocabulary size — broadcasts to every probe task, replacing the
     vocabulary-sized shuffle an exact semi-join needs; the exact side here
     is the evaluation harness (x12/x14/x47/x49 pattern). Structural
@@ -405,7 +392,7 @@ def bloom_contamination(
     # per doc — instead of a per-position transform() lambda: higher-order
     # functions run INTERPRETED in Spark, and at millions of bigrams the
     # per-element lambda overhead dominates (measured ~3× on this op).
-    tk = word_tokens(F.col(text_col))
+    tk = word_tokens(F.col("text"))
     pairs = F.when(
         F.size(tk) >= 2,
         F.arrays_zip(
@@ -415,7 +402,7 @@ def bloom_contamination(
     )
     toks = (
         ensure_min_parallelism(docs)
-        .select(F.col(source_col).alias("source"), F.explode(pairs).alias("z"))
+        .select("source", F.explode(pairs).alias("z"))
         .select(
             "source",
             F.concat(F.col("z.w1"), F.lit(" "), F.col("z.w2")).alias("tok"),
@@ -425,7 +412,7 @@ def bloom_contamination(
     )
     train = toks.where(F.col("source") == train_source).select("tok").distinct()
     bits = (
-        train.select(F.explode(_bloom_bits(F.col("tok"), k, m)).alias("bit"))
+        train.select(F.explode(_bloom_bits(F.col("tok"))).alias("bit"))
         .distinct()
         .withColumn("_in", F.lit(1))
     )
@@ -438,7 +425,7 @@ def bloom_contamination(
     # semi-join — a much smaller plan to compile AND execute.
     probe = toks.where(F.col("source") != train_source)
     per_token = (
-        probe.withColumn("_bits", _bloom_bits(F.col("tok"), k, m))
+        probe.withColumn("_bits", _bloom_bits(F.col("tok")))
         .select(
             "source",
             "tok",
@@ -672,9 +659,6 @@ def x118_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so both engines agree bit-for-bit.
 # ---------------------------------------------------------------------------
 
-_X123_BANDS = 4
-
-
 def _bbit_pairs(docs: DataFrame) -> DataFrame:
     from smfg_datawarehouse_spark.operators.dedup import (
         _NUM_HASHES,
@@ -683,8 +667,8 @@ def _bbit_pairs(docs: DataFrame) -> DataFrame:
         minhash_signatures,
     )
 
-    sig = minhash_signatures(docs, "text", "doc_id", k=3, num_hashes=_NUM_HASHES)
-    stacked = lsh_band_rows(sig, _NUM_HASHES, _X123_BANDS).cache()
+    sig = minhash_signatures(docs)
+    stacked = lsh_band_rows(sig).cache()
     a, b = stacked.alias("a"), stacked.alias("b")
     full = _sig_agreement("a.sig", "b.sig")
     bits = _sig_agreement("a.sig", "b.sig", lambda x, y: x % 2 == y % 2)
@@ -981,20 +965,14 @@ def _register_x126() -> None:
         runs only on candidates (x14's in-array idiom); every ratio is
         exact ints under ONE double division."""
         from smfg_datawarehouse_spark.operators.dedup import (
-            _BANDS,
-            _NUM_HASHES,
             minhash_candidates,
             simhash_signatures,
         )
         from smfg_datawarehouse_spark.functions import shingle_table
 
         d = t(spark, sf_dir, "documents")
-        sh = shingle_table(d, "text", "doc_id", k=3, mode="word").cache()
-        cand = minhash_candidates(
-            d, "text", "doc_id",
-            k=3, num_hashes=_NUM_HASHES, bands=_BANDS,
-            est_threshold=0.0, mode="word", shingles=sh,
-        )
+        sh = shingle_table(d).cache()
+        cand = minhash_candidates(d, est_threshold=0.0, shingles=sh)
         sets = (
             sh.groupBy("doc_id")
             .agg(F.sort_array(F.collect_list("shingle")).alias("sh"))

@@ -68,6 +68,21 @@ window left is the band-offset cumsum over ≤|bands| rows).
 """
 
 
+def plan_row(spark, fn) -> tuple:
+    """``(exchanges, broadcasts, pushed, cartesian)`` of one registered
+    query's plan at ``SF_DIR``. The query is built on an empty cache, so
+    a frame an earlier query cached cannot stand in for part of the plan
+    and the row does not depend on which queries ran before it."""
+    spark.catalog.clearCache()
+    df = fn(spark, SF_DIR)
+    return (
+        exchange_count(df),
+        broadcast_join_count(df),
+        "yes" if any(f.strip() for f in pushed_filters(df)) else "—",
+        "YES" if "CartesianProduct" in formatted_plan(df) else "—",
+    )
+
+
 def generate(out_path: str = "PLANS.md") -> str:
     from smfg_datawarehouse_spark import queries as qmod
     from smfg_datawarehouse_spark.session import get_spark
@@ -76,17 +91,7 @@ def generate(out_path: str = "PLANS.md") -> str:
     rows = []
     for name, fn in sorted(qmod.all_queries().items()):
         try:
-            df = fn(spark, SF_DIR)
-            plan = formatted_plan(df)
-            rows.append(
-                (
-                    name,
-                    exchange_count(df),
-                    broadcast_join_count(df),
-                    "yes" if any(f.strip() for f in pushed_filters(df)) else "—",
-                    "YES" if "CartesianProduct" in plan else "—",
-                )
-            )
+            rows.append((name, *plan_row(spark, fn)))
         except Exception as exc:  # a query that can't even plan is a bug
             rows.append((name, "ERR", "ERR", "ERR", str(exc)[:40]))
     body = "".join(

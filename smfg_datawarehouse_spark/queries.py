@@ -62,153 +62,6 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: Names with a green driver CORRECTNESS row in ANY past round. The driver
-#: samples the first N registered queries in order, so surface the
-#: never-yet-certified names FIRST and push already-certified ones to the
-#: back — maximizes new certification coverage per driver pass without
-#: dropping any query. Refresh this set each round from the latest
-#: CORRECTNESS_r{N}.json greens.
-_CERTIFIED_R01 = {
-    "q01_pricing_summary", "q02_projection_rename_filter",
-    "q03_join_customer_orders", "q04_revenue_by_nation",
-    "q05_ordered_group_concat", "q06_window_top_order_per_customer",
-    "q07_topk_orders", "q08_except_customers_without_orders",
-    "q09_anti_join_integrity", "q10_rollup_returns", "q11_case_bucketing",
-    "q12_string_functions", "q13_date_functions",
-    "q14_union_priority_classes", "q15_semi_join_active_parts",
-    "q16_metadata_compiler", "q17_config_driven_extraction",
-    "q19_merge_upsert", "q31_grouping_sets", "q33_intersect_nations",
-    "q34_top_suppliers_by_revenue", "q36_above_average_orders",
-    "q37_part_brand_revenue", "q38_customer_order_quartiles",
-    "q39_customer_order_distribution", "q40_small_quantity_revenue",
-    "q41_nation_presence_full_outer", "q43_except_all_open_vs_finished",
-    "q46_stratified_systematic_sample", "q47_ranking_variants",
-    "q48_volume_shipping", "q49_market_share", "q50_primary_supplier_parts",
-    "q51_idle_rich_customers", "q52_unpivot_measures",
-    "q53_shipping_priority", "q54_order_priority_check",
-    "q55_local_supplier_volume", "q56_forecast_revenue_change",
-    "q57_returned_item_customers", "q58_promo_revenue_ratio",
-    "q59_top_supplier", "q60_parts_supplier_counts",
-    "q61_large_volume_customers", "q62_discounted_brand_revenue",
-    "q63_waiting_suppliers", "l01_runner_audit_end_to_end",
-    "l02_versioned_merge_lifecycle",
-}
-
-#: CORRECTNESS_r02.json greens (50/50): the whole x-family plus q18/q44/l03.
-_CERTIFIED_R02 = {
-    "l03_multiformat_roundtrip", "q18_output_mapping_load",
-    "q44_salted_event_type_totals",
-    "x01_exact_dedup_docs", "x02_ngram_jaccard_pairs",
-    "x03_minhash_lsh_dupes", "x04_simhash_dupes", "x05_cosine_near_dup",
-    "x06_dup_groups_cc", "x07_latest_event_per_user", "x08_label_centroids",
-    "x10_ann_bruteforce_topk", "x11_ann_ivf_topk", "x12_ivf_recall_at_10",
-    "x13_embedding_quantization", "x14_minhash_estimation_error",
-    "x20_token_stats", "x21_quality_scores", "x22_lang_id",
-    "x23_winnowing_dupes", "x24_bpe_token_stats", "x25_keyword_extraction",
-    "x26_vocabulary_top50", "x27_bigrams_top50", "x28_editdist_dupes",
-    "x29_train_val_split", "x30_multimodal_features",
-    "x31_multimodal_resize_sample", "x32_repetition_stats",
-    "x33_pii_masking", "x34_cross_source_contamination", "x35_oov_rate",
-    "x36_source_divergence", "x37_mean_token_prob", "x38_length_deciles",
-    "x39_temperature_weights", "x40_corpus_curation", "x41_token_budget",
-    "x42_embedding_dim_stats", "x43_centroid_distances",
-    "x44_sequence_packing", "x45_dup_group_canonical", "x46_doc_chunks",
-    "x47_hll_distinct_accuracy", "x48_dup_graph_pagerank",
-    "x49_cms_heavy_hitters", "x50_tfidf_cosine_pairs",
-    "x51_bloom_contamination", "x52_approx_percentile_gate",
-    "x53_chunk_dedup",
-}
-
-#: CORRECTNESS_r03.json greens (50/50): events/window suite, lifecycle
-#: l04-l16, streaming s01/s02, and the round-3 x additions.
-_CERTIFIED_R03 = {
-    "l04_bucketed_colocated_join", "l05_partition_pruned_lake",
-    "l06_realtime_dispatch_lifecycle", "l07_compaction_lifecycle",
-    "l08_partial_failure_rollup", "l09_schema_evolution_lifecycle",
-    "l10_incremental_agg_maintenance", "l11_dynamic_partition_overwrite",
-    "l12_time_travel_read", "l13_vacuum_lifecycle",
-    "l14_jdbc_extraction_lifecycle", "l15_snapshot_diff",
-    "l16_changelog_replay",
-    "q20_tumbling_window", "q21_sliding_window", "q22_session_window",
-    "q23_json_extraction", "q24_window_lag_running",
-    "q25_pivot_daily_events", "q26_cube_event_matrix",
-    "q27_distinct_users", "q28_incremental_watermark",
-    "q29_percentile_stats", "q30_asof_last_purchase",
-    "q32_view_purchase_conversions", "q35_data_profile",
-    "q42_rolling_hour_user_value", "q45_hourly_gap_fill",
-    "q64_event_funnel", "q65_cohort_retention", "q66_user_sessions",
-    "q67_rolling_active_users", "q68_important_parts",
-    "q69_monthly_revenue_growth", "q70_min_cost_supplier",
-    "q71_profit_by_nation_year", "q72_price_histogram",
-    "q73_time_weighted_value", "q74_moving_median",
-    "q75_running_distinct_types", "q76_mad_outliers",
-    "q77_forward_asof_conversion", "q78_unconverted_views",
-    "q81_bloom_join_pushdown", "q86_order_consistency_audit",
-    "s01_streaming_tumbling_window", "s02_streaming_stateful_totals",
-    "x55_dedup_impact_report", "x56_shingle_novelty",
-    "x61_incremental_minhash_dedup",
-}
-
-#: CORRECTNESS_r04.json greens (50/50): OLAP q88-q104, lifecycle l17-l30,
-#: streaming s11-s16, and the round-4 x additions.
-_CERTIFIED_R04 = {
-    "l17_manifest_commit_lifecycle", "l18_zonemap_pruned_scan",
-    "l19_salted_skew_join", "l20_join_view_maintenance",
-    "l21_subject_erasure", "l22_deletion_vector_delete",
-    "l23_write_audit_publish", "l24_partition_retention",
-    "l26_multi_table_transaction", "l27_zero_copy_clone",
-    "l28_clustered_rewrite", "l29_bloom_file_index",
-    "l30_binpack_minor_compaction", "q100_equi_depth_histogram",
-    "q101_sole_failing_supplier", "q102_bitemporal_revision",
-    "q103_pareto_abc", "q104_semi_additive_balance", "q88_table_profile",
-    "q89_dq_rule_audit", "q90_last_touch_attribution", "q91_ab_welch_ttest",
-    "q92_lateral_top_orders", "q93_variant_extraction",
-    "q94_rolling_trend_slope", "q95_bitmap_index_intersection",
-    "q96_zorder_skipping_audit", "q97_recursive_reachability",
-    "q98_band_join_bucketed", "q99_skyline_pareto",
-    "s11_streaming_late_data_drop", "s12_streaming_semi_join",
-    "s13_state_store_introspection", "s14_dedup_within_watermark",
-    "s15_streaming_write_audit_publish", "s16_checkpoint_restart_recovery",
-    "x105_lsh_banding_calibration", "x107_image_ahash",
-    "x111_triangle_count", "x115_label_spread", "x116_record_linkage_fs",
-    "x117_seasonality_index", "x85_pq_adc_topk", "x86_substring_dedup",
-    "x88_cc_distributed_tier", "x89_png_decode_roundtrip",
-    "x90_intra_doc_repetition", "x91_wav_decode_roundtrip",
-    "x94_theta_sketch_set_ops", "x95_kll_quantile_rollup",
-}
-
-_CERTIFIED_R05 = {
-    "l25_ann_index_persistence", "q79_scd2_user_history",
-    "q80_scd2_point_in_time", "q82_burst_detection", "q83_grain_cascade",
-    "q84_event_transitions", "q85_rfm_segmentation",
-    "q87_conversion_latency_profile", "s03_streaming_interval_join",
-    "s04_streaming_dedup", "s05_streaming_session_window",
-    "s06_streaming_sliding_window", "s07_streaming_dim_enrichment",
-    "s08_streaming_outer_join", "s09_streaming_backlog_drain",
-    "s10_streaming_cdc_upsert", "x100_matryoshka_prefix_recall",
-    "x101_skipgram_pairs", "x103_quantile_normalization",
-    "x104_l_diversity_risk", "x106_ivf_cell_balance",
-    "x108_shard_content_checksum", "x109_negative_sampling_table",
-    "x112_rank_fusion_rrf", "x113_t_closeness", "x114_randomized_response",
-    "x118_join_size_estimate", "x119_winsorized_mean", "x54_semantic_dedup",
-    "x57_kmeans_lloyd", "x58_eval_gram_decontamination",
-    "x59_sq8_rerank_topk", "x60_gopher_quality_gates",
-    "x62_dsir_importance_weights", "x63_semantic_contamination",
-    "x64_hard_negative_mining", "x65_corpus_datacard",
-    "x68_collocation_lift", "x69_embedding_covariance",
-    "x70_lm_score_buckets", "x71_containment_dupes",
-    "x73_char_diversity_filter", "x74_eval_leakage_coverage",
-    "x76_quality_calibration", "x87_domain_reweighting",
-    "x92_boilerplate_coverage", "x93_inverted_index",
-    "x96_token_chunking_udtf", "x98_bm25_rational_topk",
-    "x99_jl_projection_topk",
-}
-
-_CERTIFIED_FALLBACK = (
-    _CERTIFIED_R01 | _CERTIFIED_R02 | _CERTIFIED_R03 | _CERTIFIED_R04
-    | _CERTIFIED_R05
-)
-
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -231,8 +84,8 @@ def _certified_from_disk() -> tuple[set[str], dict[str, str]]:
     round's verdict wins per name, so a regression in a newer record
     demotes the query back into the re-test tier instead of riding an old
     green forever. A malformed/unreadable file is skipped (never fatal on
-    import), and if NO files exist (fresh checkout without driver
-    artifacts) the frozen r01-r05 literals above are the offline fallback.
+    import). The CORRECTNESS files are tracked in git, so a checkout
+    always has them.
     """
     import glob
     import json
@@ -263,9 +116,11 @@ def _certified_from_disk() -> tuple[set[str], dict[str, str]]:
     return certified, {n: last_green[n] for n in certified}
 
 
+#: Names with a green driver CORRECTNESS row in any past round. The
+#: driver samples the first N registered queries in order, so the
+#: never-yet-certified names go FIRST and already-certified ones to the
+#: back (see :func:`_priority_order`).
 _CERTIFIED, _CERT_RECENCY = _certified_from_disk()
-if not _CERTIFIED:
-    _CERTIFIED, _CERT_RECENCY = _CERTIFIED_FALLBACK, {}
 
 #: Already-certified names whose underlying code THIS round touches
 #: (perf rewrites, shared-frame caching, dialect edges). They sort right

@@ -178,7 +178,6 @@ def run_realtime_staging(
     catalog: ConfigCatalog,
     zones: LakeZones,
     audit: AuditLedger,
-    process_type: str = "REALTIME",
     checkpoint_root: str | None = None,
 ) -> tuple[int, list[TableResult]]:
     """REALTIME staging load, end-to-end: for every active table whose
@@ -210,11 +209,12 @@ def run_realtime_staging(
     can still duplicate one batch — true exactly-once appends need a
     transactional sink (Delta MERGE), out of scope in this sandbox.
 
-    Returns (process_id, per-table results) exactly like the batch runner;
+    The process-master row has ProcessType ``REALTIME``. Returns
+    (process_id, per-table results) exactly like the batch runner;
     failure isolation and SUCCESS/PARTIAL/FAILED rollup are shared (L6).
     """
     process_id = _open_process(
-        catalog, audit, process_type, "REALTIME_STAGING", "REALTIME_STAGING"
+        catalog, audit, "REALTIME", "REALTIME_STAGING", "REALTIME_STAGING"
     )
     plans = realtime_plans(catalog)
     ckpt_root = checkpoint_root or os.path.join(zones.logs, "checkpoints")

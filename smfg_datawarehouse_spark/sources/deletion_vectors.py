@@ -39,22 +39,19 @@ WORD_BITS = 62  # DuckDB-replayable: 1 << 63 overflows BIGINT (see q95)
 class DeletionVectorTable:
     """Immutable base parquet + versioned deletion-vector sidecar."""
 
-    def __init__(
-        self, spark: SparkSession, path: str, key_col: str, n_chunks: int = 16
-    ):
+    def __init__(self, spark: SparkSession, path: str, key_col: str):
         self.spark = spark
         self.key_col = key_col
-        self.n_chunks = n_chunks
         self.base_path = os.path.join(path, "base")
         self.dv = ManifestTable(spark, os.path.join(path, "dv"))
 
     # -- base layout --------------------------------------------------------
 
     def write_base(self, df: DataFrame) -> None:
-        """One-time base write with row identity: chunk = key % n_chunks
+        """One-time base write with row identity: chunk = key % 16
         (the file/row-group analog — ordinals are LOCAL to a chunk so no
         global sort is ever needed), ordinal = dense rank within chunk."""
-        chunk = (F.col(self.key_col) % self.n_chunks).alias("dv_chunk")
+        chunk = (F.col(self.key_col) % 16).alias("dv_chunk")
         w = W.partitionBy("dv_chunk").orderBy(self.key_col)
         (
             df.withColumn("dv_chunk", chunk)
@@ -82,8 +79,8 @@ class DeletionVectorTable:
             return None
         return self.dv.read()
 
-    def deleted_count(self, vector: DataFrame | None = None) -> int:
-        v = self._current_vector() if vector is None else vector
+    def deleted_count(self) -> int:
+        v = self._current_vector()
         if v is None:
             return 0
         row = v.agg(F.sum(F.bit_count("bits")).cast("long").alias("n")).first()

@@ -56,19 +56,15 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    min_files: int = 1,
-) -> str:
-    """Rewrite a parquet dir into size-targeted files (snappy, Spark default).
+def compact(spark: SparkSession, path: str, target_file_bytes: int) -> str:
+    """Rewrite a parquet dir into files of about ``target_file_bytes``
+    each, at least one (snappy, Spark default).
 
     Equivalent of the reference's consolidate-to-one-file step but
     scale-aware; pass ``target_file_bytes`` large to force a single file at
     test scale.
     """
-    n_files = max(min_files, _dir_bytes(path) // target_file_bytes or min_files)
+    n_files = max(1, _dir_bytes(path) // target_file_bytes)
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "__compact_tmp"
     df.coalesce(int(n_files)).write.mode("overwrite").parquet(tmp)
@@ -102,22 +98,18 @@ def write_staging(
     zones: LakeZones,
     schema_name: str,
     table_name: str,
-    mode: str = "overwrite",
+    mode: str,
 ) -> str:
-    """Staging-zone write. Replicates the reference's consolidation-time
-    row-quality filter (all-NA rows skipped,
-    ``staging_data_extraction.py:53-56``) as ``na.drop("all")``."""
+    """Staging-zone write (``mode`` ``overwrite`` or ``append``).
+    Replicates the reference's consolidation-time row-quality filter
+    (all-NA rows skipped, ``staging_data_extraction.py:53-56``) as
+    ``na.drop("all")``."""
     path = zones.staging_table_dir(schema_name, table_name)
     df.na.drop("all").write.mode(mode).parquet(path)
     return path
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> str:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> str:
     """Hive-style partitioned layout (``path/col=value/``) — the lake-side
     enabler of partition pruning: a query filtering on ``partition_cols``
     scans only matching directories (shows as ``PartitionFilters`` in the
@@ -125,47 +117,30 @@ def write_partitioned(
     reading three years. Choose low-cardinality, always-filtered columns
     (load date, region); never high-cardinality keys (small-file explosion).
     """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
     return path
 
 
-def read_source(
-    spark,
-    fmt: str,
-    path: str,
-    schema=None,
-    options: dict | None = None,
-):
+def read_source(spark, fmt: str, path: str, schema, options: dict):
     """Format-agnostic source reader (parquet / csv / json / orc / text).
 
     The reference's only sources are MySQL and parquet; Spark's DataSource
     V2 stack gives the rest for free, but the engine exposes ONE entry
     point so metadata-driven configs can name a format the way they name a
-    table. An explicit ``schema`` skips the inference pass — REQUIRED at
+    table. The explicit ``schema`` skips the inference pass — REQUIRED at
     scale for csv/json (schema inference reads the data twice) and the
     only way to get stable types out of schemaless formats.
     """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in (options or {}).items():
+    reader = spark.read.schema(schema)
+    for k, v in options.items():
         reader = reader.option(k, v)
     return reader.format(fmt).load(path)
 
 
-def write_sink(
-    df: DataFrame,
-    fmt: str,
-    path: str,
-    mode: str = "overwrite",
-    partition_cols: list[str] | None = None,
-    options: dict | None = None,
-) -> str:
-    """Format-agnostic sink twin of :func:`read_source`."""
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    for k, v in (options or {}).items():
+def write_sink(df: DataFrame, fmt: str, path: str, options: dict) -> str:
+    """Format-agnostic sink twin of :func:`read_source` (overwrites)."""
+    writer = df.write.mode("overwrite")
+    for k, v in options.items():
         writer = writer.option(k, v)
     writer.format(fmt).save(path)
     return path

@@ -205,11 +205,11 @@ class ManifestTable:
         _swap_pointer(self._current_path(), {"version": v})
         return v
 
-    def txns(self, version: int | None = None) -> dict[str, int]:
-        """Per-writer committed-batch high-water map of a snapshot (the
-        idempotence state :func:`append_once` checks). Atomic with the
-        file list: both live in the same manifest json."""
-        v = self.current_version() if version is None else version
+    def txns(self) -> dict[str, int]:
+        """Per-writer committed-batch high-water map of the current
+        snapshot (the idempotence state :func:`append_once` checks). Atomic
+        with the file list: both live in the same manifest json."""
+        v = self.current_version()
         if v is None:
             return {}
         with open(self._manifest_path(v)) as fh:
@@ -267,9 +267,7 @@ class ManifestTable:
             prior + self._stage(df, self._next_batch()), txn=txn
         )
 
-    def append_optimistic(
-        self, df: DataFrame, max_retries: int = 3
-    ) -> tuple[int, int]:
+    def append_optimistic(self, df: DataFrame) -> tuple[int, int]:
         """Append under OPTIMISTIC CONCURRENCY CONTROL — the Delta/Iceberg
         multi-writer protocol: stage files once (immutable, invisible),
         then try to commit ``base-manifest + staged`` conditionally on
@@ -277,13 +275,14 @@ class ManifestTable:
         (another writer won the race) re-resolve the NEW current manifest
         and retry with the same staged files — appends commute on the
         file level, so a rebase is just re-reading the prior file list;
-        no data is rewritten. Returns ``(version, n_conflicts)``.
+        no data is rewritten; a conflict after three retries raises. Returns
+        ``(version, n_conflicts)``.
 
         This is why manifest tables scale to many concurrent writers:
         the data plane (staging) is fully parallel and conflict-free;
         only the O(1) pointer swap serializes."""
         staged = self.stage(df)
-        for attempt in range(max_retries + 1):
+        for attempt in range(4):
             base = self.current_version() or 0
             prior = self.manifest(base) if base else []
             try:
@@ -291,7 +290,7 @@ class ManifestTable:
                     prior + staged, expected_version=base
                 ), attempt
             except CommitConflict:
-                if attempt == max_retries:
+                if attempt == 3:
                     raise
         raise AssertionError("unreachable")
 
@@ -487,8 +486,8 @@ class MultiTableCatalog:
         except (OSError, ValueError, KeyError):
             return None
 
-    def transaction(self, writes: dict[str, DataFrame], mode: str = "append") -> dict[str, int]:
-        """Commit all ``writes`` atomically AT THE CATALOG LEVEL: each
+    def transaction(self, writes: dict[str, DataFrame]) -> dict[str, int]:
+        """Append all ``writes`` atomically AT THE CATALOG LEVEL: each
         table stages+publishes its own version first (catalog readers
         keep resolving the old pinned set), then one ``os.replace`` swaps
         the catalog pointer to the new version map. Tables absent from
@@ -506,7 +505,7 @@ class MultiTableCatalog:
         def _commit(item):
             name, df = item
             mt = self.table(name)
-            return name, (mt.append(df) if mode == "append" else mt.write(df))
+            return name, mt.append(df)
 
         with ThreadPoolExecutor(max_workers=max(1, len(writes))) as pool:
             pinned.update(dict(pool.map(_commit, writes.items())))

@@ -72,11 +72,11 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Streaming exact dedup: watermark-bounded state keyed on event_id
-    (or ``keys``). Late duplicates beyond the watermark age out of state —
+def dedup_stream(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup: watermark-bounded state keyed on event_id.
+    Late duplicates beyond the watermark age out of state —
     the standard bounded-memory dedup at scale."""
-    return events.dropDuplicates(keys or ["event_id"])
+    return events.dropDuplicates(["event_id"])
 
 
 def running_user_totals_v2(events: DataFrame) -> DataFrame:

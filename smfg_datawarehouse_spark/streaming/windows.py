@@ -66,10 +66,10 @@ def events_stream(
     return stream.withWatermark("ts", watermark)
 
 
-def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Per (tumbling window, event_type): count + value sum."""
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Per (1-hour tumbling window, event_type): count + value sum."""
     return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -80,23 +80,21 @@ def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_agg(
-    events: DataFrame, width: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    """Per (sliding window, event_type) counts — each event lands in
-    width/slide windows."""
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """Per (1-hour window sliding every 30 minutes, event_type) counts —
+    each event lands in two windows."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
     )
 
 
-def session_agg(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
-    """Per-user session windows (gap-based): session start + event count +
-    value sum. In streaming mode requires a watermark on ts."""
+def session_agg(events: DataFrame) -> DataFrame:
+    """Per-user session windows (5-minute gap): session start + event
+    count + value sum. In streaming mode requires a watermark on ts."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("session_start"),

@@ -78,7 +78,7 @@ def test_semantic_dedup_greedy_lowest_id_wins(spark):
     cents = df.where("vec_id IN (0, 3)")
     out = {
         r["vec_id"]: (r["cid"], r["keep"])
-        for r in semantic_dedup(df, cents, threshold=0.9).collect()
+        for r in semantic_dedup(df, cents).collect()
     }
     assert out[0] == (0, True)
     assert out[1] == (0, False)

@@ -12,7 +12,7 @@ def _mk(spark, tmp_path, n=300):
     df = spark.range(n).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     )
-    dvt = DeletionVectorTable(spark, str(tmp_path / "t"), "k", n_chunks=4)
+    dvt = DeletionVectorTable(spark, str(tmp_path / "t"), "k")
     dvt.write_base(df)
     return dvt
 

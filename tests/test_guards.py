@@ -1,5 +1,7 @@
 """Scale-contract guards: jaccard_pairs df-cap skew guard, ANN collect cap,
-a control plane that launches no Spark job, one job-free widening rule."""
+a control plane that launches no Spark job, one job-free widening rule, no
+engine option with a single value in use, and generated docs (SURVEY.md
+Appendix A, PLANS.md pool rows) that match the code."""
 
 from __future__ import annotations
 
@@ -30,57 +32,30 @@ def _boilerplate_corpus(spark, n_docs: int):
 
 
 def test_jaccard_df_cap_bounds_candidates(spark):
-    """Property: candidate pairs ≤ df_cap × prefix rows under the guard,
-    and orders of magnitude below the unguarded quadratic count."""
+    """Skew guard: when every doc shares one long boilerplate, the
+    unguarded prefix join goes fully quadratic, and a cap that would drop
+    prefix rows raises before any candidate is generated — loudly, not
+    silently: every caller is oracle-certified against uncapped SQL, where
+    a silent drop would surface as an inexplicable hash mismatch."""
     n = 120
     docs = _boilerplate_corpus(spark, n)
-    capped = jaccard_pairs(
-        docs, k=3, threshold=0.6, df_cap=8, _return_candidates=True
-    ).count()
     uncapped = jaccard_pairs(
-        docs, k=3, threshold=0.6, df_cap=n + 1, _return_candidates=True
+        docs, threshold=0.6, df_cap=n + 1, _return_candidates=True
     ).count()
-    # every pair shares every boilerplate shingle → unguarded candidates go
-    # fully quadratic; the guard drops df>8 shingles so only the per-doc
-    # unique tail shingles (df=1) can generate candidates → zero pairs
     assert uncapped == n * (n - 1) // 2
-    assert capped == 0
+    with pytest.raises(RuntimeError, match="skew guard"):
+        jaccard_pairs(docs, threshold=0.6, df_cap=8, _return_candidates=True)
 
 
 def test_jaccard_default_cap_lossless_on_natural_corpus(spark):
     """On a natural corpus (distinct texts, rare prefixes) the default
     √n-derived cap must not drop anything: guarded == unguarded pairs."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    default = jaccard_pairs(docs, k=3, threshold=0.6)
-    unguarded = jaccard_pairs(docs, k=3, threshold=0.6, df_cap=10**9)
+    default = jaccard_pairs(docs, threshold=0.6)
+    unguarded = jaccard_pairs(docs, threshold=0.6, df_cap=10**9)
     assert sorted(map(tuple, default.collect())) == sorted(
         map(tuple, unguarded.collect())
     )
-
-
-def test_jaccard_on_drop_raise_fails_loudly(spark):
-    """Oracle-certified contexts: a cap that would drop prefix rows must
-    raise, not warn — a silent drop surfaces as an inexplicable oracle
-    hash mismatch."""
-    docs = _boilerplate_corpus(spark, 40)
-    with pytest.raises(RuntimeError, match="skew guard"):
-        jaccard_pairs(docs, k=3, threshold=0.6, df_cap=8, on_drop="raise")
-    with pytest.raises(ValueError, match="on_drop"):
-        jaccard_pairs(docs, k=3, threshold=0.6, on_drop="explode")
-
-
-def test_jaccard_default_is_lazy(spark):
-    """Default (on_drop='warn', df_cap=None) construction must trigger ZERO
-    Spark jobs — plan-only inspection stays free; the cap is applied via a
-    broadcast one-row aggregate inside the plan."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    df = jaccard_pairs(docs, k=3, threshold=0.6)
-    df.explain(mode="cost")  # plan-only inspection is fine too
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before
-    assert df.count() >= 0  # and it still executes
 
 
 def _last_job_id(spark) -> int:
@@ -606,3 +581,266 @@ def test_workers_import_the_engine_found_through_sys_path(tmp_path):
     )
     assert done.returncode == 0, done.stderr[-3000:]
     assert int(done.stdout.split("rows", 1)[1]) > 0
+
+
+def _engine_option_values(repo):
+    """For each defaulted parameter of an engine function that has a
+    direct call site, the set of values its call sites pass: ``{key:
+    {param: values}}`` keyed ``module:function`` or ``module:Class.method``,
+    and the number of defaulted parameters the engine declares.
+
+    Engine functions are the module-level functions and class methods of
+    the package; call sites are every call in the engine, ``perfbench/``,
+    ``bench.py``, ``__spark_entry__.py`` and ``tests/``. A call resolves
+    through the caller's imports (package re-exports included); a class
+    call resolves to ``__init__``; ``obj.name(...)`` resolves to every
+    engine method of that name whose signature accepts the call, so an
+    unrelated object's method of the same name adds values, never hides
+    them. An omitted argument counts as the default. A literal counts as
+    itself, and so does a name bound to a module-level literal; any other
+    expression, and every parameter a ``*``/``**`` splat may fill, counts
+    as a value of its own."""
+    import ast
+
+    pkg = "smfg_datawarehouse_spark"
+
+    def module_of(path):
+        parts = list(path.relative_to(repo).with_suffix("").parts)
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    engine = sorted((repo / pkg).rglob("*.py"))
+    callers = engine + sorted((repo / "perfbench").rglob("*.py")) + sorted(
+        (repo / "tests").rglob("*.py")
+    ) + [repo / "bench.py", repo / "__spark_entry__.py"]
+    trees = {p: ast.parse(p.read_text()) for p in callers}
+
+    defs, names, methods, literals = {}, {}, {}, {}
+    for path in callers:
+        mod = module_of(path)
+        for node in trees[path].body:
+            if isinstance(node, ast.Assign) and len(node.targets) == 1:
+                target = node.targets[0]
+                try:
+                    value = repr(ast.literal_eval(node.value))
+                except (ValueError, TypeError):
+                    continue
+                if isinstance(target, ast.Name):
+                    literals.setdefault(mod, {})[target.id] = value
+    for path in engine:
+        mod = module_of(path)
+        scope = names.setdefault(mod, {})
+        for node in trees[path].body:
+            funcs = [(node.name, node, False)] if isinstance(node, ast.FunctionDef) else []
+            if isinstance(node, ast.ClassDef):
+                funcs = [
+                    (f"{node.name}.{f.name}", f, not any(
+                        getattr(d, "id", None) == "staticmethod" for d in f.decorator_list
+                    ))
+                    for f in node.body
+                    if isinstance(f, ast.FunctionDef)
+                ]
+            for qual, fn, bound in funcs:
+                key = f"{mod}:{qual}"
+                a = fn.args
+                pos = [p.arg for p in a.posonlyargs + a.args][bound:]
+                dflt = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+                dflt.update(
+                    (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                )
+                defs[key] = (pos, {p.arg for p in a.kwonlyargs}, dflt, a)
+                if "." not in qual:
+                    scope[qual] = key
+                elif qual.endswith(".__init__"):
+                    scope[qual.split(".")[0]] = key
+                else:
+                    methods.setdefault(qual.split(".")[1], []).append(key)
+    for path in engine:  # package re-exports
+        if path.name == "__init__.py":
+            for node in trees[path].body:
+                if isinstance(node, ast.ImportFrom) and node.module in names:
+                    for al in node.names:
+                        if al.name in names[node.module]:
+                            names[module_of(path)][al.asname or al.name] = (
+                                names[node.module][al.name]
+                            )
+
+    values: dict = {}
+    for path in callers:
+        mod = module_of(path)
+        funcs = dict(names.get(mod, {}))
+        modules = {}
+        consts = dict(literals.get(mod, {}))
+        for node in ast.walk(trees[path]):
+            if isinstance(node, ast.ImportFrom) and node.module and not node.level:
+                for al in node.names:
+                    alias = al.asname or al.name
+                    if f"{node.module}.{al.name}" in names:
+                        modules[alias] = f"{node.module}.{al.name}"
+                    elif al.name in names.get(node.module, {}):
+                        funcs[alias] = names[node.module][al.name]
+                    elif al.name in literals.get(node.module, {}):
+                        consts[alias] = literals[node.module][al.name]
+            elif isinstance(node, ast.Import):
+                for al in node.names:
+                    if al.asname and al.name in names:
+                        modules[al.asname] = al.name
+
+        def value(arg, site):
+            try:
+                return repr(ast.literal_eval(arg))
+            except (ValueError, TypeError):
+                if isinstance(arg, ast.Name) and arg.id in consts:
+                    return consts[arg.id]
+                return site
+
+        for call in ast.walk(trees[path]):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            if isinstance(f, ast.Name):
+                keys = [funcs[f.id]] if f.id in funcs else []
+            elif not isinstance(f, ast.Attribute):
+                keys = []
+            elif isinstance(f.value, ast.Name) and f.value.id in modules:
+                keys = [names[modules[f.value.id]].get(f.attr)]
+            elif ast.unparse(f.value) in names:
+                keys = [names[ast.unparse(f.value)].get(f.attr)]
+            else:
+                keys = methods.get(f.attr, [])
+            splat = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            for key in filter(None, keys):
+                pos, kwonly, dflt, a = defs[key]
+                given = {k.arg for k in call.keywords if k.arg}
+                if not splat and (
+                    (len(call.args) > len(pos) and not a.vararg)
+                    or (given - set(pos) - kwonly and not a.kwarg)
+                ):
+                    continue  # not a call of this function
+                site = f"{path.relative_to(repo)}:{call.lineno}"
+                passed = {p: value(v, site) for p, v in zip(pos, call.args)}
+                passed.update(
+                    (k.arg, value(k.value, site)) for k in call.keywords if k.arg
+                )
+                for p, d in dflt.items():
+                    if p not in passed:
+                        passed[p] = site if splat else value(d, f"default of {key}")
+                    values.setdefault(key, {}).setdefault(p, set()).add(passed[p])
+    n_defaulted = sum(len(d[2]) for d in defs.values())
+    return values, n_defaulted
+
+
+#: Parameters that keep one value in this repository on purpose, keyed
+#: like :func:`_engine_option_values`; ``None`` exempts every parameter.
+#: Test seams (a value only a tier-1 test sets, to reach a path at fixture
+#: scale) need no entry: the test that sets one supplies its second value.
+OPTION_EXEMPT = {
+    # deployment settings: one value here, another on each cluster
+    "smfg_datawarehouse_spark.session:get_spark": {"master"},
+    "smfg_datawarehouse_spark.sources.jdbc:jdbc_reader_options": None,
+    "smfg_datawarehouse_spark.runner:run_staging_extraction": {
+        "max_workers", "retry_delay_sec",
+    },
+    "smfg_datawarehouse_spark.plans.report:generate": {"out_path"},
+    # AuditLedger column arguments: the L1-L4 methods mirror the
+    # reference's process_logger.py:84-196 signatures column by column
+    "smfg_datawarehouse_spark.audit:AuditLedger.create_process_master": None,
+    "smfg_datawarehouse_spark.audit:AuditLedger.update_process_master": None,
+    "smfg_datawarehouse_spark.audit:AuditLedger.log_stage_detail": None,
+    "smfg_datawarehouse_spark.audit:AuditLedger.update_stage_detail": None,
+}
+
+
+def test_every_engine_option_has_two_values_in_use():
+    """An engine parameter with a default is a knob; a knob that every
+    call site leaves at one value is a constant spelled as an option, and
+    each branch only its other values reach is dead code. So every
+    defaulted parameter of a called engine function must see at least
+    two distinct values across the engine, ``perfbench/``, ``bench.py``,
+    ``__spark_entry__.py`` and ``tests/`` (see
+    :func:`_engine_option_values`), unless :data:`OPTION_EXEMPT` names
+    it. A hit is fixed by making the value a literal (or a module
+    constant the kernel shares with its oracle) and deleting the branches
+    only other values reached."""
+    import pathlib
+
+    import smfg_datawarehouse_spark
+
+    repo = pathlib.Path(smfg_datawarehouse_spark.__file__).resolve().parents[1]
+    values, _ = _engine_option_values(repo)
+
+    def exempt(key, param):
+        if key not in OPTION_EXEMPT:
+            return False
+        return OPTION_EXEMPT[key] is None or param in OPTION_EXEMPT[key]
+
+    hits = [
+        f"{key} {param}={sorted(seen)}"
+        for key, params in sorted(values.items())
+        for param, seen in sorted(params.items())
+        if len(seen) < 2 and not exempt(key, param)
+    ]
+    assert not hits, hits
+
+
+def test_survey_appendix_matches_the_registry():
+    """SURVEY.md Appendix A is exactly what ``tools/gen_appendix.py``
+    renders from the live registry: every query's ``module:line`` and
+    docstring line, so an edit that moves a query fails here until the
+    appendix is regenerated."""
+    import importlib.util
+    import pathlib
+
+    import smfg_datawarehouse_spark
+
+    repo = pathlib.Path(smfg_datawarehouse_spark.__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "gen_appendix", repo / "tools" / "gen_appendix.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    src = (repo / "SURVEY.md").read_text()
+    start, end = gen.appendix_span(src)
+    committed = src[start:end].splitlines()[2:]
+    rendered = gen.appendix_rows()
+    drift = sorted(set(committed) ^ set(rendered))
+    assert committed == rendered, f"regenerate: python tools/gen_appendix.py; {drift[:6]}"
+
+
+def test_plans_md_rows_match_the_pool_plans(spark):
+    """PLANS.md's exchange and broadcast counts for the 11 queries of the
+    ``warehouse_queries`` benchmark pool (read from
+    ``perfbench/wl_queries.py``) are what ``plans.report`` computes from
+    their plans today (at its sf0.001, each on an empty cache)."""
+    import ast
+    import pathlib
+    import re
+
+    import smfg_datawarehouse_spark
+    from smfg_datawarehouse_spark.plans.report import plan_row
+    from smfg_datawarehouse_spark.queries import all_queries
+
+    repo = pathlib.Path(smfg_datawarehouse_spark.__file__).resolve().parents[1]
+    tree = ast.parse((repo / "perfbench" / "wl_queries.py").read_text())
+    pool = next(
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "POOL" for t in node.targets)
+    )
+    table = {
+        m.group(1): (m.group(2), m.group(3))
+        for m in re.finditer(
+            r"^\| (\w+) \| (\S+) \| (\S+) \|", (repo / "PLANS.md").read_text(), re.M
+        )
+    }
+    queries = all_queries()
+    drift = []
+    for name in pool:
+        got = tuple(map(str, plan_row(spark, queries[name])[:2]))
+        if table.get(name) != got:
+            drift.append((name, table.get(name), got))
+    assert len(pool) == 11 and not drift, (
+        f"regenerate: python -m smfg_datawarehouse_spark.plans.report; {drift}"
+    )

@@ -99,7 +99,7 @@ def test_kmeans_inertia_non_increasing(spark):
     emb = t(spark, SF001, "embeddings")
     totals = []
     for iters in (0, 1, 2):
-        rows = kmeans_lloyd(emb, k=8, iters=iters).collect()
+        rows = kmeans_lloyd(emb, iters=iters).collect()
         totals.append(sum(r.inertia for r in rows))
     # tolerance covers the 1e-6 micro-unit quantization of the reported
     # per-vector distances and the centroid grid snap (up to ~n·5e-7
@@ -175,8 +175,8 @@ def test_kmeans_partition_invariance(spark):
     from smfg_datawarehouse_spark.queries import t
 
     emb = t(spark, SF001, "embeddings")
-    one = sorted(map(tuple, kmeans_lloyd(emb.repartition(1), k=8, iters=2).collect()))
-    many = sorted(map(tuple, kmeans_lloyd(emb.repartition(16), k=8, iters=2).collect()))
+    one = sorted(map(tuple, kmeans_lloyd(emb.repartition(1)).collect()))
+    many = sorted(map(tuple, kmeans_lloyd(emb.repartition(16)).collect()))
     assert one == many
 
 
@@ -196,9 +196,7 @@ def test_sq8_quantization_error_bound(spark):
     )
     codes = _sq8_codes(
         emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
-        .unionByName(zero),
-        "vec_id",
-        "embedding",
+        .unionByName(zero)
     )
     bad = codes.where(
         F.exists(

@@ -47,10 +47,10 @@ def test_events_stream_handles_both_encodings(spark, nanos_events_dir, tmp_path)
         tumbling_agg,
     )
 
-    expected = _rowset(tumbling_agg(load_events(spark, SF_DIR), "1 hour"))
+    expected = _rowset(tumbling_agg(load_events(spark, SF_DIR)))
     result = run_stream_to_memory(
         spark,
-        tumbling_agg(events_stream(spark, nanos_events_dir), "1 hour"),
+        tumbling_agg(events_stream(spark, nanos_events_dir)),
         "nanos_stream_t",
     )
     assert _rowset(result) == expected

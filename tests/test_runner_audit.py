@@ -361,12 +361,8 @@ FINALIZE_CASES = {
 }
 
 
-@pytest.mark.parametrize("case", sorted(FINALIZE_CASES))
-def test_finalize_run_rollup(spark, tmp_path, case):
-    steps, want_status, want_remarks = FINALIZE_CASES[case]
-    audit = AuditLedger(spark, str(tmp_path / "audit"))
-    other = audit.create_process_master()  # rows of another run never count
-    audit.log_stage_detail(other, "STAGING_EXTRACT", table_name="s.a", status="FAILED")
+def _replay(audit: AuditLedger, steps) -> int:
+    """Open a process and log/update its stage rows as ``steps`` say."""
     pid = audit.create_process_master()
     sids = []
     for step in steps:
@@ -378,10 +374,44 @@ def test_finalize_run_rollup(spark, tmp_path, case):
         else:
             _, i, status = step
             audit.update_stage_detail(sids[i], status=status)
+    return pid
+
+
+@pytest.mark.parametrize("case", sorted(FINALIZE_CASES))
+def test_finalize_run_rollup(spark, tmp_path, case):
+    steps, want_status, want_remarks = FINALIZE_CASES[case]
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+    other = audit.create_process_master()  # rows of another run never count
+    audit.log_stage_detail(other, "STAGING_EXTRACT", table_name="s.a", status="FAILED")
+    pid = _replay(audit, steps)
     assert audit.finalize_run(pid) == want_status
     master = audit.process_master().where(F.col("ProcessID") == pid).collect()[0]
     assert (master["Status"], master["Remarks"]) == (want_status, want_remarks)
     assert master["ProcessEndAt"] is not None
+
+
+def test_finalize_run_releases_its_stage_rows(spark, tmp_path):
+    """One ledger serves every run of a long-running scheduler: after
+    ``finalize_run`` no stage row of that process stays in memory (its
+    events are on disk), while the ledger views and every pinned rollup
+    stay the same."""
+    zones = LakeZones(str(tmp_path / "lake"))
+    _setup_raw(spark, zones)
+    audit = AuditLedger(spark, str(tmp_path / "audit"))
+    cat = seed_fixture_catalog(spark)
+    pids = [run_staging_extraction(spark, cat, zones, audit)[0] for _ in range(3)]
+    assert audit._stage_state == {}
+    master = {r["ProcessID"]: r["Status"] for r in audit.process_master().collect()}
+    assert [master[p] for p in pids] == ["SUCCESS"] * 3
+    sd = audit.stage_detail().where(F.col("ProcessID").isin(pids)).collect()
+    assert len(sd) == 6 and {r["Status"] for r in sd} == {"SUCCESS"}
+    for case, (steps, want_status, _remarks) in sorted(FINALIZE_CASES.items()):
+        open_pid = _replay(audit, steps[:1])  # an unfinished run keeps its rows
+        pid = _replay(audit, steps)
+        assert audit.finalize_run(pid) == want_status, case
+        assert [r["ProcessID"] for r in audit._stage_state.values()] == [open_pid]
+        audit.finalize_run(open_pid)
+    assert audit._stage_state == {}
 
 
 def test_finalize_run_rejects_unopened_process(spark, tmp_path):

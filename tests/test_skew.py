@@ -27,7 +27,7 @@ def test_salted_join_equals_plain_join(spark):
         F.col("id").alias("k"), F.concat(F.lit("dim_"), F.col("id")).alias("name")
     )
     plain = big.join(small, "k").select("k", "v", "name")
-    salted = salted_join(big, small, ["k"], salt_from=F.col("uid"), buckets=8).select(
+    salted = salted_join(big, small, ["k"], salt_from=F.col("uid")).select(
         "k", "v", "name"
     )
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
@@ -89,21 +89,21 @@ def test_shingle_table_kernel_df_window_and_parity(spark):
         "doc_id long, text string",
     )
     base = sorted(
-        (r.doc_id, r.shingle) for r in shingle_table(docs, "text", "doc_id").collect()
+        (r.doc_id, r.shingle) for r in shingle_table(docs).collect()
     )
     assert base == [  # docs 0,1,3 x 2 shingles
         (0, "a b c"), (0, "b c d"),
         (1, "a b c"), (1, "b c e"),
         (3, "a b c"), (3, "b c d"),
     ]
-    with_df = shingle_table(docs, "text", "doc_id", with_df=True)
+    with_df = shingle_table(docs, with_df=True)
     got = {(r.doc_id, r.shingle): r.df for r in with_df.collect()}
     assert got[(0, "a b c")] == 3 and got[(1, "b c e")] == 1
     plan = with_df._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan
     assert "BroadcastExchange" not in plan
     # checkpoint=True must hand back a runnable frame with the same rows
-    ck = shingle_table(docs, "text", "doc_id", checkpoint=True)
+    ck = shingle_table(docs, checkpoint=True)
     assert sorted(map(tuple, ck.collect())) == base
 
 

@@ -36,10 +36,10 @@ def test_tumbling_stream_equals_batch(spark, events_dir):
     from smfg_datawarehouse_spark.queries import load_events
 
     batch = load_events(spark, SF_DIR)
-    expected = _rowset(tumbling_agg(batch, "1 hour"))
+    expected = _rowset(tumbling_agg(batch))
 
     stream = events_stream(spark, events_dir, watermark="10 minutes")
-    result = run_stream_to_memory(spark, tumbling_agg(stream, "1 hour"), "tumbling_test")
+    result = run_stream_to_memory(spark, tumbling_agg(stream), "tumbling_test")
     assert _rowset(result) == expected
 
 
@@ -50,11 +50,11 @@ def test_sliding_stream_equals_batch(spark, events_dir):
     from smfg_datawarehouse_spark.queries import load_events
 
     batch = load_events(spark, SF_DIR)
-    expected = _rowset(sliding_agg(batch, "1 hour", "30 minutes"))
+    expected = _rowset(sliding_agg(batch))
 
     stream = events_stream(spark, events_dir, watermark="10 minutes")
     result = run_stream_to_memory(
-        spark, sliding_agg(stream, "1 hour", "30 minutes"), "sliding_test"
+        spark, sliding_agg(stream), "sliding_test"
     )
     assert _rowset(result) == expected
 
@@ -63,10 +63,10 @@ def test_session_stream_equals_batch(spark, events_dir):
     from smfg_datawarehouse_spark.queries import load_events
 
     batch = load_events(spark, SF_DIR)
-    expected = _rowset(session_agg(batch, "5 minutes"))
+    expected = _rowset(session_agg(batch))
 
     stream = events_stream(spark, events_dir, watermark="10 minutes")
-    result = run_stream_to_memory(spark, session_agg(stream, "5 minutes"), "session_test")
+    result = run_stream_to_memory(spark, session_agg(stream), "session_test")
     assert _rowset(result) == expected
 
 
@@ -474,7 +474,7 @@ def test_state_store_partition_pin_and_rocksdb(spark, events_dir):
     from smfg_datawarehouse_spark.streaming.windows import DRAIN_STATE_PARTITIONS
 
     batch = load_events(spark, SF_DIR)
-    expected = _rowset(tumbling_agg(batch, "1 hour"))
+    expected = _rowset(tumbling_agg(batch))
 
     # 1. partition pin: the drain helper scopes shuffle partitions to the
     # documented constant while the query runs
@@ -483,7 +483,7 @@ def test_state_store_partition_pin_and_rocksdb(spark, events_dir):
     seen: dict[str, str] = {}
     orig = spark.conf.get("spark.sql.shuffle.partitions")
 
-    q = tumbling_agg(stream, "1 hour")
+    q = tumbling_agg(stream)
     result = run_stream_to_memory(spark, q, "pin_default_store")
     assert _rowset(result) == expected
     assert spark.conf.get("spark.sql.shuffle.partitions") == orig  # restored
@@ -499,7 +499,7 @@ def test_state_store_partition_pin_and_rocksdb(spark, events_dir):
     try:
         stream2 = events_stream(spark, events_dir, watermark="10 minutes")
         result2 = run_stream_to_memory(
-            spark, tumbling_agg(stream2, "1 hour"), "pin_rocksdb_store"
+            spark, tumbling_agg(stream2), "pin_rocksdb_store"
         )
         assert _rowset(result2) == expected
     finally:
@@ -816,7 +816,7 @@ def test_drain_timeout_stops_query_and_restores_partitions(
     stream = events_stream(spark, events_dir)
     with pytest.raises(TimeoutError, match="did not terminate"):
         run_stream_to_memory(
-            spark, tumbling_agg(stream, "1 hour"), "timeout_test", state_partitions=3
+            spark, tumbling_agg(stream), "timeout_test", state_partitions=3
         )
     assert spark.streams.active == []
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior

@@ -1,24 +1,23 @@
 """Regenerate SURVEY.md Appendix A (registry ↔ §2 inventory map) from the
-live query registry, so the docs-coverage guard can never drift from the
-code. Run after any registration change::
+live query registry. Run after any change that moves a registered query::
 
     python tools/gen_appendix.py
 
-Rewrites only the table body between the Appendix A header and EOF (the
-appendix is the last section of SURVEY.md).
+Rewrites only the table body between the Appendix A header and the first
+non-table line after it. ``tests/test_guards.py`` renders the same rows
+with :func:`appendix_rows` and fails when the committed table differs.
 """
 
 from __future__ import annotations
 
 import inspect
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-from smfg_datawarehouse_spark.queries import all_queries  # noqa: E402
-
-SURVEY = "/root/repo/SURVEY.md"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SURVEY = os.path.join(REPO, "SURVEY.md")
+HEADER = "| query | where | what |\n|---|---|---|\n"
 WIDTH = 110
 
 
@@ -30,30 +29,40 @@ def one_liner(doc: str) -> str:
     return text
 
 
-def main() -> None:
+def appendix_rows() -> list[str]:
+    """One ``| query | module:line | docstring |`` row per registered
+    query, sorted by name."""
+    if REPO not in sys.path:
+        sys.path.insert(0, REPO)
+    from smfg_datawarehouse_spark.queries import all_queries
+
     rows = []
     for name, fn in sorted(all_queries().items()):
         mod = fn.__module__.replace("smfg_datawarehouse_spark.", "")
         line = inspect.getsourcelines(fn)[1]
         rows.append(f"| `{name}` | `{mod}:{line}` | {one_liner(fn.__doc__)} |")
+    return rows
 
-    src = open(SURVEY).read()
+
+def appendix_span(src: str) -> tuple[int, int]:
+    """``(start, end)`` of the Appendix A table in SURVEY.md's text."""
     m = re.search(r"(## Appendix A[^\n]*\n)", src)
     assert m, "Appendix A header not found"
-    head_end = m.end()
-    # keep the prose between the header and the first table row
-    body_start = src.index("| query | where | what |", head_end)
-    # replace ONLY the contiguous table: stop at the first non-table line
-    # after it (e.g. a section added below Appendix A), never truncate to
-    # EOF — a later '## ' heading must survive regeneration (ADVICE r6)
-    tail_start = len(src)
-    for match in re.finditer(r"\n(?!\|)", src[body_start:]):
-        tail_start = body_start + match.start() + 1
-        break
-    table = (
-        "| query | where | what |\n|---|---|---|\n" + "\n".join(rows) + "\n"
-    )
-    open(SURVEY, "w").write(src[:body_start] + table + src[tail_start:])
+    start = src.index(HEADER.split("\n")[0], m.end())
+    # the table ends at its first non-table line; a later section survives
+    end = src.find("\n", start)
+    while end != -1 and src.startswith("|", end + 1):
+        end = src.find("\n", end + 1)
+    return start, len(src) if end == -1 else end + 1
+
+
+def main() -> None:
+    rows = appendix_rows()
+    with open(SURVEY) as fh:
+        src = fh.read()
+    start, end = appendix_span(src)
+    with open(SURVEY, "w") as fh:
+        fh.write(src[:start] + HEADER + "\n".join(rows) + "\n" + src[end:])
     print(f"Appendix A regenerated: {len(rows)} rows")
 
 
