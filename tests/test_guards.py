@@ -34,9 +34,7 @@ def _boilerplate_corpus(spark, n_docs: int):
 def test_jaccard_df_cap_bounds_candidates(spark):
     """Skew guard: when every doc shares one long boilerplate, the
     unguarded prefix join goes fully quadratic, and a cap that would drop
-    prefix rows raises before any candidate is generated — loudly, not
-    silently: every caller is oracle-certified against uncapped SQL, where
-    a silent drop would surface as an inexplicable hash mismatch."""
+    prefix rows raises before any candidate is generated."""
     n = 120
     docs = _boilerplate_corpus(spark, n)
     uncapped = jaccard_pairs(
@@ -45,6 +43,18 @@ def test_jaccard_df_cap_bounds_candidates(spark):
     assert uncapped == n * (n - 1) // 2
     with pytest.raises(RuntimeError, match="skew guard"):
         jaccard_pairs(docs, threshold=0.6, df_cap=8, _return_candidates=True)
+
+
+def test_jaccard_on_drop_raise_fails_loudly(spark):
+    """Oracle-certified contexts: a cap that would drop prefix rows must
+    raise, not warn — a silent drop surfaces as an inexplicable oracle
+    hash mismatch. Raising is the only behaviour: there is no ``on_drop``
+    switch left to select a silent one."""
+    docs = _boilerplate_corpus(spark, 40)
+    with pytest.raises(RuntimeError, match="skew guard"):
+        jaccard_pairs(docs, threshold=0.6, df_cap=8)
+    with pytest.raises(TypeError, match="on_drop"):
+        jaccard_pairs(docs, threshold=0.6, on_drop="warn")
 
 
 def test_jaccard_default_cap_lossless_on_natural_corpus(spark):
