@@ -303,36 +303,34 @@ def l07_compaction_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[S3] The reference's chunk-consolidation step
     (`staging_data_extraction.py:30-80`: glob part files → concat → one
     snappy file) as a certified lake-maintenance lifecycle: the corpus is
-    written as MANY small part files (the real small-files problem a
-    chunked/streaming ingest creates), `compact` rewrites the directory
-    into size-targeted files with an atomic-ish swap, and the per-source
-    rollup read back from the compacted directory must hash-match the
-    oracle's rollup over the original fixture — compaction must be
-    byte-for-byte content-preserving. The small-files reduction itself is
-    asserted structurally in-query (fail loudly, not hash-fail
-    mysteriously): file count must strictly drop to 1 at this scale.
+    written into a manifest table as MANY small part files (the real
+    small-files problem a chunked/streaming ingest creates),
+    `ManifestTable.compact` rewrites them into size-targeted files and
+    commits the new file list with one atomic CURRENT swap, and the
+    per-source rollup read back from the compacted snapshot must
+    hash-match the oracle's rollup over the original fixture — compaction
+    must be byte-for-byte content-preserving. The small-files reduction
+    itself is asserted structurally in-query (fail loudly, not hash-fail
+    mysteriously): the manifest's file count must strictly drop to 1 at
+    this scale.
 
     At 100 TB `target_file_bytes` sizes output files to the cluster's
     scan sweet spot (Spark default 128 MB splits) instead of the
     reference's force-one-file concat, which cannot scale past a single
     worker's memory."""
-    import glob as _glob
-    import os
-
-    from smfg_datawarehouse_spark.sources.lake import compact
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     tmp = _scratch_dir(spark, "l07")
-    path = os.path.join(tmp, "documents")
-    t(spark, sf_dir, "documents").repartition(24).write.parquet(path)
-    n_before = len(_glob.glob(os.path.join(path, "part-*.parquet")))
-    compact(spark, path, target_file_bytes=10 * 1024 * 1024 * 1024)
-    n_after = len(_glob.glob(os.path.join(path, "part-*.parquet")))
+    mt = ManifestTable(spark, os.path.join(tmp, "documents"))
+    v0 = mt.write(t(spark, sf_dir, "documents").repartition(24))
+    v1 = mt.compact(target_file_bytes=10 * 1024 * 1024 * 1024)
+    n_before, n_after = len(mt.manifest(v0)), len(mt.manifest(v1))
     if not (n_after < n_before and n_after == 1):
         raise RuntimeError(
             f"compaction did not reduce part files: {n_before} -> {n_after}"
         )
     return (
-        spark.read.parquet(path)
+        mt.read()
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1030,10 +1028,11 @@ def l16_changelog_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l17_manifest_commit_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[S3/S7] MANIFEST-COMMIT table lifecycle — the object-store-safe
     commit protocol (Delta/Iceberg's core on plain parquet;
-    ``sources/manifest.py``), certifying the production answer to the
-    compaction race ``lake.compact`` documents: data files are immutable,
-    a commit is an atomic single-object CURRENT swap, and compaction
-    never deletes what a reader might hold.
+    ``sources/manifest.py``), certifying the answer to the compaction race
+    of a directory swap (a reader that listed the files before the swap
+    loses them): data files are immutable, a commit is an atomic
+    single-object CURRENT swap, and compaction never deletes what a
+    reader might hold.
 
     Lifecycle, each transition gated in-engine (raise loudly, never
     hash-fail mysteriously):
@@ -1303,11 +1302,12 @@ _L34_ORACLE = """
 @register("l34_sorted_compaction", _L34_ORACLE)
 def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[S3] CLUSTERING-PRESERVING COMPACTION certified
-    (``sources/lake.sorted_compact``): the events table lands TIME-SORTED
-    across 12 small files with disjoint per-file ranges (zone maps at
-    full selectivity), then compacts 12 → 4 by merging only ADJACENT
-    files in key order. The cert RAISES unless (a) the file count
-    actually dropped to target, (b) the compacted zone maps are still
+    (``sources/manifest.ManifestTable.compact_sorted``): the events table
+    lands in a manifest table TIME-SORTED across 12 small files with
+    disjoint per-file ranges (zone maps at full selectivity), then
+    compacts 12 → 4 by merging only ADJACENT files in key order, committed
+    by one CURRENT swap. The cert RAISES unless (a) the manifest's file
+    count actually dropped to target, (b) the compacted zone maps are still
     PAIRWISE DISJOINT — a size-only compaction interleaves ranges and
     silently destroys file skipping, the exact regression this pass
     prevents (l30 certifies zero-copy cost; this certifies preserved
@@ -1321,23 +1321,21 @@ def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
     import os
 
-    from smfg_datawarehouse_spark.sources.lake import (
-        read_zonemap_pruned,
-        sorted_compact,
-        write_sorted_with_zonemap,
-    )
+    from smfg_datawarehouse_spark.sources.lake import read_zonemap_pruned
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     base = _scratch_dir(spark, "l34")
-    path = os.path.join(base, "events_sorted")
+    mt = ManifestTable(spark, os.path.join(base, "events_sorted"))
     e = load_events(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    write_sorted_with_zonemap(e, path, "ts", n_files=12)
+    v0 = mt.write(e.repartitionByRange(12, F.col("ts")).sortWithinPartitions("ts"))
 
-    res = sorted_compact(spark, path, "ts", target_files=4)
-    if res["n_after"] != 4 or res["n_before"] != 12:
-        raise RuntimeError(f"compaction layout unexpected: {res}")
+    v1 = mt.compact_sorted("ts", target_files=4)
+    n_before, n_after = len(mt.manifest(v0)), len(mt.manifest(v1))
+    if (n_before, n_after) != (12, 4):
+        raise RuntimeError(f"compaction layout unexpected: {n_before} -> {n_after}")
 
     zm = (
-        spark.read.parquet(path)
+        mt.read(v1)
         .groupBy(F.input_file_name().alias("file"))
         .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
         .collect()

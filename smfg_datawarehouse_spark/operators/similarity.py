@@ -1091,7 +1091,9 @@ def _km_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFra
     ``array_min`` with ZERO joins and ZERO shuffles: at 100 TB each Lloyd
     iteration costs one corpus scan plus one centroid-sized aggregation.
     Squared-L2 folds left-to-right (zip_with + aggregate), tie-break lowest
-    centroid id — both replayed exactly by the oracle's ROW_NUMBER."""
+    centroid id — both replayed exactly by the oracle's ROW_NUMBER.
+    ``kmeans_lloyd`` runs :func:`_km_partials_np`; this form is the
+    reference the tests hold that kernel to."""
     carr = F.array(
         *[
             F.struct(
@@ -1114,51 +1116,6 @@ def _km_assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFra
     )
 
 
-def _km_assign_np(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """Numpy form of :func:`_km_assign` — bit-identical by construction
-    (r10, guide §4.2: the l25-proven kernel promotion).
-
-    The expression form evaluates the squared-L2 fold INTERPRETED per
-    (row, centroid) — k×dim Catalyst lambda evaluations per row, the
-    suite's dominant per-row CPU at any scale. Here the same arithmetic
-    runs vectorized per Arrow batch: for each dim in ascending order,
-    ``acc += (v_i - c_i)²`` — the identical IEEE left fold (init 0.0,
-    same add/sub/mul order per element). Tie-break: centroids are
-    evaluated in ascending-cid order and ``argmin`` keeps the FIRST
-    minimum — exactly ``array_min`` over struct(dist, cid). NaN dists
-    (possible only from NaN inputs; squared-L2 of finite doubles is
-    never NaN) are masked to +inf for the pick, matching Spark's
-    NaN-is-greatest double ordering, while the RETURNED dist keeps the
-    raw fold value. Centroids ride the task closure (k×dim literals —
-    the same bytes the expression form shipped as a literal tree)."""
-    cents = sorted(cents)
-    cids = np.array([c for c, _ in cents], dtype=np.int64)
-    C = np.stack([np.asarray(cv, dtype=np.float64) for _, cv in cents])
-
-    def assign(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            D = np.zeros((len(V), len(C)))
-            for i in range(V.shape[1]):
-                diff = V[:, i][:, None] - C[:, i][None, :]
-                D = D + diff * diff
-            pick = np.argmin(np.where(np.isnan(D), np.inf, D), axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "v": pdf["v"].values,
-                    "cluster": cids[pick],
-                    "dist": D[np.arange(len(V)), pick],
-                }
-            )
-
-    return vecs.mapInPandas(
-        assign, "vec_id long, v array<double>, cluster long, dist double"
-    )
-
-
 def _km_partials_np(
     vecs: DataFrame, cents: list[tuple[int, list[float]]], mode: str
 ) -> DataFrame:
@@ -1177,8 +1134,17 @@ def _km_partials_np(
       argument (count/int-sum/max are all associative; np.max and
       Spark's MAX both treat NaN as greatest).
 
-    Assignment itself is :func:`_km_assign_np`'s arithmetic verbatim
-    (same fold, tie, NaN-pick semantics — pinned by the r10 tests).
+    Assignment is :func:`_km_assign`'s arithmetic run vectorized per Arrow
+    batch instead of as k×dim interpreted Catalyst lambdas per row: for
+    each dim in ascending order, ``acc += (v_i - c_i)²`` — the identical
+    IEEE left fold (init 0.0, same add/sub/mul order per element).
+    Tie-break: centroids are evaluated in ascending-cid order and
+    ``argmin`` keeps the FIRST minimum — exactly ``array_min`` over
+    struct(dist, cid). NaN dists (possible only from NaN inputs) are
+    masked to +inf for the pick, matching Spark's NaN-is-greatest double
+    ordering, while the dist kept for ``mode="final"`` is the raw fold
+    value. ``tests/test_r10_optimizations.py`` pins both modes against
+    :func:`_km_assign`.
     """
     cents = sorted(cents)
     cids = np.array([c for c, _ in cents], dtype=np.int64)
@@ -1232,7 +1198,7 @@ def kmeans_lloyd(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     step that produces IVF coarse quantizers (x11 consumes such centroids).
 
     Init = the k lowest-id vectors (deterministic seeding); each round
-    assigns scan-side (see :func:`_km_assign`) and recomputes means with
+    assigns scan-side (see :func:`_km_partials_np`) and recomputes means with
     exact integer micro-unit sums, re-snapped to the 1e-6 grid, so every
     centroid coordinate — and hence every assignment — is bit-identical
     in any engine at any parallelism. Empty clusters keep their previous

@@ -714,8 +714,7 @@ def l22_deletion_vector_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain NOT(p1) AND NOT(p2) scan of the raw fixture. At 100 TB: delete
     cost ∝ deleted_rows/62 longs + one manifest swap; read overhead is
     one broadcast join against a sidecar ≤0.2% of base bytes even at
-    100% deletion; ``compact_into`` is the threshold-triggered rewrite
-    path. Reference intent: the curated-zone MERGE upkeep of
+    100% deletion. Reference intent: the curated-zone MERGE upkeep of
     ``1. Metadata Creation.sql:133-146``, delete half."""
     from smfg_datawarehouse_spark.sources.deletion_vectors import (
         DeletionVectorTable,
@@ -1439,57 +1438,53 @@ def l30_binpack_minor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[S3] MINOR (incremental) COMPACTION — the hourly maintenance pass
     of a continuously-ingesting table: only the small-file backlog is
     rewritten (first-fit-decreasing bin-packing into target-sized
-    groups, planned over file METADATA only), while files already at
-    target size are carried across as hard links. The cert stages the
-    classic mixed layout (two large base files + eight small ingest
-    files), runs ``sources.lake.binpack_compact``, and RAISES unless
-    (a) the small files actually merged (file count strictly drops and
-    every small file is gone), and (b) the large files are bit-level
-    UNTOUCHED — same inode after the swap, the zero-copy proof — so the
-    pass's cost provably scaled with the backlog, not the table. l07
-    certifies the full rewrite; this is the one you can afford to run
-    every hour at 100 TB. Content preservation is the hash gate against
-    the raw-fixture rollup."""
-    from smfg_datawarehouse_spark.sources.lake import binpack_compact
+    groups, planned over file sizes only), while files already at target
+    size stay in the new manifest under their own paths. The cert stages
+    the classic mixed layout in a manifest table (two large base files
+    from ``write`` + eight small ingest files from ``append``), runs
+    ``ManifestTable.compact``, and RAISES unless (a) the small files
+    actually merged (the manifest's file count strictly drops and every
+    small file is gone from it), and (b) the large files are bit-level
+    UNTOUCHED — same relative path and same inode in the new manifest,
+    the zero-copy proof — so the pass's cost provably scaled with the
+    backlog, not the table. l07 certifies the full rewrite; this is the
+    one you can afford to run every hour at 100 TB. Content preservation
+    is the hash gate against the raw-fixture rollup."""
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     base = _scratch_dir(spark, "l30")
-    path = os.path.join(base, "documents")
+    mt = ManifestTable(spark, os.path.join(base, "documents"))
     d = t(spark, sf_dir, "documents")
     # mixed layout: 75% of rows in 2 base files, 25% across 8 small files
-    d.where(F.col("doc_id") % 4 != 0).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(path)
-    d.where(F.col("doc_id") % 4 == 0).repartition(8).write.mode(
-        "append"
-    ).parquet(path)
+    mt.write(d.where(F.col("doc_id") % 4 != 0).repartition(2))
+    v0 = mt.append(d.where(F.col("doc_id") % 4 == 0).repartition(8))
 
-    import glob as _glob
-
-    files = _glob.glob(os.path.join(path, "*.parquet"))
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    target = total_bytes // 5  # between small (~3%) and base (~37%) sizes
+    files = mt.manifest(v0)
+    sizes = {f: os.path.getsize(os.path.join(mt.path, f)) for f in files}
+    target = sum(sizes.values()) // 5  # between small (~3%) and base (~37%) sizes
     big_inodes = {
-        os.path.basename(f): os.stat(f).st_ino
+        f: os.stat(os.path.join(mt.path, f)).st_ino
         for f in files
-        if os.path.getsize(f) >= target
+        if sizes[f] >= target
     }
     if not big_inodes or len(big_inodes) == len(files):
         raise RuntimeError("l30 precondition broken: staged layout not mixed")
 
-    stats = binpack_compact(spark, path, target_file_bytes=int(target))
-    if not (stats["n_after"] < stats["n_before"]):
-        raise RuntimeError(f"minor compaction did not reduce files: {stats}")
-    if sorted(stats["kept"]) != sorted(big_inodes):
-        raise RuntimeError(f"minor compaction rewrote a base file: {stats}")
+    after = mt.manifest(mt.compact(target_file_bytes=int(target)))
+    if not len(after) < len(files):
+        raise RuntimeError(f"minor compaction did not reduce files: {files} -> {after}")
+    kept = sorted(set(after) & set(files))
+    if kept != sorted(big_inodes):
+        raise RuntimeError(f"minor compaction rewrote a base file: kept {kept}")
     for name, ino in big_inodes.items():
-        now = os.stat(os.path.join(path, name)).st_ino
+        now = os.stat(os.path.join(mt.path, name)).st_ino
         if now != ino:
             raise RuntimeError(
-                f"base file {name} was copied (inode {ino} -> {now}), "
-                "not hard-linked — the pass paid table-sized I/O"
+                f"base file {name} was copied (inode {ino} -> {now}) — "
+                "the pass paid table-sized I/O"
             )
     return (
-        spark.read.parquet(path)
+        mt.read()
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -13,9 +13,9 @@ Why this matters at 100 TB: a predicate delete that rewrites files has
 write amplification proportional to TABLE size; with deletion vectors it
 is proportional to DELETED ROWS / 62 longs, and the read-side cost is a
 join against a bitmap that is ~0.2% of the base data even if EVERY row
-were deleted. When vectors grow past a threshold, ``compact_into`` applies
-them and rewrites survivors (the maintenance path, analogous to Delta's
-``REORG TABLE ... APPLY (PURGE)``).
+were deleted. Applying the vectors by rewriting the survivors (Delta's
+``REORG TABLE ... APPLY (PURGE)``) is not implemented: :meth:`read` is the
+only consumer of the vectors.
 
 Reference intent: the curated-zone maintenance the reference's load stage
 declares (reference/source_code/sql/1. Metadata Creation.sql:133-146
@@ -145,8 +145,3 @@ class DeletionVectorTable:
             .where(F.col("bits").isNull() | ~bit_set)
             .drop("dv_chunk", "dv_rn", "word", "bits")
         )
-
-    def compact_into(self, path: str) -> None:
-        """Apply vectors and rewrite survivors — the maintenance path
-        once deleted fraction crosses a threshold; resets row identity."""
-        self.read().write.mode("overwrite").parquet(path)

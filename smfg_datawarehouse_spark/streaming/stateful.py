@@ -3,15 +3,11 @@
 The reference's data model declares a REALTIME refresh cadence it never
 implements (``1. Metadata Creation.sql:66``); Structured Streaming's
 arbitrary-stateful API is the engine's answer for operators the built-in
-windowed aggregations can't express. Two canonical shapes:
-
-- **Running per-key totals** (:func:`running_user_totals`) — CDC-style
-  accumulator state per user, emitting the updated running aggregate each
-  micro-batch. State is one tiny row per key; the shuffle is the groupBy
-  hash partitioning, identical at any scale.
-- **Streaming exact dedup** (:func:`dedup_stream`) — built-in
-  ``dropDuplicates`` with watermark-bounded state (the streaming twin of
-  the batch exact-dedup operator).
+windowed aggregations can't express: running per-key totals
+(:func:`running_user_totals`) — CDC-style accumulator state per user,
+emitting the updated running aggregate each micro-batch. State is one
+tiny row per key; the shuffle is the groupBy hash partitioning, identical
+at any scale.
 
 Totals accumulate in integer micro-units (value ×1e6 rounded), so state is
 exact and batch/stream results compare bit-identically — the same
@@ -70,13 +66,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def dedup_stream(events: DataFrame) -> DataFrame:
-    """Streaming exact dedup: watermark-bounded state keyed on event_id.
-    Late duplicates beyond the watermark age out of state —
-    the standard bounded-memory dedup at scale."""
-    return events.dropDuplicates(["event_id"])
 
 
 def running_user_totals_v2(events: DataFrame) -> DataFrame:

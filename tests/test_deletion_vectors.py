@@ -31,6 +31,7 @@ def test_delete_counts_and_survivors(spark, tmp_path):
     surv = dvt.read()
     assert surv.count() == 249
     assert surv.where("v = 0 OR k < 10").count() == 0
+    assert set(surv.columns) == {"k", "v"}  # row identity dropped
 
 
 def test_delete_is_idempotent_and_base_untouched(spark, tmp_path):
@@ -40,13 +41,3 @@ def test_delete_is_idempotent_and_base_untouched(spark, tmp_path):
     dvt.delete("v = 3")
     assert dvt.delete("v = 3") == 0
     assert dvt.base_file_mtimes() == mt0
-
-
-def test_compact_into_applies_vectors(spark, tmp_path):
-    dvt = _mk(spark, tmp_path)
-    dvt.delete("k >= 200")
-    out = str(tmp_path / "compacted")
-    dvt.compact_into(out)
-    df = spark.read.parquet(out)
-    assert df.count() == 200
-    assert set(df.columns) == {"k", "v"}

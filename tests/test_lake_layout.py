@@ -1,17 +1,17 @@
 """Lake-layout scale features: partition pruning pinned against the
-actual physical plan, format round trips and compaction."""
+actual physical plan, format round trips and clustering-preserving
+compaction (``ManifestTable.compact_sorted``)."""
 
 from __future__ import annotations
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.plans.inspect import formatted_plan
 from smfg_datawarehouse_spark.queries import load_events
-from smfg_datawarehouse_spark.sources import lake
 from smfg_datawarehouse_spark.sources.lake import write_partitioned
+from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -74,54 +74,11 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert rows[1]["score"] is None and rows[2]["score"] == 9.5
 
 
-#: each compaction with arguments that compact the test table to one file
-COMPACTIONS = {
-    "compact": lambda spark, path: lake.compact(spark, path, target_file_bytes=1 << 30),
-    "binpack_compact": lambda spark, path: lake.binpack_compact(
-        spark, path, target_file_bytes=1 << 30
-    ),
-    "sorted_compact": lambda spark, path: lake.sorted_compact(spark, path, "id", target_files=1),
-}
-
-
-@pytest.mark.parametrize("compaction", sorted(COMPACTIONS))
-def test_compact_swap_crash_safe(spark, tmp_path, monkeypatch, compaction):
-    """A compaction's swap must never leave a window where `path` is
-    absent: kill the swap at the worst point (after rename-old-away, when
-    the rename of the new directory onto `path` fails) and assert the
-    original dir is restored intact."""
-    import os
-
-    run = COMPACTIONS[compaction]
-    path = str(tmp_path / "tbl")
-    spark.range(100).withColumn("v", F.col("id") * 2).write.parquet(path)
-    before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-
-    real_rename = os.rename
-    def failing_rename(src, dst):
-        if dst == path and not src.endswith("_old"):  # the rename-new-in step
-            raise OSError("injected crash mid-swap")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", failing_rename)
-    try:
-        run(spark, path)
-        raise AssertionError("expected the injected OSError to propagate")
-    except OSError:
-        pass
-    monkeypatch.undo()
-
-    # original data is back at `path` (rolled back), readable and intact
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before
-    assert not os.path.exists(path + "__compact_old")
-
-    # and a clean run afterwards, over an earlier crash's leftover old
-    # dir, still compacts to one file
-    os.makedirs(path + "__compact_old")
-    run(spark, path)
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files) == 1
-    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == before
+def _one_file_batches(mt, frames):
+    """Commit each frame as one single-file batch (write, then appends)."""
+    for i, df in enumerate(frames):
+        (mt.append if i else mt.write)(df.coalesce(1))
+    return mt.current_version()
 
 
 def test_sorted_compact_uneven_sizes_hits_target(spark, tmp_path):
@@ -130,28 +87,22 @@ def test_sorted_compact_uneven_sizes_hits_target(spark, tmp_path):
     compaction ended below target_files. The rebalanced budget must
     produce EXACTLY target_files groups with disjoint key ranges on
     deliberately uneven file sizes."""
-    import os
-
-    from smfg_datawarehouse_spark.sources.lake import sorted_compact
-
-    path = str(tmp_path / "uneven")
-    os.makedirs(path)
+    mt = ManifestTable(spark, str(tmp_path / "uneven"))
     # 12 files, wildly uneven: sizes ~ [9000 rows, 1, 1, ..., 1]
     bounds = [0, 9000, 9001, 9002, 9003, 9004, 9005, 9006, 9007, 9008, 9009, 9010, 9011]
-    for i in range(12):
-        spark.range(bounds[i], bounds[i + 1]).selectExpr(
-            "id AS k", "CAST(id AS DOUBLE) AS v"
-        ).coalesce(1).write.parquet(str(tmp_path / f"stage{i}"))
-        (src,) = [
-            f for f in os.listdir(str(tmp_path / f"stage{i}")) if f.endswith(".parquet")
-        ]
-        os.rename(
-            str(tmp_path / f"stage{i}" / src), os.path.join(path, f"part-{i:05d}.parquet")
-        )
-    res = sorted_compact(spark, path, "k", target_files=4)
-    assert res == {"n_before": 12, "n_after": 4, "groups": 4}
+    v0 = _one_file_batches(
+        mt,
+        [
+            spark.range(bounds[i], bounds[i + 1]).selectExpr(
+                "id AS k", "CAST(id AS DOUBLE) AS v"
+            )
+            for i in range(12)
+        ],
+    )
+    v = mt.compact_sorted("k", target_files=4)
+    assert (len(mt.manifest(v0)), len(mt.manifest(v))) == (12, 4)
     zm = (
-        spark.read.parquet(path)
+        mt.read(v)
         .groupBy(F.input_file_name().alias("file"))
         .agg(F.min("k").alias("lo"), F.max("k").alias("hi"))
         .collect()
@@ -160,50 +111,34 @@ def test_sorted_compact_uneven_sizes_hits_target(spark, tmp_path):
     zs = sorted(zm, key=lambda r: r["lo"])
     for a, b in zip(zs, zs[1:]):
         assert b["lo"] > a["hi"], "compaction interleaved key ranges"
-    assert spark.read.parquet(path).count() == 9011
+    assert mt.read(v).count() == 9011
 
 
 def test_sorted_compact_keeps_zero_row_files_rows(spark, tmp_path):
-    """Zero-row part files have no entry in the min/max stats scan; they
-    must still be folded into a group (not silently dropped with the old
-    directory) and the table's rows must survive byte-for-count."""
-    import os
-
-    from smfg_datawarehouse_spark.sources.lake import sorted_compact
-
-    path = str(tmp_path / "withempty")
-    os.makedirs(path)
-    for i, (lo, hi) in enumerate([(0, 100), (100, 100), (100, 200), (200, 300)]):
-        spark.range(lo, hi).selectExpr("id AS k").coalesce(1).write.parquet(
-            str(tmp_path / f"st{i}")
-        )
-        (src,) = [f for f in os.listdir(str(tmp_path / f"st{i}")) if f.endswith(".parquet")]
-        os.rename(str(tmp_path / f"st{i}" / src), os.path.join(path, f"part-{i:05d}.parquet"))
-    res = sorted_compact(spark, path, "k", target_files=2)
-    assert res["n_before"] == 4 and res["n_after"] == 2
-    assert spark.read.parquet(path).count() == 300
+    """Zero-row part files have no entry in the min stats scan; they
+    must still be folded into a group (not left behind in the manifest)
+    and the table's rows must survive byte-for-count."""
+    mt = ManifestTable(spark, str(tmp_path / "withempty"))
+    v0 = _one_file_batches(
+        mt,
+        [
+            spark.range(lo, hi).selectExpr("id AS k")
+            for lo, hi in [(0, 100), (100, 100), (100, 200), (200, 300)]
+        ],
+    )
+    v = mt.compact_sorted("k", target_files=2)
+    assert len(mt.manifest(v0)) == 4 and len(mt.manifest(v)) == 2
+    assert mt.read(v).count() == 300
 
 
 def test_sorted_compact_empty_table_noop(spark, tmp_path):
-    """An empty table directory is a no-op, not a crash, and more groups
-    than files collapses to one group per file."""
-    import os
-
-    from smfg_datawarehouse_spark.sources.lake import sorted_compact
-
-    path = str(tmp_path / "empty")
-    os.makedirs(path)
-    assert sorted_compact(spark, path, "k", target_files=4) == {
-        "n_before": 0,
-        "n_after": 0,
-        "groups": 0,
-    }
+    """An empty table is a no-op (no commit), not a crash, and more
+    groups than files collapses to one group per file."""
+    mt = ManifestTable(spark, str(tmp_path / "empty"))
+    assert mt.compact_sorted("k", target_files=4) is None
+    assert mt.versions() == [] and mt.manifest() == []
     # fewer files than target: groups == n_files, never an empty group
-    spark.range(0, 10).selectExpr("id AS k").coalesce(1).write.parquet(
-        str(tmp_path / "one")
-    )
-    (src,) = [f for f in os.listdir(str(tmp_path / "one")) if f.endswith(".parquet")]
-    os.rename(str(tmp_path / "one" / src), os.path.join(path, "part-00000.parquet"))
-    res = sorted_compact(spark, path, "k", target_files=4)
-    assert res == {"n_before": 1, "n_after": 1, "groups": 1}
-    assert spark.read.parquet(path).count() == 10
+    v0 = _one_file_batches(mt, [spark.range(0, 10).selectExpr("id AS k")])
+    v = mt.compact_sorted("k", target_files=4)
+    assert (len(mt.manifest(v0)), len(mt.manifest(v))) == (1, 1)
+    assert mt.read(v).count() == 10

@@ -59,14 +59,9 @@ def test_vacuum_removes_exactly_unreferenced(spark, tmp_path):
         mt.read(1).count()  # retention expired
 
 
-def test_crash_before_swap_invisible(spark, tmp_path, monkeypatch):
-    """A writer dying after staging files + writing the manifest but
-    BEFORE the CURRENT swap leaves the previous snapshot fully intact —
-    readers never observe the half-commit."""
-    mt = ManifestTable(spark, str(tmp_path / "t"))
-    mt.write(spark.range(10).withColumnRenamed("id", "k"))
-    before = _rows(mt.read())
-
+def _crash_at_current_swap(monkeypatch, commit) -> None:
+    """Run ``commit`` with the CURRENT pointer swap failing: the writer
+    dies after staging its files and writing its manifest."""
     real_replace = os.replace
 
     def failing_replace(src, dst):
@@ -76,13 +71,78 @@ def test_crash_before_swap_invisible(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(os, "replace", failing_replace)
     with pytest.raises(OSError):
-        mt.append(spark.range(10, 20).withColumnRenamed("id", "k"))
+        commit()
     monkeypatch.undo()
+
+
+def test_crash_before_swap_invisible(spark, tmp_path, monkeypatch):
+    """A writer dying after staging files + writing the manifest but
+    BEFORE the CURRENT swap leaves the previous snapshot fully intact —
+    readers never observe the half-commit."""
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    mt.write(spark.range(10).withColumnRenamed("id", "k"))
+    before = _rows(mt.read())
+
+    _crash_at_current_swap(
+        monkeypatch, lambda: mt.append(spark.range(10, 20).withColumnRenamed("id", "k"))
+    )
 
     assert mt.current_version() == 1
     assert _rows(mt.read()) == before
     # and the table recovers: the next commit simply supersedes the orphan
     mt.append(spark.range(10, 20).withColumnRenamed("id", "k"))
+    assert mt.read().count() == 20
+
+
+#: each compaction, with arguments that compact the test table to one file
+COMPACTIONS = {
+    "compact": lambda mt: mt.compact(target_file_bytes=1 << 30),
+    "compact_sorted": lambda mt: mt.compact_sorted("k", target_files=1),
+}
+
+
+@pytest.mark.parametrize("compaction", sorted(COMPACTIONS))
+def test_compaction_crash_before_swap_invisible(spark, tmp_path, monkeypatch, compaction):
+    """A compaction that dies at the CURRENT swap leaves the version, the
+    file list and the rows of the prior snapshot as they were, and a
+    rerun commits."""
+    run = COMPACTIONS[compaction]
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    mt.write(spark.range(100).withColumnRenamed("id", "k").repartition(4))
+    v, files, before = mt.current_version(), mt.manifest(), _rows(mt.read())
+    assert len(files) > 1
+
+    _crash_at_current_swap(monkeypatch, lambda: run(mt))
+
+    assert mt.current_version() == v
+    assert mt.manifest() == files
+    assert _rows(mt.read()) == before
+    assert run(mt) == v + 1
+    assert len(mt.manifest()) == 1
+    assert _rows(mt.read()) == before
+
+
+def test_compaction_conflicts_with_a_concurrent_append(spark, tmp_path, monkeypatch):
+    """A compaction commits conditionally on the version it planned from:
+    an append that lands while it stages makes it raise CommitConflict,
+    and the appended rows stay in the table instead of being dropped."""
+    from smfg_datawarehouse_spark.sources.manifest import CommitConflict
+
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    mt.write(spark.range(10).withColumnRenamed("id", "k").repartition(2))
+    other = ManifestTable(spark, mt.path)
+    real_stage = mt._stage
+
+    def stage_then_append(df, batch):
+        staged = real_stage(df, batch)
+        other.append(spark.range(10, 20).withColumnRenamed("id", "k"))
+        return staged
+
+    monkeypatch.setattr(mt, "_stage", stage_then_append)
+    with pytest.raises(CommitConflict):
+        mt.compact(target_file_bytes=1 << 30)
+    monkeypatch.undo()
+    assert mt.current_version() == 2
     assert mt.read().count() == 20
 
 

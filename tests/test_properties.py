@@ -329,12 +329,12 @@ def test_triangle_counts_match_bruteforce(spark, edges):
 )
 @settings(max_examples=300, deadline=None)
 def test_contiguous_run_planner_invariants(sizes, target):
-    """sorted_compact's planner must, for ANY size distribution: produce
+    """compact_sorted's planner must, for ANY size distribution: produce
     exactly min(target, n) runs, every run non-empty, runs contiguous and
     covering 0..n-1 in order (clustering preservation depends on it),
     and never let one run take everything while others starve when a
     fairer contiguous split exists (max run ≤ total when n ≥ target)."""
-    from smfg_datawarehouse_spark.sources.lake import plan_contiguous_runs
+    from smfg_datawarehouse_spark.sources.manifest import plan_contiguous_runs
 
     runs = plan_contiguous_runs(sizes, target)
     n = len(sizes)
@@ -350,6 +350,26 @@ def test_contiguous_run_planner_invariants(sizes, target):
     # the pathological regression shape — equal sizes split evenly
     if n >= target and len(set(sizes)) == 1 and n % target == 0:
         assert {len(r) for r in runs} == {n // target}
+
+
+@given(
+    sizes=st.lists(st.integers(min_value=0, max_value=10**6), min_size=0, max_size=200),
+    target=st.integers(min_value=1, max_value=2 * 10**6),
+)
+@settings(max_examples=300, deadline=None)
+def test_first_fit_bin_planner_invariants(sizes, target):
+    """compact's planner must, for ANY size distribution: place every
+    file in exactly one bin or carry it, carry only files at or above
+    the target, and keep every bin within the target unless it holds a
+    single file."""
+    from smfg_datawarehouse_spark.sources.manifest import plan_first_fit_bins
+
+    bins, carried = plan_first_fit_bins(sizes, target)
+    placed = [j for b in bins for j in b] + carried
+    assert sorted(placed) == list(range(len(sizes)))
+    assert all(sizes[j] >= target for j in carried)
+    assert all(b for b in bins)
+    assert all(sum(sizes[j] for j in b) <= target or len(b) == 1 for b in bins)
 
 
 @given(

@@ -93,34 +93,15 @@ def _vecs(spark):
     )
 
 
-def test_km_assign_np_matches_expression(spark):
-    from smfg_datawarehouse_spark.operators.similarity import (
-        _km_assign,
-        _km_assign_np,
-        _quant,
-    )
+def test_km_partials_tie_and_identical_centroids(spark):
+    """The live assignment kernel breaks distance ties like the
+    expression reference: to the lowest centroid id."""
+    from collections import Counter
 
-    vecs = _vecs(spark)
-    init = vecs.orderBy("vec_id").limit(8).collect()
-    cents = [
-        (cid, [_quant(float(x)) for x in row.v]) for cid, row in enumerate(init)
-    ]
-    old = {
-        r["vec_id"]: (r["cluster"], repr(r["dist"]))
-        for r in _km_assign(vecs, cents).collect()
-    }
-    new = {
-        r["vec_id"]: (r["cluster"], repr(r["dist"]))
-        for r in _km_assign_np(vecs, cents).collect()
-    }
-    assert old == new and len(old) > 0
-
-
-def test_km_assign_np_tie_and_identical_centroids(spark):
     from smfg_datawarehouse_spark.session import local_rows_df
     from smfg_datawarehouse_spark.operators.similarity import (
         _km_assign,
-        _km_assign_np,
+        _km_partials_np,
     )
 
     # centroids 1 and 3 identical -> every tie must break to cid 1
@@ -130,12 +111,16 @@ def test_km_assign_np_tie_and_identical_centroids(spark):
         [(10, [1.0, 2.0]), (11, [0.0, 0.0]), (12, [9.0, 8.9])],
         "vec_id long, v array<double>",
     )
-    old = {r["vec_id"]: r["cluster"] for r in _km_assign(vecs, cents).collect()}
+    old = Counter(r["cluster"] for r in _km_assign(vecs, cents).collect())
     new = {
-        r["vec_id"]: r["cluster"] for r in _km_assign_np(vecs, cents).collect()
+        r["cluster"]: r["n"]
+        for r in _km_partials_np(vecs, cents, "final")
+        .groupBy("cluster")
+        .agg(F.sum("n").alias("n"))
+        .collect()
     }
     assert old == new
-    assert new[10] == 1  # tie broke to the lower cid
+    assert new == {0: 1, 1: 2}  # ties broke to the lower cid
 
 
 def test_cosine_cells_np_matches_x106_expression_form(spark):
@@ -403,11 +388,12 @@ def test_pq_assignment_np_matches_expression(spark):
 
 
 def test_km_partials_match_posexplode_aggregation(spark):
-    """x57's in-kernel partial aggregation must equal the old
-    assignment + posexplode/groupBy pipeline exactly (integer micro
-    sums, counts, repr-exact max dist)."""
+    """x57's in-kernel assignment + partial aggregation must equal the
+    expression reference (:func:`_km_assign`) followed by the
+    posexplode/groupBy pipeline exactly (integer micro sums, counts,
+    micro-summed inertia, repr-exact max dist)."""
     from smfg_datawarehouse_spark.operators.similarity import (
-        _km_assign_np,
+        _km_assign,
         _km_partials_np,
         _quant,
     )
@@ -418,7 +404,7 @@ def test_km_partials_match_posexplode_aggregation(spark):
         (cid, [_quant(float(x)) for x in row.v]) for cid, row in enumerate(init)
     ]
 
-    assigned = _km_assign_np(vecs, cents)
+    assigned = _km_assign(vecs, cents)
     old_update = {
         (r["cluster"], r["dim"]): (r["ms"], r["n"])
         for r in assigned.select(

@@ -102,26 +102,6 @@ def test_stateful_running_totals_equals_batch(spark, events_dir):
     assert _rowset(spark.table("stateful_totals")) == expected
 
 
-def test_stream_dedup(spark, events_dir):
-    from smfg_datawarehouse_spark.streaming.stateful import dedup_stream
-    from smfg_datawarehouse_spark.streaming.windows import events_stream
-
-    stream = events_stream(spark, events_dir, watermark="10 minutes")
-    q = (
-        dedup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("dedup_stream_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    n = spark.table("dedup_stream_t").count()
-    from smfg_datawarehouse_spark.queries import load_events
-
-    assert n == load_events(spark, SF_DIR).dropDuplicates(["event_id"]).count()
-
-
 def test_streaming_etl_foreachbatch_lake_audit(spark, events_dir, tmp_path):
     """REALTIME cadence end-to-end: stream → foreachBatch → staging zone +
     audit ledger — the reference's extract-stage semantics (rowcount +
