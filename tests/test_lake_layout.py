@@ -1,11 +1,13 @@
 """Lake-layout scale features: partition pruning pinned against the
-actual physical plan, format round trips and clustering-preserving
-compaction (``ManifestTable.compact_sorted``)."""
+actual physical plan, format round trips and compaction through the
+manifest commit (``ManifestTable.compact`` / ``compact_sorted``)."""
 
 from __future__ import annotations
 
+import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from smfg_datawarehouse_spark.plans.inspect import formatted_plan
@@ -79,6 +81,56 @@ def _one_file_batches(mt, frames):
     for i, df in enumerate(frames):
         (mt.append if i else mt.write)(df.coalesce(1))
     return mt.current_version()
+
+
+#: the layouts the bin-pack compaction meets, as the row ranges of
+#: single-file batches and the target size as a function of the file
+#: sizes: every file below the target (l07's table) rewrites to one file;
+#: a file at the target (l30's) is carried beside one rewritten bin
+COMPACTIONS = {
+    "compact": ([(0, 25), (25, 50), (50, 75), (75, 100)], lambda sizes: 1 << 30),
+    "binpack_compact": ([(0, 5000), (5000, 5010), (5010, 5020), (5020, 5030)], max),
+}
+
+
+@pytest.mark.parametrize("compaction", sorted(COMPACTIONS))
+def test_compact_swap_crash_safe(spark, tmp_path, monkeypatch, compaction):
+    """A bin-pack compaction that dies at the CURRENT swap leaves the
+    table on its prior snapshot, with every file that snapshot names
+    still on disk; a rerun then carries the files at the target under
+    their own paths and rewrites the rest as one file."""
+    ranges, target_of = COMPACTIONS[compaction]
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    v = _one_file_batches(
+        mt, [spark.range(lo, hi).withColumnRenamed("id", "k") for lo, hi in ranges]
+    )
+    files = mt.manifest(v)
+    before = sorted(tuple(r) for r in mt.read(v).collect())
+    sizes = {f: os.path.getsize(os.path.join(mt.path, f)) for f in files}
+    target = target_of(sizes.values())
+    carried = sorted(f for f in files if sizes[f] >= target)
+
+    real_replace = os.replace
+
+    def failing_replace(src, dst):
+        if dst.endswith("CURRENT"):
+            raise OSError("injected crash before pointer swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError):
+        mt.compact(target_file_bytes=target)
+    monkeypatch.undo()
+
+    assert mt.current_version() == v and mt.manifest() == files
+    assert all(os.path.exists(os.path.join(mt.path, f)) for f in files)
+    assert sorted(tuple(r) for r in mt.read().collect()) == before
+
+    assert mt.compact(target_file_bytes=target) == v + 1
+    after = mt.manifest()
+    assert sorted(set(after) & set(files)) == carried
+    assert len(after) == len(carried) + 1
+    assert sorted(tuple(r) for r in mt.read().collect()) == before
 
 
 def test_sorted_compact_uneven_sizes_hits_target(spark, tmp_path):

@@ -93,6 +93,53 @@ def _vecs(spark):
     )
 
 
+def test_km_assign_np_matches_expression(spark):
+    """The numpy assignment inside :func:`_km_partials_np` ("final"
+    partials) must assign like the expression reference
+    :func:`_km_assign`: per cluster the same count, micro-summed inertia
+    and repr-exact max dist."""
+    from smfg_datawarehouse_spark.operators.similarity import (
+        _km_assign,
+        _km_partials_np,
+        _quant,
+    )
+
+    vecs = _vecs(spark)
+    init = vecs.orderBy("vec_id").limit(8).collect()
+    cents = [
+        (cid, [_quant(float(x)) for x in row.v]) for cid, row in enumerate(init)
+    ]
+
+    assigned = _km_assign(vecs, cents)
+    old_final = {
+        r["cluster"]: (r["n_vectors"], repr(r["inertia"]), repr(r["max_dist"]))
+        for r in assigned.groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_vectors"),
+            (
+                F.sum(
+                    F.floor(F.col("dist") * 1000000.0 + 0.5).cast("long")
+                ).cast("double")
+                / 1000000.0
+            ).alias("inertia"),
+            F.max("dist").alias("max_dist"),
+        )
+        .collect()
+    }
+    new_final = {
+        r["cluster"]: (r["n_vectors"], repr(r["inertia"]), repr(r["max_dist"]))
+        for r in _km_partials_np(vecs, cents, "final")
+        .groupBy("cluster")
+        .agg(
+            F.sum("n").alias("n_vectors"),
+            (F.sum("msd").cast("double") / 1000000.0).alias("inertia"),
+            F.max("mx").alias("max_dist"),
+        )
+        .collect()
+    }
+    assert old_final == new_final and len(old_final) > 0
+
+
 def test_km_partials_tie_and_identical_centroids(spark):
     """The live assignment kernel breaks distance ties like the
     expression reference: to the lowest centroid id."""
@@ -388,10 +435,9 @@ def test_pq_assignment_np_matches_expression(spark):
 
 
 def test_km_partials_match_posexplode_aggregation(spark):
-    """x57's in-kernel assignment + partial aggregation must equal the
-    expression reference (:func:`_km_assign`) followed by the
-    posexplode/groupBy pipeline exactly (integer micro sums, counts,
-    micro-summed inertia, repr-exact max dist)."""
+    """x57's in-kernel "update" partials (the centroid recompute) must
+    equal the expression reference (:func:`_km_assign`) followed by the
+    posexplode/groupBy pipeline exactly (integer micro sums, counts)."""
     from smfg_datawarehouse_spark.operators.similarity import (
         _km_assign,
         _km_partials_np,
@@ -427,31 +473,3 @@ def test_km_partials_match_posexplode_aggregation(spark):
         .collect()
     }
     assert old_update == new_update and len(old_update) > 0
-
-    old_final = {
-        r["cluster"]: (r["n_vectors"], repr(r["inertia"]), repr(r["max_dist"]))
-        for r in assigned.groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            (
-                F.sum(
-                    F.floor(F.col("dist") * 1000000.0 + 0.5).cast("long")
-                ).cast("double")
-                / 1000000.0
-            ).alias("inertia"),
-            F.max("dist").alias("max_dist"),
-        )
-        .collect()
-    }
-    new_final = {
-        r["cluster"]: (r["n_vectors"], repr(r["inertia"]), repr(r["max_dist"]))
-        for r in _km_partials_np(vecs, cents, "final")
-        .groupBy("cluster")
-        .agg(
-            F.sum("n").alias("n_vectors"),
-            (F.sum("msd").cast("double") / 1000000.0).alias("inertia"),
-            F.max("mx").alias("max_dist"),
-        )
-        .collect()
-    }
-    assert old_final == new_final and len(old_final) > 0
