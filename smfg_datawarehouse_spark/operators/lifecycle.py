@@ -1100,12 +1100,12 @@ def l17_manifest_commit_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def l18_zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[S2/S3] Sorted export with a per-file ZONE MAP, then a pruned
-    range scan (``sources/lake.write_sorted_with_zonemap`` /
-    ``read_zonemap_pruned``): orders are range-partitioned and sorted by
-    o_orderdate into 8 files whose min/max zones are collected at write
-    time; a one-year predicate then reads ONLY the files whose zone
-    intersects it. The engine RAISES unless pruning actually skipped
+    """[S2/S3] Sorted layout with a per-file ZONE MAP, then a pruned
+    range scan: orders are range-partitioned and sorted by o_orderdate
+    into 8 files and committed as one :class:`ManifestTable` version;
+    ``ManifestTable.file_ranges`` gives each file's min/max zone, and a
+    one-year predicate then reads (``read_files``) ONLY the files whose
+    zone intersects it. The engine RAISES unless pruning actually skipped
     files (the property being certified — a zone map that never skips is
     a no-op), the exact predicate is re-applied after pruning (zone maps
     are conservative), and the rollup hash-matches a plain filtered scan
@@ -1115,28 +1115,26 @@ def l18_zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted) let Spark's reader skip further. Reference intent: the
     consolidated ordered extract of ``staging_data_extraction.py:30-80``,
     re-done so the ordering pays off at read time."""
-    from smfg_datawarehouse_spark.sources.lake import (
-        read_zonemap_pruned,
-        write_sorted_with_zonemap,
-    )
-
-    tmp = _scratch_dir(spark, "l18")
-    path = os.path.join(tmp, "orders_sorted")
-    o = t(spark, sf_dir, "orders")
-    zonemap = write_sorted_with_zonemap(o, path, "o_orderdate", n_files=8)
     import datetime
+
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
+
+    mt = ManifestTable(spark, os.path.join(_scratch_dir(spark, "l18"), "orders_sorted"))
+    o = t(spark, sf_dir, "orders")
+    mt.write(o.repartitionByRange(8, F.col("o_orderdate")).sortWithinPartitions("o_orderdate"))
+    zones = mt.file_ranges("o_orderdate")
 
     # fixture o_orderdate is parquet timestamp — bound with the same type
     lo = datetime.datetime(1996, 1, 1)
     end = datetime.datetime(1997, 1, 1)
-    hi = end - datetime.timedelta(microseconds=1)
-    pruned, n_read, n_total = read_zonemap_pruned(spark, zonemap, lo, hi)
-    if n_read >= n_total:
+    keep = [z["file"] for z in zones if z["lo"] < end and z["hi"] >= lo]
+    if len(keep) >= len(zones):
         raise RuntimeError(
-            f"zone map skipped nothing ({n_read}/{n_total} files read)"
+            f"zone map skipped nothing ({len(keep)}/{len(zones)} files read)"
         )
     return (
-        pruned.where(
+        mt.read_files(keep)
+        .where(
             (F.col("o_orderdate") >= F.lit(lo)) & (F.col("o_orderdate") < F.lit(end))
         )
         .groupBy("o_orderpriority")
@@ -1312,8 +1310,9 @@ def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently destroys file skipping, the exact regression this pass
     prevents (l30 certifies zero-copy cost; this certifies preserved
     SELECTIVITY), and (c) a 3-day probe over the compacted layout still
-    prunes files. The hash gate checks the probed rollup against the raw
-    fixture.
+    prunes files. The zone maps come from ``ManifestTable.file_ranges``
+    and the probe reads the kept files with ``read_files``. The hash gate
+    checks the probed rollup against the raw fixture.
 
     At 100 TB this is the nightly OPTIMIZE of a time-series table: plan
     over per-file min/max metadata only, rewrite cost O(table/target),
@@ -1321,7 +1320,6 @@ def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
     import os
 
-    from smfg_datawarehouse_spark.sources.lake import read_zonemap_pruned
     from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
     base = _scratch_dir(spark, "l34")
@@ -1334,13 +1332,7 @@ def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     if (n_before, n_after) != (12, 4):
         raise RuntimeError(f"compaction layout unexpected: {n_before} -> {n_after}")
 
-    zm = (
-        mt.read(v1)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
-        .collect()
-    )
-    zs = sorted(zm, key=lambda r: r["lo"])
+    zs = sorted(mt.file_ranges("ts", v1), key=lambda z: z["lo"])
     for a, b in zip(zs, zs[1:]):
         if b["lo"] <= a["hi"]:
             raise RuntimeError(
@@ -1351,12 +1343,12 @@ def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dmin,) = e.agg(F.min(F.to_date("ts"))).first()
     lo = _dt.datetime.combine(dmin, _dt.time.min)
     hi = _dt.datetime.combine(dmin + _dt.timedelta(days=2), _dt.time.max)
-    zonemap = [{"file": r["file"], "lo": r["lo"], "hi": r["hi"]} for r in zm]
-    probed, n_read, n_total = read_zonemap_pruned(spark, zonemap, lo, hi)
-    if not (0 < n_read < n_total):
-        raise RuntimeError(f"zone pruning vacuous after compaction: {n_read}/{n_total}")
+    keep = [z["file"] for z in zs if z["lo"] <= hi and z["hi"] >= lo]
+    if not 0 < len(keep) < len(zs):
+        raise RuntimeError(f"zone pruning vacuous after compaction: {len(keep)}/{len(zs)}")
     return (
-        probed.where(
+        mt.read_files(keep)
+        .where(
             (F.to_date("ts") >= F.lit(dmin))
             & (F.to_date("ts") <= F.lit(dmin + _dt.timedelta(days=2)))
         )
@@ -1998,7 +1990,7 @@ def l40_curation_run_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     staged = mt.stage(batch)
-    bad = datacard_violations(mt.read_staged(staged))
+    bad = datacard_violations(mt.read_files(staged))
     if not bad:
         raise RuntimeError("l40 expected the poisoned batch to fail its datacard")
     if mt.current_version() != v1 or mt.read().count() != n_v1:
@@ -2008,7 +2000,7 @@ def l40_curation_run_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     repaired = mt.stage(batch.where(F.col("quality_score") >= 0.5))
-    if datacard_violations(mt.read_staged(repaired)):
+    if datacard_violations(mt.read_files(repaired)):
         raise RuntimeError("l40 repaired batch still fails its datacard")
     mt.publish_append(repaired)
     if mt.current_version() == v1:

@@ -974,7 +974,7 @@ def s15_streaming_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataF
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         staged = mt.stage(batch_df.select("event_id", "ts", "user_id", "event_type", "value"))
-        audit_df = mt.read_staged(staged)
+        audit_df = mt.read_files(staged)
         violations = audit_df.where(
             (F.col("value") < 0) | F.col("event_id").isNull()
         ).count()

@@ -699,32 +699,34 @@ def q97_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l22_deletion_vector_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[S7/S3] DELETE WITHOUT REWRITE certified — deletion vectors
-    (``sources/deletion_vectors.DeletionVectorTable``), the Delta/Iceberg
-    v2 merge-on-read mechanism: orders land once as immutable base files
-    with (chunk, ordinal) row identity; two predicate DELETEs append
-    packed 62-bit bitmap words to a manifest-committed sidecar; the read
-    path anti-filters survivors by bit test against the broadcast
-    vector. The certification RAISES unless (a) every base part file's
-    mtime is byte-for-byte untouched after both deletes — the zero
+    (``sources/manifest.ManifestTable.delete``), the Delta/Iceberg v2
+    merge-on-read mechanism: orders land once as an immutable
+    :class:`ManifestTable` version; two predicate DELETEs stage packed
+    62-bit bitmap words keyed by (data file, ``_metadata.row_index``) and
+    commit them into the same manifest; every read anti-filters survivors
+    by bit test against the broadcast vector. The certification RAISES
+    unless (a) the manifest's data files are the same files with
+    byte-for-byte untouched mtimes after both deletes — the zero
     write-amplification property that distinguishes this from a rewrite
     delete, (b) each delete reports exactly the expected newly-deleted
-    count (the second predicate overlaps the first; overlapping rows
-    must not double-count — bit_or is idempotent), and (c) a replayed
-    delete is a no-op (delta 0). The surviving rollup hash-matches a
-    plain NOT(p1) AND NOT(p2) scan of the raw fixture. At 100 TB: delete
-    cost ∝ deleted_rows/62 longs + one manifest swap; read overhead is
-    one broadcast join against a sidecar ≤0.2% of base bytes even at
-    100% deletion. Reference intent: the curated-zone MERGE upkeep of
-    ``1. Metadata Creation.sql:133-146``, delete half."""
-    from smfg_datawarehouse_spark.sources.deletion_vectors import (
-        DeletionVectorTable,
-    )
+    count (the second predicate overlaps the first; a delete only sees
+    surviving rows, so overlapping rows must not double-count), and (c) a
+    replayed delete is a no-op (delta 0). The surviving rollup
+    hash-matches a plain NOT(p1) AND NOT(p2) scan of the raw fixture. At
+    100 TB: delete cost ∝ deleted_rows/62 longs + one manifest swap; read
+    overhead is one broadcast join against a vector ≤0.2% of base bytes
+    even at 100% deletion. Reference intent: the curated-zone MERGE
+    upkeep of ``1. Metadata Creation.sql:133-146``, delete half."""
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
-    base = _scratch_dir(spark, "l22")
+    mt = ManifestTable(spark, os.path.join(_scratch_dir(spark, "l22"), "orders_dv"))
     o = t(spark, sf_dir, "orders")
-    dvt = DeletionVectorTable(spark, os.path.join(base, "orders_dv"), "o_orderkey")
-    dvt.write_base(o)
-    mt0 = dvt.base_file_mtimes()
+    mt.write(o)
+
+    def data_mtimes() -> dict[str, float]:
+        return {f: os.path.getmtime(os.path.join(mt.path, f)) for f in mt.manifest()}
+
+    mt0 = data_mtimes()
     p1 = "o_orderpriority = '1-URGENT'"
     p2 = "o_totalprice < 5000.0"
     # both expected deltas from ONE scan (was two count jobs)
@@ -732,17 +734,17 @@ def l22_deletion_vector_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr(f"CAST(({p1}) AS INT)")).alias("e1"),
         F.sum(F.expr(f"CAST(({p2}) AND NOT ({p1}) AS INT)")).alias("e2"),
     ).first()
-    n1 = dvt.delete(p1)
-    n2 = dvt.delete(p2)
-    n3 = dvt.delete(p1)  # replay: must be a no-op
+    n1 = mt.delete(p1)
+    n2 = mt.delete(p2)
+    n3 = mt.delete(p1)  # replay: must be a no-op
     if (n1, n2, n3) != (exp1, exp2, 0):
         raise RuntimeError(
             f"l22 deletion deltas diverged: got {(n1, n2, n3)}, "
             f"expected {(exp1, exp2, 0)}"
         )
-    if dvt.base_file_mtimes() != mt0:
-        raise RuntimeError("l22 base files were rewritten by a delete")
-    return dvt.read().groupBy("o_orderpriority").agg(
+    if data_mtimes() != mt0:
+        raise RuntimeError("l22 data files were rewritten by a delete")
+    return mt.read().groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         dsum(F.col("o_totalprice")).alias("revenue"),
     )
@@ -803,7 +805,7 @@ def l23_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage + audit the bad batch: files land, manifest must not move
     staged = mt.stage(batch)
-    violations = audit(mt.read_staged(staged))
+    violations = audit(mt.read_files(staged))
     if violations == 0:
         raise RuntimeError("l23 expected the corrupted batch to fail its audit")
     if mt.current_version() != v1 or mt.read().count() != n_v1:
@@ -813,7 +815,7 @@ def l23_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     repaired = mt.stage(batch.where(F.col("o_totalprice") >= 0))
-    if audit(mt.read_staged(repaired)) != 0:
+    if audit(mt.read_files(repaired)) != 0:
         raise RuntimeError("l23 repaired batch still fails its audit")
     mt.publish_append(repaired)
     if mt.current_version() == v1:
@@ -1202,26 +1204,24 @@ def l28_clustered_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance op: a hash-laid-out table (every file spans the whole
     key range, so zone maps skip NOTHING — the layout every
     shuffle-then-write job produces) is rewritten range-clustered on
-    o_orderdate via the same writer l18 certifies. The cert RAISES
-    unless measured zone-overlap actually collapses: before, all
-    file-pair zones intersect (full overlap by construction); after,
-    pairwise intersections must drop ≥ 4× — the property that turns a
-    time-range query from a full scan into a 1%-of-files read. Content
-    preservation is the hash gate: the rollup read back from the
-    REWRITTEN files must match the oracle over the raw fixture
-    bit-for-bit. Complements l07 (size compaction, layout-agnostic) and
-    l18 (writes sorted from scratch); this is the in-place maintenance
-    pass a 100 TB table needs after ingest has fragmented its
-    clustering. Zone stats are one bounded per-file min/max rollup
-    (n_files rows), never row-shaped on the driver."""
-    from smfg_datawarehouse_spark.sources.lake import write_sorted_with_zonemap
+    o_orderdate, the layout l18 certifies, as the second version of the
+    same :class:`ManifestTable`. The cert RAISES unless measured
+    zone-overlap actually collapses: before, all file-pair zones
+    intersect (full overlap by construction); after, pairwise
+    intersections must drop ≥ 4× — the property that turns a time-range
+    query from a full scan into a 1%-of-files read. Content preservation
+    is the hash gate: the rollup read back from the REWRITTEN version
+    must match the oracle over the raw fixture bit-for-bit. Complements
+    l07 (size compaction, layout-agnostic) and l18 (writes sorted from
+    scratch); this is the in-place maintenance pass a 100 TB table needs
+    after ingest has fragmented its clustering. Zone stats are
+    ``ManifestTable.file_ranges`` of each version: one bounded per-file
+    min/max rollup (n_files rows collected), never a row-shaped collect."""
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
-    tmp = _scratch_dir(spark, "l28")
-    raw_path = os.path.join(tmp, "orders_hash_layout")
-    clustered_path = os.path.join(tmp, "orders_clustered")
-
+    mt = ManifestTable(spark, os.path.join(_scratch_dir(spark, "l28"), "orders"))
     o = t(spark, sf_dir, "orders")
-    o.repartition(8).write.mode("overwrite").parquet(raw_path)
+    mt.write(o.repartition(8))
 
     def zone_overlap_pairs(zones: list[dict]) -> int:
         n = len(zones)
@@ -1232,18 +1232,13 @@ def l28_clustered_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not (zones[i]["hi"] < zones[j]["lo"] or zones[i]["lo"] > zones[j]["hi"])
         )
 
-    before = [
-        {"file": r["file"], "lo": r["lo"], "hi": r["hi"]}
-        for r in spark.read.parquet(raw_path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.min("o_orderdate").alias("lo"), F.max("o_orderdate").alias("hi"))
-        .collect()
-    ]
-    zones_after = write_sorted_with_zonemap(
-        spark.read.parquet(raw_path), clustered_path, "o_orderdate", n_files=8
+    ov_before = zone_overlap_pairs(mt.file_ranges("o_orderdate"))
+    mt.write(
+        mt.read()
+        .repartitionByRange(8, F.col("o_orderdate"))
+        .sortWithinPartitions("o_orderdate")
     )
-    ov_before = zone_overlap_pairs(before)
-    ov_after = zone_overlap_pairs(zones_after)
+    ov_after = zone_overlap_pairs(mt.file_ranges("o_orderdate"))
     if ov_before == 0:
         raise RuntimeError("l28 precondition broken: hash layout already clustered")
     if ov_after * 4 > ov_before:
@@ -1252,7 +1247,7 @@ def l28_clustered_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"({ov_before} -> {ov_after} intersecting file pairs)"
         )
     return (
-        spark.read.parquet(clustered_path)
+        mt.read()
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_orders"),
@@ -1347,22 +1342,25 @@ def l29_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled up ENTIRELY executor-side to packed 62-bit words (q95's
     ``bit_or(1 << bit)`` idiom, map-side partial combine); the driver
     collects only the ≤ m/62 non-zero (file, word, bits) manifest rows
-    per file — never a row-shaped or bit-shaped set."""
+    per file — never a row-shaped or bit-shaped set. The date layout is
+    one :class:`ManifestTable` version; the bloom is keyed by each row's
+    ``_metadata.file_name`` and mapped back to its manifest path, and the
+    kept files are read with ``ManifestTable.read_files``."""
     import hashlib as _hashlib
 
-    from smfg_datawarehouse_spark.sources.lake import write_sorted_with_zonemap
+    from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
-    base = _scratch_dir(spark, "l29")
-    path = os.path.join(base, "orders_by_date")
+    mt = ManifestTable(spark, os.path.join(_scratch_dir(spark, "l29"), "orders_by_date"))
     o = t(spark, sf_dir, "orders")
-    write_sorted_with_zonemap(o, path, "o_orderdate", n_files=8)
+    mt.write(o.repartitionByRange(8, F.col("o_orderdate")).sortWithinPartitions("o_orderdate"))
+    by_name = {os.path.basename(f): f for f in mt.manifest()}
 
-    rd = spark.read.parquet(path)
     ha = md5_int(F.col("key"))
     hb = md5_int(F.col("key"), 9)
     words = (
-        rd.select(
-            F.input_file_name().alias("file"),
+        mt.read()
+        .select(
+            F.col("_metadata.file_name").alias("file"),
             F.col("o_custkey").cast("string").alias("key"),
         )
         .distinct()
@@ -1386,7 +1384,7 @@ def l29_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bloom: dict[str, dict[int, int]] = {}
     for r in words:
-        bloom.setdefault(r["file"], {})[r["word"]] = r["bits"]
+        bloom.setdefault(by_name[r["file"]], {})[r["word"]] = r["bits"]
     n_total = len(bloom)
 
     probe_keys = [
@@ -1416,7 +1414,7 @@ def l29_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"bloom file index skipped nothing ({len(keep)}/{n_total} files read)"
         )
     return (
-        spark.read.parquet(*keep)
+        mt.read_files(keep)
         .where(F.col("o_custkey").isin(probe_keys))
         .groupBy("o_custkey")
         .agg(

@@ -1,5 +1,5 @@
 """Three-zone parquet lake (RAW → STAGING → CURATED): zone paths, staging
-writes, format-agnostic sources and sinks, sorted zone-mapped layouts.
+writes, format-agnostic sources and sinks.
 
 Mirrors the reference's zone layout (``config/config.yaml:64-69``:
 RAW_ZONE/STAGING_ZONE/CURATED_ZONE/LOGS_PATH) with per-table directories.
@@ -7,11 +7,13 @@ RAW_ZONE/STAGING_ZONE/CURATED_ZONE/LOGS_PATH) with per-table directories.
 The reference writes pandas chunks as ``{table}_part_{n}.parquet`` then
 consolidates to ONE file (``staging_data_extraction.py:30-80``). Spark
 writes part-files natively, and consolidation is a table operation, not
-a directory one: a table that is compacted lives in a
-:class:`.manifest.ManifestTable`, whose ``compact`` (bin-pack to a target
-file size — at 100 TB ~128-512 MB files, not one giant file) and
-``compact_sorted`` (clustering-preserving) commit through the same atomic
-CURRENT swap as every other table write.
+a directory one: a table that is compacted, sorted for file skipping or
+deleted from lives in a :class:`.manifest.ManifestTable`, whose
+``compact`` (bin-pack to a target file size — at 100 TB ~128-512 MB
+files, not one giant file), ``compact_sorted`` (clustering-preserving)
+and ``delete`` (deletion vectors) commit through the same atomic CURRENT
+swap as every other table write, and whose ``file_ranges`` is the
+per-file zone map a pruned read (``read_files``) is planned from.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 @dataclass
@@ -110,64 +112,3 @@ def read_evolved_parquet(spark, path: str):
     adding a column to ``DW_Column_Config`` must not invalidate
     already-landed data."""
     return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def write_sorted_with_zonemap(
-    df: DataFrame,
-    path: str,
-    order_col: str,
-    n_files: int,
-) -> list[dict]:
-    """Range-partitioned sorted export + per-file ZONE MAP (min/max of
-    ``order_col`` per file) — the layout that makes a 100 TB time-range
-    query read 1% of the files instead of all of them.
-
-    ``repartitionByRange`` gives files with (sampling-derived) disjoint
-    key ranges; ``sortWithinPartitions`` orders rows inside each file so
-    parquet row-group statistics are tight too. The returned zone map is
-    collected from a column-pruned scan of the written files (bounded:
-    one row per file); at true scale the same min/max pairs come straight
-    from the parquet footers the write already produced — this keeps the
-    protocol explicit and engine-checkable. Mirrors the reference's
-    consolidated-extract ordering intent (``staging_data_extraction.py``
-    ORDER BY before write) with a layout that is *useful* to the reader,
-    not just tidy."""
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    (
-        df.repartitionByRange(n_files, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    stats = (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.min(order_col).alias("lo"),
-            F.max(order_col).alias("hi"),
-        )
-        .collect()
-    )
-    return [{"file": r["file"], "lo": r["lo"], "hi": r["hi"]} for r in stats]
-
-
-def read_zonemap_pruned(
-    spark: SparkSession,
-    zonemap: list[dict],
-    lo,
-    hi,
-):
-    """Read only the files whose [min, max] zone intersects [lo, hi].
-    Returns ``(df, n_files_read, n_files_total)``. Zone maps are
-    conservative — the caller still applies the exact predicate; pruning
-    only removes files that *cannot* contain a match, so the result is
-    identical to a full scan + filter. This is partition pruning's
-    file-granularity sibling, done engine-side so the skip decision is
-    inspectable (Spark's own parquet reader then skips row groups within
-    the chosen files off the same statistics)."""
-    keep = [z["file"] for z in zonemap if not (z["hi"] < lo or z["lo"] > hi)]
-    if not keep:
-        raise ValueError("zone map pruned every file; empty read")
-    return spark.read.parquet(*keep), len(keep), len(zonemap)

@@ -1,11 +1,11 @@
-"""Manifest-committed parquet tables — the one commit protocol for curated
+"""Manifest-committed parquet tables — the one commit protocol for lake
 tables (Delta/Iceberg's core idea on plain parquet).
 
 The reference's declared DW-load stage upserts on key columns
 (``DW_Output_Column_Config.IsKey``, ``1. Metadata Creation.sql:133``); on a
 real lake that is Delta ``MERGE INTO``. Plain parquet directories cannot be
 updated in place safely, and object stores have no atomic directory
-rename, so every curated write goes through an indirection: data files are
+rename, so every lake write goes through an indirection: data files are
 IMMUTABLE and never renamed or deleted by a commit; what changes is a tiny
 MANIFEST (the list of files that make up the table), and the only
 mutation in the whole protocol is an atomic single-object swap of the
@@ -21,6 +21,11 @@ read a consistent snapshot no matter what commits land meanwhile:
   snapshot, ``transform.merge_upsert``, stage the result and commit it
   CONDITIONALLY on the base version, so a second writer working from
   the same base gets :class:`CommitConflict` instead of a lost update.
+- ``delete(predicate)`` — merge-on-read DELETE (Delta/Iceberg v2
+  deletion vectors): the matching rows' bits, packed 62-bit words keyed
+  by (data file name, ``_metadata.row_index``), are staged like any
+  batch and committed conditionally on the version the delete read. No
+  data file is rewritten.
 - ``compact(target_file_bytes)`` — bin-pack compaction: files at or
   above the target stay in the new manifest under their own paths
   (nothing copied); the smaller ones are packed first-fit-decreasing
@@ -32,11 +37,22 @@ read a consistent snapshot no matter what commits land meanwhile:
   Both stage their rewritten files, then commit conditionally on the
   version they planned from. The replaced files stay on disk until
   ``vacuum``, so an in-flight reader of the old manifest loses nothing.
+- ``file_ranges(col)`` — the per-file zone map (min/max of ``col``) of
+  a snapshot; ``read_files(files)`` reads the files a pruning decision
+  kept.
 - ``read(version)`` / ``versions()`` / ``diff(v_from, v_to, keys)`` —
   time travel and CDC over the committed manifests (versions start at
   1; a manifest written without its CURRENT swap is not a version).
 - ``vacuum()``   — delete files referenced by NO retained manifest;
   the only destructive step, explicitly decoupled from commits.
+
+The manifest json carries, next to the file list, the per-writer ``txns``
+map and the ``deletes`` entries (one per delete: its vector files and
+the rows it deleted per data file). Every commit copies both forward;
+a delete entry keeps only the data files still in the new file list and
+goes once none is left. ``_read_files`` is the one file reader, and it
+applies the deletes, so every read, diff, merge and compaction sees only
+surviving rows.
 
 Scale: manifests are file lists (KBs per thousand files — at true table
 scale this becomes a manifest tree like Iceberg's, same protocol);
@@ -52,12 +68,17 @@ import json
 import os
 import re
 import shutil
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
+
+WORD_BITS = 62  # deletion-vector word width: 1 << 63 overflows BIGINT (see q95)
+_VECTOR_SCHEMA = "file STRING, word BIGINT, bits BIGINT"
+#: a row's vector word and its bit in that word, from its ``row_index``
+_WORD = f"_dv_row DIV {WORD_BITS}"
+_BIT = f"shiftleft(CAST(1 AS BIGINT), CAST(_dv_row % {WORD_BITS} AS INT))"
 
 
 def _swap_pointer(path: str, doc: dict) -> None:
@@ -224,23 +245,32 @@ class ManifestTable:
         found = (_MANIFEST_RE.match(n) for n in os.listdir(os.path.join(self.path, "manifest")))
         return sorted(int(m.group(1)) for m in found if m)
 
-    def manifest(self, version: int | None = None) -> list[str]:
-        """File list (relative paths) of a committed snapshot. A version
+    def _load(self, version: int) -> dict:
+        with open(self._manifest_path(version)) as fh:
+            return json.load(fh)
+
+    def _doc(self, version: int | None = None) -> dict:
+        """Manifest json of a committed snapshot (CURRENT when ``version``
+        is None; ``{"files": []}`` before the first commit). A version
         past CURRENT or removed by vacuum raises FileNotFoundError."""
         cur = self.current_version()
         v = cur if version is None else version
         if v is None:
-            return []
+            return {"files": []}
         if cur is None or v > cur:
             raise FileNotFoundError(f"version {v} is not committed in {self.path}")
-        with open(self._manifest_path(v)) as fh:
-            return json.load(fh)["files"]
+        return self._load(v)
+
+    def manifest(self, version: int | None = None) -> list[str]:
+        """File list (relative paths) of a committed snapshot."""
+        return self._doc(version)["files"]
 
     def _commit(
         self,
         files: list[str],
         expected_version: int | None = None,
         txn: tuple[str, int] | None = None,
+        deletes: list[dict] | None = None,
     ) -> int:
         """Write manifest v{N+1} then atomically swap CURRENT to it.
 
@@ -263,19 +293,36 @@ class ManifestTable:
         atomic swap — there is no window where the files are committed
         but the transaction marker is not (Delta's txnAppId/txnVersion
         shape). The map is copied forward on every commit, so it
-        survives :meth:`vacuum` dropping old manifests."""
-        if expected_version is not None:
-            cur = self.current_version() or 0
-            if cur != expected_version:
-                raise CommitConflict(
-                    f"commit based on v{expected_version}, CURRENT is v{cur}"
-                )
-        txns = self.txns()
+        survives :meth:`vacuum` dropping old manifests.
+
+        ``deletes`` replaces the snapshot's delete entries (:meth:`delete`,
+        :func:`shallow_clone`); when None the current ones are copied
+        forward. Either way each entry keeps only the data files still in
+        ``files``, and an entry left with none is dropped, so a rewrite
+        drops the vector entries of the files it replaced. The prior
+        manifest is read once, for both maps."""
+        cur = self.current_version()
+        if expected_version is not None and (cur or 0) != expected_version:
+            raise CommitConflict(
+                f"commit based on v{expected_version}, CURRENT is v{cur or 0}"
+            )
+        prior = self._load(cur) if cur else {}
+        txns = {k: int(x) for k, x in prior.get("txns", {}).items()}
         if txn is not None:
             txns[txn[0]] = int(txn[1])
-        v = (self.current_version() or 0) + 1
+        live = set(files)
+        kept = []
+        entries = prior.get("deletes", []) if deletes is None else deletes
+        for e in entries:
+            counts = {f: n for f, n in e["counts"].items() if f in live}
+            if counts:
+                kept.append({"vector": e["vector"], "counts": counts})
+        v = (cur or 0) + 1
+        doc = {"version": v, "files": sorted(files), "txns": txns}
+        if kept:
+            doc["deletes"] = kept
         with open(self._manifest_path(v), "w") as fh:
-            json.dump({"version": v, "files": sorted(files), "txns": txns}, fh)
+            json.dump(doc, fh)
         _swap_pointer(self._current_path(), {"version": v})
         return v
 
@@ -283,11 +330,7 @@ class ManifestTable:
         """Per-writer committed-batch high-water map of the current
         snapshot (the idempotence state :func:`append_once` checks). Atomic
         with the file list: both live in the same manifest json."""
-        v = self.current_version()
-        if v is None:
-            return {}
-        with open(self._manifest_path(v)) as fh:
-            return {k: int(x) for k, x in json.load(fh).get("txns", {}).items()}
+        return {k: int(x) for k, x in self._doc().get("txns", {}).items()}
 
     def _next_batch(self) -> int:
         """Allocate a batch number past EVERY existing data dir — version
@@ -302,30 +345,70 @@ class ManifestTable:
         ]
         return max(existing, default=0) + 1
 
-    def _stage(self, df: DataFrame, batch: int) -> list[str]:
+    def _write_batch(self, df: DataFrame, batch: int) -> list[str]:
         """Write df's files under data/batch-{batch}/ (immutable once
         committed); return their table-relative paths."""
         rel = os.path.join("data", f"batch-{batch}")
         out = os.path.join(self.path, rel)
         df.write.mode("overwrite").parquet(out)
-        staged = nullable_copy(df.schema)
-        if self._schema is None and not self._schema_mixed:
-            self._schema = staged
-        elif self._schema is not None and staged != self._schema:
-            self._schema, self._schema_mixed = None, True
         return [
             os.path.join(rel, f)
             for f in os.listdir(out)
             if f.endswith(".parquet")
         ]
 
-    def _read_files(self, files: list[str]) -> DataFrame:
-        """Read exactly ``files``, declaring the cached schema when every
-        staged batch agreed on one (skips per-read footer inference)."""
+    def _stage(self, df: DataFrame, batch: int) -> list[str]:
+        """Write a batch of table rows and record its schema in the cache
+        (a deletion vector is written by :meth:`_write_batch` alone, so
+        its schema never reaches the cache)."""
+        files = self._write_batch(df, batch)
+        staged = nullable_copy(df.schema)
+        if self._schema is None and not self._schema_mixed:
+            self._schema = staged
+        elif self._schema is not None and staged != self._schema:
+            self._schema, self._schema_mixed = None, True
+        return files
+
+    def _read_files(
+        self, files: list[str], deletes: list[dict] | None = None, row_ids: bool = False
+    ) -> DataFrame:
+        """The one reader of the table's files: read exactly ``files``,
+        declaring the cached schema when every staged batch agreed on one
+        (skips per-read footer inference), then drop the rows ``deletes``
+        marks.
+
+        Deleted rows go through ONE broadcast left-anti join against the
+        vector words, on (file name, ``row_index DIV 62``) plus a test of
+        the row's bit. Spark part-file names carry their write job's
+        UUID, so a name is unique within a table and stays the same when
+        :func:`shallow_clone` rebases the path. Without deletes the plan
+        is a plain file scan. ``row_ids`` keeps the row identity as
+        ``_dv_file`` / ``_dv_row`` (:meth:`delete`, :meth:`file_ranges`)."""
         paths = [os.path.join(self.path, f) for f in files]
-        if self._schema is not None:
-            return self.spark.read.schema(self._schema).parquet(*paths)
-        return self.spark.read.parquet(*paths)
+        if self._schema is None:
+            df = self.spark.read.parquet(*paths)
+        else:
+            df = self.spark.read.schema(self._schema).parquet(*paths)
+        if not (deletes or row_ids):
+            return df
+        df = df.select(
+            "*",
+            F.col("_metadata.file_name").alias("_dv_file"),
+            F.col("_metadata.row_index").alias("_dv_row"),
+        )
+        if deletes:
+            vec = F.broadcast(
+                self.spark.read.schema(_VECTOR_SCHEMA).parquet(
+                    *[os.path.join(self.path, f) for e in deletes for f in e["vector"]]
+                )
+            )
+            hit = (
+                (F.col("_dv_file") == vec["file"])
+                & (F.expr(_WORD) == vec["word"])
+                & (vec["bits"].bitwiseAND(F.expr(_BIT)) != 0)
+            )
+            df = df.join(vec, hit, "left_anti")
+        return df if row_ids else df.drop("_dv_file", "_dv_row")
 
     # -- table operations --------------------------------------------------
 
@@ -391,14 +474,51 @@ class ManifestTable:
         merged = updates if cur is None else merge_upsert(self.read(cur), updates, keys, precedence)
         return self._commit(self._stage(merged, self._next_batch()), expected_version=cur or 0)
 
-    def read(self, version: int | None = None) -> DataFrame:
-        """Snapshot read: resolve a manifest once, read exactly its files.
-        Immune to concurrent commits (their files are disjoint) and to
-        compaction (old files persist until vacuum)."""
-        files = self.manifest(version)
+    def delete(self, predicate) -> int:
+        """Merge-on-read DELETE of the surviving rows matching
+        ``predicate`` (SQL string or Column); returns how many rows it
+        newly deleted. No data file is rewritten.
+
+        The matching rows' bits are rolled up executor-side into packed
+        62-bit words keyed by (data file name, ``row_index DIV 62``)
+        (q95's ``bit_or(1 << bit)`` idiom, map-side combine), staged like
+        any batch and committed CONDITIONALLY on the version the delete
+        read: a concurrent writer gets :class:`CommitConflict`. The new
+        manifest entry names the vector's files and the rows deleted per
+        data file (one per-file count, collected first, which is also
+        the return value). A delete matching no surviving row writes and
+        commits nothing, so a replayed delete is a no-op returning 0.
+        Cost ∝ deleted rows / 62 longs plus one manifest swap."""
+        base = self.current_version()
+        doc = self._doc(base)
+        files, prior = doc["files"], doc.get("deletes", [])
         if not files:
             raise FileNotFoundError(f"no committed snapshot in {self.path}")
-        return self._read_files(files)
+        names = {os.path.basename(f): f for f in files}
+        hits = self._read_files(files, prior, row_ids=True).where(predicate)
+        newly = {
+            r["_dv_file"]: r["count"] for r in hits.groupBy("_dv_file").count().collect()
+        }
+        if not newly:
+            return 0
+        vector = hits.groupBy(
+            F.col("_dv_file").alias("file"), F.expr(_WORD).alias("word")
+        ).agg(F.bit_or(F.expr(_BIT)).alias("bits"))
+        entry = {
+            "vector": self._write_batch(vector, self._next_batch()),
+            "counts": {names[n]: c for n, c in newly.items()},
+        }
+        self._commit(files, expected_version=base, deletes=prior + [entry])
+        return sum(newly.values())
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """Snapshot read: resolve a manifest once, read exactly its
+        surviving rows. Immune to concurrent commits (their files are
+        disjoint) and to compaction (old files persist until vacuum)."""
+        doc = self._doc(version)
+        if not doc["files"]:
+            raise FileNotFoundError(f"no committed snapshot in {self.path}")
+        return self._read_files(doc["files"], doc.get("deletes"))
 
     def diff(self, v_from: int, v_to: int, keys: list[str]) -> DataFrame:
         """CDC snapshot diff: the row-level change set that turns snapshot
@@ -454,11 +574,6 @@ class ManifestTable:
             .otherwise(F.lit("unchanged")),
         ).drop("_in_old", "_in_new")
 
-    def _base_files(self) -> tuple[int | None, list[str]]:
-        """The current version and its file list, resolved once."""
-        base = self.current_version()
-        return base, self.manifest(base) if base else []
-
     def _rewrite(
         self, base: int | None, carried: list[str], groups: list[DataFrame]
     ) -> int | None:
@@ -482,13 +597,17 @@ class ManifestTable:
         backlog, not the table. Replaced files remain on disk for in-flight
         readers; :meth:`vacuum` reclaims them. Returns the committed
         version."""
-        base, files = self._base_files()
+        doc = self._doc()
+        files = doc["files"]
         sizes = [os.path.getsize(os.path.join(self.path, f)) for f in files]
         bins, carried = plan_first_fit_bins(sizes, target_file_bytes)
         return self._rewrite(
-            base,
+            doc.get("version"),
             [files[i] for i in carried],
-            [self._read_files(sorted(files[i] for i in b)).coalesce(1) for b in bins],
+            [
+                self._read_files(sorted(files[i] for i in b), doc.get("deletes")).coalesce(1)
+                for b in bins
+            ],
         )
 
     def compact_sorted(self, order_col: str, target_files: int) -> int | None:
@@ -499,26 +618,21 @@ class ManifestTable:
         size-only compaction (:meth:`compact`) would interleave ranges and
         silently destroy the file skipping a sorted table was built for.
 
-        Plan over metadata: per-file min of ``order_col`` from one
-        column-pruned scan orders the files; :func:`plan_contiguous_runs`
+        Plan over metadata: the per-file min of ``order_col``
+        (:meth:`file_ranges`) orders the files; :func:`plan_contiguous_runs`
         groups consecutive files with a rebalanced byte budget; each group
         is rewritten with ``sortWithinPartitions`` so intra-file order
-        survives too. Zero-row files carry no key range; they are folded
-        into the first group (no rows, no layout effect) rather than left
-        in the manifest. Returns the committed version (an empty table
-        commits nothing)."""
-        base, files = self._base_files()
+        survives too. Files with no surviving row carry no key range; they
+        are folded into the first group (no rows, no layout effect) rather
+        than left in the manifest. Returns the committed version (an empty
+        table commits nothing)."""
+        doc = self._doc()
+        base, files = doc.get("version"), doc["files"]
         if not files:
             return base
-        stats = (
-            self._read_files(files)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(F.min(order_col).alias("lo"))
-            .collect()
-        )
         ordered = [
-            os.path.relpath(unquote(urlparse(r["file"]).path), self.path)
-            for r in sorted(stats, key=lambda r: (r["lo"], r["file"]))
+            z["file"]
+            for z in sorted(self.file_ranges(order_col, base), key=lambda z: (z["lo"], z["file"]))
         ]
         ranged = set(ordered)
         empties = [f for f in files if f not in ranged]
@@ -534,24 +648,29 @@ class ManifestTable:
             base,
             [],
             [
-                self._read_files(g).coalesce(1).sortWithinPartitions(order_col)
+                self._read_files(g, doc.get("deletes"))
+                .coalesce(1)
+                .sortWithinPartitions(order_col)
                 for g in groups
             ],
         )
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
-        """Delete data files referenced by none of the last ``keep_last``
-        committed manifests (and drop every other manifest, including one
-        written without its CURRENT swap). Returns removed rel-paths.
-        The only destructive operation; runs strictly AFTER commits, so a
-        reader that resolved a retained manifest never loses a file."""
+        """Delete data and deletion-vector files referenced by none of the
+        last ``keep_last`` committed manifests (and drop every other
+        manifest, including one written without its CURRENT swap).
+        Returns removed rel-paths. The only destructive operation; runs
+        strictly AFTER commits, so a reader that resolved a retained
+        manifest never loses a file."""
         committed = self.versions()
         if not committed:
             return []
         keep_versions = committed[-keep_last:] if keep_last > 0 else []
         referenced: set[str] = set()
         for v in keep_versions:
-            referenced.update(self.manifest(v))
+            doc = self._load(v)
+            referenced.update(doc["files"])
+            referenced.update(f for e in doc.get("deletes", []) for f in e["vector"])
         removed = []
         data_root = os.path.join(self.path, "data")
         for sub in sorted(os.listdir(data_root)):
@@ -579,9 +698,38 @@ class ManifestTable:
         collide with later commits."""
         return self._stage(df, self._next_batch())
 
-    def read_staged(self, files: list[str]) -> DataFrame:
-        """WAP step 2 input: read EXACTLY a staged file set (for audits)."""
-        return self._read_files(files)
+    def read_files(self, files: list[str]) -> DataFrame:
+        """Read EXACTLY ``files`` — a staged batch (WAP step 2, the audit
+        input) or the files a pruning decision kept out of a snapshot
+        (:meth:`file_ranges`) — applying the current snapshot's deletes.
+        An empty list raises ValueError: a pruned read that kept no file
+        is a pruning decision to check, not a table to scan."""
+        if not files:
+            raise ValueError(f"no file to read in {self.path}")
+        return self._read_files(files, self._doc().get("deletes"))
+
+    def file_ranges(self, col: str, version: int | None = None) -> list[dict]:
+        """Per-file ZONE MAP of a snapshot: ``{"file", "lo", "hi"}`` with the
+        min and max of ``col`` over each data file's surviving rows, in
+        manifest order, ``file`` manifest-relative (so it goes straight
+        back into :meth:`read_files`). One column-pruned scan grouped on
+        the file; one row per file is collected. A file with no
+        surviving row has no range and is absent. At true scale the same
+        pairs come from the parquet footers the write produced; the scan
+        keeps the statistic exact under deletes."""
+        doc = self._doc(version)
+        rows = (
+            self._read_files(doc["files"], doc.get("deletes"), row_ids=True)
+            .groupBy("_dv_file")
+            .agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
+            .collect()
+        )
+        got = {r["_dv_file"]: r for r in rows}
+        return [
+            {"file": f, "lo": got[n]["lo"], "hi": got[n]["hi"]}
+            for f in doc["files"]
+            if (n := os.path.basename(f)) in got
+        ]
 
     def publish_append(self, files: list[str]) -> int:
         """WAP step 3: append the audited staged files to the table in one
@@ -670,21 +818,32 @@ class MultiTableCatalog:
 
 def shallow_clone(source: ManifestTable, dest_path: str) -> ManifestTable:
     """ZERO-COPY table clone (Delta SHALLOW CLONE shape): the clone's first
-    manifest references the SOURCE's committed data files by relative
-    path — no bytes move — and the clone diverges on its own writes
-    (copy-on-write at commit granularity: new files land under the
-    clone's data dir; the source never sees them). The clone's vacuum
-    walks only its OWN data dir, so it can never reclaim source bytes;
-    dropping a clone is rmdir. At 100 TB a dev/test clone is O(manifest)
-    — this is why manifest-pointer tables make experimentation free."""
+    manifest references the SOURCE's committed data files — and its
+    deletion-vector files — by relative path; no bytes move. The clone
+    diverges on its own writes (copy-on-write at commit granularity: new
+    files land under the clone's data dir; the source never sees them).
+    The clone's vacuum walks only its OWN data dir, so it can never
+    reclaim source bytes; dropping a clone is rmdir. At 100 TB a dev/test
+    clone is O(manifest) — this is why manifest-pointer tables make
+    experimentation free."""
     dest = ManifestTable(source.spark, dest_path)
-    files = source.manifest()
-    if not files:
+    doc = source._doc()
+    if not doc["files"]:
         raise FileNotFoundError(f"no committed snapshot to clone in {source.path}")
-    rebased = [
-        os.path.relpath(os.path.join(source.path, f), dest.path) for f in files
-    ]
-    dest._commit(rebased)
+
+    def rebase(f: str) -> str:
+        return os.path.relpath(os.path.join(source.path, f), dest.path)
+
+    dest._commit(
+        [rebase(f) for f in doc["files"]],
+        deletes=[
+            {
+                "vector": [rebase(f) for f in e["vector"]],
+                "counts": {rebase(f): n for f, n in e["counts"].items()},
+            }
+            for e in doc.get("deletes", [])
+        ],
+    )
     return dest
 
 
@@ -752,7 +911,7 @@ class ManifestTree:
         from pyspark.sql import functions as F
 
         files = self._table.stage(df)
-        staged = self._table.read_staged(files)
+        staged = self._table.read_files(files)
         lo, hi = staged.agg(
             F.min(self.prune_col), F.max(self.prune_col)
         ).first()
@@ -787,7 +946,7 @@ class ManifestTree:
                 files.extend(json.load(fh)["files"])
         if not files:
             raise FileNotFoundError("no branch overlaps the probe range")
-        return self._table._read_files(files), len(branches), len(surviving)
+        return self._table.read_files(files), len(branches), len(surviving)
 
 
 def append_once(

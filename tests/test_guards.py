@@ -450,6 +450,42 @@ def test_kernels_widen_only_through_ensure_min_parallelism():
     assert not hits, hits
 
 
+def test_table_files_are_read_only_through_read_files():
+    """No code path reads a lake table's files without applying its
+    deletes: inside ``sources/manifest.py`` only ``ManifestTable._read_files``
+    (which applies the deletion vector) touches ``spark.read``, and no
+    module under ``sources/`` names files by ``input_file_name``, whose
+    percent-encoded URIs do not read back as paths."""
+    import ast
+    import pathlib
+
+    import smfg_datawarehouse_spark
+
+    sources = pathlib.Path(smfg_datawarehouse_spark.__file__).parent / "sources"
+    tree = ast.parse((sources / "manifest.py").read_text())
+
+    def spark_reads(root):
+        return [
+            node.lineno
+            for node in ast.walk(root)
+            if isinstance(node, ast.Attribute)
+            and node.attr == "read"
+            and ast.unparse(node.value).split(".")[-1] == "spark"
+        ]
+
+    inside = [
+        line
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name == "_read_files"
+        for line in spark_reads(fn)
+    ]
+    assert inside and sorted(spark_reads(tree)) == sorted(inside), spark_reads(tree)
+    hits = [
+        p.name for p in sorted(sources.rglob("*.py")) if "input_file_name" in p.read_text()
+    ]
+    assert not hits, hits
+
+
 def test_ensure_min_parallelism_decides_from_the_plan(spark, tmp_path):
     """A narrow scan is widened, a scan with enough splits passes through
     with no Exchange, and a shuffled or cached frame is widened without

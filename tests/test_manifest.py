@@ -94,32 +94,35 @@ def test_crash_before_swap_invisible(spark, tmp_path, monkeypatch):
     assert mt.read().count() == 20
 
 
-#: each compaction, with arguments that compact the test table to one file
+#: each rewrite, with arguments that compact the test table to one file
+#: (or delete its rows k < 10), and the file count and keys it leaves
 COMPACTIONS = {
-    "compact": lambda mt: mt.compact(target_file_bytes=1 << 30),
-    "compact_sorted": lambda mt: mt.compact_sorted("k", target_files=1),
+    "compact": (lambda mt: mt.compact(target_file_bytes=1 << 30), 1, range(100)),
+    "compact_sorted": (lambda mt: mt.compact_sorted("k", target_files=1), 1, range(100)),
+    "delete": (lambda mt: mt.delete("k < 10"), 4, range(10, 100)),
 }
 
 
 @pytest.mark.parametrize("compaction", sorted(COMPACTIONS))
 def test_compaction_crash_before_swap_invisible(spark, tmp_path, monkeypatch, compaction):
-    """A compaction that dies at the CURRENT swap leaves the version, the
-    file list and the rows of the prior snapshot as they were, and a
-    rerun commits."""
-    run = COMPACTIONS[compaction]
+    """A compaction or delete that dies at the CURRENT swap leaves the
+    version, the file list and the rows of the prior snapshot as they
+    were, and a rerun commits."""
+    run, n_files, keys = COMPACTIONS[compaction]
     mt = ManifestTable(spark, str(tmp_path / "t"))
     mt.write(spark.range(100).withColumnRenamed("id", "k").repartition(4))
     v, files, before = mt.current_version(), mt.manifest(), _rows(mt.read())
-    assert len(files) > 1
+    assert len(files) == 4
 
     _crash_at_current_swap(monkeypatch, lambda: run(mt))
 
     assert mt.current_version() == v
     assert mt.manifest() == files
     assert _rows(mt.read()) == before
-    assert run(mt) == v + 1
-    assert len(mt.manifest()) == 1
-    assert _rows(mt.read()) == before
+    run(mt)
+    assert mt.current_version() == v + 1
+    assert len(mt.manifest()) == n_files
+    assert _rows(mt.read()) == [(k,) for k in keys]
 
 
 def test_compaction_conflicts_with_a_concurrent_append(spark, tmp_path, monkeypatch):
@@ -146,6 +149,93 @@ def test_compaction_conflicts_with_a_concurrent_append(spark, tmp_path, monkeypa
     assert mt.read().count() == 20
 
 
+def test_delete_conflicts_with_a_concurrent_append(spark, tmp_path, monkeypatch):
+    """A delete commits conditionally on the version it read: an append
+    that lands while it stages its vector makes it raise CommitConflict,
+    and the table keeps the appended rows and no deletion."""
+    from smfg_datawarehouse_spark.sources.manifest import CommitConflict
+
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    mt.write(spark.range(10).withColumnRenamed("id", "k").repartition(2))
+    other = ManifestTable(spark, mt.path)
+    real_write = mt._write_batch
+
+    def write_then_append(df, batch):
+        staged = real_write(df, batch)
+        other.append(spark.range(10, 20).withColumnRenamed("id", "k"))
+        return staged
+
+    monkeypatch.setattr(mt, "_write_batch", write_then_append)
+    with pytest.raises(CommitConflict):
+        mt.delete("k < 5")
+    monkeypatch.undo()
+    assert mt.current_version() == 2
+    assert mt.read().count() == 20
+
+
+def _deleted_from(mt):
+    """Data files the current snapshot's delete entries still cover."""
+    return {f for e in mt._doc().get("deletes", []) for f in e["counts"]}
+
+
+def test_compact_after_delete_drops_rewritten_entries(spark, tmp_path):
+    """Compaction reads surviving rows only, so no deleted row comes back;
+    the files it rewrote leave the delete entries, while a file it
+    carries keeps its entry and its deleted rows stay deleted."""
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    mt.write(spark.range(2000).withColumnRenamed("id", "k").coalesce(1))  # big file
+    mt.append(spark.range(2000, 2100).withColumnRenamed("id", "k").repartition(3))
+    big = mt.manifest(1)[0]
+    target = os.path.getsize(os.path.join(mt.path, big))
+    assert mt.delete("k % 10 = 0") == 210
+    assert len(_deleted_from(mt)) == 4
+    v = mt.compact(target_file_bytes=target)
+    assert big in mt.manifest(v) and len(mt.manifest(v)) == 2
+    assert _deleted_from(mt) == {big}
+    assert mt.read().count() == 1890
+    assert mt.read().where("k % 10 = 0").count() == 0
+    mt.compact(target_file_bytes=1 << 30)  # rewrites the carried file too
+    assert "deletes" not in mt._doc()
+    assert mt.read().count() == 1890
+    assert mt.read().where("k % 10 = 0").count() == 0
+
+
+def test_vacuum_keeps_referenced_vectors_and_removes_superseded(spark, tmp_path):
+    """A vector file stays while a retained manifest names it, across
+    commits that carry it forward, and goes once the rewrite that
+    superseded it is the only retained version."""
+    mt = ManifestTable(spark, str(tmp_path / "t"))
+    mt.write(spark.range(100).withColumnRenamed("id", "k").repartition(3))
+    mt.delete("k < 20")
+    vector = mt._doc()["deletes"][0]["vector"]
+    mt.append(spark.range(100, 110).withColumnRenamed("id", "k"))
+    removed = mt.vacuum(keep_last=1)
+    assert not set(vector) & set(removed)
+    assert all(os.path.exists(os.path.join(mt.path, f)) for f in vector)
+    assert mt.read().count() == 90
+    mt.compact(target_file_bytes=1 << 30)
+    assert "deletes" not in mt._doc()
+    removed = mt.vacuum(keep_last=1)
+    assert set(vector) <= set(removed)
+    assert mt.read().count() == 90 and mt.read().where("k < 20").count() == 0
+
+
+def test_shallow_clone_reads_surviving_rows(spark, tmp_path):
+    """A clone references the source's vector files as well as its data
+    files, so it reads the same surviving rows, and its own deletes stay
+    its own."""
+    from smfg_datawarehouse_spark.sources.manifest import shallow_clone
+
+    src = ManifestTable(spark, str(tmp_path / "src"))
+    src.write(spark.range(100).withColumnRenamed("id", "k").repartition(3))
+    src.delete("k % 3 = 0")
+    clone = shallow_clone(src, str(tmp_path / "clone"))
+    assert _rows(clone.read()) == _rows(src.read())
+    assert clone.read().count() == 66
+    assert clone.delete("k < 50") == 33
+    assert clone.read().count() == 33 and src.read().count() == 66
+
+
 def test_wap_staged_files_invisible_until_publish(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -155,7 +245,7 @@ def test_wap_staged_files_invisible_until_publish(spark, tmp_path):
     mt.write(spark.range(10).select(F.col("id").alias("k")))
     v1 = mt.current_version()
     staged = mt.stage(spark.range(10, 15).select(F.col("id").alias("k")))
-    assert mt.read_staged(staged).count() == 5
+    assert mt.read_files(staged).count() == 5
     # staged but unpublished: readers still resolve v1
     assert mt.current_version() == v1
     assert mt.read().count() == 10

@@ -1,7 +1,7 @@
 """WAV codec robustness (operators/multimodal.py) and zone-map pruned
-reads (sources/lake.py): malformed payloads must degrade loudly to the
-bad-row shape, and pruning must skip files yet stay value-identical to a
-full scan — the conservative-skip contract."""
+reads (``ManifestTable.file_ranges`` / ``read_files``): malformed payloads
+must degrade loudly to the bad-row shape, and pruning must skip files yet
+stay value-identical to a full scan — the conservative-skip contract."""
 
 from __future__ import annotations
 
@@ -16,10 +16,7 @@ from smfg_datawarehouse_spark.operators.multimodal import (
     decode_wav_pcm16,
     encode_wav_pcm16,
 )
-from smfg_datawarehouse_spark.sources.lake import (
-    read_zonemap_pruned,
-    write_sorted_with_zonemap,
-)
+from smfg_datawarehouse_spark.sources.manifest import ManifestTable
 
 
 def test_wav_roundtrip_exact():
@@ -56,25 +53,38 @@ def test_wav_chunk_walk_skips_foreign_chunks():
     assert out["pcm_ok"] and out["n_samples"] == 64
 
 
+def _sorted_table(spark, path, df, col, n_files):
+    mt = ManifestTable(spark, path)
+    mt.write(df.repartitionByRange(n_files, F.col(col)).sortWithinPartitions(col))
+    return mt
+
+
+def _pruned(zones, lo, hi):
+    return [z["file"] for z in zones if z["lo"] <= hi and z["hi"] >= lo]
+
+
 def test_zonemap_prunes_and_matches_full_scan(spark, tmp_path):
     df = spark.range(0, 1000).select(
         F.col("id").alias("k"),
         F.timestamp_seconds(F.col("id") * 86400 + 1_000_000_000).alias("ts"),
     )
-    zm = write_sorted_with_zonemap(df, str(tmp_path / "t"), "ts", 10)
+    mt = _sorted_table(spark, str(tmp_path / "t"), df, "ts", 10)
+    zm = mt.file_ranges("ts")
     assert len(zm) == 10
     lo = datetime.datetime(2001, 9, 9) + datetime.timedelta(days=100)
     hi = lo + datetime.timedelta(days=99)
-    pruned, n_read, n_total = read_zonemap_pruned(spark, zm, lo, hi)
-    assert n_read < n_total  # actually skipped files
+    keep = _pruned(zm, lo, hi)
+    assert len(keep) < len(zm)  # actually skipped files
+    in_range = (F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi))
     got = (
-        pruned.where((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
+        mt.read_files(keep)
+        .where(in_range)
         .agg(F.count("*").alias("n"), F.sum("k").alias("s"))
         .collect()[0]
     )
     want = (
-        spark.read.parquet(str(tmp_path / "t"))
-        .where((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
+        mt.read()
+        .where(in_range)
         .agg(F.count("*").alias("n"), F.sum("k").alias("s"))
         .collect()[0]
     )
@@ -85,6 +95,26 @@ def test_zonemap_empty_intersection_raises(spark, tmp_path):
     df = spark.range(0, 100).select(
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
-    zm = write_sorted_with_zonemap(df, str(tmp_path / "t2"), "v", 4)
+    mt = _sorted_table(spark, str(tmp_path / "t2"), df, "v", 4)
     with pytest.raises(ValueError):
-        read_zonemap_pruned(spark, zm, 1e6, 2e6)
+        mt.read_files(_pruned(mt.file_ranges("v"), 1e6, 2e6))
+
+
+def test_zonemap_delete_and_compact_under_a_path_with_a_space(spark, tmp_path):
+    """Regression: a zone map built from ``input_file_name()`` named its
+    files by percent-encoded URI, and rereading them under a directory
+    with a space raised ``PATH_NOT_FOUND ... a%20b``. ``file_ranges``
+    returns manifest paths, so the pruned read, a delete and a sorted
+    compaction all work under ``a b``."""
+    df = spark.range(0, 400).select(F.col("id").alias("k"), (F.col("id") % 5).alias("v"))
+    mt = _sorted_table(spark, str(tmp_path / "a b" / "t"), df, "k", 4)
+    zm = mt.file_ranges("k")
+    assert len(zm) == 4 and all(not z["file"].startswith("file:") for z in zm)
+    keep = _pruned(zm, 0, 50)
+    assert 0 < len(keep) < len(zm)
+    assert mt.read_files(keep).where("k <= 50").count() == 51
+    assert mt.delete("v = 0") == 80
+    assert mt.read().count() == 320
+    v = mt.compact_sorted("k", target_files=2)
+    assert len(mt.manifest(v)) == 2
+    assert mt.read().count() == 320 and mt.read().where("v = 0").count() == 0
