@@ -1332,7 +1332,7 @@ def l34_sorted_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     if (n_before, n_after) != (12, 4):
         raise RuntimeError(f"compaction layout unexpected: {n_before} -> {n_after}")
 
-    zs = sorted(mt.file_ranges("ts", v1), key=lambda z: z["lo"])
+    zs = sorted(mt.file_ranges("ts"), key=lambda z: z["lo"])
     for a, b in zip(zs, zs[1:]):
         if b["lo"] <= a["hi"]:
             raise RuntimeError(

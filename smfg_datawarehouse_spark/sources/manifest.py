@@ -48,7 +48,7 @@ read a consistent snapshot no matter what commits land meanwhile:
 
 The manifest json carries, next to the file list, the per-writer ``txns``
 map and the ``deletes`` entries (one per delete: its vector files and
-the rows it deleted per data file). Every commit copies both forward;
+the data files it covers). Every commit copies both forward;
 a delete entry keeps only the data files still in the new file list and
 goes once none is left. ``_read_files`` is the one file reader, and it
 applies the deletes, so every read, diff, merge and compaction sees only
@@ -69,7 +69,7 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
@@ -314,9 +314,9 @@ class ManifestTable:
         kept = []
         entries = prior.get("deletes", []) if deletes is None else deletes
         for e in entries:
-            counts = {f: n for f, n in e["counts"].items() if f in live}
-            if counts:
-                kept.append({"vector": e["vector"], "counts": counts})
+            covered = [f for f in e["files"] if f in live]
+            if covered:
+                kept.append({"vector": e["vector"], "files": covered})
         v = (cur or 0) + 1
         doc = {"version": v, "files": sorted(files), "txns": txns}
         if kept:
@@ -483,33 +483,39 @@ class ManifestTable:
         62-bit words keyed by (data file name, ``row_index DIV 62``)
         (q95's ``bit_or(1 << bit)`` idiom, map-side combine), staged like
         any batch and committed CONDITIONALLY on the version the delete
-        read: a concurrent writer gets :class:`CommitConflict`. The new
-        manifest entry names the vector's files and the rows deleted per
-        data file (one per-file count, collected first, which is also
-        the return value). A delete matching no surviving row writes and
-        commits nothing, so a replayed delete is a no-op returning 0.
-        Cost ∝ deleted rows / 62 longs plus one manifest swap."""
+        read: a concurrent writer gets :class:`CommitConflict`. The write
+        job itself observes the data files the vector covers and its set
+        bits (the newly deleted count), so the table is scanned once. The
+        new manifest entry names the vector's files and the data files it
+        covers. A delete matching no surviving row commits nothing (its
+        empty batch is left for :meth:`vacuum`), so a replayed delete is
+        a no-op returning 0. Cost ∝ deleted rows / 62 longs plus one
+        manifest swap."""
         base = self.current_version()
         doc = self._doc(base)
         files, prior = doc["files"], doc.get("deletes", [])
         if not files:
             raise FileNotFoundError(f"no committed snapshot in {self.path}")
         names = {os.path.basename(f): f for f in files}
-        hits = self._read_files(files, prior, row_ids=True).where(predicate)
-        newly = {
-            r["_dv_file"]: r["count"] for r in hits.groupBy("_dv_file").count().collect()
-        }
-        if not newly:
+        seen = Observation()
+        vector = (
+            self._read_files(files, prior, row_ids=True)
+            .where(predicate)
+            .groupBy(F.col("_dv_file").alias("file"), F.expr(_WORD).alias("word"))
+            .agg(F.bit_or(F.expr(_BIT)).alias("bits"))
+            .observe(
+                seen,
+                F.collect_set("file").alias("files"),
+                F.sum(F.bit_count("bits")).alias("n"),
+            )
+        )
+        written = self._write_batch(vector, self._next_batch())
+        got = seen.get
+        if not got["n"]:
             return 0
-        vector = hits.groupBy(
-            F.col("_dv_file").alias("file"), F.expr(_WORD).alias("word")
-        ).agg(F.bit_or(F.expr(_BIT)).alias("bits"))
-        entry = {
-            "vector": self._write_batch(vector, self._next_batch()),
-            "counts": {names[n]: c for n, c in newly.items()},
-        }
+        entry = {"vector": written, "files": sorted(names[n] for n in got["files"])}
         self._commit(files, expected_version=base, deletes=prior + [entry])
-        return sum(newly.values())
+        return int(got["n"])
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read: resolve a manifest once, read exactly its
@@ -630,9 +636,11 @@ class ManifestTable:
         base, files = doc.get("version"), doc["files"]
         if not files:
             return base
+        # file_ranges reads CURRENT: had it moved past base, the commit
+        # on base raises CommitConflict
         ordered = [
             z["file"]
-            for z in sorted(self.file_ranges(order_col, base), key=lambda z: (z["lo"], z["file"]))
+            for z in sorted(self.file_ranges(order_col), key=lambda z: (z["lo"], z["file"]))
         ]
         ranged = set(ordered)
         empties = [f for f in files if f not in ranged]
@@ -708,16 +716,17 @@ class ManifestTable:
             raise ValueError(f"no file to read in {self.path}")
         return self._read_files(files, self._doc().get("deletes"))
 
-    def file_ranges(self, col: str, version: int | None = None) -> list[dict]:
-        """Per-file ZONE MAP of a snapshot: ``{"file", "lo", "hi"}`` with the
-        min and max of ``col`` over each data file's surviving rows, in
-        manifest order, ``file`` manifest-relative (so it goes straight
-        back into :meth:`read_files`). One column-pruned scan grouped on
+    def file_ranges(self, col: str) -> list[dict]:
+        """Per-file ZONE MAP of the current snapshot: ``{"file", "lo",
+        "hi"}`` with the min and max of ``col`` over each data file's
+        surviving rows, in manifest order, ``file`` manifest-relative (so
+        it goes straight back into :meth:`read_files`, which applies the
+        same snapshot's deletes). One column-pruned scan grouped on
         the file; one row per file is collected. A file with no
         surviving row has no range and is absent. At true scale the same
         pairs come from the parquet footers the write produced; the scan
         keeps the statistic exact under deletes."""
-        doc = self._doc(version)
+        doc = self._doc()
         rows = (
             self._read_files(doc["files"], doc.get("deletes"), row_ids=True)
             .groupBy("_dv_file")
@@ -839,7 +848,7 @@ def shallow_clone(source: ManifestTable, dest_path: str) -> ManifestTable:
         deletes=[
             {
                 "vector": [rebase(f) for f in e["vector"]],
-                "counts": {rebase(f): n for f, n in e["counts"].items()},
+                "files": [rebase(f) for f in e["files"]],
             }
             for e in doc.get("deletes", [])
         ],

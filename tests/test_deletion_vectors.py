@@ -34,8 +34,7 @@ def test_delete_counts_and_survivors(spark, tmp_path):
     mt = _mk(spark, tmp_path)
     assert mt.delete("v = 0") == 43  # ids 0,7,...,294
     assert mt.delete("k < 10") == 8  # 0 and 7 already deleted
-    deletes = mt._doc()["deletes"]
-    assert sum(n for e in deletes for n in e["counts"].values()) == 51
+    assert len(mt._doc()["deletes"]) == 2
     surv = mt.read()
     assert surv.count() == 249
     assert surv.where("v = 0 OR k < 10").count() == 0

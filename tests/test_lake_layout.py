@@ -153,7 +153,7 @@ def test_sorted_compact_uneven_sizes_hits_target(spark, tmp_path):
     )
     v = mt.compact_sorted("k", target_files=4)
     assert (len(mt.manifest(v0)), len(mt.manifest(v))) == (12, 4)
-    zm = mt.file_ranges("k", v)
+    zm = mt.file_ranges("k")
     assert len(zm) == 4
     zs = sorted(zm, key=lambda r: r["lo"])
     for a, b in zip(zs, zs[1:]):

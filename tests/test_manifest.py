@@ -175,7 +175,7 @@ def test_delete_conflicts_with_a_concurrent_append(spark, tmp_path, monkeypatch)
 
 def _deleted_from(mt):
     """Data files the current snapshot's delete entries still cover."""
-    return {f for e in mt._doc().get("deletes", []) for f in e["counts"]}
+    return {f for e in mt._doc().get("deletes", []) for f in e["files"]}
 
 
 def test_compact_after_delete_drops_rewritten_entries(spark, tmp_path):

@@ -83,8 +83,7 @@ def test_zonemap_prunes_and_matches_full_scan(spark, tmp_path):
         .collect()[0]
     )
     want = (
-        mt.read()
-        .where(in_range)
+        df.where(in_range)
         .agg(F.count("*").alias("n"), F.sum("k").alias("s"))
         .collect()[0]
     )
